@@ -1,14 +1,18 @@
 package graft.prov
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's query surface (SURVEY §3.3 — the Kotlin/Spring web
   * app's endpoints over Cassandra, DataElementAPICtrl.kt /
   * TaskAPICtrl.kt / ExecutionAPICtrl.kt) re-expressed as plain Spark SQL
   * over the parquet provenance store. Each method returns a DataFrame —
-  * 1-hop graph expansions are joins; multi-hop lineage is an iterative
-  * join closure.
+  * 1-hop graph expansions are joins; multi-hop lineage is a
+  * co-partitioned BFS over the execution's adjacency, one Spark job
+  * per hop.
   */
 final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
 
@@ -158,65 +162,84 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
       .select(col("element_id"), col("schema_fields"), col("row_values"))
   }
 
-  /** Multi-hop lineage closure of one element (ancestors), via iterative
-    * join — each hop is one distributed join over the cached edge set,
-    * with every round's frontier materialized so the plan never grows.
+  /** Multi-hop lineage closure of one element (ancestors): `(id, hop)`
+    * with `hop` the minimum distance, up to `maxHops`. Computed by the
+    * co-partitioned BFS of [[closure]]; the result is distributed.
     */
   def lineageOf(executionId: String, elementId: String, maxHops: Int = 20): DataFrame =
-    closure(executionId, elementId, maxHops,
-      startCol = "target", followCol = "source")
+    closure(executionId, elementId, maxHops, backward = true)
 
   /** Forward closure: everything derived from one element (impact
     * analysis — the symmetric query to lineageOf).
     */
   def descendantsOf(executionId: String, elementId: String, maxHops: Int = 20): DataFrame =
-    closure(executionId, elementId, maxHops,
-      startCol = "source", followCol = "target")
+    closure(executionId, elementId, maxHops, backward = false)
 
-  /** Shared iterative BFS: start at `elementId` on `startCol`, follow
-    * edges emitting `followCol`. Each round's frontier and the
-    * accumulator are persisted and materialized (count) so round k+1
-    * joins against cached data instead of replaying k rounds of plan;
-    * the result is collected to a local relation before caches drop.
+  /** Co-partitioned BFS (the SparkTC / Pregel pattern). The execution's
+    * `(element_id, deps)` rows are read once and turned into
+    * `(start, follow)` adjacency pairs, hash-partitioned and persisted.
+    * The frontier carries the same partitioner, so each hop is a
+    * narrow join with the adjacency followed by one shuffle
+    * (`reduceByKey(min hop)`) and a narrow `subtractByKey` of the ids
+    * already visited — one Spark job (the frontier's `count`) per hop.
+    * The frontier dedup also absorbs the duplicate element rows an
+    * at-least-once streaming replay leaves in the store, so the
+    * whole-row [[elements]] dedup is not needed here.
+    *
+    * The union of the hop frontiers is `localCheckpoint`ed
+    * EXECUTOR-side before the caches drop: the returned frame never
+    * replays the iteration and never funnels the closure through the
+    * driver (a full-corpus impact analysis can be millions of rows).
+    * Every intermediate cache is released even when a hop fails.
     */
   private def closure(executionId: String, elementId: String, maxHops: Int,
-                      startCol: String, followCol: String): DataFrame = {
-    val edges = elementDependencies(executionId)
-      .select(col("target"), col("source")).persist()
-    var frontier = edges.filter(col(startCol) === elementId)
-      .select(col(followCol).as("id"), lit(1).as("hop"))
-      .distinct().persist()
-    var acc = frontier
-    var hop = 1
-    var continue = frontier.count() > 0
-    while (continue && hop < maxHops) {
-      hop += 1
-      val next = frontier.join(edges, frontier("id") === edges(startCol))
-        .select(col(followCol).as("id"), lit(hop).as("hop"))
-      val newFrontier = next.join(acc.select(col("id").as("seen")),
-          col("id") === col("seen"), "left_anti")
-        .distinct().persist()
-      continue = newFrontier.count() > 0
-      if (continue) {
-        val newAcc = acc.unionByName(newFrontier).persist()
-        newAcc.count()
-        acc.unpersist()
-        acc = newAcc
-      }
-      frontier.unpersist()
-      frontier = newFrontier
+                      backward: Boolean): DataFrame = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val part = new HashPartitioner(sc.defaultParallelism)
+    val cached = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def keep[R <: RDD[_]](r: R): R = {
+      cached += r.persist(StorageLevel.MEMORY_AND_DISK); r
     }
-    // materialize EXECUTOR-side before releasing caches: localCheckpoint
-    // (eager) pins the result as block-manager partitions so the
-    // returned frame never replays the iteration — and never funnels the
-    // closure through the driver (a full-corpus impact analysis can be
-    // millions of rows; the old collect+parallelize(rows, 1) form made
-    // the driver both a memory ceiling and a single-partition bottleneck)
-    val out = acc.distinct().localCheckpoint()
-    frontier.unpersist()
-    acc.unpersist()
-    edges.unpersist()
-    out
+    val debug = sys.env.contains("GRAFT_PROV_DEBUG")
+    try {
+      // the declared read schema skips the Spark job that infers the
+      // schema from parquet footers
+      val adjacency = keep(
+        spark.read.schema("element_id STRING, deps ARRAY<STRING>, execution_id STRING")
+          .parquet(s"$storeDir/data_elements")
+          .filter(col("execution_id") === executionId)
+          .select(col("element_id"), col("deps")).as[(String, Seq[String])]
+          .rdd.flatMap { case (id, deps) =>
+            Option(deps).getOrElse(Nil).map(d =>
+              if (backward) (id, d) else (d, id))
+          }
+          .partitionBy(part))
+      val levels = scala.collection.mutable.ArrayBuffer.empty[RDD[(String, Int)]]
+      var frontier: RDD[(String, Int)] =
+        sc.parallelize(Seq(elementId -> 0), 1).partitionBy(part)
+      var hop = 0
+      var more = true
+      // maxHops < 1 still runs the first hop
+      while (more && hop < math.max(maxHops, 1)) {
+        hop += 1
+        val t0 = System.nanoTime()
+        val reached = frontier.join(adjacency, part)
+          .map { case (_, (h, next)) => (next, h + 1) }
+          .reduceByKey(part, math.min(_, _))
+        val fresh = keep(
+          if (levels.isEmpty) reached
+          else reached.subtractByKey(sc.union(levels.toSeq), part))
+        val n = fresh.count()
+        if (debug)
+          System.err.println(f"[provq] hop $hop: $n new ids in ${(System.nanoTime() - t0) / 1e6}%.0f ms")
+        more = n > 0
+        if (more) { levels += fresh; frontier = fresh }
+      }
+      val all =
+        if (levels.isEmpty) sc.emptyRDD[(String, Int)] else sc.union(levels.toSeq)
+      all.toDF("id", "hop").localCheckpoint()
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Task detail + 1-hop neighborhood: the task row plus its parents and
@@ -320,14 +343,29 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
   /** JSON graph `{nodes, links}` as a string — the machine format behind
     * [[exportJson]] and the live server's `/api/graph` endpoint. A
     * DRIVER-side materialization of the full element graph by design
-    * (parity with the reference's exportFile), so it is FENCED at a
-    * named boundary (`spark.graft.maxExportGraphRows`, default 1M rows
-    * per pull, `limit(max+1)` one-pass — never count-then-collect):
-    * capture over a large corpus otherwise OOMs the driver here with
-    * no warning — the round-13 bounded-pull discipline applied by the
-    * round-16 prov audit. The remedies are in the error text.
+    * (parity with the reference's exportFile), so both pulls are
+    * [[fenced]].
     */
   def jsonGraph(executionId: String): String = {
+    val nodes = fenced(executionId, elements(executionId)
+      .select(col("element_id").as("id"), col("task_id").as("group"),
+              to_json(col("values")).as("label")), "element count")
+      .map(r => s"""{"id":${jstr(r.getString(0))},"group":${jstr(r.getString(1))},"label":${jstr(r.getString(2))}}""")
+    val links = fenced(executionId, elementDependencies(executionId)
+      .select(col("source"), col("target")), "element-dependency count")
+      .map(r => s"""{"source":${jstr(r.getString(0))},"target":${jstr(r.getString(1))}}""")
+    s"""{"nodes":[${nodes.mkString(",")}],"links":[${links.mkString(",")}]}"""
+  }
+
+  /** Driver-side pull behind every JSON export ([[jsonGraph]], the live
+    * server's `/api/lineage`), FENCED at a named boundary
+    * (`spark.graft.maxExportGraphRows`, default 1M rows per pull,
+    * `limit(max+1)` one-pass — never count-then-collect): capture over
+    * a large corpus otherwise OOMs the driver here with no warning.
+    * The remedies are in the error text.
+    */
+  private[prov] def fenced[T](executionId: String, ds: Dataset[T],
+                              what: String): Array[T] = {
     val max = {
       val v = spark.conf.getOption("spark.graft.maxExportGraphRows")
         .map(_.toLong).getOrElse(1000000L)
@@ -335,27 +373,15 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
         s"spark.graft.maxExportGraphRows must be >= 1, got $v")
       math.min(v, Int.MaxValue.toLong - 1).toInt
     }
-    def fenced(df: DataFrame, what: String)
-        : Array[org.apache.spark.sql.Row] = {
-      val pulled = df.limit(max + 1).collect()
-      if (pulled.length > max)
-        throw new IllegalStateException(
-          s"execution $executionId: $what exceeds " +
-            s"spark.graft.maxExportGraphRows=$max — the JSON graph " +
-            "export materializes the full element graph on the " +
-            "driver. Use exportHtml's capped lens, query the tables " +
-            "relationally (ProvenanceQueries / relational provenance), " +
-            "or raise the conf if the driver can hold more.")
-      pulled
-    }
-    val nodes = fenced(elements(executionId)
-      .select(col("element_id").as("id"), col("task_id").as("group"),
-              to_json(col("values")).as("label")), "element count")
-      .map(r => s"""{"id":${jstr(r.getString(0))},"group":${jstr(r.getString(1))},"label":${jstr(r.getString(2))}}""")
-    val links = fenced(elementDependencies(executionId)
-      .select(col("source"), col("target")), "element-dependency count")
-      .map(r => s"""{"source":${jstr(r.getString(0))},"target":${jstr(r.getString(1))}}""")
-    s"""{"nodes":[${nodes.mkString(",")}],"links":[${links.mkString(",")}]}"""
+    val pulled = ds.limit(max + 1).collect()
+    if (pulled.length > max)
+      throw new IllegalStateException(
+        s"execution $executionId: $what exceeds " +
+          s"spark.graft.maxExportGraphRows=$max — the JSON export " +
+          "materializes it on the driver. Use exportHtml's capped lens, " +
+          "query the tables relationally (ProvenanceQueries / relational " +
+          "provenance), or raise the conf if the driver can hold more.")
+    pulled
   }
 
   /** JSON graph export `{nodes, links}` — parity with the reference's

@@ -177,8 +177,12 @@ final class ProvenanceServer(spark: SparkSession, storeDir: String,
     s"[${rows.mkString(",")}]"
   }
 
+  /** Backward closure as a JSON array, pulled through the same
+    * `spark.graft.maxExportGraphRows` fence as `/api/graph`.
+    */
   private def lineageJson(executionId: String, elementId: String): String = {
-    val rows = q.lineageOf(executionId, elementId).toJSON.collect()
+    val rows = q.fenced(executionId,
+      q.lineageOf(executionId, elementId).toJSON, s"lineage of $elementId")
     s"[${rows.mkString(",")}]"
   }
 

@@ -142,6 +142,31 @@ class ProvenanceServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop()
   }
 
+  test("/api/lineage is fenced by spark.graft.maxExportGraphRows: an over-threshold closure answers 500 naming the conf") {
+    val spark2 = spark
+    import spark2.implicits._
+    val store = Files.createTempDirectory("provlinfence").toString
+    val s = ProvSession.create(spark, "lineage-fence", store)
+    val last = s.parallelize(Seq(1, 2)).map(_ + 1).map(_ * 2).map(_ - 1)
+    assert(last.count() == 2)
+    s.close()
+    val el = new ProvenanceQueries(spark, store)
+      .producedBy(s.executionId, last.task.id).head().getAs[String]("element_id")
+    val server = new ProvenanceServer(spark, store)
+    val port = server.start()
+    try {
+      // 3 ancestors: served under the default fence
+      val (ok, body) = get(port, s"/api/lineage/${s.executionId}/$el")
+      assert(ok == 200 && "\"hop\"".r.findAllIn(body).size == 3, body)
+      spark.conf.set("spark.graft.maxExportGraphRows", "2")
+      try {
+        val (code, err) = get(port, s"/api/lineage/${s.executionId}/$el")
+        assert(code == 500 && err.contains("spark.graft.maxExportGraphRows"),
+          err)
+      } finally spark.conf.unset("spark.graft.maxExportGraphRows")
+    } finally server.stop()
+  }
+
   test("jsonGraph is FENCED: an over-threshold element graph fails loudly at the named conf under default-style enforcement (round-16 audit)") {
     val spark2 = spark
     import spark2.implicits._
