@@ -1343,7 +1343,7 @@ object Graft {
     def shard(dir: String, vecs: DataFrame): Unit =
       IndexStore.saveIvf(dir,
         SimilarityQueries.assignCellsPulled(vecs, pulledCentroids),
-        centroids)
+        savedCentroids)
 
     /** Cell-occupancy drift report — the RE-TRAIN TRIGGER [[append]]'s
       * doc points at: assign a non-empty arrival `sample` (vec_id,
@@ -1441,7 +1441,7 @@ object Graft {
       * cycle a production store runs between re-trains.
       */
     def save(dir: String): Unit =
-      IndexStore.saveIvf(dir, assigned, centroids)
+      IndexStore.saveIvf(dir, assigned, savedCentroids)
 
     /** The tiny centroid table pulled driver-side ONCE per handle —
       * the bounded (≤ #cells × 64 floats) pull that makes assignment,
@@ -1451,6 +1451,16 @@ object Graft {
       */
     private lazy val pulledCentroids: Seq[(Int, Array[Float])] =
       pulledSeed.getOrElse(SimilarityQueries.pullCentroids(centroids))
+
+    /** What [[save]] and [[shard]] persist as the centroid table: the
+      * pulled snapshot every assignment used, never the lazy
+      * [[centroids]] frame — recomputed at save time over a training
+      * input that has since grown, that frame would disagree with the
+      * saved assignments, and merge's centroid check would refuse
+      * this handle's own shards.
+      */
+    private def savedCentroids: DataFrame =
+      SimilarityQueries.centroidsLocal(assigned.sparkSession, pulledCentroids)
 
     /** Serve an unbounded query stream against this index — delegates
       * to [[graft.streaming.EmbStreams.ivfServe]] with the handle's
@@ -2315,7 +2325,7 @@ object Graft {
       IndexStore.saveIvfPq(dir,
         SimilarityQueries.ivfPqEncode(vecs, centroids, codebooks,
           Some(pulledCentroids)),
-        centroids, codebooks)
+        savedCentroids, codebooks)
 
     /** Persist to `dir` ([[graft.sources.IndexStore]] layout): the
       * code table partitioned by coarse cell (probe-time scans read
@@ -2324,7 +2334,7 @@ object Graft {
       * (IndexStoreSpec).
       */
     def save(dir: String): Unit =
-      IndexStore.saveIvfPq(dir, codes, centroids, codebooks)
+      IndexStore.saveIvfPq(dir, codes, savedCentroids, codebooks)
 
     /** Serve an unbounded query stream against this index — delegates
       * to [[graft.streaming.EmbStreams.ivfPqServe]] with the handle's
@@ -2385,6 +2395,12 @@ object Graft {
       */
     private lazy val pulledCentroids: Seq[(Int, Array[Float])] =
       pulledSeed.getOrElse(SimilarityQueries.pullCentroids(centroids))
+
+    /** The pulled snapshot as [[save]]/[[shard]]'s centroid table —
+      * [[IvfIndex]]'s rule: never the lazily recomputed frame.
+      */
+    private def savedCentroids: DataFrame =
+      SimilarityQueries.centroidsLocal(codes.sparkSession, pulledCentroids)
 
     /** [[drift]] AT INGEST — the coarse-cell monitor through the
       * handle: the stored composite code table already carries each

@@ -82,7 +82,10 @@ object RelationalQueries {
   /** Three-way inner join + aggregation (TPC-H Q3 shape).
     * Reference ops: join (PairRDDFunctions.scala:545-548) via cogroup —
     * here Catalyst picks broadcast for customer, shuffle for
-    * orders⋈lineitem; deterministic tiebreak on o_orderkey.
+    * orders⋈lineitem; deterministic tiebreak on o_orderkey. Revenue
+    * rounds to 4 dp: each 2dp × 2dp product has 4 decimals, so the true
+    * sum never sits on a rounding boundary (rounded to 2 dp, a
+    * half-cent total rounds differently in Spark and DuckDB).
     */
   val q03JoinAgg = QueryDef(
     "q03_join_agg",
@@ -93,12 +96,12 @@ object RelationalQueries {
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(20)
     },
     Some("""SELECT l_orderkey, o_orderdate, o_orderpriority,
-           |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
            |FROM lineitem
            |JOIN orders ON l_orderkey = o_orderkey
            |JOIN customer ON o_custkey = c_custkey

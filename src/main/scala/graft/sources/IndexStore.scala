@@ -10,30 +10,35 @@ import org.apache.spark.sql.functions._
   * contracts existed but the artifacts they freeze died with the JVM).
   *
   * Layout under `dir` (all parquet — no side formats, so the store
-  * reads/writes with nothing but the Spark session it is given):
+  * reads/writes with nothing but the Spark session it is given). Every
+  * kind (ivf, pq, ivfpq, lsh, bm25, phash, bloom) declares its tables
+  * ONCE, as a [[StoreKind]] case object: the tables in describe order,
+  * the primary table, the vec_id row tables with their partition
+  * columns, the frozen artifacts merge value-checks, the bit_or
+  * sketch, and the deep checks and heals. Beside the kind's tables
+  * every store holds:
   *
-  *   - `manifest/`  — ONE row: (kind, version, m_bits). `kind` is
-  *     checked on load, so opening a PQ directory as an IVF index
-  *     fails loudly instead of mis-shaping frames.
-  *   - `assigned/` or `codes/` — the big table, PARTITIONED BY `cell`
-  *     for the IVF families: a saved IVF index is directly servable by
-  *     [[graft.streaming.EmbStreams.ivfServePruned]] (its per-batch
-  *     `cell isin probed` partition filter prunes at the FILE level),
-  *     and a probe-time scan reads only the probed cells' directories.
-  *     The PQ code table is unpartitioned (ADC scans all codes by
-  *     design — 4 bytes/vector is the whole point).
-  *   - `centroids/` — the tiny coarse table (IVF families).
-  *   - `codebooks/` — (mi, ci, vals) rows, reassembled driver-side
-  *     into the `Array[Array[Array[Double]]]` the ADC kernels take
-  *     (PQ families). Doubles round-trip parquet exactly, so a loaded
-  *     index scores BIT-FOR-BIT like the freshly trained one
-  *     (IndexStoreSpec proves it).
-  *   - `corpus/` — (vec_id, embedding) raw vectors (PQ only — the
-  *     [[graft.api.Graft.PqIndex.rerank]] fetch side; production
-  *     stores keep these on cold storage next to the hot codes).
+  *   - `manifest/`  — ONE row: (kind, version, m_bits, n_buckets),
+  *     parsed into a [[StoreKind]] by [[readManifest]] alone. An
+  *     unknown kind or a newer version fails every op loudly, and
+  *     opening a PQ directory as an IVF index fails instead of
+  *     mis-shaping frames.
   *   - `epochs/` — the append-epoch AUDIT LOG: one (seq, op, n_rows,
-  *     ts_millis) row per lifecycle op (save/append/compact/vacuum),
-  *     with `n_rows` counted from the written files. See [[Epoch]].
+  *     ts_millis) row per lifecycle op (save/append/compact/merge/
+  *     delete/repair/vacuum), with `n_rows` counted from the written
+  *     files. See [[Epoch]].
+  *   - `tombstones/` — deleted vec_ids ([[delete]]), masked out by
+  *     every load until [[compact]] applies and clears them.
+  *
+  * The big tables (`assigned`/`codes` for the IVF families) are
+  * PARTITIONED BY `cell`, so a saved IVF index is directly servable by
+  * [[graft.streaming.EmbStreams.ivfServePruned]] (its per-batch `cell
+  * isin probed` partition filter prunes at the FILE level); the text
+  * and media stores partition by probe buckets (see [[Version]]).
+  * Codebooks reassemble driver-side into the
+  * `Array[Array[Array[Double]]]` the ADC kernels take; doubles
+  * round-trip parquet exactly, so a loaded index scores BIT-FOR-BIT
+  * like the freshly trained one (IndexStoreSpec proves it).
   *
   * Writes use overwrite semantics per sub-path (re-saving an appended
   * index over its own directory is the normal refresh cycle). All
@@ -49,6 +54,7 @@ import org.apache.spark.sql.functions._
   * metadata-only until an action runs.
   */
 object IndexStore {
+  import StoreKind._
 
   /** Bumped only on layout changes; checked on load. Version 2 adds
     * PROBE BUCKETS to the scan-heavy kinds — derived partition
@@ -65,13 +71,14 @@ object IndexStore {
     */
   val Version = 2
 
-  /** `n_buckets` = the probe-bucket modulus the layout was written
-    * with (0 = unbucketed: version-1 dirs, or a v2 save under
+  /** A parsed manifest ([[readManifest]]). `n_buckets` = the
+    * probe-bucket modulus the layout was written with (0 =
+    * unbucketed: version-1 dirs, or a v2 save under
     * `spark.graft.probeBuckets = 0`). Probers MUST bucket their keys
     * with the same modulus, which is why it lives in the manifest.
     */
-  final case class Manifest(kind: String, version: Int, m_bits: Long,
-                            n_buckets: Long = 0L)
+  private[sources] final case class Manifest(kind: StoreKind, version: Int,
+                                             m_bits: Long, n_buckets: Long)
 
   /** The save-time probe-bucket modulus: `spark.graft.probeBuckets`
     * overrides when set (0 disables bucketing); UNSET — the default —
@@ -353,35 +360,49 @@ object IndexStore {
       |  required int64 n_buckets;
       |}""".stripMargin
 
-  private def writeManifest(spark: SparkSession, dir: String, kind: String,
-                            mBits: Long = 0L, nBuckets: Long = 0L): Unit =
+  private def writeManifest(spark: SparkSession, dir: String,
+                            kind: StoreKind, mBits: Long = 0L,
+                            nBuckets: Long = 0L): Unit =
     tinyWrite(spark, s"$dir/manifest", tinySchema(manifestSchema),
       Seq(g => {
-        g.add("kind", kind); g.add("version", Version)
+        g.add("kind", kind.name); g.add("version", Version)
         g.add("m_bits", mBits); g.add("n_buckets", nBuckets)
       }))
 
-  /** Read + validate the manifest: wrong `kind` or unknown `version`
-    * fails loudly with the path in the message. Version-1 manifests
-    * (no `n_buckets` column) read back with `n_buckets = 0` —
-    * loadable, unpruned.
+  /** Read + validate the manifest — the ONE place a stored `kind`
+    * string becomes a [[StoreKind]]. An unknown `kind` or a `version`
+    * newer than this build fails loudly with the path in the message,
+    * so no op — load, append, compact, merge, delete, repair,
+    * describe — proceeds on a layout it cannot interpret.
+    * Version-1 manifests (no `n_buckets` column) read back with
+    * `n_buckets = 0` — loadable, unpruned.
     */
-  private def readManifest(spark: SparkSession, dir: String,
-                           expectKind: String): Manifest = {
-    val r = tinyRead(spark, s"$dir/manifest") match {
-      case Seq(g) => Manifest(g.getString("kind", 0),
-        g.getInteger("version", 0), g.getLong("m_bits", 0),
-        if (g.getType.containsField("n_buckets"))
-          g.getLong("n_buckets", 0)
-        else 0L)
+  private def readManifest(spark: SparkSession, dir: String): Manifest = {
+    val g = tinyRead(spark, s"$dir/manifest") match {
+      case Seq(g) => g
       case rows => throw new IllegalStateException(
         s"$dir/manifest: expected exactly 1 row, found ${rows.length}")
     }
-    require(r.kind == expectKind,
-      s"$dir holds a '${r.kind}' index, not the requested '$expectKind'")
-    require(r.version >= 1 && r.version <= Version,
-      s"$dir was written by layout version ${r.version}; this build reads <= $Version")
-    r
+    val name = g.getString("kind", 0)
+    val version = g.getInteger("version", 0)
+    require(version >= 1 && version <= Version,
+      s"$dir was written by layout version $version; this build reads <= $Version")
+    val kind = StoreKind.all.find(_.name == name)
+    require(kind.isDefined, s"$dir/manifest: unknown kind '$name'")
+    Manifest(kind.get, version, g.getLong("m_bits", 0),
+      if (g.getType.containsField("n_buckets")) g.getLong("n_buckets", 0)
+      else 0L)
+  }
+
+  /** [[readManifest]] for a kind-specific op: opening a PQ directory
+    * as an IVF index fails loudly instead of mis-shaping frames.
+    */
+  private def readManifest(spark: SparkSession, dir: String,
+                           expect: StoreKind): Manifest = {
+    val m = readManifest(spark, dir)
+    require(m.kind == expect,
+      s"$dir holds a '${m.kind}' index, not the requested '$expect'")
+    m
   }
 
   /** Row count of a written parquet table — metadata-speed (footer
@@ -451,9 +472,6 @@ object IndexStore {
         g.add("ts_millis", System.currentTimeMillis())
       }), append = true)
   }
-
-  private def manifestKind(spark: SparkSession, dir: String): String =
-    tinyRead(spark, s"$dir/manifest").head.getString("kind", 0)
 
   /** Crash-safe replacement of the live table at `live` with the
     * FULLY MATERIALIZED rewrite at `tmp` — the swap step every
@@ -631,52 +649,25 @@ object IndexStore {
     * tombstones. `ids`: any frame with a `vec_id` column.
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val kind = manifestKind(spark, dir)
-    require(kind != "bloom",
+    val kind = readManifest(spark, dir).kind
+    require(kind.rows.nonEmpty,
       s"$dir holds a Bloom sketch: entries share bits, so deletion " +
         "requires a rebuild, not a tombstone")
     withWriteLock(spark, dir) {
       val distinctIds = ids
         .select(col("vec_id").cast("long").as("vec_id")).distinct()
-      // bm25 keeps its persisted corpus stats LIVE-ONLY (the
-      // [[writeBm25Stats]] invariant): fold them NEGATIVELY with the
-      // newly-tombstoned docs' (count, Σdl) — computed HERE, once, at
-      // delete time (an id-pruned batch-sized pull), so every later
-      // reopen seeds (N, avgdl) straight from the stats table instead
-      // of re-aggregating the masked doclen per handle — the exact
-      // O(corpus)-scan class round 15 removed from the append cycle.
-      // Already-tombstoned ids are excluded (a double delete must not
-      // subtract twice); ids with no doclen row contribute 0. A
-      // pre-round-16 stats row (live_only = false) with tombstones
-      // already pending can't fold — it recomputes from the masked
-      // aggregate below instead (one narrow scan, once — the upgrade).
-      val bm25Fold: Option[(Long, Long)] =
-        if (kind != "bm25") None
-        else readBm25Stats(spark, dir).map { case (n0, s0, live) =>
-          val pre = tombstones(spark, dir)
-          if (live || pre.isEmpty) {
-            val newIds = pre.fold(distinctIds)(t =>
-              distinctIds.join(broadcast(t), Seq("vec_id"), "left_anti"))
-            val (dn, ds) = doclenStatsOfIds(spark, dir, newIds)
-            (n0 - dn, s0 - ds)
-          } else (-1L, -1L) // sentinel: masked recompute after append
-        }
+      val foldState = kind.deleteFold(spark, dir, distinctIds)
       val before = diskRows(spark, s"$dir/tombstones")
       distinctIds
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(s"$dir/tombstones")
-      // stats write AFTER the tombstone append (the mask is the
-      // user-visible contract; a crash between the two leaves stats
-      // overstating by this batch — the same bounded-staleness class
-      // as appendBm25's doclen→stats window, surfaced by
-      // describe(deep)'s _corpus_stats_stale row and healed by
-      // [[repair]]/[[compact]])
-      bm25Fold.foreach {
-        case (-1L, -1L) =>
-          val (n, s) = maskedDoclenStats(spark, dir)
-          writeBm25Stats(spark, dir, n, s)
-        case (n, s) => writeBm25Stats(spark, dir, n, s)
-      }
+      // kind state folds AFTER the tombstone append (the mask is the
+      // user-visible contract; a crash between the two leaves e.g.
+      // bm25 stats overstating by this batch — the same
+      // bounded-staleness class as appendBm25's doclen→stats window,
+      // surfaced by describe(deep)'s _corpus_stats_stale row and
+      // healed by [[repair]]/[[compact]])
+      foldState()
       recordEpoch(spark, dir, "delete",
         diskRows(spark, s"$dir/tombstones") - before)
     }
@@ -822,7 +813,7 @@ object IndexStore {
       centroids.select(col("cell"), col("centroid"))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-      writeManifest(spark, dir, "ivf")
+      writeManifest(spark, dir, Ivf)
       recordEpoch(spark, dir, "save", aN())
     }
   }
@@ -837,7 +828,7 @@ object IndexStore {
     */
   def appendIvf(dir: String, assignedArrivals: DataFrame): Unit = {
     val spark = assignedArrivals.sparkSession
-    readManifest(spark, dir, "ivf")
+    readManifest(spark, dir, Ivf)
     withWriteLock(spark, dir) {
       // one file per TOUCHED cell per append (bucketAligned, k = 1) —
       // a micro-batch otherwise multiplies its task count into every
@@ -858,7 +849,7 @@ object IndexStore {
     * handle's search/serve never surfaces a deleted vector.
     */
   def loadIvf(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    readManifest(spark, dir, "ivf")
+    readManifest(spark, dir, Ivf)
     val assigned = maskTombstones(spark, dir,
       spark.read.parquet(s"$dir/assigned")
         .select(col("vec_id"), col("embedding"), col("cell").cast("int")))
@@ -883,7 +874,7 @@ object IndexStore {
       corpus.select(col("vec_id"), col("embedding"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/corpus")
       writeCodebooks(spark, dir, codebooks)
-      writeManifest(spark, dir, "pq")
+      writeManifest(spark, dir, Pq)
       recordEpoch(spark, dir, "save", cN())
     }
   }
@@ -941,7 +932,7 @@ object IndexStore {
                corpusArrivals: DataFrame,
                requireNewIds: Boolean = true): Unit = {
     val spark = codesArrivals.sparkSession
-    readManifest(spark, dir, "pq")
+    readManifest(spark, dir, Pq)
     val m = readCodebooks(spark, dir).length
     withWriteLock(spark, dir) {
       if (requireNewIds)
@@ -963,7 +954,7 @@ object IndexStore {
     */
   def loadPq(spark: SparkSession, dir: String)
       : (DataFrame, Array[Array[Array[Double]]], DataFrame) = {
-    readManifest(spark, dir, "pq")
+    readManifest(spark, dir, Pq)
     val codebooks = readCodebooks(spark, dir)
     val m = codebooks.length
     val codes = maskTombstones(spark, dir,
@@ -995,7 +986,7 @@ object IndexStore {
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
       writeCodebooks(spark, dir, codebooks)
-      writeManifest(spark, dir, "ivfpq")
+      writeManifest(spark, dir, IvfPq)
       recordEpoch(spark, dir, "save", cN())
     }
   }
@@ -1014,7 +1005,7 @@ object IndexStore {
   def appendIvfPq(dir: String, codesArrivals: DataFrame,
                   requireNewIds: Boolean = true): Unit = {
     val spark = codesArrivals.sparkSession
-    readManifest(spark, dir, "ivfpq")
+    readManifest(spark, dir, IvfPq)
     val m = readCodebooks(spark, dir).length
     withWriteLock(spark, dir) {
       if (requireNewIds)
@@ -1036,7 +1027,7 @@ object IndexStore {
     */
   def loadIvfPq(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Array[Array[Array[Double]]]) = {
-    readManifest(spark, dir, "ivfpq")
+    readManifest(spark, dir, IvfPq)
     val codebooks = readCodebooks(spark, dir)
     val m = codebooks.length
     val codes = maskTombstones(spark, dir,
@@ -1047,6 +1038,561 @@ object IndexStore {
     val centroids = spark.read.parquet(s"$dir/centroids")
       .select(col("cell"), col("centroid"))
     (codes, centroids, codebooks)
+  }
+
+  // ------------------------------------------------------------------
+  // Store kinds
+  // ------------------------------------------------------------------
+
+  /** A vec_id-keyed row table of a kind, with its partition columns
+    * (filtered to those a stored table carries, so a v1 layout stays
+    * flat). [[merge]] moves it in by file rename; [[compact]]
+    * rewrites it with the tombstones applied — unless `derived`: a
+    * pure per-row function of the kind's primary, which
+    * [[StoreKind.compactDerived]] rebuilds instead.
+    */
+  private[sources] final case class RowTable(name: String,
+                                             partCols: Seq[String] = Nil,
+                                             derived: Boolean = false)
+
+  /** One store kind, declared once: what it persists, and how each
+    * kind-generic lifecycle op — [[compact]], [[merge]], [[describe]],
+    * [[repair]], [[delete]] — treats its tables. The ops read these
+    * declarations; none of them matches on a kind. The manifest's
+    * on-disk `kind` string — each kind's [[name]] — becomes one of
+    * these at [[readManifest]] and nowhere else.
+    */
+  private[sources] sealed abstract class StoreKind(val name: String) {
+    /** Every table the kind writes, in [[describe]] order. */
+    def tables: Seq[String]
+    /** The table whose on-disk row count compact and merge epochs
+      * record. */
+    def primary: String
+    /** The vec_id row tables. Empty for a pure sketch, whose entries
+      * share bits and so cannot take tombstones. */
+    def rows: Seq[RowTable] = Nil
+    /** [[merge]]: value-check the frozen artifacts the two stores must
+      * share. Runs BEFORE the merge intent is stamped, so a refused
+      * shard leaves no pending-merge state behind. */
+    def requireMergeable(spark: SparkSession, dst: String,
+                         src: String): Unit = ()
+    /** [[merge]]: fold what cannot move by rename (sketches,
+      * aggregates), after the row tables moved. Must be safe to
+      * re-run on a crash-resumed merge. */
+    def mergeFold(spark: SparkSession, dst: String, src: String,
+                  man: Manifest): Unit = ()
+    /** [[compact]]: rewrite what the row-table compaction does not
+      * cover — derived tables, sketches, aggregates. */
+    def compactDerived(spark: SparkSession, dir: String,
+                       man: Manifest): Unit = ()
+    /** [[delete]]: kind state computed from the ids BEFORE the
+      * tombstone append; the returned thunk writes it AFTER. */
+    def deleteFold(spark: SparkSession, dir: String,
+                   ids: DataFrame): () => Unit = () => ()
+    /** [[describe]]`(deep = true)`: (check row, count) pairs — the
+      * read-only signatures of what [[heal]] repairs. */
+    def deepChecks(spark: SparkSession, dir: String): Seq[(String, Long)] =
+      Nil
+    /** [[repair]]: heal what [[deepChecks]] detects — one
+      * (issue, n, action) row per finding. */
+    def heal(spark: SparkSession, dir: String,
+             man: Manifest): Seq[(String, Long, String)] = Nil
+
+    /** Dedup row table `table` when it holds duplicate ids
+      * ([[dedupIdsRewrite]], following its declared layout) — the
+      * finding, if there was one. */
+    protected def dedup(spark: SparkSession, dir: String, table: String,
+                        label: String): Option[(String, Long, String)] = {
+      val n = duplicateIdCount(
+        spark.read.parquet(s"$dir/$table").select(col("vec_id")))
+      if (n == 0) None
+      else {
+        dedupIdsRewrite(spark, dir, table,
+          rows.find(_.name == table).fold(Seq.empty[String])(_.partCols))
+        Some((s"duplicate_${label}_ids", n, s"${table}_deduped"))
+      }
+    }
+
+    override def toString: String = name
+  }
+
+  /** The band-deriving kinds: a `bands` table that is a pure per-row
+    * function of the primary (lsh bands from the signatures, phash
+    * chunks from the hashes), plus a bit_or Bloom over its band keys
+    * — the zero-I/O prefilter screens probe before any stored file.
+    */
+  private[sources] sealed abstract class Banded(name: String,
+                                                val sketch: String)
+      extends StoreKind(name) {
+    /** The exact band-row fan-out per primary row. */
+    def bandsPerRow(spark: SparkSession, dir: String): Int
+    /** The band rows rebuilt from the stored primary, with their
+      * bucket columns under modulus `nb`. */
+    def bandRows(spark: SparkSession, dir: String, nb: Int): DataFrame
+    def bandPartCols(nb: Int): Seq[String]
+    /** The stored sketch's bit size; None when the store keeps none. */
+    def sketchBits(spark: SparkSession, dir: String,
+                   man: Manifest): Option[Int]
+    def sketchOf(bands: DataFrame, bits: Int): DataFrame
+
+    /** Rebuild the band-key sketch from the stored band table — a pure
+      * function of it, and the only way a Bloom can "forget"
+      * tombstoned keys. */
+    def rebuildSketch(spark: SparkSession, dir: String,
+                      man: Manifest): Unit =
+      sketchBits(spark, dir, man).foreach { bits =>
+        rewriteTable(spark, dir, sketch)(tmp =>
+          sketchOf(spark.read.parquet(s"$dir/bands"), bits).coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(tmp))
+      }
+
+    /** Rebuild the band table wholesale from the primary (no data
+      * loss — bands are derived), then its sketch from the new rows. */
+    def rebuildBands(spark: SparkSession, dir: String,
+                     man: Manifest): Unit = {
+      val nb = man.n_buckets.toInt
+      val perRow = bandsPerRow(spark, dir)
+      val pc = bandPartCols(nb)
+      rewriteTable(spark, dir, "bands")(tmp =>
+        bucketAligned(bandRows(spark, dir, nb), pc, "vec_id",
+            diskRows(spark, s"$dir/$primary") * perRow,
+            math.max(1, perRow * math.max(1, nb)))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy(pc: _*).parquet(tmp))
+      rebuildSketch(spark, dir, man)
+    }
+
+    /** Count of ids whose band coverage is INCONSISTENT with the
+      * layout's exact fan-out — primary rows with missing/partial band
+      * rows (the crashed-append strand: those docs silently stop being
+      * screen candidates) or band rows with no primary. The expected
+      * fan-out scales by the id's PRIMARY row count (bands are a pure
+      * per-row function of the primary, so a duplicated primary id
+      * legitimately carries nBands × its duplicates — duplication is
+      * its own defect, counted by [[duplicateIdCount]] and healed by
+      * the primary dedup; conflating it here made a
+      * consistently-duplicated store re-flag coverage on every run and
+      * the healthy-repairs-to-empty invariant never converge). One
+      * map-side-combinable count per table. */
+    def bandCoverageBadIds(spark: SparkSession, dir: String): Long = {
+      val nBands = bandsPerRow(spark, dir)
+      val primN = spark.read.parquet(s"$dir/$primary")
+        .groupBy(col("vec_id")).agg(count(lit(1)).as("n_prim"))
+      val bandN = spark.read.parquet(s"$dir/bands")
+        .groupBy(col("vec_id")).agg(count(lit(1)).as("n_band"))
+      primN.join(bandN, Seq("vec_id"), "full_outer")
+        .filter(col("n_prim").isNull ||
+          col("n_band").isNull || col("n_band") =!= col("n_prim") * nBands)
+        .count()
+    }
+
+    // the band-key Bloom FOLDS (bit_or — idempotent, so a crash-resume
+    // re-fold is harmless; equal bit sizes are guaranteed by merge's
+    // m_bits / params checks); the shard's sketch is deleted with its
+    // directory at the end of the merge
+    override def mergeFold(spark: SparkSession, dst: String, src: String,
+                           man: Manifest): Unit =
+      if (pathExists(spark, s"$src/$sketch") &&
+          pathExists(spark, s"$dst/$sketch"))
+        foldSketch(spark, dst, sketch,
+          spark.read.parquet(s"$src/$sketch"), oneFile = true)
+
+    override def deepChecks(spark: SparkSession,
+                            dir: String): Seq[(String, Long)] =
+      if (!pathExists(spark, s"$dir/bands")) Nil
+      else Seq(
+        "_band_coverage_inconsistent_ids" -> bandCoverageBadIds(spark, dir),
+        "_duplicate_primary_ids" ->
+          duplicateIdCount(spark.read.parquet(s"$dir/$primary")))
+
+    // The band table is DERIVED, and the appends write the primary
+    // first, so a crash between the two appends leaves primary rows
+    // with missing (or, under a mid-job-commit crash, partial) band
+    // coverage: those documents silently stop being CANDIDATES on
+    // every later screen — a missed-near-dup class, worse than the
+    // FP-only sketch drift the fold-first ordering already bounds.
+    // Heal: rebuild the band table wholesale from the primary and
+    // the sketch from the rebuilt rows — no data loss, unlike the bm25
+    // orphan case (there the PRIMARY rows were the partial landing).
+    // A duplicated PRIMARY id (a blind retry under the durable-ingest
+    // path's marker gap) dedups FIRST, so the rebuild derives from the
+    // healed primary and a healthy store repairs to an empty report on
+    // the next run (ADVICE r15: the pre-r16 coverage check re-flagged
+    // a consistently-duplicated store forever).
+    override def heal(spark: SparkSession, dir: String,
+                      man: Manifest): Seq[(String, Long, String)] =
+      if (!pathExists(spark, s"$dir/bands")) Nil
+      else {
+        val dup = dedup(spark, dir, primary, "primary")
+        val nBad = bandCoverageBadIds(spark, dir)
+        if (nBad > 0) rebuildBands(spark, dir, man)
+        dup.toSeq ++ (if (nBad == 0) Nil else Seq((
+          "band_coverage_inconsistent_ids", nBad,
+          s"bands_rebuilt_from_$primary")))
+      }
+  }
+
+  private[sources] object StoreKind {
+    /** `assigned/` = (vec_id, embedding, cell) partitioned by cell;
+      * `centroids/` = the tiny (cell, centroid) coarse table. */
+    case object Ivf extends StoreKind("ivf") {
+      val tables = Seq("assigned", "centroids")
+      val primary = "assigned"
+      override val rows = Seq(RowTable("assigned", Seq("cell")))
+      override def requireMergeable(spark: SparkSession, dst: String,
+                                    src: String): Unit =
+        requireSameCentroids(spark, dst, src)
+    }
+
+    // PQ / IVF-PQ crash classes (round 16 — the bm25/lsh discipline
+    // extended to the compressed families). (1) pq's `appendPq` writes
+    // corpus FIRST, codes second — a crash between the appends
+    // strands corpus rows with no code row: INERT vectors that
+    // silently vanish from every ADC shortlist (the missed-result
+    // class). Codes are a PURE FUNCTION of (corpus, codebooks) — heal
+    // by re-encoding exactly the stranded ids through the same
+    // [[graft.operators.SimilarityQueries.pqEncode]] kernel every
+    // build and append uses, so healed ≡ never-crashed bit-for-bit.
+    // (2) duplicate ids — the blind-retry residue a
+    // `requireNewIds = false` producer can leave (the default-on check
+    // refuses it otherwise): dedup the table in place (replayed rows
+    // are byte-identical re-encodes of the same vector, so keeping any
+    // one is exact).
+    /** `codes/` = (vec_id, code_0..) unpartitioned (ADC scans all
+      * codes by design); `codebooks/` = (mi, ci, vals) rows;
+      * `corpus/` = (vec_id, embedding), the rerank fetch side. */
+    case object Pq extends StoreKind("pq") {
+      val tables = Seq("codes", "codebooks", "corpus")
+      val primary = "codes"
+      override val rows = Seq(RowTable("codes"), RowTable("corpus"))
+      override def requireMergeable(spark: SparkSession, dst: String,
+                                    src: String): Unit =
+        requireSameCodebooks(spark, dst, src)
+      override def deepChecks(spark: SparkSession,
+                              dir: String): Seq[(String, Long)] = Seq(
+        "_codes_missing_ids" ->
+          idsMissingFrom(spark, dir, "corpus", "codes").count(),
+        "_duplicate_corpus_ids" ->
+          duplicateIdCount(spark.read.parquet(s"$dir/corpus")),
+        "_duplicate_codes_ids" ->
+          duplicateIdCount(spark.read.parquet(s"$dir/codes")))
+      override def heal(spark: SparkSession, dir: String,
+                        man: Manifest): Seq[(String, Long, String)] = {
+        // the corpus dedups BEFORE the re-encode reads it
+        val dups = dedup(spark, dir, "codes", "codes").toSeq ++
+          dedup(spark, dir, "corpus", "corpus")
+        val stranded = idsMissingFrom(spark, dir, "corpus", "codes")
+        val nMissing = stranded.count()
+        if (nMissing > 0)
+          graft.operators.SimilarityQueries.pqEncode(
+              spark.read.parquet(s"$dir/corpus")
+                .select(col("vec_id"), col("embedding"))
+                .join(broadcast(stranded), Seq("vec_id"), "left_semi"),
+              readCodebooks(spark, dir))
+            .write.mode(SaveMode.Append).parquet(s"$dir/codes")
+        dups ++ (if (nMissing == 0) Nil else Seq((
+          "codes_missing_ids", nMissing, "codes_reencoded_from_corpus")))
+      }
+    }
+
+    /** `codes/` = (vec_id, cell, code_*, recon2_*) partitioned by
+      * cell, plus the coarse `centroids/` and residual `codebooks/`. */
+    case object IvfPq extends StoreKind("ivfpq") {
+      val tables = Seq("codes", "centroids", "codebooks")
+      val primary = "codes"
+      override val rows = Seq(RowTable("codes", Seq("cell")))
+      override def requireMergeable(spark: SparkSession, dst: String,
+                                    src: String): Unit = {
+        requireSameCentroids(spark, dst, src)
+        requireSameCodebooks(spark, dst, src)
+      }
+      override def deepChecks(spark: SparkSession,
+                              dir: String): Seq[(String, Long)] = Seq(
+        "_duplicate_codes_ids" ->
+          duplicateIdCount(spark.read.parquet(s"$dir/codes")))
+      override def heal(spark: SparkSession, dir: String,
+                        man: Manifest): Seq[(String, Long, String)] =
+        dedup(spark, dir, "codes", "codes").toSeq
+    }
+
+    /** See [[saveLsh]]: `sigs/` by `sb`, `bands/` by (band, `bb`),
+      * `params/` the banding parameters screens replay, `bkbloom/`
+      * the band-key Bloom. */
+    case object Lsh extends Banded("lsh", "bkbloom") {
+      val tables = Seq("sigs", "bands", "params", "bkbloom")
+      val primary = "sigs"
+      override val rows = Seq(RowTable("sigs", Seq("sb")),
+        RowTable("bands", Seq("band", "bb")))
+      override def requireMergeable(spark: SparkSession, dst: String,
+                                    src: String): Unit =
+        requireSameLshParams(spark, dst, src)
+      override def compactDerived(spark: SparkSession, dir: String,
+                                  man: Manifest): Unit =
+        rebuildSketch(spark, dir, man)
+      def bandsPerRow(spark: SparkSession, dir: String): Int = {
+        val p = tinyRead(spark, s"$dir/params").head
+        math.max(1,
+          p.getInteger("num_hashes", 0) / p.getInteger("rows_per_band", 0))
+      }
+      def bandRows(spark: SparkSession, dir: String, nb: Int): DataFrame = {
+        val p = tinyRead(spark, s"$dir/params").head
+        val rows = graft.operators.DedupQueries.lshBandRows(
+          spark.read.parquet(s"$dir/sigs").select(col("vec_id"), col("sig")),
+          p.getInteger("rows_per_band", 0), p.getInteger("num_hashes", 0))
+        if (nb > 0) lshWithBb(rows, nb)
+        else rows.select(col("vec_id"), col("bkey"), col("band"))
+      }
+      def bandPartCols(nb: Int): Seq[String] =
+        if (nb > 0) Seq("band", "bb") else Seq("band")
+      def sketchBits(spark: SparkSession, dir: String,
+                     man: Manifest): Option[Int] = bkbloomBitsOf(spark, dir)
+      def sketchOf(bands: DataFrame, bits: Int): DataFrame =
+        bkeySketchOf(bands, bits)
+    }
+
+    /** See [[saveBm25]]: `postings/` by `tb`, `doclen/` (the append
+      * commit point), the `df/` aggregate and the one-row corpus
+      * `stats/`. */
+    case object Bm25 extends StoreKind("bm25") {
+      val tables = Seq("postings", "doclen", "df", "stats")
+      val primary = "doclen"
+      override val rows = Seq(RowTable("postings", Seq("tb")),
+        RowTable("doclen"))
+
+      override def requireMergeable(spark: SparkSession, dst: String,
+                                    src: String): Unit = {
+        // postings files rename across — a denormalized (dl-carrying)
+        // and a normalized shard cannot share one table
+        def denorm(d: String) = spark.read.parquet(s"$d/postings")
+          .columns.contains("dl")
+        require(denorm(dst) == denorm(src),
+          s"cannot merge: one of $dst / $src is a denormalized " +
+            "(dl-on-postings) bm25 store and the other is not — " +
+            "rewriteBm25Layout migrates either side in place")
+        // a pending df fold means that side's df may be MIXED
+        // folded/unfolded — merging would fold the other side's df
+        // onto the inconsistent base and bake the drift in; the heal
+        // must run first (it recomputes df from the postings)
+        Seq(dst, src).foreach { d =>
+          require(!pathExists(spark, bm25FoldIntent(d).toString),
+            s"cannot merge: $d has an unfinished df fold " +
+              "(df.fold.intent — a crashed append) and its df may be " +
+              s"inconsistent; run Graft.repairIndex on $d first")
+        }
+      }
+
+      // postings/doclen moved by rename; df is an AGGREGATE, so it
+      // FOLDS (union + sum through a temp swap). Folding is not
+      // rename-idempotent, so the shard's df table is deleted the
+      // moment the fold commits: a crash-resume skips an
+      // already-consumed fold. The residual window (crash between the
+      // fold's rename and the shard-df delete) can double-count df —
+      // healable, because compact RECOMPUTES df from the postings;
+      // documented, never silent data loss. Corpus stats RECOMPUTE from
+      // the merged doclen, MASKED by the merged tombstone set (the
+      // [[writeBm25Stats]] live-only invariant) — crash-resume
+      // idempotent, where a fold of the two stats rows could
+      // double-count; the shard's stats table dies with its directory.
+      override def mergeFold(spark: SparkSession, dst: String, src: String,
+                             man: Manifest): Unit = {
+        val srcDf = new org.apache.hadoop.fs.Path(s"$src/df")
+        val fs = srcDf.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(srcDf)) {
+          val folded = spark.read.parquet(s"$dst/df")
+            .select(col("tok"), col("df"))
+            .unionByName(spark.read.parquet(s"$src/df")
+              .select(col("tok"), col("df")))
+            .groupBy(col("tok")).agg(sum(col("df")).as("df"))
+          rewriteTable(spark, dst, "df")(tmp =>
+            writeBm25Table(folded, Seq("tok", "df"), man.n_buckets.toInt,
+              "tok", 0L, SaveMode.Overwrite, tmp))
+          fs.delete(srcDf, true)
+        }
+        val (mn, ms) = maskedDoclenStats(spark, dst)
+        writeBm25Stats(spark, dst, mn, ms)
+      }
+
+      // recompute df FROM the compacted postings — heals the documented
+      // delete staleness (Lucene's merge semantics) and any
+      // crashed-append drift in one pass; a pending fold intent (a
+      // crash mid-partial-fold) is healed by the same recompute, so
+      // clear it too. Corpus stats recompute from the compacted doclen
+      // — deletes are now applied, so (N, Σdl) reflect the survivors.
+      override def compactDerived(spark: SparkSession, dir: String,
+                                  man: Manifest): Unit = {
+        recomputeBm25Df(spark, dir, man.n_buckets.toInt)
+        val intent = bm25FoldIntent(dir)
+        intent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(intent, false)
+        val (n, sumDl) = doclenStatsOf(spark.read.parquet(s"$dir/doclen"))
+        writeBm25Stats(spark, dir, n, sumDl)
+      }
+
+      // bm25 keeps its persisted corpus stats LIVE-ONLY (the
+      // [[writeBm25Stats]] invariant): fold them NEGATIVELY with the
+      // newly-tombstoned docs' (count, Σdl) — computed HERE, once, at
+      // delete time (an id-pruned batch-sized pull), so every later
+      // reopen seeds (N, avgdl) straight from the stats table instead
+      // of re-aggregating the masked doclen per handle — the exact
+      // O(corpus)-scan class round 15 removed from the append cycle.
+      // Already-tombstoned ids are excluded (a double delete must not
+      // subtract twice); ids with no doclen row contribute 0. A
+      // pre-round-16 stats row (live_only = false) with tombstones
+      // already pending can't fold — it recomputes from the masked
+      // aggregate after the append instead (one narrow scan, once —
+      // the upgrade).
+      override def deleteFold(spark: SparkSession, dir: String,
+                              ids: DataFrame): () => Unit =
+        readBm25Stats(spark, dir).fold[() => Unit](() => ()) {
+          case (n0, s0, live) =>
+            val pre = tombstones(spark, dir)
+            if (live || pre.isEmpty) {
+              val newIds = pre.fold(ids)(t =>
+                ids.join(broadcast(t), Seq("vec_id"), "left_anti"))
+              val (dn, ds) = doclenStatsOfIds(spark, dir, newIds)
+              () => writeBm25Stats(spark, dir, n0 - dn, s0 - ds)
+            } else () => {
+              val (n, s) = maskedDoclenStats(spark, dir)
+              writeBm25Stats(spark, dir, n, s)
+            }
+        }
+
+      override def deepChecks(spark: SparkSession,
+                              dir: String): Seq[(String, Long)] = Seq(
+        "_orphan_postings_ids" ->
+          idsMissingFrom(spark, dir, "postings", "doclen").count(),
+        // stats drift (a crash in the doclen→stats or tombstone→stats
+        // window) surfaced READ-ONLY; an absent row is the documented
+        // fallback, not drift
+        "_corpus_stats_stale" ->
+          (if (bm25StatsHold(spark, dir, maskedDoclenStats(spark, dir))
+              .contains(false)) 1L else 0L),
+        "_df_fold_intent_pending" ->
+          (if (pathExists(spark, bm25FoldIntent(dir).toString)) 1L else 0L))
+
+      // (1) a pending `df.fold.intent` means df may be MIXED
+      // folded/unfolded across buckets: df recomputes from the
+      // postings ([[recomputeBm25Df]]) and the intent lifts. (2)
+      // orphaned postings — ids with postings rows but no doclen row
+      // (doclen is the append commit point, so these are a crashed
+      // batch's partial landing) — are REMOVED, so the denormalized
+      // layout stops scoring them and a clean re-append is legal; df
+      // recomputes from the healed table. (3) the stats row
+      // revalidates against the masked doclen aggregate and rewrites
+      // on any mismatch, or when absent.
+      override def heal(spark: SparkSession, dir: String,
+                        man: Manifest): Seq[(String, Long, String)] = {
+        val nb = man.n_buckets.toInt
+        val intent = bm25FoldIntent(dir)
+        val fs = intent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val intentPending = fs.exists(intent)
+        val nOrphans = idsMissingFrom(spark, dir, "postings", "doclen").count()
+        if (nOrphans > 0) {
+          val raw = spark.read.parquet(s"$dir/postings")
+          val pCols = Seq("vec_id", "tok", "tf") ++
+            (if (raw.columns.contains("dl")) Seq("dl") else Nil)
+          val healed = raw.join(
+            spark.read.parquet(s"$dir/doclen").select(col("vec_id")),
+            Seq("vec_id"), "left_semi")
+          rewriteTable(spark, dir, "postings")(tmp =>
+            writeBm25Table(healed, pCols, nb, "vec_id",
+              diskRows(spark, s"$dir/postings"), SaveMode.Overwrite, tmp))
+        }
+        if (intentPending || nOrphans > 0) {
+          recomputeBm25Df(spark, dir, nb)
+          fs.delete(intent, false)
+        }
+        val (n, sumDl) = maskedDoclenStats(spark, dir)
+        val statsHold = bm25StatsHold(spark, dir, (n, sumDl)).contains(true)
+        if (!statsHold) writeBm25Stats(spark, dir, n, sumDl)
+        Seq(
+          intentPending -> (("df_fold_interrupted", 1L, "df_recomputed")),
+          (nOrphans > 0) -> (("orphaned_postings_ids", nOrphans, "removed")),
+          !statsHold -> (("corpus_stats_stale", 1L, "recomputed")))
+          .collect { case (true, finding) => finding }
+      }
+    }
+
+    /** See [[savePhash]]: `hashes/` (vec_id, lo, hi), and on a
+      * bucketed store the derived `bands/` by `pb` plus the
+      * `pbbloom/` band-key Bloom. */
+    case object Phash extends Banded("phash", "pbbloom") {
+      val tables = Seq("hashes", "bands", "pbbloom")
+      val primary = "hashes"
+      // bands/ is a pure function of hashes/ — compact REBUILDS it from
+      // the compacted table (tombstones land for free) rather than swap
+      override val rows = Seq(RowTable("hashes"),
+        RowTable("bands", Seq("pb"), derived = true))
+      override def compactDerived(spark: SparkSession, dir: String,
+                                  man: Manifest): Unit =
+        if (man.n_buckets > 0) rebuildBands(spark, dir, man)
+      def bandsPerRow(spark: SparkSession, dir: String): Int = 5
+      def bandRows(spark: SparkSession, dir: String, nb: Int): DataFrame =
+        phashBandRows(spark.read.parquet(s"$dir/hashes")
+          .select(col("vec_id"), col("lo"), col("hi")), nb)
+      def bandPartCols(nb: Int): Seq[String] = Seq("pb")
+      def sketchBits(spark: SparkSession, dir: String,
+                     man: Manifest): Option[Int] =
+        Some(man.m_bits.toInt).filter(_ > 0)
+      def sketchOf(bands: DataFrame, bits: Int): DataFrame =
+        pbkeySketchOf(bands, bits)
+    }
+
+    /** `words/` = the (w, word) bit rows; the bit size rides in the
+      * manifest's `m_bits`. */
+    case object Bloom extends StoreKind("bloom") {
+      val tables = Seq("words")
+      val primary = "words"
+      // mergeable-sketch semantics: the union is a bit_or fold over the
+      // word rows, materialized FULLY into a temp dir before the live
+      // table is touched
+      override def mergeFold(spark: SparkSession, dst: String, src: String,
+                             man: Manifest): Unit =
+        foldSketch(spark, dst, "words", spark.read.parquet(s"$src/words"),
+          oneFile = false)
+      // no vec_id rows: compact rewrites the word table as it stands
+      override def compactDerived(spark: SparkSession, dir: String,
+                                  man: Manifest): Unit =
+        compactTable(spark, dir, "words", Nil, None)
+    }
+
+    val all: Seq[StoreKind] = Seq(Ivf, Pq, IvfPq, Lsh, Bm25, Phash, Bloom)
+  }
+
+  private def requireSameCentroids(spark: SparkSession, dst: String,
+                                   src: String): Unit = {
+    def pulled(dir: String) = spark.read.parquet(s"$dir/centroids")
+      .select(col("cell"), col("centroid")).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
+    require(pulled(dst) == pulled(src),
+      s"$src was built against different centroids than $dst — " +
+        "merging would mis-cell its rows; shards must come from the " +
+        "same trained handle")
+  }
+
+  private def requireSameCodebooks(spark: SparkSession, dst: String,
+                                   src: String): Unit = {
+    val a = readCodebooks(spark, dst)
+    val b = readCodebooks(spark, src)
+    require(a.length == b.length && a.indices.forall(mi =>
+      a(mi).length == b(mi).length && a(mi).indices.forall(ci =>
+        a(mi)(ci).sameElements(b(mi)(ci)))),
+      s"$src was built against different codebooks than $dst — " +
+        "merging would mix incompatible code spaces; shards must come " +
+        "from the same trained handle")
+  }
+
+  private def requireSameLshParams(spark: SparkSession, dst: String,
+                                   src: String): Unit = {
+    def pulled(dir: String) = tinyRead(spark, s"$dir/params")
+      .map(g => (g.getDouble("threshold", 0),
+        g.getInteger("num_hashes", 0), g.getInteger("rows_per_band", 0)))
+    require(pulled(dst) == pulled(src),
+      s"$src was banded with different LSH parameters than $dst " +
+        "— merging would mix incompatible bucket spaces")
+    require(bkbloomBitsOf(spark, dst) == bkbloomBitsOf(spark, src),
+      s"$src and $dst carry band-key Blooms of different sizes " +
+        "— their words cannot bit_or-fold; rebuild one side")
   }
 
   // ------------------------------------------------------------------
@@ -1072,36 +1618,62 @@ object IndexStore {
     * after compacting. Results are bit-identical (IndexStoreSpec).
     */
   def compact(spark: SparkSession, dir: String): Unit = withWriteLock(spark, dir) {
-    val kind = manifestKind(spark, dir)
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val man = readManifest(spark, dir)
     // compaction is where tombstones get APPLIED: vec_id-keyed tables
     // rewrite without the deleted rows, then the tombstone table is
     // cleared. A crash after some swaps but before the clear is safe —
     // loads keep masking, and anti-joining an already-removed id is a
     // no-op, so re-running compact converges.
     val tomb = tombstones(spark, dir)
-    val nBuckets = {
-      val m = tinyRead(spark, s"$dir/manifest").head
-      if (m.getType.containsField("n_buckets"))
-        m.getLong("n_buckets", 0).toInt
-      else 0
+    man.kind.rows.filterNot(_.derived)
+      .foreach(t => compactTable(spark, dir, t.name, t.partCols, tomb))
+    man.kind.compactDerived(spark, dir, man)
+    // the epoch log itself accretes one small file per lifecycle op —
+    // collapse it with the big tables, then record this compaction
+    compactTable(spark, dir, "epochs", Nil, None)
+    // tombstones are now applied — clear them so a later re-ingest of
+    // a deleted id becomes visible (the documented delete contract)
+    if (tomb.isDefined) {
+      val t = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
+      t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
     }
-    // partition columns follow the STORED layout: the requested cols
-    // are filtered to those actually present, so a v1 (unbucketed)
-    // table compacts flat and a v2 one keeps its probe buckets
-    def swap(sub: String, partCols: Seq[String],
-             applyTombstones: Boolean = false): Unit = {
-      val src = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val fs = src.getFileSystem(hconf)
-      if (!fs.exists(src)) return
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/$sub.compact")
-      fs.delete(tmp, true)
-      val raw = spark.read.parquet(src.toString)
-      val pc = partCols.filter(raw.columns.contains)
-      val df =
-        if (applyTombstones) tomb.fold(raw)(t =>
-          raw.join(broadcast(t), Seq("vec_id"), "left_anti"))
-        else raw
+    recordEpoch(spark, dir, "compact",
+      diskRows(spark, s"$dir/${man.kind.primary}"))
+  }
+
+  /** Rewrite `dir/table` through its `.compact` temp dir: `write`
+    * fully materializes the new table at the temp path it is given,
+    * then [[swapInto]] replaces the live table — the crash-safe order
+    * every in-place rewrite (compact, folds, heals, layout
+    * migrations) follows.
+    */
+  private def rewriteTable(spark: SparkSession, dir: String, table: String)
+                          (write: String => Unit): Unit = {
+    val live = new org.apache.hadoop.fs.Path(s"$dir/$table")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(s"$dir/$table.compact")
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    swapInto(fs, tmp, live)
+  }
+
+  /** [[compact]]'s rewrite of one stored table (absent tables are
+    * skipped), with `tomb` anti-joined out when given. Partition
+    * columns follow the STORED layout: the requested cols are
+    * filtered to those actually present, so a v1 (unbucketed) table
+    * compacts flat and a v2 one keeps its probe buckets.
+    */
+  private def compactTable(spark: SparkSession, dir: String, table: String,
+                           partCols: Seq[String],
+                           tomb: Option[DataFrame]): Unit = {
+    val src = new org.apache.hadoop.fs.Path(s"$dir/$table")
+    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(src)) return
+    val raw = spark.read.parquet(src.toString)
+    val pc = partCols.filter(raw.columns.contains)
+    val df = tomb.fold(raw)(t =>
+      raw.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    rewriteTable(spark, dir, table) { tmp =>
       if (pc.nonEmpty) {
         // same write alignment as the save paths, salt included: one
         // file per partition dir by default, split past
@@ -1112,10 +1684,9 @@ object IndexStore {
         // pc-partitioned table carries vec_id (the salt key).
         val rows = diskRows(spark, src.toString)
         val nDirs = raw.select(pc.map(col): _*).distinct().count()
-        bucketAligned(df, pc, "vec_id", rows,
-            math.max(1L, nDirs).toInt)
+        bucketAligned(df, pc, "vec_id", rows, math.max(1L, nDirs).toInt)
           .write.mode(SaveMode.Overwrite)
-          .partitionBy(pc: _*).parquet(tmp.toString)
+          .partitionBy(pc: _*).parquet(tmp)
       } else {
         val targetBytes = spark.conf
           .getOption("spark.graft.compactTargetBytes")
@@ -1123,105 +1694,25 @@ object IndexStore {
         val bytes = fs.getContentSummary(src).getLength
         val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
         df.coalesce(nFiles.toInt)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          .write.mode(SaveMode.Overwrite).parquet(tmp)
       }
-      swapInto(fs, tmp, src)
     }
-    val primary = kind match {
-      case "ivf" =>
-        swap("assigned", Seq("cell"), applyTombstones = true)
-        "assigned"
-      case "pq" =>
-        swap("codes", Nil, applyTombstones = true)
-        swap("corpus", Nil, applyTombstones = true)
-        "codes"
-      case "ivfpq" =>
-        swap("codes", Seq("cell"), applyTombstones = true)
-        "codes"
-      case "lsh" =>
-        swap("sigs", Seq("sb"), applyTombstones = true)
-        swap("bands", Seq("band", "bb"), applyTombstones = true)
-        // the band-key Bloom is a pure function of the band table —
-        // REBUILD from the compacted rows (the only way a Bloom can
-        // "forget" tombstoned keys)
-        bkbloomBitsOf(spark, dir).foreach { mBits =>
-          val live = new org.apache.hadoop.fs.Path(s"$dir/bkbloom")
-          val fs = live.getFileSystem(hconf)
-          val tmp = new org.apache.hadoop.fs.Path(s"$dir/bkbloom.compact")
-          fs.delete(tmp, true)
-          bkeySketchOf(spark.read.parquet(s"$dir/bands")
-              .select(col("bkey")), mBits)
-            .coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          swapInto(fs, tmp, live)
-        }
-        "sigs"
-      case "phash" =>
-        swap("hashes", Nil, applyTombstones = true)
-        // bands/ is a pure function of hashes/ — REBUILD from the
-        // compacted table (tombstones land for free) rather than swap
-        if (nBuckets > 0) {
-          val live = new org.apache.hadoop.fs.Path(s"$dir/bands")
-          val fs = live.getFileSystem(hconf)
-          val tmp = new org.apache.hadoop.fs.Path(s"$dir/bands.compact")
-          fs.delete(tmp, true)
-          bucketAligned(
-              phashBandRows(spark.read.parquet(s"$dir/hashes")
-                .select(col("vec_id"), col("lo"), col("hi")), nBuckets),
-              Seq("pb"), "vec_id",
-              diskRows(spark, s"$dir/hashes") * 5, nBuckets * 5)
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("pb").parquet(tmp.toString)
-          swapInto(fs, tmp, live)
-          // the band-key Bloom is a pure function of the band table —
-          // REBUILD from the compacted rows (the only way a Bloom can
-          // "forget" tombstoned keys), exactly the lsh bkbloom rule
-          val mBits = tinyRead(spark, s"$dir/manifest").head
-            .getLong("m_bits", 0).toInt
-          if (mBits > 0) {
-            val bl = new org.apache.hadoop.fs.Path(s"$dir/pbbloom")
-            val bt = new org.apache.hadoop.fs.Path(s"$dir/pbbloom.compact")
-            fs.delete(bt, true)
-            pbkeySketchOf(spark.read.parquet(s"$dir/bands")
-                .select(col("band"), col("chunk")), mBits)
-              .coalesce(1)
-              .write.mode(SaveMode.Overwrite).parquet(bt.toString)
-            swapInto(fs, bt, bl)
-          }
-        }
-        "hashes"
-      case "bm25" =>
-        swap("postings", Seq("tb"), applyTombstones = true)
-        swap("doclen", Nil, applyTombstones = true)
-        // recompute df FROM the compacted postings — heals the
-        // documented delete staleness (Lucene's merge semantics) and
-        // any crashed-append drift in one pass; a pending fold intent
-        // (a crash mid-partial-fold) is healed by the same recompute,
-        // so clear it too
-        recomputeBm25Df(spark, dir, nBuckets)
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
-        fs.delete(bm25FoldIntent(dir), false)
-        // corpus stats recompute from the compacted doclen — deletes
-        // are now applied, so (N, Σdl) reflect the surviving corpus
-        val (n, sumDl) = doclenStatsOf(
-          spark.read.parquet(s"$dir/doclen"))
-        writeBm25Stats(spark, dir, n, sumDl)
-        "doclen"
-      case "bloom" =>
-        swap("words", Nil); "words"
-      case other => throw new IllegalStateException(
-        s"$dir/manifest: unknown kind '$other'")
-    }
-    // the epoch log itself accretes one small file per lifecycle op —
-    // collapse it with the big tables, then record this compaction
-    swap("epochs", Nil)
-    // tombstones are now applied — clear them so a later re-ingest of
-    // a deleted id becomes visible (the documented delete contract)
-    if (tomb.isDefined) {
-      val t = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-      t.getFileSystem(hconf).delete(t, true)
-    }
-    recordEpoch(spark, dir, "compact", diskRows(spark, s"$dir/$primary"))
+  }
+
+  /** bit_or-fold `words` — (w, word) rows — into the sketch table
+    * `dir/table` through [[rewriteTable]]: the mergeable-sketch union
+    * every append and merge of a sketch runs (idempotent, so a
+    * crash-retry re-fold is harmless). `oneFile` writes the band-key
+    * sketches as one file; a Bloom store's word table keeps its
+    * aggregate's file count.
+    */
+  private def foldSketch(spark: SparkSession, dir: String, table: String,
+                         words: DataFrame, oneFile: Boolean): Unit = {
+    val folded = spark.read.parquet(s"$dir/$table").unionByName(words)
+      .groupBy(col("w")).agg(expr("bit_or(word)").as("word"))
+    rewriteTable(spark, dir, table)(tmp =>
+      (if (oneFile) folded.coalesce(1) else folded)
+        .write.mode(SaveMode.Overwrite).parquet(tmp))
   }
 
   /** MERGE a shard index directory into `dstDir` — the reduce step of
@@ -1257,22 +1748,16 @@ object IndexStore {
     */
   def merge(spark: SparkSession, dstDir: String, srcDir: String): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    def manifestOf(dir: String): Manifest = {
-      tinyRead(spark, s"$dir/manifest") match {
-        case Seq(g) => Manifest(g.getString("kind", 0),
-          g.getInteger("version", 0), g.getLong("m_bits", 0),
-          if (g.getType.containsField("n_buckets"))
-            g.getLong("n_buckets", 0)
-          else 0L)
-        case rows => throw new IllegalStateException(
-          s"$dir/manifest: expected exactly 1 row, found ${rows.length}")
-      }
-    }
 
-    def validateCompat(dm: Manifest, sm: Manifest): Unit = {
+    /** Both manifests agree, then the kind value-checks its frozen
+      * artifacts — all BEFORE the intent is stamped, so a refused
+      * shard (different training run) leaves no pending-merge state.
+      */
+    def validate(dm: Manifest): Unit = {
+      val sm = readManifest(spark, srcDir)
       require(dm.kind == sm.kind,
         s"cannot merge a '${sm.kind}' shard into a '${dm.kind}' index")
-      require(dm.version == sm.version && dm.version <= Version,
+      require(dm.version == sm.version,
         s"layout version mismatch: $dstDir=${dm.version}, $srcDir=${sm.version}; this build reads <= $Version")
       require(dm.m_bits == sm.m_bits,
         "cannot merge stores with different size parameters " +
@@ -1281,26 +1766,7 @@ object IndexStore {
         "cannot merge stores with different probe-bucket moduli " +
           s"(${dm.n_buckets} vs ${sm.n_buckets}) — their partition " +
           "values would interleave incompatibly; rebuild one side")
-    }
-
-    def requireSameCentroids(): Unit = {
-      def pulled(dir: String) = spark.read.parquet(s"$dir/centroids")
-        .select(col("cell"), col("centroid")).collect()
-        .map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
-      require(pulled(dstDir) == pulled(srcDir),
-        s"$srcDir was built against different centroids than $dstDir — " +
-          "merging would mis-cell its rows; shards must come from the " +
-          "same trained handle")
-    }
-    def requireSameCodebooks(): Unit = {
-      val a = readCodebooks(spark, dstDir)
-      val b = readCodebooks(spark, srcDir)
-      require(a.length == b.length && a.indices.forall(mi =>
-        a(mi).length == b(mi).length && a(mi).indices.forall(ci =>
-          a(mi)(ci).sameElements(b(mi)(ci)))),
-        s"$srcDir was built against different codebooks than $dstDir — " +
-          "merging would mix incompatible code spaces; shards must come " +
-          "from the same trained handle")
+      dm.kind.requireMergeable(spark, dstDir, srcDir)
     }
 
     /** Move every data file of `srcDir/table` into `dstDir/table` by
@@ -1335,168 +1801,15 @@ object IndexStore {
         moveFiles(fs, from, new org.apache.hadoop.fs.Path(s"$dstDir/$table"))
     }
 
-    /** Apply the kind's data movement — file renames for the vector
-      * families (plus the shard's tombstones, which are globally valid
-      * vec_id facts), the bit_or fold for Bloom (idempotent under
-      * re-application, so a crash-resume re-fold is harmless).
+    /** The kind's data movement — its vec_id row tables by file rename
+      * (plus the shard's tombstones, which are globally valid vec_id
+      * facts), then whatever cannot move by rename folds
+      * ([[StoreKind.mergeFold]]: sketches bit_or, bm25's df sums).
       */
-    /** Value-check the frozen artifacts for the kind — runs BEFORE the
-      * intent is stamped, so a refused shard (different training run)
-      * leaves no pending-merge state behind.
-      */
-    def requireSameParams(): Unit = {
-      def pulled(dir: String) = tinyRead(spark, s"$dir/params")
-        .map(g => (g.getDouble("threshold", 0),
-          g.getInteger("num_hashes", 0), g.getInteger("rows_per_band", 0)))
-      require(pulled(dstDir) == pulled(srcDir),
-        s"$srcDir was banded with different LSH parameters than $dstDir " +
-          "— merging would mix incompatible bucket spaces")
-      require(bkbloomBitsOf(spark, dstDir) == bkbloomBitsOf(spark, srcDir),
-        s"$srcDir and $dstDir carry band-key Blooms of different sizes " +
-          "— their words cannot bit_or-fold; rebuild one side")
-    }
-
-    def validateArtifacts(kind: String): Unit = kind match {
-      case "ivf" => requireSameCentroids()
-      case "pq" => requireSameCodebooks()
-      case "ivfpq" => requireSameCentroids(); requireSameCodebooks()
-      case "lsh" => requireSameParams()
-      case "bm25" =>
-        // postings files rename across — a denormalized (dl-carrying)
-        // and a normalized shard cannot share one table
-        def denorm(d: String) = spark.read.parquet(s"$d/postings")
-          .columns.contains("dl")
-        require(denorm(dstDir) == denorm(srcDir),
-          s"cannot merge: one of $dstDir / $srcDir is a denormalized " +
-            "(dl-on-postings) bm25 store and the other is not — " +
-            "rewriteBm25Layout migrates either side in place")
-        // a pending df fold means that side's df may be MIXED
-        // folded/unfolded — merging would fold the other side's df
-        // onto the inconsistent base and bake the drift in; the heal
-        // must run first (it recomputes df from the postings)
-        Seq(dstDir, srcDir).foreach { d =>
-          val ip = bm25FoldIntent(d)
-          require(!ip.getFileSystem(hconf).exists(ip),
-            s"cannot merge: $d has an unfinished df fold " +
-              "(df.fold.intent — a crashed append) and its df may be " +
-              s"inconsistent; run Graft.repairIndex on $d first")
-        }
-      case "bloom" | "phash" => ()
-      case other => throw new IllegalStateException(
-        s"$dstDir/manifest: unknown kind '$other'")
-    }
-
-    def applyMove(kind: String): Unit = kind match {
-      case "ivf" =>
-        moveTable("assigned"); moveTable("tombstones")
-      case "pq" =>
-        moveTable("codes"); moveTable("corpus"); moveTable("tombstones")
-      case "ivfpq" =>
-        moveTable("codes"); moveTable("tombstones")
-      case "lsh" =>
-        moveTable("sigs"); moveTable("bands"); moveTable("tombstones")
-        // the band-key Bloom FOLDS (bit_or — idempotent, so a
-        // crash-resume re-fold is harmless); the shard's sketch is
-        // deleted with its directory at the end of the merge
-        val srcBk = new org.apache.hadoop.fs.Path(s"$srcDir/bkbloom")
-        val bkFs = srcBk.getFileSystem(hconf)
-        if (bkFs.exists(srcBk) &&
-            bkFs.exists(new org.apache.hadoop.fs.Path(s"$dstDir/bkbloom"))) {
-          val folded = spark.read.parquet(s"$dstDir/bkbloom")
-            .unionByName(spark.read.parquet(s"$srcDir/bkbloom"))
-            .groupBy(col("w")).agg(expr("bit_or(word)").as("word"))
-          val live = new org.apache.hadoop.fs.Path(s"$dstDir/bkbloom")
-          val tmp = new org.apache.hadoop.fs.Path(s"$dstDir/bkbloom.compact")
-          bkFs.delete(tmp, true)
-          folded.coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          swapInto(bkFs, tmp, live)
-        }
-      case "phash" =>
-        moveTable("hashes"); moveTable("bands"); moveTable("tombstones")
-        // the band-key Bloom FOLDS (bit_or — idempotent, so a
-        // crash-resume re-fold is harmless); equal bit sizes are
-        // guaranteed by validateCompat's m_bits check
-        val srcPb = new org.apache.hadoop.fs.Path(s"$srcDir/pbbloom")
-        val pbFs = srcPb.getFileSystem(hconf)
-        if (pbFs.exists(srcPb) &&
-            pbFs.exists(new org.apache.hadoop.fs.Path(s"$dstDir/pbbloom"))) {
-          val folded = spark.read.parquet(s"$dstDir/pbbloom")
-            .unionByName(spark.read.parquet(s"$srcDir/pbbloom"))
-            .groupBy(col("w")).agg(expr("bit_or(word)").as("word"))
-          val live = new org.apache.hadoop.fs.Path(s"$dstDir/pbbloom")
-          val tmp = new org.apache.hadoop.fs.Path(s"$dstDir/pbbloom.compact")
-          pbFs.delete(tmp, true)
-          folded.coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          swapInto(pbFs, tmp, live)
-        }
-      case "bm25" =>
-        // postings/doclen move by rename; df is an AGGREGATE, so it
-        // FOLDS (union + sum through a temp swap). Folding is not
-        // rename-idempotent, so the shard's df table is deleted the
-        // moment the fold commits: a crash-resume skips an
-        // already-consumed fold (guard below). The residual window
-        // (crash between the fold's rename and the shard-df delete)
-        // can double-count df — healable, because compact RECOMPUTES
-        // df from the postings; documented, never silent data loss.
-        moveTable("postings"); moveTable("doclen")
-        moveTable("tombstones")
-        val srcDf = new org.apache.hadoop.fs.Path(s"$srcDir/df")
-        val fs = srcDf.getFileSystem(hconf)
-        if (fs.exists(srcDf)) {
-          val nb = manifestOf(dstDir).n_buckets.toInt
-          val folded = spark.read.parquet(s"$dstDir/df")
-            .select(col("tok"), col("df"))
-            .unionByName(spark.read.parquet(s"$srcDir/df")
-              .select(col("tok"), col("df")))
-            .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-          val live = new org.apache.hadoop.fs.Path(s"$dstDir/df")
-          val tmp = new org.apache.hadoop.fs.Path(s"$dstDir/df.compact")
-          fs.delete(tmp, true)
-          if (nb > 0)
-            bucketAligned(bm25WithTb(folded, nb, Seq("tok", "df")),
-                Seq("tb"), "tok")
-              .write.mode(SaveMode.Overwrite)
-              .partitionBy("tb").parquet(tmp.toString)
-          else folded.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          swapInto(fs, tmp, live)
-          fs.delete(srcDf, true)
-        }
-        // corpus stats: RECOMPUTE from the merged doclen, MASKED by
-        // the merged tombstone set (the [[writeBm25Stats]] live-only
-        // invariant — tombstones moved across above). One narrow
-        // two-column scan — crash-resume idempotent, where a fold of
-        // the two stats rows could double-count on a resumed merge;
-        // the shard's stats table dies with its directory
-        val (mn, ms) = maskedDoclenStats(spark, dstDir)
-        writeBm25Stats(spark, dstDir, mn, ms)
-      case "bloom" =>
-        // mergeable-sketch semantics: bit_or fold, not a file move —
-        // materialize the union FULLY into a temp dir before touching
-        // the live table (compact's crash-safety order)
-        val merged = spark.read.parquet(s"$dstDir/words")
-          .unionByName(spark.read.parquet(s"$srcDir/words"))
-          .groupBy(col("w")).agg(expr("bit_or(word)").as("word"))
-        val live = new org.apache.hadoop.fs.Path(s"$dstDir/words")
-        val fs = live.getFileSystem(hconf)
-        val tmp = new org.apache.hadoop.fs.Path(s"$dstDir/words.compact")
-        fs.delete(tmp, true)
-        merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swapInto(fs, tmp, live)
-      case other => throw new IllegalStateException(
-        s"$dstDir/manifest: unknown kind '$other'")
-    }
-
-    def primaryOf(kind: String): String = kind match {
-      case "ivf" => "assigned"
-      case "pq" | "ivfpq" => "codes"
-      case "lsh" => "sigs"
-      case "bm25" => "doclen"
-      case "phash" => "hashes"
-      case "bloom" => "words"
-      case other => throw new IllegalStateException(
-        s"$dstDir/manifest: unknown kind '$other'")
+    def applyMove(dm: Manifest): Unit = {
+      dm.kind.rows.foreach(t => moveTable(t.name))
+      moveTable("tombstones")
+      dm.kind.mergeFold(spark, dstDir, srcDir, dm)
     }
 
     // CRASH-ATOMICITY PROTOCOL: a `.merge.intent` file (shard path +
@@ -1533,8 +1846,8 @@ object IndexStore {
       }
 
     def body(): Unit = {
-      val dm = manifestOf(dstDir)
-      val primary = primaryOf(dm.kind)
+      val dm = readManifest(spark, dstDir)
+      val primary = dm.kind.primary
       readIntent() match {
         case Some((pendingSrc, _)) if pendingSrc != srcDir =>
           throw new IllegalStateException(
@@ -1545,24 +1858,22 @@ object IndexStore {
         case Some((_, before)) =>
           // RESUME the crashed merge of this same shard
           if (srcFs.exists(srcRoot)) {
-            validateCompat(dm, manifestOf(srcDir))
-            validateArtifacts(dm.kind)
-            applyMove(dm.kind)
+            validate(dm)
+            applyMove(dm)
             srcFs.delete(srcRoot, true)
           }
           recordEpoch(spark, dstDir, "merge",
             diskRows(spark, s"$dstDir/$primary") - before)
           dstFs.delete(intent, false)
         case None =>
-          validateCompat(dm, manifestOf(srcDir))
-          validateArtifacts(dm.kind)
+          validate(dm)
           val before = diskRows(spark, s"$dstDir/$primary")
           // create-if-absent: two racing merges into dst can't both
           // stamp an intent (belt to the write lock's suspenders)
           val out = dstFs.create(intent, false)
           try out.write(s"$srcDir\n$before".getBytes("UTF-8"))
           finally out.close()
-          applyMove(dm.kind)
+          applyMove(dm)
           srcFs.delete(srcRoot, true)
           recordEpoch(spark, dstDir, "merge",
             diskRows(spark, s"$dstDir/$primary") - before)
@@ -1642,18 +1953,6 @@ object IndexStore {
     touched
   }
 
-  /** (primary table name, exact band-row fan-out per id) for the
-    * band-deriving kinds — lsh bands come from the banding params,
-    * phash always emits 5 chunk rows per hash.
-    */
-  private def bandLayoutOf(spark: SparkSession, dir: String,
-                           kind: String): (String, Int) =
-    if (kind == "lsh") {
-      val p = tinyRead(spark, s"$dir/params").head
-      ("sigs", math.max(1,
-        p.getInteger("num_hashes", 0) / p.getInteger("rows_per_band", 0)))
-    } else ("hashes", 5)
-
   /** Count of ids with MORE than one row in a vec_id-keyed table —
     * the replayed-append residue (a retry after a crash re-appends
     * rows the first attempt already landed). One map-side-combinable
@@ -1674,89 +1973,60 @@ object IndexStore {
   private def dedupIdsRewrite(spark: SparkSession, dir: String,
                               table: String,
                               partCols: Seq[String]): Unit = {
-    val src = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/$table.compact")
-    fs.delete(tmp, true)
-    val raw = spark.read.parquet(src.toString)
+    val raw = spark.read.parquet(s"$dir/$table")
     val pc = partCols.filter(raw.columns.contains)
     val dd = raw.dropDuplicates("vec_id")
-    if (pc.nonEmpty)
-      bucketAligned(dd, pc, "vec_id")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(pc: _*).parquet(tmp.toString)
-    else dd.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapInto(fs, tmp, src)
+    rewriteTable(spark, dir, table)(tmp =>
+      if (pc.nonEmpty)
+        bucketAligned(dd, pc, "vec_id")
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy(pc: _*).parquet(tmp)
+      else dd.write.mode(SaveMode.Overwrite).parquet(tmp))
   }
 
-  /** Count of ids whose band coverage is INCONSISTENT with the
-    * layout's exact fan-out — primary rows with missing/partial band
-    * rows (the crashed-append strand: those docs silently stop being
-    * screen candidates) or band rows with no primary. The expected
-    * fan-out scales by the id's PRIMARY row count (bands are a pure
-    * per-row function of the primary, so a duplicated primary id
-    * legitimately carries nBands × its duplicates — duplication is
-    * its own defect, counted by [[duplicateIdCount]] and healed by
-    * [[repair]]'s primary dedup; conflating it here made a
-    * consistently-duplicated store re-flag coverage on every run and
-    * the healthy-repairs-to-empty invariant never converge). One
-    * map-side-combinable count per table; shared by
+  /** Distinct vec_ids of `table` with no row in `commit` — a crashed
+    * append's partial landing: bm25 postings without their doclen
+    * commit point, pq corpus vectors without codes. Shared by
     * [[describe]]`(deep = true)` and [[repair]].
     */
-  private def bandCoverageBadIds(spark: SparkSession, dir: String,
-                                 kind: String): Long = {
-    val (primary, nBands) = bandLayoutOf(spark, dir, kind)
-    val primN = spark.read.parquet(s"$dir/$primary")
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("n_prim"))
-    val bandN = spark.read.parquet(s"$dir/bands")
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("n_band"))
-    primN.join(bandN, Seq("vec_id"), "full_outer")
-      .filter(col("n_prim").isNull ||
-        col("n_band").isNull || col("n_band") =!= col("n_prim") * nBands)
-      .count()
+  private def idsMissingFrom(spark: SparkSession, dir: String,
+                             table: String, commit: String): DataFrame =
+    spark.read.parquet(s"$dir/$table").select(col("vec_id")).distinct()
+      .join(spark.read.parquet(s"$dir/$commit").select(col("vec_id")),
+        Seq("vec_id"), "left_anti")
+
+  private def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** FSCK + heal for a saved index directory — ONE call that turns
     * the crashed-append recovery recipes into an operation. Always
     * runs [[vacuum]]'s restore/debris sweep (without needing a
-    * separate call); on a `bm25` store it additionally:
+    * separate call), then the kind's own heals
+    * ([[StoreKind.heal]] — each the write side of a
+    * [[describe]]`(deep = true)` check):
     *
-    *  1. completes an interrupted partial df fold — a pending
-    *     `df.fold.intent` means df may be MIXED folded/unfolded
-    *     across buckets, so df recomputes from the postings
-    *     ([[recomputeBm25Df]]) and the intent lifts;
-    *  2. detects and REMOVES orphaned postings rows — vec_ids with
-    *     no doclen row, the signature of an append that crashed
-    *     between the postings append and the doclen commit point
-    *     (on the denormalized layout such rows are silently
-    *     SCOREABLE, which is why detection matters); the postings
-    *     rewrite through the standard temp + [[swapInto]] protocol,
-    *     df recomputes from the healed table;
-    *  3. revalidates the persisted corpus stats against the doclen
-    *     aggregate and rewrites them on any mismatch (the
-    *     crash-between-doclen-and-stats window).
+    *  - `bm25` completes an interrupted partial df fold, removes
+    *    orphaned postings rows (vec_ids with no doclen row — on the
+    *    denormalized layout silently SCOREABLE) and revalidates the
+    *    persisted corpus stats;
+    *  - `pq` re-encodes corpus ids MISSING FROM CODES (the
+    *    corpus-first append's crash strand) from (corpus, codebooks)
+    *    — a pure function, so healed ≡ never-crashed; `pq` and
+    *    `ivfpq` dedup DUPLICATE ids (the blind-retry residue a
+    *    `requireNewIds = false` producer can leave);
+    *  - `lsh` / `phash` check every primary row's BAND COVERAGE and
+    *    rebuild the band table and its key sketch from the primary (no
+    *    data loss); a duplicated primary id dedups first, so the
+    *    rebuild derives from the healed table and a healthy store
+    *    repairs to an EMPTY report.
     *
-    * On a `pq` store it detects corpus ids MISSING FROM CODES (the
-    * corpus-first append ordering's crash strand: inert vectors that
-    * silently vanish from every ADC shortlist) and heals by
-    * re-encoding exactly those rows from (corpus, codebooks) — a pure
-    * function, so healed ≡ never-crashed; on `pq` and `ivfpq` it also
-    * detects DUPLICATE ids (the blind-retry residue a
-    * `requireNewIds = false` producer can leave) and dedups the
-    * affected table in place.
-    *
-    * On an `lsh` / `phash` store it checks every primary row's BAND
-    * COVERAGE (the appends write sigs/hashes first, so a crash before
-    * the band append strands documents that silently stop being
-    * screen candidates — a missed-near-dup class) and heals by
-    * rebuilding the band table and its key sketch from the primary
-    * (bands are a pure function of it — no data loss); a duplicated
-    * primary id dedups first, so the rebuild derives from the healed
-    * table and a healthy store repairs to an EMPTY report.
-    *
-    * Returns the report: one (issue, n, action) row per finding —
-    * empty on a healthy store. Records a `repair` epoch when
-    * anything was healed. Cost: the orphan check is one
+    * The manifest is read (and validated) first: a store of an
+    * unknown kind or a newer layout fails loudly before anything is
+    * swept. Returns the report: one (issue, n, action) row per
+    * finding — empty on a healthy store. Records a `repair` epoch
+    * when anything was healed. Cost: the orphan check is one
     * distinct-ids semi-join (vec_id columns only); the heals rewrite
     * only what a [[compact]] would. Facade:
     * [[graft.api.Graft.repairIndex]].
@@ -1764,211 +2034,14 @@ object IndexStore {
   def repair(spark: SparkSession, dir: String): DataFrame =
     withWriteLock(spark, dir) {
       import spark.implicits._
-      val kind = manifestKind(spark, dir)
-      val report = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, String)]
+      val man = readManifest(spark, dir)
       val swept = debrisSweep(spark, dir)
-      if (swept > 0)
-        report += (("debris_dirs", swept.toLong, "restored_or_removed"))
-      if (kind == "bm25") {
-        val nb = {
-          val m = tinyRead(spark, s"$dir/manifest").head
-          if (m.getType.containsField("n_buckets"))
-            m.getLong("n_buckets", 0).toInt
-          else 0
-        }
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val intent = bm25FoldIntent(dir)
-        val intentPending = fs.exists(intent)
-        if (intentPending)
-          report += (("df_fold_interrupted", 1L, "df_recomputed"))
-        // orphaned postings: ids with postings rows but no doclen row
-        // (doclen is the append commit point, so these are a crashed
-        // batch's partial landing) — REMOVE them so the denormalized
-        // layout stops scoring them and a clean re-append is legal
-        val orphanIds = spark.read.parquet(s"$dir/postings")
-          .select(col("vec_id")).distinct()
-          .join(spark.read.parquet(s"$dir/doclen").select(col("vec_id")),
-            Seq("vec_id"), "left_anti")
-        val nOrphans = orphanIds.count()
-        if (nOrphans > 0) {
-          val raw = spark.read.parquet(s"$dir/postings")
-          val pCols = Seq("vec_id", "tok", "tf") ++
-            (if (raw.columns.contains("dl")) Seq("dl") else Nil)
-          val healed = raw.join(
-            spark.read.parquet(s"$dir/doclen").select(col("vec_id")),
-            Seq("vec_id"), "left_semi")
-          val live = new org.apache.hadoop.fs.Path(s"$dir/postings")
-          val tmp = new org.apache.hadoop.fs.Path(s"$dir/postings.compact")
-          fs.delete(tmp, true)
-          if (nb > 0)
-            bucketAligned(bm25WithTb(healed, nb, pCols), Seq("tb"),
-                "vec_id", diskRows(spark, s"$dir/postings"), nb)
-              .write.mode(SaveMode.Overwrite)
-              .partitionBy("tb").parquet(tmp.toString)
-          else healed.select(pCols.map(col): _*)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          swapInto(fs, tmp, live)
-          report += (("orphaned_postings_ids", nOrphans, "removed"))
-        }
-        if (intentPending || nOrphans > 0) {
-          recomputeBm25Df(spark, dir, nb)
-          fs.delete(intent, false)
-        }
-        // stats revalidation: ground truth is the MASKED doclen
-        // aggregate (the live-only invariant). A value-correct row
-        // that still carries the pre-round-16 schema (live_only
-        // absent) upgrades too when tombstones are pending — its
-        // value only HAPPENS to match and the flag is what loaders
-        // trust.
-        val (n, sumDl) = maskedDoclenStats(spark, dir)
-        val tombPending = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$dir/tombstones"))
-        if (!readBm25Stats(spark, dir).exists(t =>
-            t._1 == n && t._2 == sumDl && (t._3 || !tombPending))) {
-          writeBm25Stats(spark, dir, n, sumDl)
-          report += (("corpus_stats_stale", 1L, "recomputed"))
-        }
-      }
-      // PQ / IVF-PQ: the compressed families' two crash classes
-      // (round 16 — the bm25/lsh discipline extended to the last
-      // store kinds with a window). (1) pq's `appendPq` writes corpus
-      // FIRST, codes second — a crash between the appends strands
-      // corpus rows with no code row: INERT vectors that silently
-      // vanish from every ADC shortlist (the missed-result class).
-      // Codes are a PURE FUNCTION of (corpus, codebooks) — heal by
-      // re-encoding exactly the stranded ids through the same
-      // [[graft.operators.SimilarityQueries.pqEncode]] kernel every
-      // build and append uses, so healed ≡ never-crashed
-      // bit-for-bit. (2) duplicate ids — the blind-retry residue a
-      // `requireNewIds = false` producer can leave (the default-on
-      // check refuses it otherwise): dedup the table in place
-      // (replayed rows are byte-identical re-encodes of the same
-      // vector, so keeping any one is exact).
-      if (kind == "pq" || kind == "ivfpq") {
-        val dupCodes = duplicateIdCount(
-          spark.read.parquet(s"$dir/codes").select(col("vec_id")))
-        if (dupCodes > 0) {
-          dedupIdsRewrite(spark, dir, "codes", Seq("cell"))
-          report += (("duplicate_codes_ids", dupCodes, "codes_deduped"))
-        }
-        if (kind == "pq") {
-          val dupCorpus = duplicateIdCount(
-            spark.read.parquet(s"$dir/corpus").select(col("vec_id")))
-          if (dupCorpus > 0) {
-            dedupIdsRewrite(spark, dir, "corpus", Nil)
-            report += (("duplicate_corpus_ids", dupCorpus,
-              "corpus_deduped"))
-          }
-          val strandedIds = spark.read.parquet(s"$dir/corpus")
-            .select(col("vec_id")).distinct()
-            .join(spark.read.parquet(s"$dir/codes").select(col("vec_id")),
-              Seq("vec_id"), "left_anti")
-          val nMissing = strandedIds.count()
-          if (nMissing > 0) {
-            val codebooks = readCodebooks(spark, dir)
-            graft.operators.SimilarityQueries.pqEncode(
-                spark.read.parquet(s"$dir/corpus")
-                  .select(col("vec_id"), col("embedding"))
-                  .join(broadcast(strandedIds), Seq("vec_id"),
-                    "left_semi"),
-                codebooks)
-              .write.mode(SaveMode.Append).parquet(s"$dir/codes")
-            report += (("codes_missing_ids", nMissing,
-              "codes_reencoded_from_corpus"))
-          }
-        }
-      }
-      // LSH / pHash: the band table is DERIVED (a pure function of
-      // the primary table — sigs / hashes), and the append ordering
-      // writes the primary first, so a crash between the two appends
-      // leaves primary rows with missing (or, under a mid-job-commit
-      // crash, partial) band coverage: those documents silently stop
-      // being CANDIDATES on every later screen — a missed-near-dup
-      // class, worse than the FP-only sketch drift the fold-first
-      // ordering already bounds. Detection: per-id band-row counts
-      // against the layout's exact fan-out (nBands per primary row —
-      // see [[bandCoverageBadIds]]). Heal: rebuild the band table
-      // wholesale from the primary (compact's bands-are-derived rule)
-      // and the band-key sketch from the rebuilt rows — no data loss,
-      // unlike the bm25 orphan case (there the PRIMARY rows were the
-      // partial landing). A duplicated PRIMARY id (a blind retry
-      // under the durable-ingest path's marker gap) dedups FIRST, so
-      // the band rebuild derives from the healed primary and a
-      // healthy store repairs to an empty report on the next run
-      // (ADVICE r15: the pre-r16 coverage check re-flagged a
-      // consistently-duplicated store forever).
-      if (kind == "lsh" || kind == "phash") {
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bandsPath = new org.apache.hadoop.fs.Path(s"$dir/bands")
-        if (fs.exists(bandsPath)) {
-          val man = readManifest(spark, dir, kind)
-          val nb = man.n_buckets.toInt
-          val (primary, nBands) = bandLayoutOf(spark, dir, kind)
-          val dupPrim = duplicateIdCount(
-            spark.read.parquet(s"$dir/$primary").select(col("vec_id")))
-          if (dupPrim > 0) {
-            dedupIdsRewrite(spark, dir, primary, Seq("sb"))
-            report += (("duplicate_primary_ids", dupPrim,
-              s"${primary}_deduped"))
-          }
-          val nBad = bandCoverageBadIds(spark, dir, kind)
-          if (nBad > 0) {
-            val newBands =
-              if (kind == "lsh") {
-                val p = tinyRead(spark, s"$dir/params").head
-                val rows = graft.operators.DedupQueries.lshBandRows(
-                  spark.read.parquet(s"$dir/sigs")
-                    .select(col("vec_id"), col("sig")),
-                  p.getInteger("rows_per_band", 0),
-                  p.getInteger("num_hashes", 0))
-                if (nb > 0) lshWithBb(rows, nb)
-                else rows.select(col("vec_id"), col("bkey"), col("band"))
-              } else
-                phashBandRows(spark.read.parquet(s"$dir/hashes")
-                  .select(col("vec_id"), col("lo"), col("hi")), nb)
-            val partCols =
-              if (kind == "phash") Seq("pb")
-              else if (nb > 0) Seq("band", "bb") else Seq("band")
-            val tmp = new org.apache.hadoop.fs.Path(s"$dir/bands.compact")
-            fs.delete(tmp, true)
-            bucketAligned(newBands, partCols, "vec_id",
-                diskRows(spark, s"$dir/$primary") * nBands,
-                math.max(1, nBands * math.max(1, nb)))
-              .write.mode(SaveMode.Overwrite)
-              .partitionBy(partCols: _*).parquet(tmp.toString)
-            swapInto(fs, tmp, bandsPath)
-            // the band-key sketch is a pure function of the band
-            // table — rebuild it from the healed rows (compact's rule)
-            if (kind == "lsh") bkbloomBitsOf(spark, dir).foreach { mBits =>
-              val bl = new org.apache.hadoop.fs.Path(s"$dir/bkbloom")
-              val bt = new org.apache.hadoop.fs.Path(s"$dir/bkbloom.compact")
-              fs.delete(bt, true)
-              bkeySketchOf(spark.read.parquet(s"$dir/bands")
-                  .select(col("bkey")), mBits)
-                .coalesce(1)
-                .write.mode(SaveMode.Overwrite).parquet(bt.toString)
-              swapInto(fs, bt, bl)
-            } else if (man.m_bits > 0) {
-              val bl = new org.apache.hadoop.fs.Path(s"$dir/pbbloom")
-              val bt = new org.apache.hadoop.fs.Path(s"$dir/pbbloom.compact")
-              fs.delete(bt, true)
-              pbkeySketchOf(spark.read.parquet(s"$dir/bands")
-                  .select(col("band"), col("chunk")), man.m_bits.toInt)
-                .coalesce(1)
-                .write.mode(SaveMode.Overwrite).parquet(bt.toString)
-              swapInto(fs, bt, bl)
-            }
-            report += (("band_coverage_inconsistent_ids", nBad,
-              s"bands_rebuilt_from_$primary"))
-          }
-        }
-      }
+      val report =
+        (if (swept > 0) Seq(("debris_dirs", swept.toLong, "restored_or_removed"))
+         else Nil) ++ man.kind.heal(spark, dir, man)
       if (report.nonEmpty)
         recordEpoch(spark, dir, "repair", report.map(_._2).sum)
-      report.toSeq.toDF("issue", "n", "action")
+      report.toDF("issue", "n", "action")
     }
 
   // ------------------------------------------------------------------
@@ -2229,36 +2302,25 @@ object IndexStore {
     * `stale_suspect = true` flags a holder that stopped
     * heartbeating (presumed crashed; confirm, then [[breakLock]]);
     * the three columns are null on every table row and the row is
-    * absent on an unlocked store. `deep = true` adds integrity rows a
-    * metadata walk can't see — for `bm25`, `_orphan_postings_ids`
-    * (distinct vec_ids with postings but no doclen row); for
-    * `lsh`/`phash`, `_band_coverage_inconsistent_ids` (ids whose
-    * band-row count misses the layout's exact fan-out) — each the
-    * crashed-append signature [[repair]] heals, at the cost of one
-    * vec_id-column pass over the store; the default stays
-    * metadata-speed. Facade: [[graft.api.Graft.describeIndex]].
+    * absent on an unlocked store. Table rows follow the kind's
+    * declared [[StoreKind.tables]] order, then tombstones and epochs.
+    * `deep = true` adds the kind's integrity rows a metadata walk
+    * can't see ([[StoreKind.deepChecks]] — e.g. bm25's
+    * `_orphan_postings_ids`, lsh/phash's
+    * `_band_coverage_inconsistent_ids`) — each the crashed-append
+    * signature [[repair]] heals, at the cost of one vec_id-column pass
+    * over the store; the default stays metadata-speed. Facade:
+    * [[graft.api.Graft.describeIndex]].
     */
   def describe(spark: SparkSession, dir: String,
                deep: Boolean = false): DataFrame = {
     import spark.implicits._
-    val man = tinyRead(spark, s"$dir/manifest").head
-    val kind = man.getString("kind", 0)
-    val version = man.getInteger("version", 0)
-    val tables = (kind match {
-      case "ivf" => Seq("assigned", "centroids")
-      case "pq" => Seq("codes", "codebooks", "corpus")
-      case "ivfpq" => Seq("codes", "centroids", "codebooks")
-      case "lsh" => Seq("sigs", "bands", "params", "bkbloom")
-      case "bm25" => Seq("postings", "doclen", "df", "stats")
-      case "phash" => Seq("hashes", "bands", "pbbloom")
-      case "bloom" => Seq("words")
-      case other => throw new IllegalStateException(
-        s"$dir/manifest: unknown kind '$other'")
-    }) ++ Seq("tombstones", "epochs")
+    val man = readManifest(spark, dir)
+    val (kind, version) = (man.kind.name, man.version)
     val hconf = spark.sparkContext.hadoopConfiguration
     val none = (None: Option[String], None: Option[Long],
       None: Option[Boolean])
-    val rows = tables.flatMap { t =>
+    val rows = (man.kind.tables ++ Seq("tombstones", "epochs")).flatMap { t =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
       val fs = p.getFileSystem(hconf)
       if (!fs.exists(p)) None
@@ -2273,70 +2335,10 @@ object IndexStore {
         Some(holder), Some(age), Some(stale))
     }
     val deepRows =
-      if (deep && kind == "bm25") {
-        val orphans = spark.read.parquet(s"$dir/postings")
-          .select(col("vec_id")).distinct()
-          .join(spark.read.parquet(s"$dir/doclen").select(col("vec_id")),
-            Seq("vec_id"), "left_anti")
-          .count()
-        // stats drift (a crash in the doclen→stats or
-        // tombstone→stats window) is otherwise detectable only by
-        // the op that also heals it — surface it READ-ONLY here: the
-        // persisted row vs the live-only ground truth (the masked
-        // doclen aggregate; a value-correct pre-round-16 row with
-        // tombstones pending counts as stale too, because loaders
-        // trust the flag, not luck)
-        val statsStale = readBm25Stats(spark, dir) match {
-          case None => 0L // absent = documented fallback, not drift
-          case Some((n, s, live)) =>
-            val (gn, gs) = maskedDoclenStats(spark, dir)
-            val tombPending = new org.apache.hadoop.fs.Path(
-              s"$dir/tombstones").getFileSystem(hconf)
-              .exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones"))
-            if (n == gn && s == gs && (live || !tombPending)) 0L else 1L
-        }
-        val intentPending =
-          if (bm25FoldIntent(dir).getFileSystem(hconf)
-              .exists(bm25FoldIntent(dir))) 1L else 0L
-        Seq(
-          (kind, version, "_orphan_postings_ids", orphans, 0L, 0L,
-            none._1, none._2, none._3),
-          (kind, version, "_corpus_stats_stale", statsStale, 0L, 0L,
-            none._1, none._2, none._3),
-          (kind, version, "_df_fold_intent_pending", intentPending,
-            0L, 0L, none._1, none._2, none._3))
-      } else if (deep && (kind == "lsh" || kind == "phash") && {
-          val p = new org.apache.hadoop.fs.Path(s"$dir/bands")
-          p.getFileSystem(hconf).exists(p)
-        }) {
-        Seq(
-          (kind, version, "_band_coverage_inconsistent_ids",
-            bandCoverageBadIds(spark, dir, kind), 0L, 0L,
-            none._1, none._2, none._3),
-          (kind, version, "_duplicate_primary_ids",
-            duplicateIdCount(spark.read.parquet(
-              s"$dir/${bandLayoutOf(spark, dir, kind)._1}")), 0L, 0L,
-            none._1, none._2, none._3))
-      } else if (deep && kind == "pq") {
-        val missing = spark.read.parquet(s"$dir/corpus")
-          .select(col("vec_id")).distinct()
-          .join(spark.read.parquet(s"$dir/codes").select(col("vec_id")),
-            Seq("vec_id"), "left_anti")
-          .count()
-        Seq(
-          (kind, version, "_codes_missing_ids", missing, 0L, 0L,
-            none._1, none._2, none._3),
-          (kind, version, "_duplicate_corpus_ids",
-            duplicateIdCount(spark.read.parquet(s"$dir/corpus")),
-            0L, 0L, none._1, none._2, none._3),
-          (kind, version, "_duplicate_codes_ids",
-            duplicateIdCount(spark.read.parquet(s"$dir/codes")),
-            0L, 0L, none._1, none._2, none._3))
-      } else if (deep && kind == "ivfpq") {
-        Seq((kind, version, "_duplicate_codes_ids",
-          duplicateIdCount(spark.read.parquet(s"$dir/codes")),
-          0L, 0L, none._1, none._2, none._3))
-      } else Nil
+      if (!deep) Nil
+      else man.kind.deepChecks(spark, dir).map { case (check, n) =>
+        (kind, version, check, n, 0L, 0L, none._1, none._2, none._3)
+      }
     (rows ++ deepRows ++ lockRow).toDF("kind", "version", "table",
       "n_rows", "n_files", "bytes", "holder", "heartbeat_age_ms",
       "stale_suspect")
@@ -2426,7 +2428,7 @@ object IndexStore {
           .coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/pbbloom")
       }
-      writeManifest(spark, dir, "phash", bloomBits.toLong, nb.toLong)
+      writeManifest(spark, dir, Phash, bloomBits.toLong, nb.toLong)
       recordEpoch(spark, dir, "save", hN())
     }
   }
@@ -2442,7 +2444,7 @@ object IndexStore {
     */
   def appendPhash(dir: String, hashesNew: DataFrame): Unit = {
     val spark = hashesNew.sparkSession
-    val man = readManifest(spark, dir, "phash")
+    val man = readManifest(spark, dir, Phash)
     val nb = man.n_buckets.toInt
     val mBits = man.m_bits.toInt
     withWriteLock(spark, dir) {
@@ -2451,19 +2453,8 @@ object IndexStore {
           Some(phashBandRows(hashesNew.select(col("vec_id"), col("lo"),
             col("hi")), nb).localCheckpoint(eager = false))
         else None
-      bandsNew.filter(_ => mBits > 0).foreach { bn =>
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val folded = spark.read.parquet(s"$dir/pbbloom")
-          .unionByName(pbkeySketchOf(bn, mBits))
-          .groupBy(col("w")).agg(expr("bit_or(word)").as("word"))
-        val live = new org.apache.hadoop.fs.Path(s"$dir/pbbloom")
-        val fs = live.getFileSystem(hconf)
-        val tmp = new org.apache.hadoop.fs.Path(s"$dir/pbbloom.compact")
-        fs.delete(tmp, true)
-        folded.coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swapInto(fs, tmp, live)
-      }
+      bandsNew.filter(_ => mBits > 0).foreach(bn => foldSketch(spark, dir,
+        "pbbloom", pbkeySketchOf(bn, mBits), oneFile = true))
       val (hObs, hN) = observedCount(
         hashesNew.select(col("vec_id"), col("lo"), col("hi")))
       hObs.write.mode(SaveMode.Append).parquet(s"$dir/hashes")
@@ -2476,7 +2467,7 @@ object IndexStore {
 
   /** (vec_id, lo, hi) — tombstoned media ([[delete]]) anti-joined. */
   def loadPhash(spark: SparkSession, dir: String): DataFrame = {
-    readManifest(spark, dir, "phash")
+    readManifest(spark, dir, Phash)
     maskTombstones(spark, dir, spark.read.parquet(s"$dir/hashes")
       .select(col("vec_id"), col("lo"), col("hi")))
   }
@@ -2488,7 +2479,7 @@ object IndexStore {
     */
   def loadPhashBands(spark: SparkSession, dir: String)
       : Option[(DataFrame, Int)] = {
-    val nb = readManifest(spark, dir, "phash").n_buckets.toInt
+    val nb = readManifest(spark, dir, Phash).n_buckets.toInt
     if (nb <= 0) None
     else Some((maskTombstones(spark, dir,
       spark.read.parquet(s"$dir/bands")
@@ -2504,7 +2495,7 @@ object IndexStore {
     */
   def loadPhashPbBloom(spark: SparkSession, dir: String)
       : Option[(DataFrame, Int)] = {
-    val mBits = readManifest(spark, dir, "phash").m_bits.toInt
+    val mBits = readManifest(spark, dir, Phash).m_bits.toInt
     val p = new org.apache.hadoop.fs.Path(s"$dir/pbbloom")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (mBits <= 0 || !fs.exists(p)) None
@@ -2675,18 +2666,38 @@ object IndexStore {
                               nb: Int): Unit = {
     val dfNew = spark.read.parquet(s"$dir/postings")
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val live = new org.apache.hadoop.fs.Path(s"$dir/df")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/df.compact")
-    fs.delete(tmp, true)
-    if (nb > 0)
-      bucketAligned(bm25WithTb(dfNew, nb, Seq("tok", "df")),
-          Seq("tb"), "tok")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("tb").parquet(tmp.toString)
-    else dfNew.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swapInto(fs, tmp, live)
+    rewriteTable(spark, dir, "df")(tmp => writeBm25Table(dfNew,
+      Seq("tok", "df"), nb, "tok", 0L, SaveMode.Overwrite, tmp))
   }
+
+  /** Write a token-keyed bm25 table's `cols` in the stored layout:
+    * `tb`-partitioned and bucket-aligned (salted by `saltCol` when
+    * `estRows` is known — [[bucketAligned]]) under a modulus
+    * `nb` > 0, flat otherwise.
+    */
+  private def writeBm25Table(df: DataFrame, cols: Seq[String], nb: Int,
+                             saltCol: String, estRows: Long,
+                             mode: SaveMode, path: String): Unit =
+    if (nb > 0)
+      bucketAligned(bm25WithTb(df, nb, cols), Seq("tb"), saltCol,
+          estRows, nb)
+        .write.mode(mode).partitionBy("tb").parquet(path)
+    else df.select(cols.map(col): _*).write.mode(mode).parquet(path)
+
+  /** Whether the persisted corpus-stats row holds against `truth` —
+    * the masked doclen aggregate, by-name so it is only computed when
+    * a row exists; None when no row is stored. A value-correct
+    * pre-round-16 row (live_only absent) with tombstones pending does
+    * NOT hold: its value only HAPPENS to match, and the flag is what
+    * loaders trust. Shared by [[describe]]`(deep)` and [[repair]].
+    */
+  private def bm25StatsHold(spark: SparkSession, dir: String,
+                            truth: => (Long, Long)): Option[Boolean] =
+    readBm25Stats(spark, dir).map { case (n, s, live) =>
+      val (gn, gs) = truth
+      n == gn && s == gs &&
+        (live || !pathExists(spark, s"$dir/tombstones"))
+    }
 
   /** Layout: `postings/` = (vec_id, tok, tf) PARTITIONED BY
     * `tb = pmod(hash(tok), n_buckets)` (query terms derive their
@@ -2735,25 +2746,14 @@ object IndexStore {
           .join(doclen.select(col("vec_id"), col("dl")), Seq("vec_id"))
       val pCols = Seq("vec_id", "tok", "tf") ++
         (if (denormDl) Seq("dl") else Nil)
-      if (nb > 0) {
-        // shuffle-align to the bucket dirs — files ≈ buckets (× write
-        // salt from the row count already in hand), not tasks ×
-        // buckets ([[bucketAligned]]; the measured e48 ×100 save
-        // regression was exactly this amplification)
-        bucketAligned(bm25WithTb(p0, nb, pCols), Seq("tb"), "vec_id",
-            estRows, nb)
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("tb").parquet(s"$dir/postings")
-        bucketAligned(bm25WithTb(df, nb, Seq("tok", "df")), Seq("tb"),
-            "tok")
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("tb").parquet(s"$dir/df")
-      } else {
-        p0.select(pCols.map(col): _*)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/postings")
-        df.select(col("tok"), col("df"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/df")
-      }
+      // bucketed: shuffle-aligned to the bucket dirs — files ≈
+      // buckets (× write salt from the row count already in hand),
+      // not tasks × buckets ([[bucketAligned]]; the measured e48 ×100
+      // save regression was exactly this amplification)
+      writeBm25Table(p0, pCols, nb, "vec_id", estRows,
+        SaveMode.Overwrite, s"$dir/postings")
+      writeBm25Table(df, Seq("tok", "df"), nb, "tok", 0L,
+        SaveMode.Overwrite, s"$dir/df")
       // a full save is a FRESH store: clear any tombstone table the
       // overwritten store left behind — lingering tombstones would
       // silently mask same-id docs of the NEW corpus and break the
@@ -2789,7 +2789,7 @@ object IndexStore {
             .select(col("vec_id"), col("dl")))
         }
       writeBm25Stats(spark, dir, n, sumDl)
-      writeManifest(spark, dir, "bm25", 0L, nb.toLong)
+      writeManifest(spark, dir, Bm25, 0L, nb.toLong)
       recordEpoch(spark, dir, "save", n)
       if (denormDl)
         // the denorm default changed append crash semantics (a batch
@@ -2841,7 +2841,7 @@ object IndexStore {
                  doclenNew: DataFrame, dfNew: DataFrame,
                  requireNewIds: Boolean = true): Unit = {
     val spark = postingsNew.sparkSession
-    val nb = readManifest(spark, dir, "bm25").n_buckets.toInt
+    val nb = readManifest(spark, dir, Bm25).n_buckets.toInt
     // follow the STORED layout: bucket modulus from the manifest,
     // denormalized dl iff the stored postings carry it (one-footer
     // probe — a full-table read here pays an O(nb) dir listing)
@@ -2895,15 +2895,9 @@ object IndexStore {
           .join(doclenNew.select(col("vec_id"), col("dl")), Seq("vec_id"))
       val pCols = Seq("vec_id", "tok", "tf") ++
         (if (denormDl) Seq("dl") else Nil)
-      if (nb > 0)
-        // one file per TOUCHED bucket per append (bucketAligned, k=1)
-        bucketAligned(bm25WithTb(p0, nb, pCols), Seq("tb"), "vec_id")
-          .write.mode(SaveMode.Append)
-          .partitionBy("tb").parquet(s"$dir/postings")
-      else p0.select(pCols.map(col): _*)
-        .write.mode(SaveMode.Append).parquet(s"$dir/postings")
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/df.compact")
-      fs.delete(tmp, true)
+      // bucketed: one file per TOUCHED bucket per append (k = 1)
+      writeBm25Table(p0, pCols, nb, "vec_id", 0L, SaveMode.Append,
+        s"$dir/postings")
       if (nb > 0) {
         // PARTIAL fold on the bucketed layout: only the BATCH's
         // tokens' buckets can change (each token lives wholly in one
@@ -2922,6 +2916,8 @@ object IndexStore {
         // crashed-append recovery recipe for the BATCH (tombstone +
         // compact + re-append, or [[repair]]'s orphan heal) is
         // unchanged.
+        val tmp = new org.apache.hadoop.fs.Path(s"$dir/df.compact")
+        fs.delete(tmp, true)
         val tbs = dfNew
           .select(pmod(hash(col("tok")), lit(nb)).as("tb"))
           .distinct().collect().map(_.getInt(0)).toSeq
@@ -2973,8 +2969,8 @@ object IndexStore {
           .select(col("tok"), col("df"))
           .unionByName(dfNew.select(col("tok"), col("df")))
           .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-        folded.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swapInto(fs, tmp, live)
+        rewriteTable(spark, dir, "df")(tmp =>
+          folded.write.mode(SaveMode.Overwrite).parquet(tmp))
       }
       // the batch's (count, Σdl) ride the doclen append itself
       // (observed metrics — no separate batch aggregate, no
@@ -3049,7 +3045,7 @@ object IndexStore {
       // manifest read INSIDE the lock, like every other lifecycle op —
       // n_buckets is immutable for a store's lifetime, but reading
       // state under the lock keeps the kind check race-free too
-      val man = readManifest(spark, dir, "bm25")
+      val man = readManifest(spark, dir, Bm25)
       val nb = man.n_buckets.toInt
       val raw = spark.read.parquet(s"$dir/postings")
       if (raw.columns.contains("dl") != denormDl) {
@@ -3074,18 +3070,9 @@ object IndexStore {
                 " postings. delete that id + compact, then rewrite.")))))
         val pCols = Seq("vec_id", "tok", "tf") ++
           (if (denormDl) Seq("dl") else Nil)
-        val live = new org.apache.hadoop.fs.Path(s"$dir/postings")
-        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val tmp = new org.apache.hadoop.fs.Path(s"$dir/postings.compact")
-        fs.delete(tmp, true)
-        if (nb > 0)
-          bucketAligned(bm25WithTb(p0, nb, pCols), Seq("tb"), "vec_id",
-              diskRows(spark, s"$dir/postings"), nb)
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("tb").parquet(tmp.toString)
-        else p0.select(pCols.map(col): _*)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swapInto(fs, tmp, live)
+        rewriteTable(spark, dir, "postings")(tmp =>
+          writeBm25Table(p0, pCols, nb, "vec_id",
+            diskRows(spark, s"$dir/postings"), SaveMode.Overwrite, tmp))
         recordEpoch(spark, dir, "rewrite",
           diskRows(spark, s"$dir/doclen"))
       }
@@ -3121,7 +3108,7 @@ object IndexStore {
   def loadBm25(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, Int,
          Option[() => (Long, Long)]) = {
-    val man = readManifest(spark, dir, "bm25")
+    val man = readManifest(spark, dir, Bm25)
     val nb = man.n_buckets.toInt
     val raw = spark.read.parquet(s"$dir/postings")
     val pCols = Seq(col("vec_id"), col("tok"), col("tf")) ++
@@ -3262,7 +3249,7 @@ object IndexStore {
           g.add("rows_per_band", rowsPerBand)
           g.add("bkbloom_bits", bloomBits)
         }))
-      writeManifest(spark, dir, "lsh", rowsPerBand.toLong, nb.toLong)
+      writeManifest(spark, dir, Lsh, rowsPerBand.toLong, nb.toLong)
       recordEpoch(spark, dir, "save", sN())
     }
   }
@@ -3279,7 +3266,7 @@ object IndexStore {
   def appendLsh(dir: String, sigsNew: DataFrame,
                 bandsNew: DataFrame): Unit = {
     val spark = sigsNew.sparkSession
-    val nb = readManifest(spark, dir, "lsh").n_buckets.toInt
+    val nb = readManifest(spark, dir, Lsh).n_buckets.toInt
     withWriteLock(spark, dir) {
       // fold the new band keys into the bkey Bloom FIRST (bit_or — the
       // mergeable-sketch semantics; idempotent under replay). Ordering
@@ -3290,19 +3277,8 @@ object IndexStore {
       // sketch rejects, silently skipping their true near-dups on
       // every later screen. Stores saved before the sketch existed
       // simply have none to maintain.
-      bkbloomBitsOf(spark, dir).foreach { mBits =>
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val folded = spark.read.parquet(s"$dir/bkbloom")
-          .unionByName(bkeySketchOf(bandsNew, mBits))
-          .groupBy(col("w")).agg(expr("bit_or(word)").as("word"))
-        val live = new org.apache.hadoop.fs.Path(s"$dir/bkbloom")
-        val fs = live.getFileSystem(hconf)
-        val tmp = new org.apache.hadoop.fs.Path(s"$dir/bkbloom.compact")
-        fs.delete(tmp, true)
-        folded.coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swapInto(fs, tmp, live)
-      }
+      bkbloomBitsOf(spark, dir).foreach(mBits => foldSketch(spark, dir,
+        "bkbloom", bkeySketchOf(bandsNew, mBits), oneFile = true))
       val (sObs, sN) = observedCount(sigsNew)
       if (nb > 0)
         // one file per TOUCHED bucket per append (bucketAligned, k=1)
@@ -3361,7 +3337,7 @@ object IndexStore {
   def loadLsh(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Double, Int, Int, Int,
          Option[(DataFrame, Int)]) = {
-    val man = readManifest(spark, dir, "lsh")
+    val man = readManifest(spark, dir, Lsh)
     val p = tinyRead(spark, s"$dir/params") match {
       case Seq(g) => (g.getDouble("threshold", 0),
         g.getInteger("num_hashes", 0), g.getInteger("rows_per_band", 0))
@@ -3401,7 +3377,7 @@ object IndexStore {
     withWriteLock(spark, dir) {
       words.select(col("w"), col("word"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/words")
-      writeManifest(spark, dir, "bloom", mBits.toLong)
+      writeManifest(spark, dir, Bloom, mBits.toLong)
       recordEpoch(spark, dir, "save", diskRows(spark, s"$dir/words"))
     }
   }
@@ -3417,19 +3393,11 @@ object IndexStore {
     */
   def appendBloom(dir: String, newWords: DataFrame): Unit = {
     val spark = newWords.sparkSession
-    readManifest(spark, dir, "bloom")
+    readManifest(spark, dir, Bloom)
     withWriteLock(spark, dir) {
       val before = diskRows(spark, s"$dir/words")
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val merged = spark.read.parquet(s"$dir/words")
-        .unionByName(newWords.select(col("w"), col("word")))
-        .groupBy(col("w")).agg(expr("bit_or(word)").as("word"))
-      val live = new org.apache.hadoop.fs.Path(s"$dir/words")
-      val fs = live.getFileSystem(hconf)
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/words.compact")
-      fs.delete(tmp, true)
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapInto(fs, tmp, live)
+      foldSketch(spark, dir, "words", newWords.select(col("w"), col("word")),
+        oneFile = false)
       recordEpoch(spark, dir, "append",
         diskRows(spark, s"$dir/words") - before)
     }
@@ -3440,7 +3408,7 @@ object IndexStore {
     * than against a live one.
     */
   def loadBloom(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val man = readManifest(spark, dir, "bloom")
+    val man = readManifest(spark, dir, Bloom)
     val words = spark.read.parquet(s"$dir/words")
       .select(col("w"), col("word"))
     (words, man.m_bits.toInt)

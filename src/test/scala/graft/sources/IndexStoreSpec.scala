@@ -238,6 +238,42 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       "each cell directory must hold exactly one file after compact")
     assert(exact(Graft.loadAnnIndex(spark, dIvf).search(queries))
       == beforeIvf)
+    // IVF-PQ (cell-partitioned code table): one file per cell
+    val dIp = tmp()
+    Graft.ivfPqIndex(snapshot).save(dIp)
+    for (i <- 0 until 3)
+      Graft.loadIvfPqIndex(spark, dIp)
+        .appendDurable(dIp, arrivals.filter(col("vec_id") % 3 === i))
+    val beforeIp = exact(Graft.loadIvfPqIndex(spark, dIp).search(queries))
+    val filesIp = parquetFiles(dIp, "codes")
+    Graft.compactIndex(spark, dIp)
+    val ipCells = new java.io.File(s"$dIp/codes").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+    assert(ipCells.nonEmpty && ipCells.forall(
+      _.listFiles().count(_.getName.endsWith(".parquet")) == 1),
+      "each ivfpq cell directory must hold exactly one file after compact")
+    assert(parquetFiles(dIp, "codes") < filesIp)
+    assert(exact(Graft.loadIvfPqIndex(spark, dIp).search(queries))
+      == beforeIp)
+    // Bloom: every append already rewrites the one word table (a
+    // bit_or fold), so compact keeps it at one file and collapses the
+    // epoch log the appends accreted
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val dBl = tmp()
+    val sketch = Graft.bloomSketch(Graft.segmentHashes(
+      docs.filter(col("doc_id") % 4 === 0)))
+    sketch.save(dBl)
+    for (i <- 1 until 4)
+      Graft.loadBloomIndex(spark, dBl)
+        .appendDurable(dBl, docs.filter(col("doc_id") % 4 === i))
+    val beforeBl = exact(Graft.loadBloomIndex(spark, dBl).words.orderBy("w"))
+    val epochFilesBl = parquetFiles(dBl, "epochs")
+    Graft.compactIndex(spark, dBl)
+    assert(parquetFiles(dBl, "words") == 1)
+    assert(parquetFiles(dBl, "epochs") < epochFilesBl,
+      s"epoch files must drop: $epochFilesBl -> ${parquetFiles(dBl, "epochs")}")
+    assert(exact(Graft.loadBloomIndex(spark, dBl).words.orderBy("w"))
+      == beforeBl)
   }
 
   test("epoch audit: save/append/compact record (seq, op, n_rows) counted from the written files") {
@@ -426,6 +462,41 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       == Set("codes", "codebooks", "corpus", "epochs"))
     assert(Graft.describeIndex(spark, dPq)
       .filter(col("kind") =!= "pq").count() == 0)
+    // the other five kinds: every stored table, in describe's order
+    def tables(d: String, kind: String): Seq[String] = {
+      val rows = Graft.describeIndex(spark, d).collect()
+      assert(rows.forall(_.getAs[String]("kind") == kind))
+      assert(rows.forall(r =>
+        r.getAs[Long]("n_files") > 0 && r.getAs[Long]("bytes") > 0))
+      rows.map(_.getAs[String]("table")).toSeq
+    }
+    val dIp = tmp()
+    Graft.ivfPqIndex(emb).save(dIp)
+    assert(tables(dIp, "ivfpq") == Seq("codes", "centroids", "codebooks", "epochs"))
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val dLsh = tmp()
+    Graft.lshIndex(docs).save(dLsh)
+    assert(tables(dLsh, "lsh")
+      == Seq("sigs", "bands", "params", "bkbloom", "epochs"))
+    val dBm = tmp()
+    Graft.bm25Index(docs).save(dBm)
+    assert(tables(dBm, "bm25")
+      == Seq("postings", "doclen", "df", "stats", "epochs"))
+    val media = spark.range(0, 64).toDF("media_id")
+      .withColumn("lo", expr("xxhash64(media_id) & 4294967295"))
+      .withColumn("hi", expr("xxhash64(media_id + 999) & 4294967295"))
+    val dPh = tmp()
+    Graft.phashIndex(media).save(dPh)
+    assert(tables(dPh, "phash") == Seq("hashes", "bands", "pbbloom", "epochs"))
+    val dBl = tmp()
+    Graft.bloomSketch(Graft.segmentHashes(docs)).save(dBl)
+    assert(tables(dBl, "bloom") == Seq("words", "epochs"))
+    // tombstones describe after the kind's tables, before epochs
+    Graft.deleteFromIndex(spark, dPh,
+      media.filter(col("media_id") < 3).select(col("media_id").as("vec_id")))
+    assert(tables(dPh, "phash")
+      == Seq("hashes", "bands", "pbbloom", "tombstones", "epochs"))
   }
 
   test("shard + merge: IVF parallel build equals the append path; shards consumed; epochs logged") {
@@ -1430,5 +1501,74 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deepRow(d, "_band_coverage_inconsistent_ids") == 0L)
     assert(Graft.repairIndex(spark, d).collect().isEmpty,
       "the healthy-repairs-to-empty invariant must converge")
+  }
+
+  test("mutating ops validate the manifest: a newer layout version or an unknown kind fails loudly, writing nothing") {
+    def rewriteManifest(d: String, kind: String, version: Int): Unit = {
+      import spark.implicits._
+      Seq((kind, version, 0L, 0L)).toDF("kind", "version", "m_bits", "n_buckets")
+        .coalesce(1).write.mode("overwrite").parquet(s"$d/manifest")
+    }
+    val ids = emb.filter(col("vec_id") < 3).select(col("vec_id"))
+    for ((kind, version, msg) <- Seq(
+        ("ivf", 3, "layout version 3"), ("nope", 2, "'nope'"))) {
+      val d = tmp()
+      Graft.annIndex(emb).save(d)
+      rewriteManifest(d, kind, version)
+      val ops: Seq[(String, () => Any)] = Seq(
+        "compact" -> (() => Graft.compactIndex(spark, d)),
+        "delete" -> (() => Graft.deleteFromIndex(spark, d, ids)),
+        "repair" -> (() => Graft.repairIndex(spark, d).collect()))
+      ops.foreach { case (op, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(msg),
+          s"$op on a ($kind, v$version) manifest: ${e.getMessage}")
+      }
+      assert(!new java.io.File(s"$d/tombstones").exists(),
+        "a refused delete must write no tombstones")
+      assert(Graft.indexEpochs(spark, d).count() == 1L,
+        "a refused op must record no epoch")
+    }
+  }
+
+  test("IVF and IVF-PQ save/shard persist the handle's pulled centroids, even after the training input grew") {
+    // % 7 split, e29's protocol: % 5 empties the every-125th codebook init
+    val base = emb.filter(col("vec_id") % 7 =!= 0)
+    val grown = emb.filter(col("vec_id") % 7 === 0 && col("vec_id") % 2 === 0)
+      .withColumn("label", (col("label") + 1) % 3)
+    val arrivals = emb.filter(col("vec_id") % 7 === 0 && col("vec_id") % 2 === 1)
+    for (family <- Seq("ivf", "ivfpq")) {
+      // a cached training frame over a directory that keeps receiving
+      // data: refreshByPath re-lists it, so its lazy centroid frame
+      // would now average rows the assignments never saw
+      val src = tmp() + "/corpus"
+      base.write.parquet(src)
+      val train = spark.read.parquet(src).cache()
+      val (save, shard, snapshot) =
+        if (family == "ivf") {
+          val idx = Graft.annIndex(train)
+          ((d: String) => idx.save(d),
+            (d: String, v: DataFrame) => idx.shard(d, v),
+            idx.centroids.collect())
+        } else {
+          val idx = Graft.ivfPqIndex(train)
+          ((d: String) => idx.save(d),
+            (d: String, v: DataFrame) => idx.shard(d, v),
+            idx.centroids.collect())
+        }
+      grown.write.mode("append").parquet(src)
+      spark.catalog.refreshByPath(src)
+      val root = tmp()
+      save(s"$root/main")
+      shard(s"$root/s1", arrivals)
+      def stored(d: String) = spark.read.parquet(s"$d/centroids")
+        .collect().map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
+      val want = snapshot.map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
+      assert(stored(s"$root/main") == want, s"$family: saved centroids")
+      assert(stored(s"$root/s1") == want, s"$family: shard centroids")
+      Graft.mergeIndex(spark, s"$root/main", s"$root/s1")
+      assert(!new java.io.File(s"$root/s1").exists())
+      train.unpersist()
+    }
   }
 }
