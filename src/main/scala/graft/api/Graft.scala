@@ -1272,28 +1272,36 @@ object Graft {
     * Gate: `e05_ann_ivf` (routes through [[IvfIndex.search]]).
     */
   def annIndex(corpus: DataFrame): IvfIndex = {
-    val centroids = SimilarityQueries.labelCentroids(corpus)
-    val pulled = SimilarityQueries.pullCentroids(centroids)
+    val pulled = SimilarityQueries.pullCentroids(
+      SimilarityQueries.labelCentroids(corpus))
     IvfIndex(SimilarityQueries.assignCellsPulled(corpus, pulled),
-      centroids, Some(pulled))
+      () => pulled)
   }
 
-  /** A built IVF index: `assigned` = (vec_id, embedding, cell) corpus,
-    * `centroids` = (cell, centroid) tiny table. `pulledSeed` carries
-    * the driver-pulled centroid tuple when the builder already paid
-    * the pull ([[annIndex]]); a handle without it (e.g.
-    * [[loadAnnIndex]]) pulls lazily on first use — once per handle.
+  /** A built IVF index: `assigned` = (vec_id, embedding, cell) corpus
+    * plus ONE centroid snapshot — the (cell, centroid) tuple pulled
+    * driver-side at most once per handle (bounded: ≤ #cells × 64
+    * floats) by `pull`, on first use. [[annIndex]] hands over the
+    * tuple it trained; [[loadAnnIndex]] pulls the saved table lazily,
+    * so opening a store runs no job. Every assignment, probe, drift
+    * report, stream, save and shard of the handle uses this snapshot,
+    * and [[centroids]] reads it back as a frame.
     */
   final case class IvfIndex private[api] (
-      assigned: DataFrame, centroids: DataFrame,
-      private[api] val pulledSeed: Option[Seq[(Int, Array[Float])]] =
-        None) {
+      assigned: DataFrame,
+      private[api] val pull: () => Seq[(Int, Array[Float])]) {
+    private[api] lazy val pulled: Seq[(Int, Array[Float])] = pull()
+
+    /** The (cell, centroid) table of this handle's snapshot. */
+    def centroids: DataFrame =
+      SimilarityQueries.centroidsLocal(assigned.sparkSession, pulled)
+
     /** Probe the `probes` nearest cells per query, exact-cosine rank
       * within them, top-`k` per query. Queries: (vec_id, embedding).
       * Output: (query_id, rank, neighbor_id, cos) sorted.
       */
     def search(queries: DataFrame, probes: Int = 2, k: Int = 3): DataFrame =
-      SimilarityQueries.probeAndRank(assigned, probed(queries, probes), k)
+      searchIn(assigned, queries, probes, k)
 
     /** Append NEW vectors WITHOUT retraining: the trained centroids are
       * immutable; arrivals are assigned into the existing cells in one
@@ -1308,8 +1316,7 @@ object Graft {
       */
     def append(newVecs: DataFrame): IvfIndex =
       IvfIndex(assigned.unionByName(
-        SimilarityQueries.assignCellsPulled(newVecs, pulledCentroids)),
-        centroids, Some(pulledCentroids))
+        SimilarityQueries.assignCellsPulled(newVecs, pulled)), () => pulled)
 
     /** [[append]] made DURABLE: assign the arrivals with this handle's
       * (frozen) centroids — the exact gated kernel — and write them
@@ -1326,7 +1333,7 @@ object Graft {
       */
     def appendDurable(dir: String, newVecs: DataFrame): IvfIndex = {
       IndexStore.appendIvf(dir,
-        SimilarityQueries.assignCellsPulled(newVecs, pulledCentroids))
+        SimilarityQueries.assignCellsPulled(newVecs, pulled))
       loadAnnIndex(newVecs.sparkSession, dir)
     }
 
@@ -1342,8 +1349,7 @@ object Graft {
       */
     def shard(dir: String, vecs: DataFrame): Unit =
       IndexStore.saveIvf(dir,
-        SimilarityQueries.assignCellsPulled(vecs, pulledCentroids),
-        savedCentroids)
+        SimilarityQueries.assignCellsPulled(vecs, pulled), centroids)
 
     /** Cell-occupancy drift report — the RE-TRAIN TRIGGER [[append]]'s
       * doc points at: assign a non-empty arrival `sample` (vec_id,
@@ -1358,8 +1364,7 @@ object Graft {
       * Gate: `e28_index_drift`.
       */
     def drift(sample: DataFrame): DataFrame =
-      SimilarityQueries.cellDrift(assigned, centroids, sample,
-        Some(pulledCentroids))
+      SimilarityQueries.cellDrift(assigned, pulled, sample)
 
     /** DRIFT-TRIGGERED RETRAIN — closes the monitor → action loop the
       * drift reports (e28/e31/e32/e34) point at: compute [[drift]] of
@@ -1394,7 +1399,7 @@ object Graft {
         val relabeled = assigned
           .select(col("vec_id"), col("embedding"), col("cell"))
           .unionByName(
-            SimilarityQueries.assignCellsPulled(arrivals, pulledCentroids))
+            SimilarityQueries.assignCellsPulled(arrivals, pulled))
           .withColumnRenamed("cell", "label")
         annIndex(relabeled)
       }
@@ -1409,8 +1414,9 @@ object Graft {
       * `ids`: any frame with a `vec_id` column.
       */
     def delete(ids: DataFrame): IvfIndex =
-      copy(assigned = assigned.join(
-        broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
+      IvfIndex(assigned.join(
+        broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti"),
+        () => pulled)
 
     /** FILTERED search — ANN with a metadata predicate ("nearest
       * neighbors WHERE ..."): the index stays as built; `keepIds`
@@ -1424,13 +1430,17 @@ object Graft {
       */
     def searchWhere(queries: DataFrame, keepIds: DataFrame,
                     probes: Int = 2, k: Int = 3): DataFrame = {
-      val filtered = assigned.join(
-        keepIds.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      SimilarityQueries.probeAndRank(filtered, probed(queries, probes), k)
+      searchIn(assigned.join(
+        keepIds.select(col("vec_id")), Seq("vec_id"), "left_semi"),
+        queries, probes, k)
     }
 
-    private def probed(queries: DataFrame, probes: Int): DataFrame =
-      SimilarityQueries.probedPulled(queries, pulledCentroids, probes)
+    private def searchIn(corpus: DataFrame, queries: DataFrame,
+                         probes: Int, k: Int): DataFrame =
+      SimilarityQueries.probeAndRank(corpus,
+        SimilarityQueries.probeCells(queries.select(
+          col("vec_id").as("query_id"), col("embedding").as("q_emb")),
+          pulled, probes), k)
 
     /** Persist to `dir` ([[graft.sources.IndexStore]] layout): the
       * assigned corpus lands PARTITIONED BY cell — the exact hive
@@ -1441,26 +1451,7 @@ object Graft {
       * cycle a production store runs between re-trains.
       */
     def save(dir: String): Unit =
-      IndexStore.saveIvf(dir, assigned, savedCentroids)
-
-    /** The tiny centroid table pulled driver-side ONCE per handle —
-      * the bounded (≤ #cells × 64 floats) pull that makes assignment,
-      * probing and streaming serving pure projections over centroid
-      * literals. Seeded by [[annIndex]] (which already paid the pull);
-      * a loaded handle pulls lazily on first use.
-      */
-    private lazy val pulledCentroids: Seq[(Int, Array[Float])] =
-      pulledSeed.getOrElse(SimilarityQueries.pullCentroids(centroids))
-
-    /** What [[save]] and [[shard]] persist as the centroid table: the
-      * pulled snapshot every assignment used, never the lazy
-      * [[centroids]] frame — recomputed at save time over a training
-      * input that has since grown, that frame would disagree with the
-      * saved assignments, and merge's centroid check would refuse
-      * this handle's own shards.
-      */
-    private def savedCentroids: DataFrame =
-      SimilarityQueries.centroidsLocal(assigned.sparkSession, pulledCentroids)
+      IndexStore.saveIvf(dir, assigned, centroids)
 
     /** Serve an unbounded query stream against this index — delegates
       * to [[graft.streaming.EmbStreams.ivfServe]] with the handle's
@@ -1471,7 +1462,7 @@ object Graft {
       */
     def serve(queries: Dataset[EmbStreams.EmbQuery], nprobe: Int = 2,
               k: Int = 3): Dataset[EmbStreams.AnnHit] =
-      EmbStreams.ivfServe(queries, assigned, pulledCentroids, nprobe, k)
+      EmbStreams.ivfServe(queries, assigned, pulled, nprobe, k)
 
     /** Partition-pruned serving against a SAVED copy of this index:
       * `corpusDir` is the cell-partitioned assigned table —
@@ -1484,8 +1475,8 @@ object Graft {
                     corpusDir: String, nprobe: Int = 2, k: Int = 3)
                    (onBatch: DataFrame => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.ivfServePruned(queries, corpusDir, pulledCentroids,
-        nprobe, k)(onBatch)
+      EmbStreams.ivfServePruned(queries, corpusDir, pulled, nprobe, k)(
+        onBatch)
 
     /** [[servePruned]] against the WHOLE saved store at `storeDir` —
       * tombstone-aware: reads the cell-partitioned table at
@@ -1506,7 +1497,7 @@ object Graft {
                          storeDir: String, nprobe: Int = 2, k: Int = 3)
                         (onBatch: DataFrame => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery = {
-      val spark = centroids.sparkSession
+      val spark = assigned.sparkSession
       // eager snapshot: a LocalRelation of the tombstone ids — immune
       // to the tombstones/ dir being deleted by a concurrent compact;
       // FENCED against spark.graft.maxTombstoneSnapshot (an
@@ -1514,7 +1505,7 @@ object Graft {
       // pointing at compactIndex, not as a driver OOM)
       val snapshot = IndexStore.tombstoneSnapshot(spark, storeDir)
       EmbStreams.ivfServePruned(queries, s"$storeDir/assigned",
-        pulledCentroids, nprobe, k, snapshot)(onBatch)
+        pulled, nprobe, k, snapshot)(onBatch)
     }
 
     /** AT-INGEST append — [[append]]'s streaming sibling through the
@@ -1526,7 +1517,7 @@ object Graft {
     def appendStream(arrivals: Dataset[EmbStreams.EmbArrival])
                     (onBatch: DataFrame => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.ivfAppend(arrivals, centroids)(onBatch)
+      EmbStreams.ivfAppend(arrivals, pulled)(onBatch)
 
     /** [[appendStream]] writing INTO the saved layout at `dir` —
       * streaming ingest made durable: each micro-batch appends under
@@ -1542,7 +1533,7 @@ object Graft {
                             dir: String,
                             checkpointDir: Option[String] = None)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.ivfAppendDurable(arrivals, centroids, dir, checkpointDir)
+      EmbStreams.ivfAppendDurable(arrivals, pulled, dir, checkpointDir)
 
     /** AT-INGEST drift monitor — [[drift]]'s streaming sibling
       * through the handle: running per-cell arrival counts as
@@ -1557,8 +1548,8 @@ object Graft {
                      checkpointDir: Option[String] = None)
                     (onReport: DataFrame => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.driftMonitor(arrivals, assigned, pulledCentroids,
-        checkpointDir)(onReport)
+      EmbStreams.driftMonitor(arrivals, assigned, pulled, checkpointDir)(
+        onReport)
 
     /** [[driftMonitor]] over a SLIDING EVENT-TIME WINDOW — the
       * production trigger watches recent drift, not all-of-history
@@ -1577,7 +1568,7 @@ object Graft {
                                java.sql.Timestamp, DataFrame) => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery =
       EmbStreams.driftMonitorWindowed(arrivals, assigned,
-        pulledCentroids, windowMinutes, slideMinutes, latenessMinutes,
+        pulled, windowMinutes, slideMinutes, latenessMinutes,
         checkpointDir)(onReport)
   }
 
@@ -1590,7 +1581,7 @@ object Graft {
     */
   def loadAnnIndex(spark: SparkSession, dir: String): IvfIndex = {
     val (assigned, centroids) = IndexStore.loadIvf(spark, dir)
-    IvfIndex(assigned, centroids)
+    IvfIndex(assigned, () => SimilarityQueries.pullCentroids(centroids))
   }
 
   /** Compact a saved index directory (any kind) — the maintenance op
@@ -2149,22 +2140,26 @@ object Graft {
     * decomposition: e19.
     */
   def ivfPqIndex(corpus: DataFrame): IvfPqIndex = {
-    val (encoded, centroids, codebooks, pulled) =
+    val (encoded, codebooks, pulled) =
       SimilarityQueries.ivfPqTrainEncode(corpus)
-    IvfPqIndex(encoded, centroids, codebooks, Some(pulled))
+    IvfPqIndex(encoded, codebooks, () => pulled)
   }
 
   /** A built IVF-PQ index: `codes` = (vec_id, cell, code_0..code_3,
-    * recon2_0..recon2_3), `centroids` = the tiny coarse table, plus the
-    * trained residual `codebooks`. `pulledSeed` carries the
-    * driver-pulled coarse centroids when the builder already paid the
-    * pull; a loaded handle pulls lazily on first use.
+    * recon2_0..recon2_3), the trained residual `codebooks`, and ONE
+    * coarse-centroid snapshot pulled at most once by `pull`
+    * ([[IvfIndex]]'s rule: [[ivfPqIndex]] hands over the tuple it
+    * trained, [[loadIvfPqIndex]] pulls lazily on first use).
     */
   final case class IvfPqIndex private[api] (
-      codes: DataFrame, centroids: DataFrame,
+      codes: DataFrame,
       codebooks: Array[Array[Array[Double]]],
-      private[api] val pulledSeed: Option[Seq[(Int, Array[Float])]] =
-        None) {
+      private[api] val pull: () => Seq[(Int, Array[Float])]) {
+    private[api] lazy val pulled: Seq[(Int, Array[Float])] = pull()
+
+    /** The coarse (cell, centroid) table of this handle's snapshot. */
+    def centroids: DataFrame =
+      SimilarityQueries.centroidsLocal(codes.sparkSession, pulled)
 
     /** Probe the `probes` nearest cells per query, ADC-score their
       * candidates by (q·c + Σ q_m·r̂_m) / (‖q‖·‖c + r̂‖), top-`k` per
@@ -2174,10 +2169,9 @@ object Graft {
       */
     def search(queries: DataFrame, probes: Int = 2, k: Int = 3)
         : DataFrame =
-      SimilarityQueries.ivfPqSearch(codes, centroids, codebooks,
+      SimilarityQueries.ivfPqSearch(codes, pulled, codebooks,
         queries.select(col("vec_id").as("query_id"),
-          col("embedding").as("q_emb")), probes, k,
-        pulled = Some(pulledCentroids))
+          col("embedding").as("q_emb")), probes, k)
 
     /** Two-stage composite search — [[PqIndex.rerank]]'s contract for
       * the IVF-PQ family: probe + ADC shortlist of `fetch` candidates
@@ -2198,8 +2192,7 @@ object Graft {
       val q = queries.select(col("vec_id").as("query_id"),
         col("embedding").as("q_emb"))
       val shortlist = SimilarityQueries.ivfPqSearch(
-          codes, centroids, codebooks, q, probes, fetch, ordered = false,
-          pulled = Some(pulledCentroids))
+          codes, pulled, codebooks, q, probes, fetch, ordered = false)
         .select(col("query_id"), col("vec_id"))
       SimilarityQueries.pqRerankStage(
         corpus.select(col("vec_id"), col("embedding")), shortlist, q, k)
@@ -2233,7 +2226,7 @@ object Graft {
         val union = corpus.select(col("vec_id"), col("embedding"))
           .unionByName(arrivals.select(col("vec_id"), col("embedding")))
         ivfPqIndex(
-          SimilarityQueries.assignCellsPulled(union, pulledCentroids)
+          SimilarityQueries.assignCellsPulled(union, pulled)
             .withColumnRenamed("cell", "label"))
       }
     }
@@ -2246,8 +2239,9 @@ object Graft {
       * through the exact stage either.
       */
     def delete(ids: DataFrame): IvfPqIndex =
-      copy(codes = codes.join(
-        broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
+      IvfPqIndex(codes.join(
+        broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti"),
+        codebooks, () => pulled)
 
     /** FILTERED composite search — [[IvfIndex.searchWhere]]'s contract
       * for the IVF-PQ family: the predicate semi-join lands on the
@@ -2259,10 +2253,9 @@ object Graft {
       SimilarityQueries.ivfPqSearch(
         codes.join(keepIds.select(col("vec_id")), Seq("vec_id"),
           "left_semi"),
-        centroids, codebooks,
+        pulled, codebooks,
         queries.select(col("vec_id").as("query_id"),
-          col("embedding").as("q_emb")), probes, k,
-        pulled = Some(pulledCentroids))
+          col("embedding").as("q_emb")), probes, k)
 
     /** Append NEW vectors WITHOUT retraining — [[IvfIndex.append]]'s
       * contract for the composite family: coarse centroids AND
@@ -2277,9 +2270,8 @@ object Graft {
       */
     def append(newVecs: DataFrame): IvfPqIndex =
       IvfPqIndex(codes.unionByName(
-        SimilarityQueries.ivfPqEncode(newVecs, centroids, codebooks,
-          Some(pulledCentroids))),
-        centroids, codebooks, Some(pulledCentroids))
+        SimilarityQueries.ivfPqEncode(newVecs, pulled, codebooks)),
+        codebooks, () => pulled)
 
     /** [[append]] made DURABLE ([[IvfIndex.appendDurable]]'s contract
       * for the composite family): encode the arrivals against the
@@ -2295,8 +2287,7 @@ object Graft {
     def appendDurable(dir: String, newVecs: DataFrame,
                       requireNewIds: Boolean = true): IvfPqIndex = {
       IndexStore.appendIvfPq(dir,
-        SimilarityQueries.ivfPqEncode(newVecs, centroids, codebooks,
-          Some(pulledCentroids)),
+        SimilarityQueries.ivfPqEncode(newVecs, pulled, codebooks),
         requireNewIds)
       loadIvfPqIndex(newVecs.sparkSession, dir)
     }
@@ -2311,7 +2302,7 @@ object Graft {
                             dir: String,
                             checkpointDir: Option[String] = None)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.ivfPqAppendDurable(arrivals, centroids, codebooks, dir,
+      EmbStreams.ivfPqAppendDurable(arrivals, pulled, codebooks, dir,
         checkpointDir)
 
     /** Export a SHARD ([[IvfIndex.shard]]'s contract for the
@@ -2323,9 +2314,8 @@ object Graft {
       */
     def shard(dir: String, vecs: DataFrame): Unit =
       IndexStore.saveIvfPq(dir,
-        SimilarityQueries.ivfPqEncode(vecs, centroids, codebooks,
-          Some(pulledCentroids)),
-        savedCentroids, codebooks)
+        SimilarityQueries.ivfPqEncode(vecs, pulled, codebooks),
+        centroids, codebooks)
 
     /** Persist to `dir` ([[graft.sources.IndexStore]] layout): the
       * code table partitioned by coarse cell (probe-time scans read
@@ -2334,7 +2324,7 @@ object Graft {
       * (IndexStoreSpec).
       */
     def save(dir: String): Unit =
-      IndexStore.saveIvfPq(dir, codes, savedCentroids, codebooks)
+      IndexStore.saveIvfPq(dir, codes, centroids, codebooks)
 
     /** Serve an unbounded query stream against this index — delegates
       * to [[graft.streaming.EmbStreams.ivfPqServe]] with the handle's
@@ -2348,7 +2338,7 @@ object Graft {
     def serve(queries: Dataset[EmbStreams.EmbQuery], nprobe: Int = 2,
               k: Int = 3)(onBatch: DataFrame => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.ivfPqServe(queries, codes, centroids, codebooks,
+      EmbStreams.ivfPqServe(queries, codes, pulled, codebooks,
         nprobe, k)(onBatch)
 
     /** Coarse-cell drift of an arrival `sample` vs the stored code
@@ -2363,8 +2353,7 @@ object Graft {
       * Gate: `e32_ivfpq_drift`.
       */
     def drift(sample: DataFrame): DataFrame =
-      SimilarityQueries.cellDrift(codes, centroids, sample,
-        Some(pulledCentroids))
+      SimilarityQueries.cellDrift(codes, pulled, sample)
 
     /** The composite family's SECOND drift axis ([[drift]] watches
       * coarse cell balance; this watches RESIDUAL code usage): encode
@@ -2381,26 +2370,10 @@ object Graft {
     def residualDrift(sample: DataFrame): DataFrame =
       SimilarityQueries.pqCodeDriftFromCounts(codes, codebooks,
         SimilarityQueries.pqCodeUnpivot(
-          SimilarityQueries.ivfPqEncode(sample, centroids, codebooks,
-            Some(pulledCentroids)),
+          SimilarityQueries.ivfPqEncode(sample, pulled, codebooks),
           codebooks.length)
           .groupBy(col("m"), col("code"))
           .agg(count(lit(1)).as("n_new")))
-
-    /** The tiny coarse-centroid table pulled driver-side ONCE per
-      * handle ([[IvfIndex]]'s bounded pull, ≤ #cells × 64 floats) —
-      * what assignment/probe projections and the streaming monitor's
-      * literal-centroid argmax need. Seeded by [[ivfPqIndex]] (which
-      * already paid the pull); a loaded handle pulls lazily once.
-      */
-    private lazy val pulledCentroids: Seq[(Int, Array[Float])] =
-      pulledSeed.getOrElse(SimilarityQueries.pullCentroids(centroids))
-
-    /** The pulled snapshot as [[save]]/[[shard]]'s centroid table —
-      * [[IvfIndex]]'s rule: never the lazily recomputed frame.
-      */
-    private def savedCentroids: DataFrame =
-      SimilarityQueries.centroidsLocal(codes.sparkSession, pulledCentroids)
 
     /** [[drift]] AT INGEST — the coarse-cell monitor through the
       * handle: the stored composite code table already carries each
@@ -2415,7 +2388,7 @@ object Graft {
                      checkpointDir: Option[String] = None)
                     (onReport: DataFrame => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.driftMonitor(arrivals, codes, pulledCentroids,
+      EmbStreams.driftMonitor(arrivals, codes, pulled,
         checkpointDir)(onReport)
 
     /** [[residualDrift]] AT INGEST — the composite family's second
@@ -2430,7 +2403,7 @@ object Graft {
     def residualDriftMonitor(arrivals: Dataset[EmbStreams.EmbArrival])
                             (onReport: DataFrame => Unit)
         : org.apache.spark.sql.streaming.StreamingQuery =
-      EmbStreams.ivfPqResidualDriftMonitor(arrivals, codes, centroids,
+      EmbStreams.ivfPqResidualDriftMonitor(arrivals, codes, pulled,
         codebooks)(onReport)
   }
 
@@ -2440,7 +2413,8 @@ object Graft {
     */
   def loadIvfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
     val (codes, centroids, codebooks) = IndexStore.loadIvfPq(spark, dir)
-    IvfPqIndex(codes, centroids, codebooks)
+    IvfPqIndex(codes, codebooks,
+      () => SimilarityQueries.pullCentroids(centroids))
   }
 
   // ------------------------------------------------------------------

@@ -34,7 +34,7 @@ object SimilarityQueries {
     * [[probeAndRank]], shared for the same no-drift reason.
     */
   /** The assign CTE alone — every corpus vector to its nearest
-    * centroid cell, the SQL mirror of [[assignCells]]; shared by
+    * centroid cell, the SQL mirror of [[assignCellsPulled]]; shared by
     * [[ivfSearchSql]] and the e28 drift report so the assignment text
     * cannot drift between searching and monitoring.
     */
@@ -69,6 +69,21 @@ object SimilarityQueries {
        |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
        |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
 
+  /** A probe side made OPAQUE to dynamic partition pruning by a LAZY
+    * checkpoint (tiny: queries × nprobe rows, materialized inside the
+    * consuming job). With a selective literal probe side
+    * ([[probeCells]]) DPP otherwise injects an IN-subquery filter on
+    * the cell-partitioned side and pushes a clone into non-scan union
+    * branches (a loaded store + appended arrivals), where Spark 4.1
+    * never prepares the InSubqueryExec — "dynamicpruning#N has not
+    * finished" at execution. No plan in this repo ever benefited from
+    * DPP here (r16 plans carry zero dynamicpruning nodes), so opacity
+    * costs nothing at any scale. The IVF and IVF-PQ searches both
+    * broadcast their probes through it.
+    */
+  private def dppOpaque(probes: DataFrame): DataFrame =
+    probes.localCheckpoint(eager = false)
+
   /** Shared probe search: exact cosine rank of `assigned` corpus rows
     * inside each query's probed cells, top-k per query (used by e05/e06
     * so rank/tie-break/rounding semantics cannot drift between them).
@@ -78,18 +93,7 @@ object SimilarityQueries {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    // the probes side is LAZILY checkpointed (tiny: queries × nprobe
-    // rows, materialized inside the consuming job) so its plan is
-    // OPAQUE to dynamic partition pruning: with a selective literal
-    // probe side (round 17's projection probes) DPP otherwise injects
-    // an IN-subquery filter on the cell-partitioned side and pushes a
-    // clone into non-scan union branches (a loaded store + appended
-    // arrivals), where Spark 4.1 never prepares the InSubqueryExec —
-    // "dynamicpruning#N has not finished" at execution. No plan in
-    // this repo ever benefited from DPP here (r16 plans carry zero
-    // dynamicpruning nodes), so opacity costs nothing at any scale.
-    val probesCk = probes.localCheckpoint(eager = false)
-    assigned.alias("b").join(broadcast(probesCk.alias("a")),
+    assigned.alias("b").join(broadcast(dppOpaque(probes).alias("a")),
         col("a.cell") === col("b.cell") && col("a.query_id") =!= col("b.vec_id"))
       .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
         cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos"))
@@ -287,16 +291,12 @@ object SimilarityQueries {
           .as("centroid"))
   }
 
-  /** Every vector assigned to its nearest centroid cell (centroids
-    * broadcast; ties → lowest cell). One pass over the corpus.
-    *
-    * SCALE NOTE (round 17): this DataFrame-joined form pays a
-    * corpus × #cells row blow-up plus an Exchange + Window per call —
-    * the per-vec_id argmax shuffles the whole corpus. Every handle
-    * that already holds the driver-pulled centroid tuple (bounded:
-    * ≤ #cells × 64 floats) assigns through [[assignCellsPulled]]
-    * instead — a pure projection, zero exchanges. This form remains
-    * for one-shot callers that have only the lazy centroid frame.
+  /** Every vector assigned to its nearest centroid cell by a broadcast
+    * join + per-vec_id window (cosine DESC, ties → lowest cell). No
+    * production path calls it: every IVF handle holds the pulled
+    * centroid snapshot and assigns through [[assignCellsPulled]]. It
+    * stays as the specs' INDEPENDENT reference for that projection —
+    * a different plan shape computing the same pick.
     */
   private[graft] def assignCells(e: DataFrame, centroids: DataFrame): DataFrame = {
     val wAssign = org.apache.spark.sql.expressions.Window
@@ -309,23 +309,27 @@ object SimilarityQueries {
       .select(col("vec_id"), col("embedding"), col("cell"))
   }
 
-  /** The tiny (cell, centroid) table pulled driver-side ONCE — the
-    * bounded (≤ #cells × 64 floats) pull that turns [[assignCells]]
-    * into the pure projection [[assignCellsPulled]]. Sorted by cell so
-    * downstream literal argmaxes are order-deterministic.
+  /** The tiny (cell, centroid) table pulled driver-side — an IVF
+    * handle's ONE centroid snapshot (bounded: ≤ #cells × 64 floats),
+    * and the only pull point. Sorted by cell so the literal ranking in
+    * [[rankedCells]] is order-deterministic. An index without
+    * centroids (trained on an empty corpus) fails here, by name.
     */
   private[graft] def pullCentroids(centroids: DataFrame)
-      : Seq[(Int, Array[Float])] =
-    centroids.select(col("cell"), col("centroid")).collect()
+      : Seq[(Int, Array[Float])] = {
+    val pulled = centroids.select(col("cell"), col("centroid")).collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).toSeq
+    require(pulled.nonEmpty,
+      "IVF index has no centroids: it was trained on an empty corpus")
+    pulled
+  }
 
   /** The pulled centroids as a LOCAL (cell, centroid) frame — the
-    * broadcast side of residual/centroid joins when the caller already
-    * paid the driver pull: a LocalRelation instead of re-running the
-    * centroid aggregation subtree inside every consuming job. Values
-    * are the collected floats verbatim, so joins against it are
-    * bit-identical to joins against the lazy centroid frame.
+    * broadcast side of residual/centroid joins and what a handle
+    * exposes and saves as its centroid table: a LocalRelation of the
+    * collected floats verbatim, so it never re-runs the centroid
+    * aggregation subtree and always equals the snapshot.
     */
   private[graft] def centroidsLocal(spark: SparkSession,
       pulled: Seq[(Int, Array[Float])]): DataFrame = {
@@ -333,16 +337,17 @@ object SimilarityQueries {
     pulled.map { case (c, arr) => (c, arr.toSeq) }.toDF("cell", "centroid")
   }
 
-  /** Stateless in-row cell argmax over driver-pulled centroid LITERALS
-    * — bit-for-bit [[assignCells]]' pick (cosine DESC, ties → LOWEST
-    * cell: the last element of the ascending struct sort is the max
-    * (cs, −cell) pair). One shared definition with the streaming
-    * monitors ([[graft.streaming.EmbStreams]] delegates here), so
-    * batch and stream assignment cannot drift; EmbStreamsSpec pins
-    * this column ≡ the windowed kernel row-for-row.
+  /** THE cell ranking of IVF/IVF-PQ: every cell of the pulled snapshot
+    * ordered by the centroid cosine of `emb`, DESC, ties → LOWEST cell
+    * (the reversed ascending sort of literal (cs, −cell, cell)
+    * structs). Assignment takes element 0, probing explodes
+    * `slice(_, 1, probes)` — batch, stream and IVF-PQ route through
+    * this one column, so they cannot disagree on a tie. Stateless
+    * (streams run it), no join, no window; its generated code grows
+    * with #cells × dim (the literal centroids).
     */
-  private[graft] def cellArgmaxCol(pulled: Seq[(Int, Array[Float])],
-                                   emb: Column): Column = {
+  private[graft] def rankedCells(pulled: Seq[(Int, Array[Float])],
+                                 emb: Column): Column = {
     val cellStructs = pulled.map { case (cell, c) =>
       struct(
         cosine_similarity(emb,
@@ -350,44 +355,29 @@ object SimilarityQueries {
         lit(-cell).as("negcell"),
         lit(cell).as("cell"))
     }
-    element_at(array_sort(array(cellStructs: _*)), -1).getField("cell")
+    reverse(array_sort(array(cellStructs: _*))).getField("cell")
   }
 
-  /** [[assignCells]] as a PURE PROJECTION over driver-pulled centroid
-    * literals — no broadcast join, no corpus × #cells row blow-up, no
-    * per-vec_id Exchange + Window: the argmax happens in-row, so a
-    * 100 TB corpus is assigned in one map pass with ZERO shuffles.
-    * Identical output to [[assignCells]] by [[cellArgmaxCol]]'s
-    * tie-break contract (the oracle gates + EmbStreamsSpec pin it).
+  /** Cell assignment as a PURE PROJECTION over the pulled snapshot —
+    * no broadcast join, no corpus × #cells row blow-up, no per-vec_id
+    * Exchange + Window: a 100 TB corpus is assigned in one map pass
+    * with ZERO shuffles. Same pick as [[assignCells]] (the oracle
+    * gates + EmbStreamsSpec pin it).
     */
   private[graft] def assignCellsPulled(e: DataFrame,
       pulled: Seq[(Int, Array[Float])]): DataFrame =
     e.select(col("vec_id"), col("embedding"),
-      cellArgmaxCol(pulled, col("embedding")).as("cell"))
+      rankedCells(pulled, col("embedding")).getItem(0).as("cell"))
 
-  /** The top-`probes` cells per query over pulled centroid literals —
-    * the probe window ([[graft.api.Graft.IvfIndex]]'s `probed`) as a
-    * projection: descending (cs, ties → lowest cell) = the reversed
-    * ascending struct sort on (cs, −cell), sliced to `probes` — the
-    * e06 probe shape with the e05 tie-break. Output: (query_id, q_emb,
-    * cell), one row per probed cell. Queries: (vec_id, embedding).
+  /** (query_id, q_emb) queries → (query_id, q_emb, cell), one row per
+    * probed cell: the top-`probes` of [[rankedCells]]. The one probe
+    * of IVF search, IVF-PQ search and every streaming server.
     */
-  private[graft] def probedPulled(queries: DataFrame,
-      pulled: Seq[(Int, Array[Float])], probes: Int): DataFrame = {
-    val probeCos = pulled.map { case (cell, c) =>
-      struct(
-        cosine_similarity(col("q_emb"),
-          array(c.map(v => lit(v)): _*).cast("array<float>")).as("cs"),
-        lit(-cell).as("negcell"),
-        lit(cell).as("cell"))
-    }
-    queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .select(col("query_id"), col("q_emb"),
-        explode(slice(reverse(array_sort(array(probeCos: _*))), 1, probes))
-          .as("p"))
-      .select(col("query_id"), col("q_emb"), col("p.cell").as("cell"))
-  }
+  private[graft] def probeCells(queries: DataFrame,
+      pulled: Seq[(Int, Array[Float])], probes: Int): DataFrame =
+    queries.select(col("query_id"), col("q_emb"),
+      explode(slice(rankedCells(pulled, col("q_emb")), 1, probes))
+        .as("cell"))
 
   /** The e05 IVF index as a servable artifact: the cell-assigned corpus
     * (one batch pass; cache it for repeated probes) plus the tiny
@@ -395,8 +385,8 @@ object SimilarityQueries {
     * aggregate pull (≤ #cells × 64 floats) that lets a STREAM of
     * queries probe cells in a pure projection
     * ([[graft.streaming.EmbStreams.ivfServe]]). Built from the same
-    * [[labelCentroids]]/[[assignCells]] the e05 gate verifies, so the
-    * served index is the gated index.
+    * [[labelCentroids]]/[[assignCellsPulled]] the e05 gate verifies, so
+    * the served index is the gated index.
     */
   private[graft] def ivfIndex(s: SparkSession, d: String)
       : (DataFrame, Seq[(Int, Array[Float])]) = {
@@ -792,6 +782,27 @@ object SimilarityQueries {
   private def pqDot(a: Column, off: Int, cent: Array[Double]): Column =
     graft.functions.PqKernels.pq_sub_dot(a, off, cent)
 
+  /** The deterministic codebook seed of [[pqTrain]] and
+    * [[ivfPqTrainEncode]]: the `vecCol` subvectors of the first `k`
+    * vectors (by vec_id) whose vec_id is a multiple of 125, one
+    * codebook per subspace. A corpus with no such vector would train
+    * EMPTY codebooks that fail later at analysis, so it fails here,
+    * naming the rule.
+    */
+  private def pqSeedCodebooks(frame: DataFrame, vecCol: String, k: Int,
+                              m: Int): Array[Array[Array[Double]]] = {
+    val initRows = frame.filter(pmod(col("vec_id"), lit(125)) === 0)
+      .orderBy(col("vec_id")).limit(k)
+      .select(col(vecCol)).collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    require(initRows.nonEmpty,
+      "PQ codebooks seed from the training vectors whose vec_id is a " +
+        "multiple of 125, and this training corpus has none")
+    Array.tabulate(m) { mi =>
+      initRows.map(_.slice(mi * pqSubDim, (mi + 1) * pqSubDim))
+    }
+  }
+
   /** Train the 4-subspace × 16-dim PQ codebooks on a (vec_id,
     * embedding) corpus frame: deterministic every-125th init + 2
     * batched Lloyd iterations over the `vecCol` column. Driver pulls
@@ -807,15 +818,7 @@ object SimilarityQueries {
     val iters = 2
     val e = corpus.cache()
     try {
-      // deterministic init: subvectors of every 125th vector
-      val initRows = e.filter(pmod(col("vec_id"), lit(125)) === 0)
-        .orderBy(col("vec_id")).limit(k)
-        .select(col(vecCol)).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val cbs: Array[Array[Array[Double]]] =
-        Array.tabulate(m) { mi =>
-          initRows.map(_.slice(mi * pqSubDim, (mi + 1) * pqSubDim))
-        }
+      val cbs = pqSeedCodebooks(e, vecCol, k, m)
 
       // per-subspace Lloyd: assign by L2, recompute means (float-cast
       // on use — the cross-engine rounding protocol). Subspaces are
@@ -1560,63 +1563,47 @@ object SimilarityQueries {
     // IvfPqKernelsSpec pins native ≡ HOF bit-for-bit incl. null edges
     graft.functions.PqKernels.arr_float_sub(vec, col("centroid"))
 
+  /** The (vec_id, cell, centroid, res) residual frame — assign to the
+    * nearest cell of the pulled snapshot (a pure projection), subtract
+    * its centroid (broadcast LocalRelation side — the consuming job
+    * never re-runs the centroid aggregation subtree). The shared first
+    * step of training (over the snapshot) and encoding (over anything,
+    * including e29's appended arrivals).
+    */
+  private def ivfPqResiduals(vecs: DataFrame,
+                             pulled: Seq[(Int, Array[Float])]): DataFrame =
+    assignCellsPulled(vecs, pulled)
+      .join(broadcast(centroidsLocal(vecs.sparkSession, pulled)),
+        Seq("cell"))
+      .select(col("vec_id"), col("cell"), col("centroid"),
+        ivfPqResOf(col("embedding")).as("res"))
+
   /** Train + encode the IVF-PQ composite on a (vec_id, embedding,
     * label) corpus frame: coarse label centroids (e05's), per-subspace
     * Lloyd on RESIDUALS (16 centroids × 4 subspaces, 2 iterations),
     * then each vector stored as cell + 4 codes + the per-subspace
     * reconstruction-norm pieces ‖c + r̂‖² (what lets ADC rank by
-    * approximate COSINE at serve time). Returns (encoded, centroids,
-    * codebooks). Driver pulls are bounded (init + per-iteration
+    * approximate COSINE at serve time). Returns (encoded, codebooks,
+    * pulled centroid snapshot). Driver pulls are bounded (init + per-iteration
     * centroid aggregates); the residual frame is cached only for the
     * duration of training.
     */
-  /** The (vec_id, cell, res) residual frame — assign to the nearest
-    * trained cell, subtract its centroid. The shared first step of
-    * training (over the snapshot) and encoding (over anything,
-    * including e29's appended arrivals).
-    */
-  private def ivfPqResiduals(vecs: DataFrame, centroids: DataFrame,
-                             pulled: Option[Seq[(Int, Array[Float])]] =
-                               None): DataFrame = {
-    // with the driver-pulled centroids in hand the assignment is a
-    // pure projection and the centroid join's broadcast side is a
-    // LocalRelation — the consuming job re-runs neither the corpus ×
-    // #cells window shuffle nor the centroid aggregation subtree
-    val assigned = pulled.fold(assignCells(vecs, centroids))(
-      p => assignCellsPulled(vecs, p))
-    val centFrame = pulled.fold(centroids)(
-      p => centroidsLocal(vecs.sparkSession, p))
-    assigned
-      .join(broadcast(centFrame), Seq("cell"))
-      .select(col("vec_id"), col("cell"),
-        ivfPqResOf(col("embedding")).as("res"))
-  }
-
   private[graft] def ivfPqTrainEncode(corpus: DataFrame)
-      : (DataFrame, DataFrame, Array[Array[Array[Double]]],
-         Seq[(Int, Array[Float])]) = {
+      : (DataFrame, Array[Array[Array[Double]]], Seq[(Int, Array[Float])]) = {
     val m = 4
     val iters = 2
-    val centroids = labelCentroids(corpus)
     // one bounded pull (≤ #cells × 64 floats) up front; training,
     // encoding and the handle's searches all project against it
-    val pulled = pullCentroids(centroids)
+    val pulled = pullCentroids(labelCentroids(corpus))
 
-    val ares = ivfPqResiduals(corpus, centroids, Some(pulled)).cache()
+    val ares = ivfPqResiduals(corpus, pulled).drop("centroid").cache()
 
     // per-subspace Lloyd on residuals — the e09 recipe, trained on
     // `res`; the cache serves init + iters bounded pulls, released
     // before the search job (which re-derives ares from the source)
     val codebooks: Array[Array[Array[Double]]] =
       try {
-        val initRows = ares.filter(pmod(col("vec_id"), lit(125)) === 0)
-          .orderBy(col("vec_id")).limit(16)
-          .select(col("res")).collect()
-          .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-        val cbs: Array[Array[Array[Double]]] =
-          Array.tabulate(m) { mi =>
-            initRows.map(_.slice(mi * pqSubDim, (mi + 1) * pqSubDim))
-          }
+        val cbs = pqSeedCodebooks(ares, "res", 16, m)
         for (_ <- 1 to iters) {
           val perSub = (0 until m).map { mi =>
             val dists = array(cbs(mi).map(c =>
@@ -1640,8 +1627,7 @@ object SimilarityQueries {
         cbs
       } finally ares.unpersist()
 
-    (ivfPqEncode(corpus, centroids, codebooks, Some(pulled)), centroids,
-      codebooks, pulled)
+    (ivfPqEncode(corpus, pulled, codebooks), codebooks, pulled)
   }
 
   /** Encode vectors against FROZEN coarse centroids + residual
@@ -1654,16 +1640,12 @@ object SimilarityQueries {
     * [[graft.api.Graft.IvfPqIndex.append]] so append-time encoding
     * cannot drift from build-time encoding.
     */
-  private[graft] def ivfPqEncode(vecs: DataFrame, centroids: DataFrame,
-                                 codebooks: Array[Array[Array[Double]]],
-                                 pulled: Option[Seq[(Int, Array[Float])]] =
-                                   None)
+  private[graft] def ivfPqEncode(vecs: DataFrame,
+                                 pulled: Seq[(Int, Array[Float])],
+                                 codebooks: Array[Array[Array[Double]]])
       : DataFrame = {
     val m = codebooks.length
-    val ares = ivfPqResiduals(vecs, centroids, pulled)
-    val centFrame = pulled.fold(centroids)(
-      p => centroidsLocal(vecs.sparkSession, p))
-    ares.join(broadcast(centFrame), Seq("cell"))
+    ivfPqResiduals(vecs, pulled)
       .select(Seq(col("vec_id"), col("cell")) ++
         (0 until m).map { mi =>
           val dists = array(codebooks(mi).map(c =>
@@ -1685,35 +1667,26 @@ object SimilarityQueries {
   }
 
   /** IVF-PQ ADC search over [[ivfPqTrainEncode]] output: queries probe
-    * their `probes` nearest cells (e05's window + tie-break), carrying
-    * the correction term q·c and the residual query q − c; candidates
+    * their `probes` nearest cells ([[probeCells]], e05's tie-break),
+    * carrying the correction term q·c and the residual query q − c; candidates
     * in the probed cells score by
     * (q·c + Σ_m q_m·r̂_m) / (‖q‖ · ‖c + r̂‖) — 4 lookups per pair into
     * per-(query, cell) tables, never a raw-vector read. Self is
     * excluded (the e01/e05 protocol). Left-assoc double chains mirror
     * the oracle text (addition is order-sensitive at the last ulp).
     */
-  private[graft] def ivfPqSearch(encoded: DataFrame, centroids: DataFrame,
+  private[graft] def ivfPqSearch(encoded: DataFrame,
+                                 pulled: Seq[(Int, Array[Float])],
                                  codebooks: Array[Array[Array[Double]]],
                                  queries: DataFrame,
                                  probes: Int, k: Int,
-                                 ordered: Boolean = true,
-                                 pulled: Option[Seq[(Int, Array[Float])]] =
-                                   None): DataFrame = {
+                                 ordered: Boolean = true): DataFrame = {
     val m = codebooks.length
-    // with the handle's pulled centroids the probe's broadcast side is
-    // a LocalRelation — the search job never re-runs the centroid
-    // aggregation subtree (values are the collected floats verbatim)
-    val centFrame = pulled.fold(centroids)(
-      p => centroidsLocal(queries.sparkSession, p))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cs").desc, col("cell"))
-    val probed = queries
-      .join(broadcast(centFrame))
-      .withColumn("cs", cosine_similarity(col("q_emb"), col("centroid")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= probes)
+    // the probed cells' centroids come from a LocalRelation of the
+    // snapshot — the search job never re-runs the centroid aggregation
+    val probed = probeCells(queries, pulled, probes)
+      .join(broadcast(centroidsLocal(queries.sparkSession, pulled)),
+        Seq("cell"))
       .select(col("query_id"), col("cell"),
         // native dot kernels (qn2 = dot(q, q): identical term order
         // and fold to the aggregate(transform(x²)) it replaces)
@@ -1723,7 +1696,7 @@ object SimilarityQueries {
           col("q_emb")).as("qn2"),
         ivfPqResOf(col("q_emb")).as("qres"))
 
-    val withTables = encoded.join(broadcast(probed), Seq("cell"))
+    val withTables = encoded.join(broadcast(dppOpaque(probed)), Seq("cell"))
       .where(col("query_id") =!= col("vec_id"))
       .select(Seq(col("query_id"), col("vec_id"), col("qc"), col("qn2")) ++
         (0 until m).map { mi =>
@@ -2303,11 +2276,12 @@ object SimilarityQueries {
     Some(pqSql(topM = 3, trainPred = Some("vec_id % 7 <> 0"))))
 
   /** The RE-TRAIN TRIGGER e26/e27 watch, as an operator: assign an
-    * arrival `sample` to the index's trained centroids (the shared
-    * [[assignCells]] kernel) and compare per-cell occupancy shares
-    * against the stored corpus. All-integer output — counts plus
-    * parts-per-million shares via integer division — so the report is
-    * bit-exact cross-engine with no float rounding protocol at all.
+    * arrival `sample` to the index's pulled centroid snapshot (the
+    * shared [[assignCellsPulled]] projection) and compare per-cell
+    * occupancy shares against the stored corpus. All-integer output —
+    * counts plus parts-per-million shares via integer division — so
+    * the report is bit-exact cross-engine with no float rounding
+    * protocol at all.
     * One row per trained cell: (cell, n_base, n_new, ppm_base,
     * ppm_new, drift_ppm = |ppm_base − ppm_new|); summing drift_ppm/2
     * gives the total-variation distance in ppm, but the per-cell rows
@@ -2317,14 +2291,16 @@ object SimilarityQueries {
     * Precondition: `sample` is non-empty (shares of nothing are
     * undefined).
     */
-  private[graft] def cellDrift(assigned: DataFrame, centroids: DataFrame,
-                               sample: DataFrame,
-                               pulled: Option[Seq[(Int, Array[Float])]] =
-                                 None): DataFrame =
-    cellDriftFromCounts(assigned, centroids.select(col("cell")),
-      pulled.fold(assignCells(sample, centroids))(
-          p => assignCellsPulled(sample, p))
+  private[graft] def cellDrift(assigned: DataFrame,
+                               pulled: Seq[(Int, Array[Float])],
+                               sample: DataFrame): DataFrame = {
+    val spark = sample.sparkSession
+    import spark.implicits._
+    // Option keeps the report's `cell` nullable, as it has always been
+    cellDriftFromCounts(assigned, pulled.map(p => Option(p._1)).toDF("cell"),
+      assignCellsPulled(sample, pulled)
         .groupBy(col("cell")).agg(count(lit(1)).as("n_new")))
+  }
 
   /** [[cellDrift]] with the sample's per-cell counts already in hand —
     * the seam the STREAMING monitor shares
@@ -3394,7 +3370,7 @@ object SimilarityQueries {
 
   /** IVF-PQ coarse-cell drift gate — e28's monitoring contract for the
     * composite family: the coarse quantizer IS an IVF structure (both
-    * families share [[labelCentroids]]/[[assignCells]]), so
+    * families share [[labelCentroids]]/[[assignCellsPulled]]), so
     * `IvfPqIndex.drift` delegates to the exact e28-gated [[cellDrift]]
     * kernel with the stored code table (which carries `cell`) as the
     * base — cell-balance drift is what degrades IVF-PQ probe latency,

@@ -884,14 +884,18 @@ object IndexStore {
     * round 16): the batch's `vec_id`s must be DISJOINT from `table` —
     * re-appending an already-present id leaves duplicate rows that
     * every downstream join fans out through (duplicate shortlist
-    * candidates, duplicate rerank fetch rows). Enforcement is the
-    * bm25 check verbatim: the stored side pre-filters to the batch's
-    * [min, max] id range (pushed to parquet row-group stats — near
-    * free for monotone-id producers), then one broadcast semi-join.
+    * candidates, duplicate rerank fetch rows). [[appendBm25]] runs
+    * the same check against `doclen`. The stored side pre-filters to
+    * the batch's [min, max] id range (pushed to parquet row-group
+    * stats — near free for monotone-id producers), then one broadcast
+    * semi-join. `consequence` ends the error message: what a
+    * duplicate would corrupt and the remedy.
     */
   private def requireDisjointIds(spark: SparkSession, dir: String,
                                  table: String, batchIds: DataFrame,
-                                 op: String): Unit = {
+                                 op: String,
+                                 consequence: String = pqDuplicates)
+      : Unit = {
     val rng = batchIds.agg(min(col("vec_id")).as("lo"),
       max(col("vec_id")).as("hi")).collect()(0)
     if (!rng.isNullAt(0)) {
@@ -904,13 +908,15 @@ object IndexStore {
       require(dup.isEmpty,
         s"$op: batch re-appends already-indexed vec_ids " +
           s"(${dup.mkString(", ")}${if (dup.length == 5) ", …" else ""})" +
-          s" — duplicates in $table fan out through every downstream " +
-          "join. If a crashed append left this store partial, run " +
-          "Graft.repairIndex (it re-encodes stranded rows and dedups) " +
-          "instead of re-appending; pass requireNewIds = false only " +
-          "for provably-disjoint producers")
+          s" in $table — $consequence")
     }
   }
+
+  private val pqDuplicates =
+    "duplicates fan out through every downstream join. If a crashed " +
+      "append left this store partial, run Graft.repairIndex (it " +
+      "re-encodes stranded rows and dedups) instead of re-appending; " +
+      "pass requireNewIds = false only for provably-disjoint producers"
 
   /** DURABLE append for the PQ layout: encoded arrival codes append to
     * `codes/`, their raw vectors to `corpus/` (the rerank fetch side).
@@ -2847,28 +2853,11 @@ object IndexStore {
     // probe — a full-table read here pays an O(nb) dir listing)
     val denormDl = postingsHasDl(spark, dir)
     withWriteLock(spark, dir) {
-      if (requireNewIds) {
-        // any overlap necessarily lies inside the batch's id RANGE, so
-        // the stored side is pre-filtered to [min, max] of the batch —
-        // a pushed predicate parquet's row-group min/max stats prune,
-        // which makes the check near-free for the common
-        // monotonically-increasing-id producer (zero row groups read)
-        // and never worse than one narrow id-column scan otherwise
-        val rng = doclenNew.agg(min(col("vec_id")).as("lo"),
-          max(col("vec_id")).as("hi")).collect()(0)
-        if (!rng.isNullAt(0)) {
-          val dup = spark.read.parquet(s"$dir/doclen")
-            .filter(col("vec_id").between(rng.getLong(0), rng.getLong(1)))
-            .join(broadcast(doclenNew.select(col("vec_id"))),
-              Seq("vec_id"), "left_semi")
-            .limit(5).select(col("vec_id")).collect().map(_.getLong(0))
-          require(dup.isEmpty,
-            s"appendBm25: batch re-appends already-indexed doc ids " +
-              s"(${dup.mkString(", ")}${if (dup.length == 5) ", …" else ""})" +
-              " — the df fold would double-count them; delete + compact " +
-              "first, or append only new documents")
-        }
-      }
+      if (requireNewIds)
+        requireDisjointIds(spark, dir, "doclen",
+          doclenNew.select(col("vec_id")), "appendBm25",
+          "the df fold would double-count them; delete + compact " +
+            "first, or append only new documents")
       val hconf = spark.sparkContext.hadoopConfiguration
       val live = new org.apache.hadoop.fs.Path(s"$dir/df")
       val fs = live.getFileSystem(hconf)

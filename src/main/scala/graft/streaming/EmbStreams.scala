@@ -26,11 +26,11 @@ object EmbStreams {
     * building blocks the e05 gate verifies, so serving searches the
     * gated index).
     *
-    * Plan shape: cell probing is a pure projection — the ≤ #cells
+    * Plan shape: cell probing is the batch search's own projection
+    * ([[graft.operators.SimilarityQueries.probeCells]] — the ≤ #cells
     * centroids ride as literals and each query explodes into its
-    * `nprobe` best cells via an in-row struct sort (no window, which
-    * streams cannot run; ties on centroid cosine break toward the
-    * higher cell id, vanishingly rare on real-valued embeddings) —
+    * `nprobe` best cells; no window, which streams cannot run; ties on
+    * centroid cosine go to the LOWEST cell, as in batch `search`) —
     * then ONE stream-static equi-join on `cell` scores the query
     * against its probed cells only, and a per-query group emits the
     * exact top-k. State: none retained (NoTimeout, state never set) —
@@ -43,30 +43,6 @@ object EmbStreams {
     * spec-proven (EmbStreamsSpec), including the shared
     * half-up 6-decimal cosine rounding.
     */
-  /** The literal-centroid probe projection shared by every serving
-    * variant (inline, deduped, pruned) — one definition so the routing
-    * step cannot drift from the one the batch/stream equality specs
-    * certify. Pure projection: the ≤ #cells centroids ride as literals
-    * and each query explodes into its `nprobe` best cells via an
-    * in-row struct sort (no window — streams cannot run one; ties on
-    * centroid cosine break toward the higher cell id).
-    */
-  private def probeProjection(queries: DataFrame,
-                              centroids: Seq[(Int, Array[Float])],
-                              nprobe: Int): DataFrame = {
-    val probeCos = centroids.map { case (cell, c) =>
-      struct(
-        cosine_similarity(col("embedding"),
-          array(c.map(v => lit(v)): _*).cast("array<float>")).as("cs"),
-        lit(cell).as("cell"))
-    }
-    queries
-      .select(col("query_id"), col("embedding").as("q_emb"),
-        explode(slice(reverse(array_sort(array(probeCos: _*))), 1, nprobe))
-          .as("p"))
-      .select(col("query_id"), col("q_emb"), col("p.cell").as("cell"))
-  }
-
   /** Idempotent-ingest guard for at-least-once upstreams: a retried /
     * re-delivered query (same `query_id` re-arriving within the
     * watermark horizon) is served ONCE. Built on Spark's
@@ -86,7 +62,9 @@ object EmbStreams {
                nprobe: Int = 2, k: Int = 3): Dataset[AnnHit] = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val probes = probeProjection(queries.toDF(), centroids, nprobe)
+    val probes = graft.operators.SimilarityQueries.probeCells(
+      queries.toDF().select(col("query_id"), col("embedding").as("q_emb")),
+      centroids, nprobe)
     // EXPLICIT broadcast of the per-batch probe side: the micro-batch
     // planner has no stats for a MicroBatchScan, so without the hint it
     // falls back to a sort-merge join that re-shuffles the corpus every
@@ -172,9 +150,9 @@ object EmbStreams {
   /** Serving with PER-BATCH PARTITION PRUNING — the 100 TB I/O shape.
     * The corpus lives on disk PARTITIONED BY `cell` (hive layout,
     * `write.partitionBy("cell")`); each micro-batch routes its queries
-    * (the shared [[probeProjection]]), pulls the ≤ nprobe × #queries
-    * probed cell ids to the driver (ints — the only driver-side
-    * collect), and plans a fresh batch-side read of ONLY those cells:
+    * (the batch probe, [[graft.operators.SimilarityQueries.probeCells]]),
+    * pulls the ≤ nprobe × #queries probed cell ids to the driver (ints
+    * — the only driver-side collect), and plans a fresh batch-side read of ONLY those cells:
     * `cell isin probedCells` is a partition filter, so Spark lists and
     * reads just the probed directories. Per batch the corpus I/O is
     * O(corpus × nprobe / #cells) FILES, not merely rows — the claim
@@ -195,28 +173,41 @@ object EmbStreams {
     queries.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[EmbQuery], _: Long) =>
-        val spark = batch.sparkSession
-        val probes = probeProjection(batch.toDF(), centroids, nprobe)
-          .cache()
-        try {
-          val cells = probes.select(col("cell")).distinct()
-            .collect().map(_.getInt(0))
-          if (cells.nonEmpty) {
-            val scanned = spark.read.parquet(corpusDir)
-              .where(col("cell").isin(cells.map(Integer.valueOf): _*))
-              .select(col("vec_id"), col("embedding"), col("cell"))
-            // tombstone mask AFTER the partition filter: the broadcast
-            // anti-join probes only the already-pruned cells' rows, so
-            // deletes cost one in-row hash probe, never a wider scan
-            val corpus = tombstones.fold(scanned)(t => scanned.join(
-              broadcast(t.select(col("vec_id"))), Seq("vec_id"),
-              "left_anti"))
-            onBatch(graft.operators.SimilarityQueries
-              .probeAndRank(corpus, probes, k))
-          }
-        } finally probes.unpersist()
+        servePrunedBatch(batch, corpusDir, centroids, nprobe, k,
+          tombstones)(onBatch)
       }
       .start()
+
+  /** One pruned-serving micro-batch, shared by [[ivfServePruned]] and
+    * [[ivfServeCurrent]]: probe, pull the probed cell ids, read only
+    * those cells of `corpusDir` minus `tombstones`, and hand the
+    * ranked hits to `onHits` (while the cached probes are live).
+    */
+  private def servePrunedBatch(batch: Dataset[EmbQuery], corpusDir: String,
+                               centroids: Seq[(Int, Array[Float])],
+                               nprobe: Int, k: Int,
+                               tombstones: Option[DataFrame])
+                              (onHits: DataFrame => Unit): Unit = {
+    val probes = graft.operators.SimilarityQueries.probeCells(
+      batch.toDF().select(col("query_id"), col("embedding").as("q_emb")),
+      centroids, nprobe).cache()
+    try {
+      val cells = probes.select(col("cell")).distinct()
+        .collect().map(_.getInt(0))
+      if (cells.nonEmpty) {
+        val scanned = batch.sparkSession.read.parquet(corpusDir)
+          .where(col("cell").isin(cells.map(Integer.valueOf): _*))
+          .select(col("vec_id"), col("embedding"), col("cell"))
+        // tombstone mask AFTER the partition filter: the broadcast
+        // anti-join probes only the already-pruned cells' rows, so
+        // deletes cost one in-row hash probe, never a wider scan
+        val corpus = tombstones.fold(scanned)(t => scanned.join(
+          broadcast(t.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
+        onHits(graft.operators.SimilarityQueries
+          .probeAndRank(corpus, probes, k))
+      }
+    } finally probes.unpersist()
+  }
 
   /** GENERATION-AWARE pruned serving — [[ivfServePruned]] bound to a
     * blue/green [[graft.sources.IndexStore.publishGeneration]] ROOT
@@ -255,10 +246,8 @@ object EmbStreams {
           // open the generation through the store loader (kind check +
           // tombstone-masking contract), pull the tiny centroid table
           // and the tombstone snapshot once per generation
-          val (_, centroidsDf) =
-            graft.sources.IndexStore.loadIvf(spark, dir)
-          val cents = centroidsDf.collect()
-            .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toSeq
+          val cents = graft.operators.SimilarityQueries.pullCentroids(
+            graft.sources.IndexStore.loadIvf(spark, dir)._2)
           // fenced against spark.graft.maxTombstoneSnapshot — see
           // [[graft.sources.IndexStore.tombstoneSnapshot]]
           val snap = graft.sources.IndexStore
@@ -266,21 +255,8 @@ object EmbStreams {
           cached = Some((gen, dir, cents, snap))
         }
         val (g, d, cents, snap) = cached.get
-        val probes = probeProjection(batch.toDF(), cents, nprobe).cache()
-        try {
-          val cells = probes.select(col("cell")).distinct()
-            .collect().map(_.getInt(0))
-          if (cells.nonEmpty) {
-            val scanned = spark.read.parquet(s"$d/assigned")
-              .where(col("cell").isin(cells.map(Integer.valueOf): _*))
-              .select(col("vec_id"), col("embedding"), col("cell"))
-            val corpus = snap.fold(scanned)(t => scanned.join(
-              broadcast(t.select(col("vec_id"))), Seq("vec_id"),
-              "left_anti"))
-            onBatch(g, graft.operators.SimilarityQueries
-              .probeAndRank(corpus, probes, k))
-          }
-        } finally probes.unpersist()
+        servePrunedBatch(batch, s"$d/assigned", cents, nprobe, k, snap)(
+          onBatch(g, _))
       }
       .start()
   }
@@ -290,32 +266,28 @@ object EmbStreams {
 
   /** AT-INGEST index append — e26 as a stream, the serving side's
     * write path: each micro-batch of ARRIVING corpus vectors is
-    * assigned into the trained cells with the exact gated kernel
-    * ([[graft.operators.SimilarityQueries.assignCells]] — shared code,
-    * so stream and batch append identically by construction; the
-    * trained `centroids` stay immutable, [[graft.api.Graft.IvfIndex
-    * .append]]'s contract). `onBatch` receives the assigned (vec_id,
-    * embedding, cell) rows to upsert into the serving store the
-    * [[ivfServe]]/[[ivfServePruned]] readers scan. No stream state;
-    * per-batch cost is one broadcast-centroid pass over the batch.
+    * assigned into the trained cells with the exact gated projection
+    * ([[graft.operators.SimilarityQueries.assignCellsPulled]] over the
+    * handle's pulled `centroids` snapshot — shared code, so stream and
+    * batch append identically by construction; the trained centroids
+    * stay immutable, [[graft.api.Graft.IvfIndex.append]]'s contract).
+    * `onBatch` receives the assigned (vec_id, embedding, cell) rows to
+    * upsert into the serving store the [[ivfServe]]/[[ivfServePruned]]
+    * readers scan. No stream state, no join, no shuffle per batch.
     * EmbStreamsSpec proves the union of micro-batch outputs equals the
     * batch assignment of the same arrivals.
     */
-  def ivfAppend(arrivals: Dataset[EmbArrival], centroids: DataFrame)
+  def ivfAppend(arrivals: Dataset[EmbArrival],
+                centroids: Seq[(Int, Array[Float])])
                (onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // bounded pull ONCE at stream start (≤ #cells × 64 floats): every
-    // micro-batch then assigns by pure projection — no broadcast join,
-    // no per-batch window shuffle, no re-run of the centroid subtree
-    val pulled = graft.operators.SimilarityQueries.pullCentroids(centroids)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     arrivals.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[EmbArrival], _: Long) =>
         onBatch(graft.operators.SimilarityQueries.assignCellsPulled(
-          batch.toDF(), pulled))
+          batch.toDF(), centroids))
       }
       .start()
-  }
 
   /** [[ivfAppend]] writing INTO the saved [[graft.sources.IndexStore]]
     * layout — streaming ingest made durable: each micro-batch is
@@ -337,17 +309,14 @@ object EmbStreams {
     * data).
     */
   def ivfAppendDurable(arrivals: Dataset[EmbArrival],
-                       centroids: DataFrame, dir: String,
+                       centroids: Seq[(Int, Array[Float])], dir: String,
                        checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the ivfAppend pull-once pattern (see above)
-    val pulled = graft.operators.SimilarityQueries.pullCentroids(centroids)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     durableIngest(arrivals, checkpointDir) { batch =>
       graft.sources.IndexStore.appendIvf(dir,
         graft.operators.SimilarityQueries.assignCellsPulled(
-          batch.toDF(), pulled))
+          batch.toDF(), centroids))
     }
-  }
 
   /** [[ivfAppendDurable]]'s contract for the compressed family: each
     * micro-batch encodes against the FROZEN codebooks (the gated
@@ -366,28 +335,24 @@ object EmbStreams {
     }
 
   /** [[ivfAppendDurable]]'s contract for the composite family: each
-    * micro-batch encodes against the frozen coarse centroids +
-    * residual codebooks (the gated `ivfPqEncode` kernel, run
-    * batch-side where its window is legal) and appends into the saved
-    * cell-partitioned code table. Same marker-file idempotency.
+    * micro-batch encodes against the frozen coarse centroid snapshot
+    * + residual codebooks (the gated `ivfPqEncode` kernel) and appends
+    * into the saved cell-partitioned code table. Same marker-file
+    * idempotency.
     */
   def ivfPqAppendDurable(arrivals: Dataset[EmbArrival],
-                         centroids: DataFrame,
+                         centroids: Seq[(Int, Array[Float])],
                          codebooks: Array[Array[Array[Double]]],
                          dir: String,
                          checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the ivfAppend pull-once pattern: per-batch encode is then a pure
-    // projection (no per-batch window shuffle / centroid-subtree rerun)
-    val pulled = graft.operators.SimilarityQueries.pullCentroids(centroids)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     durableIngest(arrivals, checkpointDir) { batch =>
       graft.sources.IndexStore.appendIvfPq(dir,
         graft.operators.SimilarityQueries.ivfPqEncode(
           batch.toDF().select(col("vec_id"),
             col("embedding").cast("array<float>").as("embedding")),
-          centroids, codebooks, Some(pulled)))
+          centroids, codebooks))
     }
-  }
 
   /** Shared durable-ingest foreachBatch shell: append under the
     * store's single-writer lock, with per-batch-id marker idempotency
@@ -465,12 +430,13 @@ object EmbStreams {
 
   /** AT-INGEST drift monitor — e28 as a stream, the re-train trigger
     * firing as arrivals land instead of on a scheduled batch scan:
-    * each arriving vector is assigned its cell by a STATELESS in-row
-    * argmax over the broadcast centroid literals (ties to the LOWEST
-    * cell — exactly `assignCells`' tie-break, so the running counts
-    * agree with the batch kernel row-for-row), Spark's streaming
-    * aggregation maintains the RUNNING per-cell arrival counts as
-    * state (Complete mode — ≤ #cells rows of state, constant), and
+    * each arriving vector is assigned its cell by the STATELESS batch
+    * ranking over the centroid literals
+    * ([[graft.operators.SimilarityQueries.rankedCells]], ties to the
+    * LOWEST cell, so the running counts agree with batch assignment
+    * row-for-row), Spark's streaming aggregation maintains the
+    * RUNNING per-cell arrival counts as state (Complete mode — ≤
+    * #cells rows of state, constant), and
     * every trigger emits a full drift report through the exact gated
     * seam ([[graft.operators.SimilarityQueries .cellDriftFromCounts]])
     * against the static `assigned` base. `onReport` receives the e28
@@ -480,17 +446,6 @@ object EmbStreams {
     * proves the final report equals the batch e28 drift of the same
     * arrival set.
     */
-  /** STATELESS in-row cell argmax over broadcast centroid literals —
-    * ties to the LOWEST cell, exactly `assignCells`' tie-break, so
-    * every streaming monitor counts arrivals cell-for-cell like the
-    * batch kernel. Shared by [[driftMonitor]] and
-    * [[driftMonitorWindowed]].
-    */
-  private def cellArgmax(centroids: Seq[(Int, Array[Float])])
-      : org.apache.spark.sql.Column =
-    graft.operators.SimilarityQueries.cellArgmaxCol(centroids,
-      col("embedding"))
-
   /** `checkpointDir`: pass a durable location to make the monitor
     * RESTARTABLE — the running per-cell counts live in Spark's state
     * store under the checkpoint, so a stopped (or crashed) monitor
@@ -506,7 +461,8 @@ object EmbStreams {
                   (onReport: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val counts = arrivals.toDF()
-      .select(cellArgmax(centroids).as("cell"))
+      .select(graft.operators.SimilarityQueries
+        .rankedCells(centroids, col("embedding")).getItem(0).as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("n_new"))
     val w = counts.writeStream
       .outputMode(OutputMode.Complete())
@@ -535,9 +491,11 @@ object EmbStreams {
     * drifted last hour), so the production re-train trigger compares
     * the base against a sliding event-time window of arrivals.
     *
-    * Shape: the shared [[cellArgmax]] projection assigns each arrival
-    * its cell (stateless, batch tie-break), then Spark's watermarked
-    * windowed aggregation maintains per-(window, cell) counts —
+    * Shape: the shared batch ranking
+    * ([[graft.operators.SimilarityQueries.rankedCells]]) assigns each
+    * arrival its cell (stateless, batch tie-break), then Spark's
+    * watermarked windowed aggregation maintains per-(window, cell)
+    * counts —
     * Update mode, so each trigger emits only the (window, cell) rows
     * that changed, and the watermark EVICTS closed windows' state
     * (the unbounded-accumulation gap of Complete mode, fixed; a late
@@ -579,7 +537,8 @@ object EmbStreams {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val counts = arrivals.toDF()
       .withWatermark("ts", s"$latenessMinutes minutes")
-      .select(col("ts"), cellArgmax(centroids).as("cell"))
+      .select(col("ts"), graft.operators.SimilarityQueries
+        .rankedCells(centroids, col("embedding")).getItem(0).as("cell"))
       .groupBy(
         window(col("ts"), s"$windowMinutes minutes",
           s"$slideMinutes minutes"),
@@ -713,9 +672,9 @@ object EmbStreams {
     * micro-batch of arrivals encodes through the EXACT e29/e34-gated
     * kernel ([[graft.operators.SimilarityQueries.ivfPqEncode]] — cell
     * assign, residual, per-subspace argmin against the frozen
-    * codebooks; its window runs batch-side inside foreachBatch, where
-    * windows are legal, so the stream cannot diverge from the gate by
-    * construction), a driver-side fold keeps the RUNNING per-(m, code)
+    * codebooks, run batch-side inside foreachBatch, so the stream
+    * cannot diverge from the gate by construction), a driver-side fold
+    * keeps the RUNNING per-(m, code)
     * counts (≤ subspaces × codebook-size integers — the same bound
     * the Complete-mode monitors hold as stream state), and every
     * non-empty trigger reports through the gated
@@ -725,13 +684,12 @@ object EmbStreams {
     * arrivals. Stop the returned query when done.
     */
   def ivfPqResidualDriftMonitor(arrivals: Dataset[EmbArrival],
-                                codes: DataFrame, centroids: DataFrame,
+                                codes: DataFrame,
+                                centroids: Seq[(Int, Array[Float])],
                                 codebooks: Array[Array[Array[Double]]])
                                (onReport: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val running = scala.collection.mutable.Map.empty[(Int, Int), Long]
-    // the ivfAppend pull-once pattern (see ivfPqAppendDurable)
-    val pulled = graft.operators.SimilarityQueries.pullCentroids(centroids)
     arrivals.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[EmbArrival], _: Long) =>
@@ -742,7 +700,7 @@ object EmbStreams {
             graft.operators.SimilarityQueries.ivfPqEncode(
               batch.toDF().select(col("vec_id"),
                 col("embedding").cast("array<float>").as("embedding")),
-              centroids, codebooks, Some(pulled)),
+              centroids, codebooks),
             codebooks.length)
           .groupBy(col("m"), col("code")).agg(count(lit(1)).as("n"))
           .collect()
@@ -772,24 +730,21 @@ object EmbStreams {
     * probing, residual ADC tables, approximate-cosine ranking,
     * 6-decimal rounding, self excluded), so serving equals the gate by
     * construction rather than by a re-implementation's discipline (the
-    * kernel's per-query window runs batch-side inside foreachBatch,
-    * where windows are legal; its partitions are one query's ≤
-    * corpus × nprobe / #cells candidates). Per batch the static read
-    * is the code table + tiny centroid side — cache `codes` first, as
+    * kernel's per-query ranking window runs batch-side inside
+    * foreachBatch, where windows are legal; its partitions are one
+    * query's ≤ corpus × nprobe / #cells candidates). Per batch the
+    * static read is the code table — cache `codes` first, as
     * a serving deployment would. `onBatch` receives (query_id, rnk,
     * vec_id, approx_cos); the returned query must be stopped by the
     * caller. Stream ≡ batch [[graft.api.Graft.IvfPqIndex.search]] is
     * spec-proven (EmbStreamsSpec).
     */
   def ivfPqServe(queries: Dataset[EmbQuery], codes: DataFrame,
-                 centroids: DataFrame,
+                 centroids: Seq[(Int, Array[Float])],
                  codebooks: Array[Array[Array[Double]]],
                  nprobe: Int = 2, k: Int = 3)
                 (onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the serving pull-once pattern: the per-batch probe's broadcast
-    // side is a LocalRelation of the frozen centroids
-    val pulled = graft.operators.SimilarityQueries.pullCentroids(centroids)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[EmbQuery], _: Long) =>
@@ -797,8 +752,7 @@ object EmbStreams {
           codes, centroids, codebooks,
           batch.toDF().select(col("query_id"),
             col("embedding").cast("array<float>").as("q_emb")),
-          nprobe, k, pulled = Some(pulled)))
+          nprobe, k))
       }
       .start()
-  }
 }

@@ -591,4 +591,23 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"recall regressed as fetch grew: ${qRows.toSeq.sortBy(_._1)}")
     }
   }
+
+  test("an IVF / IVF-PQ index over an empty corpus fails by name: no centroids") {
+    val empty = emb.limit(0)
+    Seq[() => Any](() => Graft.annIndex(empty),
+        () => Graft.ivfPqIndex(empty)).foreach { build =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("index has no centroids"), e.getMessage)
+    }
+  }
+
+  test("PQ / IVF-PQ training without a vec_id % 125 == 0 seed vector fails naming the seeding rule") {
+    // every multiple of 125 is a multiple of 5: this corpus has no seed
+    val unseeded = emb.filter(col("vec_id") % 5 =!= 0)
+    Seq[() => Any](() => Graft.pqIndex(unseeded),
+        () => Graft.ivfPqIndex(unseeded)).foreach { build =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("multiple of 125"), e.getMessage)
+    }
+  }
 }

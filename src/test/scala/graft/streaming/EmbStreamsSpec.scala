@@ -880,4 +880,109 @@ class EmbStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served(store = true) == masked)
   }
 
+  test("streaming probe ties go to the LOWEST cell, like batch IvfIndex.search") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def vec(seed: Int): Seq[Float] = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(64)(r.nextGaussian().toFloat)
+    }
+    // labels 0 and 1 hold the same two vectors, so cells 0 and 1 have
+    // bit-identical centroids: every corpus row assigns to cell 0 (the
+    // lowest), and a query near them ties between cells 0 and 1 — a
+    // 1-probe that broke the tie toward cell 1 would find no rows
+    val corpus = Seq((0L, vec(1), 0), (1L, vec(2), 0), (2L, vec(1), 1),
+        (3L, vec(2), 1), (4L, vec(3), 2), (5L, vec(4), 2))
+      .toDF("vec_id", "embedding", "label")
+    val idx = graft.api.Graft.annIndex(corpus)
+    val ts = Timestamp.valueOf("2026-01-01 09:00:00")
+    val queries = Seq(EmbQuery(100L, ts, vec(1)), EmbQuery(101L, ts, vec(2)))
+
+    val stream = MemoryStream[EmbQuery]
+    val q = idx.serve(stream.toDS(), nprobe = 1)
+      .writeStream.format("memory").queryName("ann_hits_tie")
+      .outputMode(OutputMode.Append())
+      .start()
+    stream.addData(queries)
+    q.processAllAvailable()
+    q.stop()
+
+    val streamed = hitTuples(spark.table("ann_hits_tie").collect().toSeq)
+    val batch = hitTuples(idx.search(queries.map(e => (e.query_id,
+        e.embedding)).toDF("vec_id", "embedding"), probes = 1)
+      .collect().toSeq)
+    assert(batch.size == 6, s"batch must probe the populated cell 0: $batch")
+    assert(streamed == batch,
+      s"streaming tie-break diverged from batch: " +
+        s"onlyStream=${streamed -- batch} onlyBatch=${batch -- streamed}")
+  }
+
+  test("appendStream and IVF-PQ serve use the handle's centroid snapshot after the training directory grew") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val d = "/root/testdata/sf0.001"
+    val ts = Timestamp.valueOf("2026-01-01 09:00:00")
+    val emb = spark.read.parquet(s"$d/embeddings.parquet")
+    // the % 7 split (IVF-PQ's codebook seed needs the % 125 rows)
+    val base = emb.filter($"vec_id" % 7 =!= 0)
+    val grown = emb.filter($"vec_id" % 7 === 0 && $"vec_id" % 2 === 0)
+      .withColumn("label", ($"label" + 1) % 3)
+    val arrivals = emb.filter($"vec_id" % 7 === 0 && $"vec_id" % 2 === 1)
+      .select("vec_id", "embedding")
+    val src = java.nio.file.Files.createTempDirectory("graft_snapshot")
+      .toFile.getAbsolutePath + "/corpus"
+    base.write.parquet(src)
+    // a cached training frame over a directory that keeps receiving
+    // data: refreshByPath re-lists it, so re-deriving centroids from
+    // it would now average rows the handles were never trained on
+    val train = spark.read.parquet(src).cache()
+    try {
+      val ivf = graft.api.Graft.annIndex(train)
+      val ivfPq = graft.api.Graft.ivfPqIndex(train)
+      grown.write.mode("append").parquet(src)
+      spark.catalog.refreshByPath(src)
+
+      val appended = scala.collection.mutable.Set[(Long, Int)]()
+      val arrivalStream = MemoryStream[EmbStreams.EmbArrival]
+      val aq = ivf.appendStream(arrivalStream.toDS()) { a =>
+        val rows = a.collect().map(r =>
+          (r.getAs[Long]("vec_id"), r.getAs[Int]("cell")))
+        appended.synchronized { appended ++= rows }
+      }
+      arrivalStream.addData(arrivals.collect().toSeq.map(r =>
+        EmbStreams.EmbArrival(r.getLong(0), ts, r.getSeq[Float](1))))
+      aq.processAllAvailable()
+      aq.stop()
+      val expected = ivf.append(arrivals).assigned
+        .join(arrivals.select("vec_id"), Seq("vec_id"), "left_semi")
+        .select("vec_id", "cell").as[(Long, Int)].collect().toSet
+      assert(expected.nonEmpty && appended.toSet == expected,
+        s"appendStream diverged from append: " +
+          s"onlyStream=${(appended.toSet -- expected).take(5)} " +
+          s"onlyBatch=${(expected -- appended).take(5)}")
+
+      val served = scala.collection.mutable.Set[(Long, Long, Long, Double)]()
+      val queryStream = MemoryStream[EmbQuery]
+      val sq = ivfPq.serve(queryStream.toDS()) { b =>
+        val rows = b.collect().map(r => (r.getAs[Long]("query_id"),
+          r.getAs[Long]("rnk"), r.getAs[Long]("vec_id"),
+          r.getAs[Double]("approx_cos")))
+        served.synchronized { served ++= rows }
+      }
+      queryStream.addData(emb.filter($"vec_id" < 5)
+        .select("vec_id", "embedding").collect().toSeq
+        .map(r => EmbQuery(r.getLong(0), ts, r.getSeq[Float](1))))
+      sq.processAllAvailable()
+      sq.stop()
+      val searched = ivfPq.search(emb.filter($"vec_id" < 5)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toSet
+      assert(searched.nonEmpty && served.toSet == searched,
+        s"IVF-PQ serve diverged from search: " +
+          s"onlyStream=${(served.toSet -- searched).take(5)} " +
+          s"onlyBatch=${(searched -- served).take(5)}")
+    } finally train.unpersist()
+  }
 }
