@@ -33,33 +33,10 @@ final class ProvDataset[T] private[prov] (
 
   import ProvDataset._
 
-  private var schema: DataElementSchema[T] = DefaultSchemas.forValue[T]
-
   /** Side-capture knobs shared with the in-plan wrapper (None when
     * capture is off or the task is pass-through/ignored at creation).
     */
   private[prov] var captureCfg: Option[CaptureConfig] = None
-
-  private[prov] def elementRowsThunk: () => Dataset[ElementRow] = () => {
-    val execId = session.executionId
-    val tid = task.id
-    val sch = schema
-    import org.apache.spark.sql.functions.{col, lit}
-    // columnar projection when the schema can express its grid as a
-    // Column (all built-in schemas over atomic/tuple/array values): the
-    // flush write then runs scan→project→parquet inside whole-stage
-    // codegen with no ProvRecord object round-trip
-    sch.projectExpr(col("value"), ds.schema("value").dataType) match {
-      case Some(values) =>
-        ds.select(lit(execId).as("execution_id"), lit(tid).as("task_id"),
-            col("id").as("element_id"), values.as("values"),
-            col("deps").as("deps"))
-          .as[ElementRow](ProvSession.elementRowEnc)
-      case None =>
-        ds.map(r => ElementRow(execId, tid, r.id, sch.project(r.value), r.deps))(
-          ProvSession.elementRowEnc)
-    }
-  }
 
   private def spark = session.spark
 
@@ -74,9 +51,8 @@ final class ProvDataset[T] private[prov] (
     */
   def ignoreIt(): this.type = {
     task.ignored = true
-    task.elementThunk = None
+    task.elements = Elements.NoElements
     task.extraThunk = None
-    task.flushPlan = None
     captureCfg.foreach(_.ignored = true)
     if (createsElements) {
       implicit val e: Encoder[ProvRecord[T]] = ds.encoder
@@ -87,7 +63,6 @@ final class ProvDataset[T] private[prov] (
 
   /** Attach a user record schema (reference: RDD.scala:271-275). */
   def setSchema(s: DataElementSchema[T]): this.type = {
-    schema = s
     captureCfg.foreach(_.schema = s)
     task.schemaFields = s.fieldNames
     task.usingDefaultSchema = false
@@ -635,15 +610,10 @@ object ProvDataset {
     val pd = new ProvDataset(ds, task, session)
     pd.captureCfg = cfg
     session.track(ds)
-    if (capture) {
-      task.elementThunk = Some(pd.elementRowsThunk)
-      // session-persisted above — the flush sync phase materializes it
-      // (via the wrapper) if no action did, and must not release it
-      // (random ids need the cache until close)
-      task.flushPlan = Some(ds)
-      task.transientCache = false
-      task.sideCapture = true
-    }
+    // session-persisted above — the flush sync phase materializes it
+    // (via the wrapper) if no action did, and never releases it (random
+    // ids need the cache until close)
+    if (capture) task.elements = Elements.SideCaptured(ds)
     pd
   }
 

@@ -21,41 +21,50 @@ final class TaskState(
     var ignored: Boolean = false,
     var hasDataInRepository: Boolean = false,
     var group: Option[GroupState] = None,
-    /** builds this task's element rows; None for pass-through tasks
-      * (union/sort/repartition create no elements — reference:
-      * UnionRDD.scala:108)
-      */
-    var elementThunk: Option[() => Dataset[ElementRow]] = None,
-    /** true when `elementThunk` emits the single task-granularity stats
-      * element (relational [[RelationalProvenance.Granularity.Task]])
-      * instead of per-row elements — children dep-link to its
-      * deterministic stats element id.
-      */
-    var statsElement: Boolean = false,
     var flushed: Boolean = false,
-    /** this task's stage plan, pre-materialized in topological order by
-      * the flush batch so the single element write reads warm caches
-      * (cold caches make the write's concurrent union branches recompute
-      * shared prefixes). Set by both layers for element-creating tasks.
-      */
-    var flushPlan: Option[Dataset[_]] = None,
-    /** true when `flushPlan` is NOT session-persisted (the relational
-      * layer's deterministic-id frames): the flush batch persists it
-      * transiently and releases it when the batch finishes, so the
-      * element write costs O(stages), not O(stages²).
-      */
-    var transientCache: Boolean = false,
-    /** true for typed-layer tasks whose element rows are written by the
-      * in-plan side-capture wrapper ([[ElementSideWriter]]) during the
-      * action itself; flush COMMITS their staged files instead of
-      * replaying the stage through a write job.
-      */
-    var sideCapture: Boolean = false,
     /** Extra element rows beyond the per-record ones — source-FILE
       * elements (textFile/hadoopFile/fileGroup) and dropped-record
       * markers. Small datasets, written by the flush batch's append job.
       */
-    var extraThunk: Option[() => Dataset[ElementRow]] = None)
+    var extraThunk: Option[() => Dataset[ElementRow]] = None) {
+
+  /** How this task's element rows reach the store — see [[Elements]]. */
+  private[prov] var elements: Elements = Elements.NoElements
+}
+
+/** The element path of one task: the single decision the flush batch
+  * dispatches on.
+  */
+private[prov] sealed trait Elements
+
+private[prov] object Elements {
+
+  /** No element rows: pass-through (union/sort/repartition — reference:
+    * UnionRDD.scala:108), ignored and streaming tasks (the latter append
+    * per micro-batch themselves).
+    */
+  case object NoElements extends Elements
+
+  /** Typed-layer task: its (random-id) element rows are written by the
+    * in-plan wrapper ([[ElementSideWriter]]) during the action itself;
+    * flush COMMITS the staged files. `plan` is the session-persisted
+    * stage the flush materializes if no action fully computed it.
+    */
+  final case class SideCaptured(plan: Dataset[_]) extends Elements
+
+  /** Relational element-granularity frame: deterministic ids, so one
+    * flush append job recomputes `rows` (possibly off-thread). `plan`
+    * is the frame's plan, pre-materialized by the batch when a child's
+    * branch re-reads it, so the write costs O(stages), not O(stages²).
+    */
+  final case class Replayed(rows: () => Dataset[ElementRow], plan: Dataset[_])
+      extends Elements
+
+  /** Relational task granularity: `rows` is the task's single stats
+    * element; children dep-link to its deterministic id.
+    */
+  final case class Stats(rows: () => Dataset[ElementRow]) extends Elements
+}
 
 /** Open transformation group (reference: TransformationGroup.scala:6-33,
   * TransformationGroupManager.scala:5-74). Invariants enforced: a task
@@ -271,69 +280,39 @@ final class ProvSession private[prov] (
     */
   def textFile(path: String, description: String = "textFile"): ProvDataset[String] = {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col, input_file_name}
     val task = newTask(TransformationType.MAP, Nil, s"$description: $path")
     val execId = executionId
     val ds = spark.read.textFile(path)
-      .select(org.apache.spark.sql.functions.col("value"),
-              org.apache.spark.sql.functions.input_file_name().as("_file"))
+      .select(col("value"), input_file_name().as("_file"))
       .as[(String, String)]
       .map { case (line, file) =>
         ProvRecord(ProvIds.newId(), Seq(ProvSinkUtil.fileElementId(execId, file)), line)
       }
     val pd = ProvDataset.create(ds, task, this)
-    // file-level elements are emitted alongside the records at flush
-    if (captureEnabled) {
-      val tid = task.id // capture only strings in executor closures
-      task.extraThunk = Some(() =>
-        spark.read.textFile(path)
-          .select(org.apache.spark.sql.functions.input_file_name().as("f"))
-          .distinct().as[String]
-          .map(f => ElementRow(execId, tid, ProvSinkUtil.fileElementId(execId, f),
-            Seq(Seq(f)), Seq.empty[String])))
-    }
+    attachFileElements(task, () =>
+      spark.read.textFile(path).select(input_file_name()).as[String])
     pd
   }
 
   /** objectFile: read SequenceFiles of java-serialized batches (the
     * stock `saveAsObjectFile` format) with the same source-file lineage
     * as textFile — each record depends on its file's element (reference:
-    * SparkContext.scala:1325 via HadoopRDD semantics). Uses
-    * HadoopRDD.mapPartitionsWithInputSplit so the file path is known
-    * per-record without a join.
+    * SparkContext.scala:1325 via HadoopRDD semantics).
     */
   def objectFile[T](path: String, description: String = "objectFile")(
       implicit ep: Encoder[ProvRecord[T]]): ProvDataset[T] = {
     import org.apache.hadoop.io.{BytesWritable, NullWritable}
-    import org.apache.hadoop.mapred.{FileSplit, SequenceFileInputFormat}
-    val task = newTask(TransformationType.MAP, Nil, s"$description: $path")
-    val execId = executionId
-    implicit val ct: scala.reflect.ClassTag[ProvRecord[T]] = ProvDataset.anyRefTag
-    def raw = spark.sparkContext.hadoopFile(path,
-      classOf[SequenceFileInputFormat[NullWritable, BytesWritable]],
-      classOf[NullWritable], classOf[BytesWritable],
-      spark.sparkContext.defaultParallelism)
-      .asInstanceOf[org.apache.spark.rdd.HadoopRDD[NullWritable, BytesWritable]]
-    val recs = raw.mapPartitionsWithInputSplit(
-      { (split: org.apache.hadoop.mapred.InputSplit,
-         it: Iterator[(NullWritable, BytesWritable)]) =>
-        val file = split.asInstanceOf[FileSplit].getPath.toString
-        val fid = ProvSinkUtil.fileElementId(execId, file)
-        it.flatMap { case (_, bw) =>
-          val ois = new java.io.ObjectInputStream(
-            new java.io.ByteArrayInputStream(bw.copyBytes()))
-          try ois.readObject().asInstanceOf[Array[_]].iterator
-            .map(v => ProvRecord(ProvIds.newId(), Seq(fid), v.asInstanceOf[T]))
-            .toVector
-          finally ois.close()
-        }
-      }, preservesPartitioning = false)
-    val pd = ProvDataset.create(spark.createDataset(recs)(ep), task, this)
-    attachFileElements(task, () => raw.mapPartitionsWithInputSplit(
-      { (split: org.apache.hadoop.mapred.InputSplit,
-         _: Iterator[(NullWritable, BytesWritable)]) =>
-        Iterator(split.asInstanceOf[FileSplit].getPath.toString)
-      }, preservesPartitioning = false))
-    pd
+    hadoopFileFlat(path,
+      classOf[org.apache.hadoop.mapred.SequenceFileInputFormat[NullWritable, BytesWritable]],
+      classOf[NullWritable], classOf[BytesWritable], description) {
+      (_: NullWritable, bw: BytesWritable) =>
+        val ois = new java.io.ObjectInputStream(
+          new java.io.ByteArrayInputStream(bw.copyBytes()))
+        try ois.readObject().asInstanceOf[Array[_]].iterator
+          .map(_.asInstanceOf[T]).toVector.iterator
+        finally ois.close()
+    }
   }
 
   /** binaryRecords: fixed-length records over the binaryFile reader with
@@ -370,25 +349,26 @@ final class ProvSession private[prov] (
       }(ep)
     val pd = ProvDataset.create(recs, task, this)
     attachFileElements(task, () =>
-      files.select("path").as[String](Encoders.STRING).rdd)
+      files.select("path").as[String](Encoders.STRING))
     pd
   }
 
-  /** Wrap `task`'s element thunk so the distinct source FILES flush as
-    * elements of the same task (one per file, values = [[path]]) — the
-    * file-element half of per-file lineage (reference:
-    * HadoopRDD.scala:223-227,318).
+  /** Flush the distinct source FILES `paths` lists as elements of
+    * `task` (one per file, id = [[ProvSinkUtil.fileElementId]], values =
+    * [[path]]) — the file-element half of per-file lineage (reference:
+    * HadoopRDD.scala:223-227,318), shared by every file reader and
+    * `FileGroupOps.fileGroup`.
     */
-  private def attachFileElements(task: TaskState,
-      files: () => org.apache.spark.rdd.RDD[String]): Unit =
+  private[prov] def attachFileElements(task: TaskState,
+      paths: () => Dataset[String]): Unit =
     if (captureEnabled) {
       val tid = task.id
       val execId = executionId
       task.extraThunk = Some(() =>
-        spark.createDataset(files().distinct())(Encoders.STRING)
+        paths().distinct()
           .map(f => ElementRow(execId, tid,
             ProvSinkUtil.fileElementId(execId, f),
-            Seq(Seq(f)), Seq.empty[String]))(ProvSession.elementRowEnc))
+            Seq(Seq(f)), Seq.empty[String]))(elementRowEnc))
     }
 
   /** hadoopFile (old `mapred` API) with per-file lineage for ANY
@@ -404,8 +384,21 @@ final class ProvSession private[prov] (
       inputFormatClass: Class[_ <: org.apache.hadoop.mapred.InputFormat[K, V]],
       keyClass: Class[K], valueClass: Class[V],
       description: String = "hadoopFile")(conv: (K, V) => T)(
+      implicit ep: Encoder[ProvRecord[T]]): ProvDataset[T] =
+    hadoopFileFlat(path, inputFormatClass, keyClass, valueClass,
+      description)((k: K, v: V) => Iterator.single(conv(k, v)))
+
+  /** [[hadoopFile]]'s reader with a 1→N `conv`: every record `conv`
+    * yields depends on its split's file element. Uses
+    * HadoopRDD.mapPartitionsWithInputSplit, so the file path is known
+    * per record without a join.
+    */
+  private def hadoopFileFlat[K, V, T](path: String,
+      inputFormatClass: Class[_ <: org.apache.hadoop.mapred.InputFormat[K, V]],
+      keyClass: Class[K], valueClass: Class[V],
+      description: String)(conv: (K, V) => Iterator[T])(
       implicit ep: Encoder[ProvRecord[T]]): ProvDataset[T] = {
-    import org.apache.hadoop.mapred.FileSplit
+    import org.apache.hadoop.mapred.{FileSplit, InputSplit}
     val task = newTask(TransformationType.MAP, Nil, s"$description: $path")
     val execId = executionId
     implicit val ct: scala.reflect.ClassTag[ProvRecord[T]] = ProvDataset.anyRefTag
@@ -413,16 +406,19 @@ final class ProvSession private[prov] (
         keyClass, valueClass, spark.sparkContext.defaultParallelism)
       .asInstanceOf[org.apache.spark.rdd.HadoopRDD[K, V]]
     val recs = raw.mapPartitionsWithInputSplit(
-      { (split: org.apache.hadoop.mapred.InputSplit, it: Iterator[(K, V)]) =>
+      { (split: InputSplit, it: Iterator[(K, V)]) =>
         val fid = ProvSinkUtil.fileElementId(execId,
           split.asInstanceOf[FileSplit].getPath.toString)
-        it.map { case (k, v) => ProvRecord(ProvIds.newId(), Seq(fid), conv(k, v)) }
+        it.flatMap { case (k, v) =>
+          conv(k, v).map(t => ProvRecord(ProvIds.newId(), Seq(fid), t))
+        }
       }, preservesPartitioning = false)
     val pd = ProvDataset.create(spark.createDataset(recs)(ep), task, this)
-    attachFileElements(task, () => raw.mapPartitionsWithInputSplit(
-      { (split: org.apache.hadoop.mapred.InputSplit, _: Iterator[(K, V)]) =>
-        Iterator(split.asInstanceOf[FileSplit].getPath.toString)
-      }, preservesPartitioning = false))
+    attachFileElements(task, () => spark.createDataset(
+      raw.mapPartitionsWithInputSplit(
+        { (split: InputSplit, _: Iterator[(K, V)]) =>
+          Iterator(split.asInstanceOf[FileSplit].getPath.toString)
+        }, preservesPartitioning = false))(Encoders.STRING))
     pd
   }
 
@@ -461,10 +457,11 @@ final class ProvSession private[prov] (
         it.map { case (k, v) => ProvRecord(ProvIds.newId(), Seq(fid), conv(k, v)) }
       }, preservesPartitioning = false)
     val pd = ProvDataset.create(spark.createDataset(recs)(ep), task, this)
-    attachFileElements(task, () => raw.mapPartitionsWithInputSplit(
-      { (split: org.apache.hadoop.mapreduce.InputSplit, _: Iterator[(K, V)]) =>
-        Iterator(split.asInstanceOf[FileSplit].getPath.toString)
-      }, preservesPartitioning = false))
+    attachFileElements(task, () => spark.createDataset(
+      raw.mapPartitionsWithInputSplit(
+        { (split: org.apache.hadoop.mapreduce.InputSplit, _: Iterator[(K, V)]) =>
+          Iterator(split.asInstanceOf[FileSplit].getPath.toString)
+        }, preservesPartitioning = false))(Encoders.STRING))
     pd
   }
 
@@ -519,7 +516,25 @@ final class ProvSession private[prov] (
   private[prov] lazy val serializableHadoopConf =
     new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
 
+  /** `ids` plus every transitive ancestor task id (call under the lock). */
+  private def ancestorIds(ids: Seq[String]): Set[String] = {
+    val seen = mutable.Set[String]()
+    var frontier = ids
+    while (frontier.nonEmpty) {
+      val next = frontier.filterNot(seen)
+      seen ++= next
+      frontier = next.flatMap(id => tasks.get(id)).flatMap(_.parents)
+    }
+    seen.toSet
+  }
+
+  private def debug(msg: => String): Unit =
+    if (sys.env.contains("GRAFT_PROV_DEBUG")) System.err.println(msg)
+
+  private def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
   def flush(): Unit = if (captureEnabled) {
+    import Elements._
     // Plan construction + flushed-marking run under the lock: a
     // concurrent second flush sees flushed=true and appends nothing —
     // concurrent actions are idempotent. Marking is optimistic: a failed
@@ -528,44 +543,43 @@ final class ProvSession private[prov] (
     // already-committed rows).
     //
     // Two phases:
-    //  1. SYNC (caller thread): side-captured tasks' record elements.
+    //  1. SYNC (caller thread): SideCaptured tasks' record elements.
     //     Fully-computed stages just get their staged files committed
     //     (renames, no Spark job). A stage the actions never fully
     //     computed is materialized HERE with a count — synchronously, so
     //     a random-id stage is never computed concurrently by the flush
     //     and a user action (which could mint divergent ids across
     //     executors). After this phase the record elements are READABLE.
-    //  2. ASYNC-able: one append job for replay tasks (the relational
-    //     layer's deterministic-id frames) + extras (file elements,
-    //     dropped-record markers) — all safe to recompute off-thread
-    //     because their ids are deterministic.
+    //  2. ASYNC-able: one append job for Replayed and Stats tasks (the
+    //     relational layer's deterministic-id frames) + extras (file
+    //     elements, dropped-record markers) — all safe to recompute
+    //     off-thread because their ids are deterministic.
     val planned = synchronized {
       val pending = tasks.values
         .filter(t => !t.flushed && !t.ignored &&
-          (t.elementThunk.nonEmpty || t.extraThunk.nonEmpty)).toSeq
+          (t.elements != NoElements || t.extraThunk.nonEmpty)).toSeq
       if (pending.isEmpty) None
       else {
-        val (side, replay) = pending.partition(_.sideCapture)
-        val unions = replay.flatMap(_.elementThunk).map(_.apply()) ++
-          pending.flatMap(_.extraThunk).map(_.apply())
+        val side = pending.flatMap(t => t.elements match {
+          case SideCaptured(plan) => Some(t -> plan)
+          case _                  => None
+        })
+        val replayRows = pending.map(_.elements).collect {
+          case Replayed(rows, _) => rows
+          case Stats(rows)       => rows
+        }
+        val unions = (replayRows ++ pending.flatMap(_.extraThunk)).map(_.apply())
         // stages worth pre-materializing before the append job: only
         // those some OTHER pending task's branch will re-read
         // (transitively, through pass-through tasks) — a leaf stage is
         // computed exactly once by its own branch, so a count job for it
-        // would be pure overhead. Side-capture stages are materialized
-        // by phase 1, so only replay (relational) stages remain.
-        val reread: Set[String] = {
-          val seen = mutable.Set[String]()
-          var frontier = pending.flatMap(_.parents)
-          while (frontier.nonEmpty) {
-            val next = frontier.filterNot(seen)
-            seen ++= next
-            frontier = next.flatMap(id => tasks.get(id)).flatMap(_.parents)
-          }
-          seen.toSet
-        }
-        val rereadTasks = replay
-          .filter(t => t.flushPlan.nonEmpty && reread.contains(t.id))
+        // would be pure overhead. Side-captured stages are materialized
+        // by phase 1, so only Replayed stages remain.
+        val reread = ancestorIds(pending.flatMap(_.parents))
+        val rereadTasks = pending.flatMap(t => t.elements match {
+          case Replayed(_, plan) if reread(t.id) => Some(t -> plan)
+          case _                                 => None
+        })
         // counting one MAXIMAL re-read stage fills every persisted cache
         // beneath it: each combinator's plan embeds its parents' plans as
         // subtrees, so Spark's cache manager substitutes the persisted
@@ -573,47 +587,39 @@ final class ProvSession private[prov] (
         // job. Counting covered (non-maximal) stages again would be one
         // redundant job each — a linear chain needs ONE count, not one
         // per stage.
-        val rereadIds = rereadTasks.map(_.id).toSet
-        def ancestors(t: TaskState): Set[String] = {
-          val seen = mutable.Set[String]()
-          var frontier = t.parents
-          while (frontier.nonEmpty) {
-            val next = frontier.filterNot(seen)
-            seen ++= next
-            frontier = next.flatMap(id => tasks.get(id)).flatMap(_.parents)
-          }
-          seen.toSet
-        }
-        val covered: Set[String] =
-          rereadTasks.flatMap(t => ancestors(t).intersect(rereadIds)).toSet
+        val rereadIds = rereadTasks.map(_._1.id).toSet
+        val covered: Set[String] = rereadTasks
+          .flatMap { case (t, _) => ancestorIds(t.parents).intersect(rereadIds) }.toSet
         val countPlans: Seq[Dataset[_]] =
-          rereadTasks.filterNot(t => covered(t.id)).flatMap(_.flushPlan)
-        val persistPlans: Seq[Dataset[_]] =
-          rereadTasks.filter(_.transientCache).flatMap(_.flushPlan).distinct
+          rereadTasks.collect { case (t, plan) if !covered(t.id) => plan }
+        // frames are not session-persisted (deterministic ids need no
+        // cache), so the batch persists re-read plans TRANSIENTLY —
+        // except one the user already cached (ProvFrame.materialize):
+        // releasing it after the batch would drop the user's cache
+        val persistPlans: Seq[Dataset[_]] = rereadTasks.map(_._2).distinct
+          .filter(_.storageLevel == StorageLevel.NONE)
         pending.foreach(_.flushed = true)
-        Some((side, replay, unions, persistPlans, countPlans))
+        Some((pending, side, replayRows.size, unions, persistPlans, countPlans))
       }
     }
-    planned.foreach { case (side, replay, unions, persistPlans, countPlans) =>
-      val unmarkAll = () => synchronized {
-        (side ++ replay).foreach(_.flushed = false)
-      }
+    planned.foreach { case (pending, side, nReplay, unions, persistPlans, countPlans) =>
+      val unmarkAll = () => synchronized { pending.foreach(_.flushed = false) }
       // ---- phase 1: commit side-captured record elements (sync) ----
       try {
         val hconf = spark.sparkContext.hadoopConfiguration
-        side.foreach { t =>
+        side.foreach { case (t, plan) =>
           val s0 = System.nanoTime()
           val (covered, declared) =
             ElementSideWriter.coverage(storeDir, executionId, t.id, hconf)
           val complete = declared match {
             case Some(n) => covered.size == n
-            case None    => t.flushPlan.exists(_.rdd.getNumPartitions == 0)
+            case None    => plan.rdd.getNumPartitions == 0
           }
           if (!complete) {
             // cached partitions hit their cache (wrapper doesn't re-run,
             // staged ids stay authoritative); only never-computed
             // partitions run, staging exactly the missing files
-            t.flushPlan.foreach(_.count())
+            plan.count()
             val (c2, d2) =
               ElementSideWriter.coverage(storeDir, executionId, t.id, hconf)
             require(d2.exists(_ == c2.size),
@@ -621,8 +627,7 @@ final class ProvSession private[prov] (
                 s"covered ${c2.size} of ${d2.getOrElse(-1)}")
           }
           ElementSideWriter.commit(storeDir, executionId, t.id, hconf)
-          if (sys.env.contains("GRAFT_PROV_DEBUG"))
-            System.err.println(f"[prov]   commit ${t.ttype}: ${(System.nanoTime() - s0) / 1e9}%.2fs")
+          debug(f"[prov]   commit ${t.ttype}: ${secondsSince(s0)}%.2fs")
         }
       } catch { case e: Throwable => unmarkAll(); throw e }
       // ---- phase 2: replay + extras append (async-able) ----
@@ -630,14 +635,11 @@ final class ProvSession private[prov] (
         if (unions.isEmpty) None
         else {
           val all = unions.reduce(_ unionByName _)
-          val n = replay.size
           val para = spark.sparkContext.defaultParallelism
           Some(() => {
             val t0 = System.nanoTime()
-            // transiently persist plans whose layer does not persist its
-            // stages (deterministic-id relational frames): without this,
-            // task k's branch replays stages 1..k — O(stages²) per flush.
-            // Only worth it for stages a child's branch will re-read.
+            // transiently persisted re-read plans: without this, task
+            // k's branch replays stages 1..k — O(stages²) per flush
             persistPlans.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
             try {
               // ANY failure before the append lands un-marks the whole
@@ -653,8 +655,7 @@ final class ProvSession private[prov] (
                 countPlans.foreach { p =>
                   val c0 = System.nanoTime()
                   p.count()
-                  if (sys.env.contains("GRAFT_PROV_DEBUG"))
-                    System.err.println(f"[prov]   materialize: ${(System.nanoTime() - c0) / 1e9}%.2fs")
+                  debug(f"[prov]   materialize: ${secondsSince(c0)}%.2fs")
                 }
                 // write straight into this execution's partition
                 // directory: the dynamic-partition writer (partitionBy)
@@ -671,16 +672,14 @@ final class ProvSession private[prov] (
                 all.drop("execution_id").coalesce(para).write.mode("append")
                   .option("parquet.enable.dictionary", "false")
                   .parquet(s"$storeDir/data_elements/execution_id=$executionId")
-                if (sys.env.contains("GRAFT_PROV_DEBUG"))
-                  System.err.println(f"[prov]   write: ${(System.nanoTime() - w0) / 1e9}%.2fs")
+                debug(f"[prov]   write: ${secondsSince(w0)}%.2fs")
               } catch {
                 case e: Throwable =>
                   unmarkAll()
                   throw e
               }
             } finally persistPlans.foreach(_.unpersist())
-            if (sys.env.contains("GRAFT_PROV_DEBUG"))
-              System.err.println(f"[prov] append batch ($n replay tasks + extras) in ${(System.nanoTime() - t0) / 1e9}%.2fs")
+            debug(f"[prov] append batch ($nReplay replay tasks + extras) in ${secondsSince(t0)}%.2fs")
           })
         }
       job.foreach { j =>
@@ -787,8 +786,7 @@ final class ProvSession private[prov] (
       catch { case scala.util.control.NonFatal(_) => () }
     cached.foreach(_.unpersist())
     cached.clear()
-    if (sys.env.contains("GRAFT_PROV_DEBUG"))
-      System.err.println(f"[prov] close tables+cleanup: ${(System.nanoTime() - close0) / 1e9}%.2fs")
+    debug(f"[prov] close tables+cleanup: ${secondsSince(close0)}%.2fs")
   }
 }
 

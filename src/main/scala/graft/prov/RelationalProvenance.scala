@@ -107,31 +107,23 @@ object RelationalProvenance {
     task.schemaFields = userCols
     task.usingDefaultSchema = false
     val frame = new ProvFrame(df, task, session, spliced, taskLevel)
-    if (session.captureEnabled && createsElements && !task.ignored) {
-      task.elementThunk =
-        if (taskLevel) Some(() => frame.statsRows())
-        else Some(() => frame.elementRows())
-      task.statsElement = taskLevel
-      if (!taskLevel) {
+    if (session.captureEnabled && createsElements && !task.ignored)
+      task.elements =
+        // task mode: no plan to cache — a stats count is a codegen'd
+        // columnar aggregate over the (constant-folded) chain, cheaper to
+        // recompute per branch than to transiently cache multi-million-row
+        // frames whose rows the flush never writes (measured at 20M rows:
+        // caching 6.7 s vs chain-replay counts ~1.5 s)
+        if (taskLevel) Elements.Stats(() => frame.statsRows())
         // frames are NOT session-persisted (deterministic ids need no
-        // cache) — hand the plan to the flush batch for TRANSIENT caching
-        // so downstream tasks' branches read it instead of replaying the
-        // chain (released when the batch finishes)
-        task.flushPlan = Some(df)
-        task.transientCache = true
-      }
-      // task mode: no flush plan at all — a stats count is a codegen'd
-      // columnar aggregate over the (constant-folded) chain, cheaper to
-      // recompute per branch than to transiently cache multi-million-row
-      // frames whose rows the flush never writes (measured at 20M rows:
-      // caching 6.7 s vs chain-replay counts ~1.5 s)
-    } else if (!createsElements) task.elementThunk = None
+        // cache) — the flush batch caches the plan TRANSIENTLY when a
+        // downstream task's branch re-reads it
+        else Elements.Replayed(() => frame.elementRows(), df)
     frame
   }
 
   /** Deterministic id of a task's stats element (task granularity). */
-  private[prov] def statsElementId(executionId: String,
-                                   taskId: String): String = {
+  private[prov] def statsId(executionId: String, taskId: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(s"$executionId${taskId}__task_stats__"
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -147,8 +139,10 @@ object RelationalProvenance {
     val seen = scala.collection.mutable.LinkedHashSet[String]()
     def walk(ids: Seq[String]): Unit = ids.foreach { id =>
       session.taskById(id).foreach { t =>
-        if (t.statsElement && !t.ignored) seen += t.id
-        else walk(t.parents)
+        t.elements match {
+          case _: Elements.Stats => seen += t.id
+          case _                 => walk(t.parents)
+        }
       }
     }
     walk(task.parents)
@@ -226,11 +220,11 @@ final class ProvFrame private[prov] (
   private[prov] def statsRows(): Dataset[ElementRow] = {
     val deps = RelationalProvenance
       .nearestStatsAncestors(session, task)
-      .map(tid => RelationalProvenance.statsElementId(execId, tid))
+      .map(tid => RelationalProvenance.statsId(execId, tid))
     df.groupBy().agg(count(lit(1)).as("n")).select(
       lit(execId).as("execution_id"),
       lit(task.id).as("task_id"),
-      lit(RelationalProvenance.statsElementId(execId, task.id))
+      lit(RelationalProvenance.statsId(execId, task.id))
         .as("element_id"),
       array(array(lit("__n_rows__"), col("n").cast("string"))).as("values"),
       (if (deps.isEmpty) array().cast("array<string>")
@@ -266,9 +260,8 @@ final class ProvFrame private[prov] (
     */
   def ignoreIt(): this.type = {
     task.ignored = true
-    task.elementThunk = None
-    task.flushPlan = None
-    task.transientCache = false
+    task.elements = Elements.NoElements
+    task.extraThunk = None
     this
   }
 
@@ -347,9 +340,8 @@ final class ProvFrame private[prov] (
       val desc = description
       val droppedDeps = df.filter(!coalesce(cond, lit(false)))
         .select(pdeps.as("_prov_pd"), spark_partition_id().as("_prov_part"))
-      val base = t.elementThunk.get
-      t.elementThunk = Some(() => {
-        val synth = droppedDeps
+      t.extraThunk = Some(() =>
+        droppedDeps
           .groupBy(col("_prov_part"))
           .agg(array_sort(flatten(collect_list(col("_prov_pd")))).as("deps"))
           .select(
@@ -359,9 +351,7 @@ final class ProvFrame private[prov] (
               array_join(col("deps"), ""))).as("element_id"),
             array(array(lit(s"don't-pass: $desc"))).as("values"),
             col("deps"))
-          .as[ElementRow](ProvSession.elementRowEnc)
-        base().unionByName(synth)
-      })
+          .as[ElementRow](ProvSession.elementRowEnc))
     }
     frame
   }

@@ -49,9 +49,8 @@ object StreamingProvenance {
               queryName: String = "streaming_agg"): DataStreamWriter[Row] = {
     val task = session.newTask(TransformationType.MAP, Nil,
       s"streaming: $queryName")
-    task.schemaFields = agg.schema.fieldNames.toSeq
     // elements append per micro-batch below, not at flush
-    task.elementThunk = None
+    task.schemaFields = agg.schema.fieldNames.toSeq
     val execId = session.executionId
     val tid = task.id
     val store = session.storeDir
@@ -123,7 +122,6 @@ object StreamingProvenance {
     val task = session.newTask(TransformationType.MAP, Nil,
       s"streaming_records: $queryName")
     task.schemaFields = Seq("user_id", "n_events", "sum_value")
-    task.elementThunk = None
     val execId = session.executionId
     val tid = task.id
     val store = session.storeDir

@@ -131,18 +131,10 @@ object FileGroupOps {
     task.usingDefaultSchema = true // FileGroupSchema IS the default for this type
     // per-file source elements accompany the group elements at flush;
     // only paths are scanned (content column pruned by the reader)
-    if (session.captureEnabled) {
-      val tid = task.id
-      task.extraThunk = Some(() =>
-        spark.read.format("binaryFile").load(allPaths: _*)
-          .select(col("path")).distinct()
-          .as[String](Encoders.STRING)
-          .map { uri =>
-            val p = normalizePath(uri)
-            ElementRow(execId, tid, ProvSinkUtil.fileElementId(execId, p),
-              Seq(Seq(p)), Seq.empty)
-          }(ProvSession.elementRowEnc))
-    }
+    session.attachFileElements(task, () =>
+      spark.read.format("binaryFile").load(allPaths: _*)
+        .select(col("path")).as[String](Encoders.STRING)
+        .map(normalizePath)(Encoders.STRING))
     pd
   }
 

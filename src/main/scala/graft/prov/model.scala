@@ -129,22 +129,11 @@ object ProvIds extends Serializable {
 
 /** User-supplied projection of a record into a named string grid
   * (reference: schema/DataElementSchema.scala:3-8). Must be Serializable:
-  * it runs inside executors at flush time.
+  * it runs inside executors, in the side-capture wrapper.
   */
 trait DataElementSchema[T] extends Serializable {
   def fieldNames: Seq[String]
   def project(value: T): Seq[Seq[String]]
-
-  /** Optional COLUMNAR form of [[project]]: a Column producing the same
-    * `array<array<string>>` grid from the raw value column. When defined
-    * (the built-in schemas define it for atomic/tuple/array values), the
-    * flush write stays inside whole-stage codegen end-to-end — no
-    * per-record object round-trip. Must agree with [[project]]; None
-    * falls back to the typed map.
-    */
-  def projectExpr(value: org.apache.spark.sql.Column,
-                  valueType: org.apache.spark.sql.types.DataType):
-      Option[org.apache.spark.sql.Column] = None
 }
 
 /** Single-line `;`-style splitter (reference: SingleLineSchema.scala:29-35). */
@@ -153,37 +142,12 @@ class SingleLineSchema[T](separator: String, names: String*)
   def fieldNames: Seq[String] = names
   def project(v: T): Seq[Seq[String]] =
     Seq(String.valueOf(v).split(separator, -1).toSeq)
-
-  override def projectExpr(value: org.apache.spark.sql.Column,
-                           valueType: org.apache.spark.sql.types.DataType):
-      Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    // String.split and Spark split share regex semantics and the -1
-    // keep-trailing-empty limit; non-string values go through the same
-    // toString as String.valueOf
-    if (DefaultSchemas.atomic(valueType))
-      Some(array(split(coalesce(value.cast("string"), lit("null")),
-        separator, -1)))
-    else None
-  }
 }
 
 /** Default schemas auto-picked by runtime value
   * (reference: RDD.scala:179-191 + schema/Default*.scala).
   */
 object DefaultSchemas {
-  import org.apache.spark.sql.types._
-
-  /** Types whose Spark string cast equals Java's String.valueOf — the
-    * precondition for the codegen'd projection to agree with the typed
-    * one. Timestamps/dates/decimals format differently and fall back.
-    */
-  private[prov] def atomic(dt: DataType): Boolean = dt match {
-    case StringType | IntegerType | LongType | DoubleType | FloatType |
-         ShortType | ByteType | BooleanType => true
-    case _ => false
-  }
-
   /** pair → ("Key","Value"); array → element grid; fallback → ("Value"). */
   def forValue[T]: DataElementSchema[T] = new DataElementSchema[T] {
     def fieldNames: Seq[String] = Seq("Value")
@@ -192,33 +156,6 @@ object DefaultSchemas {
       case a: Array[_]  => Seq(a.toSeq.map(String.valueOf(_)))
       case s: Seq[_]    => Seq(s.map(String.valueOf(_)))
       case other        => Seq(Seq(String.valueOf(other)))
-    }
-
-    override def projectExpr(value: org.apache.spark.sql.Column,
-                             valueType: DataType):
-        Option[org.apache.spark.sql.Column] = {
-      import org.apache.spark.sql.functions._
-      def s(c: org.apache.spark.sql.Column) =
-        coalesce(c.cast("string"), lit("null")) // String.valueOf(null)
-      // a NULL top-level tuple/array falls to the typed map's `other`
-      // branch ([["null"]]), not the per-field/per-element shape — the
-      // columnar form must agree
-      def nullSafe(c: org.apache.spark.sql.Column) =
-        when(value.isNull, array(array(lit("null")))).otherwise(c)
-      valueType match {
-        // Tuple2 of atomics — the `case (k, v2)` branch
-        case st: StructType
-            if st.fields.map(_.name).sameElements(Array("_1", "_2")) &&
-              st.fields.forall(f => atomic(f.dataType)) =>
-          Some(nullSafe(
-            array(array(s(value.getField("_1")), s(value.getField("_2"))))))
-        // Array/Seq of atomics — one grid row of the elements
-        case ArrayType(et, _) if atomic(et) =>
-          Some(nullSafe(array(transform(value, x => s(x)))))
-        case dt if atomic(dt) =>
-          Some(array(array(s(value))))
-        case _ => None // nested tuples, case classes, timestamps: typed map
-      }
     }
   }
   def pairFieldNames: Seq[String] = Seq("Key", "Value")

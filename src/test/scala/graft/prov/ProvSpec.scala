@@ -581,31 +581,53 @@ class ProvSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!taskRow.getAs[Boolean]("using_default_schema"))
   }
 
-  test("schemas: columnar projectExpr agrees with typed project on NULL values") {
+  test("one session, both layers: one flush batch commits side-captured and appends replayed elements once each") {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
-    val sch = DefaultSchemas.forValue[Any]
-    val df = spark.createDataFrame(
-      java.util.Arrays.asList(
-        Row(Row("k", "v"), Seq(1, 2), "x"),
-        Row(null, null, null)),
-      StructType(Seq(
-        StructField("tup", StructType(Seq(
-          StructField("_1", StringType), StructField("_2", StringType)))),
-        StructField("arr", ArrayType(IntegerType)),
-        StructField("atom", StringType))))
-    def gridOf(c: String): Seq[Seq[Seq[String]]] =
-      df.select(sch.projectExpr(col(c), df.schema(c).dataType).get)
-        .collect()
-        .map(_.getAs[scala.collection.Seq[scala.collection.Seq[String]]](0)
-          .map(_.toSeq).toSeq).toSeq
-    // typed project on a null value hits the `other` branch → [["null"]];
-    // the columnar form must produce the identical grid on every shape
-    assert(sch.project(null) == Seq(Seq("null")))
-    assert(gridOf("tup") == Seq(Seq(Seq("k", "v")), sch.project(null)))
-    assert(gridOf("arr") == Seq(Seq(Seq("1", "2")), sch.project(null)))
-    assert(gridOf("atom") == Seq(Seq(Seq("x")), sch.project(null)))
+    val store = newStore()
+    val s = ProvSession.create(spark, "mixed", store)
+    // relational frames, declared first so the typed action's flush
+    // batch carries them: an Element chain through an ignored filter,
+    // and a Task-granularity chain
+    val df = spark.range(30).toDF("k").withColumn("v", col("k") % 3)
+    val rel = RelationalProvenance.table(s, df, "rel", Seq("k"))
+    val relIgn = rel.filter(col("v") =!= 0, "nonzero").ignoreIt()
+    val relSel = relIgn.select("scaled")(col("k"), (col("v") * 10).as("v10"))
+    val stats = RelationalProvenance.table(s, df, "stats", Seq("k"),
+      RelationalProvenance.Granularity.Task)
+    val statsF = stats.filter(col("k") < 10, "small")
+    // typed chain through an ignored map; take(1) computes only the
+    // first partition, so the flush materializes the rest
+    val src = s.parallelize(1 to 40)
+    val ign = src.map(_ + 1, "shift").ignoreIt()
+    val doubled = ign.map(_ * 2, "doubled")
+    val big = doubled.filter(_ > 20, "big")
+    assert(big.take(1).length == 1)
+    s.close()
+
+    val els = spark.read.parquet(s"$store/data_elements")
+      .filter($"execution_id" === s.executionId)
+    val byTask = els.groupBy($"task_id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byTask.get(src.taskId).contains(40L))
+    assert(byTask.get(doubled.taskId).contains(40L))
+    assert(byTask.get(big.taskId).contains(31L)) // (x + 1) * 2 > 20 for x in 10..40
+    assert(byTask.get(rel.taskId).contains(30L))
+    assert(byTask.get(relSel.taskId).contains(20L)) // k % 3 != 0 in 0..29
+    assert(byTask.get(stats.taskId).contains(1L))
+    assert(byTask.get(statsF.taskId).contains(1L))
+    assert(!byTask.contains(ign.taskId) && !byTask.contains(relIgn.taskId))
+    assert(els.groupBy($"element_id").count().filter($"count" > 1).isEmpty)
+    // both layers splice through their ignored task
+    val srcIds = elementsOf(store, s.executionId, src.taskId).map(_._1).toSet
+    assert(elementsOf(store, s.executionId, doubled.taskId)
+      .forall(e => e._3.length == 1 && srcIds(e._3.head)))
+    val relIds = elementsOf(store, s.executionId, rel.taskId).map(_._1).toSet
+    assert(elementsOf(store, s.executionId, relSel.taskId)
+      .forall(e => e._3.length == 1 && relIds(e._3.head)))
+    val Seq((statsId, statsVals, _)) = elementsOf(store, s.executionId, stats.taskId).toSeq
+    val Seq((_, smallVals, smallDeps)) = elementsOf(store, s.executionId, statsF.taskId).toSeq
+    assert(statsVals == Seq(Seq("__n_rows__", "30")))
+    assert(smallVals == Seq(Seq("__n_rows__", "10")) && smallDeps == Seq(statsId))
   }
 
   test("ProvenanceQueries: graphs, value table, lineage closure, JSON export") {

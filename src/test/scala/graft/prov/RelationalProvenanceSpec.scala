@@ -377,4 +377,19 @@ class RelationalProvenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val grid = leafStats.getSeq[Seq[String]](leafStats.fieldIndex("values"))
     assert(grid.head(1).toLong == 2L) // v2 ∈ {20, 40, 60}, two pass > 25
   }
+
+  test("flush keeps a materialized frame's cache until close") {
+    val (sess, _) = newSession()
+    val orders = spark.read.parquet(s"$d/orders.parquet")
+    val o = RelationalProvenance.table(sess, orders, "orders", Seq("o_orderkey"))
+      .materialize()
+    o.filter(col("o_orderstatus") === "F", "finished")
+    // the child's branch re-reads `o`, so the batch would cache it
+    // transiently — it must not release the user's cache afterwards
+    sess.flush()
+    sess.awaitFlushes()
+    assert(o.df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    sess.close()
+    assert(o.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
 }
