@@ -321,6 +321,43 @@ object ElementSideWriter {
     committed.toSet
   }
 
+  /** Staging directory of one streaming micro-batch's element files. */
+  private[prov] def batchStagingDir(storeDir: String, execId: String,
+                                    taskId: String, batchId: Long): String =
+    s"${stagingDir(storeDir, execId, taskId)}/b$batchId"
+
+  /** Commit one streaming micro-batch staged under [[batchStagingDir]]:
+    * delete the batch's previously committed files, then move each
+    * staged part file into the execution's element directory as
+    * `stream-<taskId>-b<batchId>-<i>.parquet`. A replayed batch thus
+    * REPLACES its rows instead of adding a second copy. A crash between
+    * the delete and the renames is healed by the replay itself: the
+    * stream has not logged the batch as committed, so foreachBatch runs
+    * it again.
+    */
+  private[prov] def commitBatch(storeDir: String, execId: String,
+                                taskId: String, batchId: Long,
+                                conf: Configuration): Unit = {
+    val staged = new Path(batchStagingDir(storeDir, execId, taskId, batchId))
+    val dest = new Path(destDir(storeDir, execId))
+    val fs = staged.getFileSystem(conf)
+    val parts = fs.listStatus(staged).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+    val prefix = s"stream-$taskId-b$batchId-"
+    val committedRe = (java.util.regex.Pattern.quote(prefix) + """\d+\.parquet""").r
+    fs.mkdirs(dest)
+    fs.listStatus(dest).foreach { st =>
+      if (committedRe.matches(st.getPath.getName)) fs.delete(st.getPath, false)
+    }
+    parts.zipWithIndex.foreach { case (p, i) =>
+      if (!fs.rename(p, new Path(dest, s"$prefix$i.parquet")))
+        throw new java.io.IOException(
+          s"streaming element commit failed for task $taskId batch $batchId: $p")
+    }
+    fs.delete(staged, true)
+  }
+
   /** Remove the execution's staging directory (orphaned attempts from
     * ignored tasks, post-flush recomputes, duplicate attempts).
     */

@@ -1,13 +1,21 @@
 package graft.prov
 
+import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Driver-side writer for the store's SMALL metadata tables
   * (executions, tasks, transformation_groups, file_group_references).
@@ -21,6 +29,11 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveT
   *
   * The reference pays this cost differently: per-row Cassandra inserts
   * from the driver at finish (DataflowProvenance.scala:60-98).
+  *
+  * Each table's columns are declared once ([[Table]]): the writer lays
+  * out its files from them, and [[ProvenanceQueries]] reads with the
+  * Spark schema they derive (no footer-inference job), either through
+  * Spark or, for one execution's partition, on the driver ([[read]]).
   */
 private[prov] object MetaParquet {
 
@@ -29,6 +42,49 @@ private[prov] object MetaParquet {
   case object FBool extends FT
   case object FTimestamp extends FT
   case object FStringList extends FT
+
+  /** The schema partition discovery infers for a store table: the
+    * file's data columns, all nullable (every writer declares them
+    * optional), then the path-embedded `execution_id`.
+    */
+  def partitioned(data: Seq[StructField]): StructType =
+    StructType(data.map(_.copy(nullable = true)) :+
+      StructField("execution_id", StringType))
+
+  /** One driver-written store table: its directory under the store and
+    * its data columns in file order.
+    */
+  final case class Table(name: String, fields: Seq[(String, FT)]) {
+    def dir(storeDir: String, executionId: String): String =
+      s"$storeDir/$name/execution_id=$executionId"
+
+    lazy val schema: StructType = partitioned(fields.map { case (n, ft) =>
+      StructField(n, ft match {
+        case FString     => StringType
+        case FBool       => BooleanType
+        case FTimestamp  => TimestampType
+        case FStringList => ArrayType(StringType)
+      })
+    })
+  }
+
+  val Executions: Table = Table("executions", Seq(
+    "app_name" -> FString, "start_time" -> FTimestamp,
+    "end_time" -> FTimestamp))
+
+  val Tasks: Table = Table("tasks", Seq(
+    "task_id" -> FString, "description" -> FString,
+    "transformation_type" -> FString, "using_default_schema" -> FBool,
+    "schema_fields" -> FStringList, "has_data_in_repository" -> FBool,
+    "is_ignored" -> FBool, "dependencies" -> FStringList))
+
+  val TransformationGroups: Table = Table("transformation_groups", Seq(
+    "group_id" -> FString, "name" -> FString,
+    "init_tasks" -> FStringList, "intermediary_tasks" -> FStringList,
+    "finish_task" -> FString))
+
+  val FileGroupReferences: Table = Table("file_group_references", Seq(
+    "element_id" -> FString, "folder_path" -> FString))
 
   private def messageType(fields: Seq[(String, FT)]): MessageType = {
     val b = Types.buildMessage()
@@ -149,4 +205,55 @@ private[prov] object MetaParquet {
     if (!fs.rename(tmp, fin))
       throw new java.io.IOException(s"meta table write failed: $tmp -> $fin")
   }
+
+  /** The read counterpart of [[append]]: one execution's partition of
+    * `table` as a LOCAL frame (a `LocalRelation` in `table.schema`),
+    * read through parquet-hadoop on the driver — collecting it, or
+    * projecting, filtering or broadcasting it, runs no Spark job. Reads
+    * every visible `.parquet` file in the partition, so Spark-written
+    * partitions from older stores read the same; a missing partition
+    * is an empty frame.
+    */
+  def read(spark: SparkSession, storeDir: String, table: Table,
+           executionId: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new Path(table.dir(storeDir, executionId))
+    val fs = d.getFileSystem(conf)
+    val files =
+      try fs.listStatus(d).toSeq.filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith(".") && !n.startsWith("_") &&
+          n.endsWith(".parquet")
+      }.sortBy(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val rows = files.flatMap { st =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), st.getPath)
+        .withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => Row.fromSeq(
+          table.fields.map { case (n, ft) => value(g, n, ft) } :+ executionId))
+        .toVector
+      finally reader.close()
+    }
+    spark.createDataFrame(rows.asJava, table.schema)
+  }
+
+  private def value(g: Group, name: String, ft: FT): Any =
+    if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) null
+    else ft match {
+      case FString => g.getString(name, 0)
+      case FBool   => g.getBoolean(name, 0)
+      case FTimestamp =>
+        val us = g.getLong(name, 0)
+        val ts = new Timestamp(Math.floorDiv(us, 1000L))
+        ts.setNanos((Math.floorMod(us, 1000000L) * 1000).toInt)
+        ts
+      case FStringList =>
+        // 3-level LIST: outer group → repeated `list` → optional `element`
+        val l = g.getGroup(name, 0)
+        (0 until l.getFieldRepetitionCount(0)).map { i =>
+          val e = l.getGroup(0, i)
+          if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)
+        }
+    }
 }

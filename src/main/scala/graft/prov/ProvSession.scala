@@ -275,19 +275,21 @@ final class ProvSession private[prov] (
   /** textFile with source-file lineage: each input FILE is itself a data
     * element, and every record depends on its file (reference:
     * HadoopRDD.scala:223-227,318). File element ids are deterministic
-    * (name-UUID of executionId+path) so no join is needed to wire record→
-    * file edges — each record computes its file's id locally.
+    * (name-UUID of execution, task and path) so no join is needed to wire
+    * record→file edges — each record computes its file's id locally — and
+    * two tasks reading one path own one file element each.
     */
   def textFile(path: String, description: String = "textFile"): ProvDataset[String] = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, input_file_name}
     val task = newTask(TransformationType.MAP, Nil, s"$description: $path")
     val execId = executionId
+    val tid = task.id
     val ds = spark.read.textFile(path)
       .select(col("value"), input_file_name().as("_file"))
       .as[(String, String)]
       .map { case (line, file) =>
-        ProvRecord(ProvIds.newId(), Seq(ProvSinkUtil.fileElementId(execId, file)), line)
+        ProvRecord(ProvIds.newId(), Seq(ProvSinkUtil.elementId(execId, tid, file)), line)
       }
     val pd = ProvDataset.create(ds, task, this)
     attachFileElements(task, () =>
@@ -332,6 +334,7 @@ final class ProvSession private[prov] (
     val task = newTask(TransformationType.MAP, Nil,
       s"$description($recordLength): $path")
     val execId = executionId
+    val tid = task.id
     def files = spark.read.format("binaryFile").load(path)
     val recs = files
       .select(org.apache.spark.sql.functions.col("path"),
@@ -339,7 +342,7 @@ final class ProvSession private[prov] (
       .as[(String, Array[Byte])](
         Encoders.tuple(Encoders.STRING, Encoders.BINARY))
       .flatMap { case (file, content) =>
-        val fid = ProvSinkUtil.fileElementId(execId, file)
+        val fid = ProvSinkUtil.elementId(execId, tid, file)
         val n = content.length / recordLength
         (0 until n).iterator.map { i =>
           ProvRecord(ProvIds.newId(), Seq(fid),
@@ -354,7 +357,7 @@ final class ProvSession private[prov] (
   }
 
   /** Flush the distinct source FILES `paths` lists as elements of
-    * `task` (one per file, id = [[ProvSinkUtil.fileElementId]], values =
+    * `task` (one per file, id = [[ProvSinkUtil.elementId]], values =
     * [[path]]) — the file-element half of per-file lineage (reference:
     * HadoopRDD.scala:223-227,318), shared by every file reader and
     * `FileGroupOps.fileGroup`.
@@ -367,7 +370,7 @@ final class ProvSession private[prov] (
       task.extraThunk = Some(() =>
         paths().distinct()
           .map(f => ElementRow(execId, tid,
-            ProvSinkUtil.fileElementId(execId, f),
+            ProvSinkUtil.elementId(execId, tid, f),
             Seq(Seq(f)), Seq.empty[String]))(elementRowEnc))
     }
 
@@ -397,28 +400,38 @@ final class ProvSession private[prov] (
       inputFormatClass: Class[_ <: org.apache.hadoop.mapred.InputFormat[K, V]],
       keyClass: Class[K], valueClass: Class[V],
       description: String)(conv: (K, V) => Iterator[T])(
+      implicit ep: Encoder[ProvRecord[T]]): ProvDataset[T] =
+    splitReader(path, description, new SplitPaths[K, V] {
+      def map[U: scala.reflect.ClassTag](
+          f: (String, Iterator[(K, V)]) => Iterator[U]): org.apache.spark.rdd.RDD[U] =
+        spark.sparkContext.hadoopFile(path, inputFormatClass, keyClass,
+            valueClass, spark.sparkContext.defaultParallelism)
+          .asInstanceOf[org.apache.spark.rdd.HadoopRDD[K, V]]
+          .mapPartitionsWithInputSplit((split, it) => f(split
+            .asInstanceOf[org.apache.hadoop.mapred.FileSplit].getPath.toString, it))
+    })(conv)
+
+  /** The split-aware reader behind both Hadoop APIs: each record `conv`
+    * yields depends on its split's file element, and the split paths
+    * flush as the task's file elements (one pass over the splits that
+    * reads no records).
+    */
+  private def splitReader[K, V, T](path: String, description: String,
+      splits: SplitPaths[K, V])(conv: (K, V) => Iterator[T])(
       implicit ep: Encoder[ProvRecord[T]]): ProvDataset[T] = {
-    import org.apache.hadoop.mapred.{FileSplit, InputSplit}
     val task = newTask(TransformationType.MAP, Nil, s"$description: $path")
     val execId = executionId
+    val tid = task.id
     implicit val ct: scala.reflect.ClassTag[ProvRecord[T]] = ProvDataset.anyRefTag
-    def raw = spark.sparkContext.hadoopFile(path, inputFormatClass,
-        keyClass, valueClass, spark.sparkContext.defaultParallelism)
-      .asInstanceOf[org.apache.spark.rdd.HadoopRDD[K, V]]
-    val recs = raw.mapPartitionsWithInputSplit(
-      { (split: InputSplit, it: Iterator[(K, V)]) =>
-        val fid = ProvSinkUtil.fileElementId(execId,
-          split.asInstanceOf[FileSplit].getPath.toString)
-        it.flatMap { case (k, v) =>
-          conv(k, v).map(t => ProvRecord(ProvIds.newId(), Seq(fid), t))
-        }
-      }, preservesPartitioning = false)
+    val recs = splits.map { (file, it) =>
+      val fid = ProvSinkUtil.elementId(execId, tid, file)
+      it.flatMap { case (k, v) =>
+        conv(k, v).map(t => ProvRecord(ProvIds.newId(), Seq(fid), t))
+      }
+    }
     val pd = ProvDataset.create(spark.createDataset(recs)(ep), task, this)
     attachFileElements(task, () => spark.createDataset(
-      raw.mapPartitionsWithInputSplit(
-        { (split: InputSplit, _: Iterator[(K, V)]) =>
-          Iterator(split.asInstanceOf[FileSplit].getPath.toString)
-        }, preservesPartitioning = false))(Encoders.STRING))
+      splits.map((file, _) => Iterator(file)))(Encoders.STRING))
     pd
   }
 
@@ -441,29 +454,17 @@ final class ProvSession private[prov] (
       inputFormatClass: Class[_ <: org.apache.hadoop.mapreduce.InputFormat[K, V]],
       keyClass: Class[K], valueClass: Class[V],
       description: String = "newAPIHadoopFile")(conv: (K, V) => T)(
-      implicit ep: Encoder[ProvRecord[T]]): ProvDataset[T] = {
-    import org.apache.hadoop.mapreduce.lib.input.FileSplit
-    val task = newTask(TransformationType.MAP, Nil, s"$description: $path")
-    val execId = executionId
-    implicit val ct: scala.reflect.ClassTag[ProvRecord[T]] = ProvDataset.anyRefTag
-    def raw = spark.sparkContext.newAPIHadoopFile(path,
-        inputFormatClass.asInstanceOf[Class[org.apache.hadoop.mapreduce.InputFormat[K, V]]],
-        keyClass, valueClass)
-      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[K, V]]
-    val recs = raw.mapPartitionsWithInputSplit(
-      { (split: org.apache.hadoop.mapreduce.InputSplit, it: Iterator[(K, V)]) =>
-        val fid = ProvSinkUtil.fileElementId(execId,
-          split.asInstanceOf[FileSplit].getPath.toString)
-        it.map { case (k, v) => ProvRecord(ProvIds.newId(), Seq(fid), conv(k, v)) }
-      }, preservesPartitioning = false)
-    val pd = ProvDataset.create(spark.createDataset(recs)(ep), task, this)
-    attachFileElements(task, () => spark.createDataset(
-      raw.mapPartitionsWithInputSplit(
-        { (split: org.apache.hadoop.mapreduce.InputSplit, _: Iterator[(K, V)]) =>
-          Iterator(split.asInstanceOf[FileSplit].getPath.toString)
-        }, preservesPartitioning = false))(Encoders.STRING))
-    pd
-  }
+      implicit ep: Encoder[ProvRecord[T]]): ProvDataset[T] =
+    splitReader(path, description, new SplitPaths[K, V] {
+      def map[U: scala.reflect.ClassTag](
+          f: (String, Iterator[(K, V)]) => Iterator[U]): org.apache.spark.rdd.RDD[U] =
+        spark.sparkContext.newAPIHadoopFile(path,
+            inputFormatClass.asInstanceOf[Class[org.apache.hadoop.mapreduce.InputFormat[K, V]]],
+            keyClass, valueClass)
+          .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[K, V]]
+          .mapPartitionsWithInputSplit((split, it) => f(split
+            .asInstanceOf[org.apache.hadoop.mapreduce.lib.input.FileSplit].getPath.toString, it))
+    })((k: K, v: V) => Iterator.single(conv(k, v)))
 
   /** Bridge any stock RDD — custom receivers, computed sources — into
     * the provenance surface: each record becomes a fresh root element.
@@ -747,33 +748,18 @@ final class ProvSession private[prov] (
       // partition value path-embedded, data columns in the same order.
       import MetaParquet._
       val hconf = spark.sparkContext.hadoopConfiguration
-      append(hconf, s"$storeDir/executions/execution_id=$executionId",
-        Seq("app_name" -> FString, "start_time" -> FTimestamp,
-          "end_time" -> FTimestamp),
-        Seq(Seq(appName, startTime, endTime)))
-      append(hconf, s"$storeDir/tasks/execution_id=$executionId",
-        Seq("task_id" -> FString, "description" -> FString,
-          "transformation_type" -> FString, "using_default_schema" -> FBool,
-          "schema_fields" -> FStringList, "has_data_in_repository" -> FBool,
-          "is_ignored" -> FBool, "dependencies" -> FStringList),
-        tasks.values.toSeq.map(t => Seq(
-          t.id, t.description, t.ttype, t.usingDefaultSchema,
-          t.schemaFields, t.hasDataInRepository, t.ignored, t.parents)))
-      if (groups.nonEmpty) {
-        append(hconf,
-          s"$storeDir/transformation_groups/execution_id=$executionId",
-          Seq("group_id" -> FString, "name" -> FString,
-            "init_tasks" -> FStringList, "intermediary_tasks" -> FStringList,
-            "finish_task" -> FString),
-          groups.toSeq.map(g => Seq(g.id, g.name, g.initTasks.toSeq,
-            g.intermediaryTasks.toSeq, g.finishTask.getOrElse(""))))
-      }
-      if (fileGroupRefs.nonEmpty) {
-        append(hconf,
-          s"$storeDir/file_group_references/execution_id=$executionId",
-          Seq("element_id" -> FString, "folder_path" -> FString),
+      def write(t: Table, rows: Seq[Seq[Any]]): Unit =
+        append(hconf, t.dir(storeDir, executionId), t.fields, rows)
+      write(Executions, Seq(Seq(appName, startTime, endTime)))
+      write(Tasks, tasks.values.toSeq.map(t => Seq(
+        t.id, t.description, t.ttype, t.usingDefaultSchema,
+        t.schemaFields, t.hasDataInRepository, t.ignored, t.parents)))
+      if (groups.nonEmpty)
+        write(TransformationGroups, groups.toSeq.map(g => Seq(g.id, g.name,
+          g.initTasks.toSeq, g.intermediaryTasks.toSeq, g.finishTask.getOrElse(""))))
+      if (fileGroupRefs.nonEmpty)
+        write(FileGroupReferences,
           fileGroupRefs.toSeq.map(r => Seq(r.element_id, r.folder_path)))
-      }
     }
     // reference: VersionControl.finish on sc.stop
     // (SparkContext.scala:1975-1976, VersionControl.scala:134-157)
@@ -790,8 +776,22 @@ final class ProvSession private[prov] (
   }
 }
 
+/** One Hadoop input API's splits: maps each split's records together
+  * with the split's file path (both APIs expose
+  * `mapPartitionsWithInputSplit`, over different split classes).
+  */
+private[prov] trait SplitPaths[K, V] {
+  def map[U: scala.reflect.ClassTag](
+      f: (String, Iterator[(K, V)]) => Iterator[U]): org.apache.spark.rdd.RDD[U]
+}
+
 private[prov] object ProvSinkUtil {
-  /** Deterministic v3-style id for a source file element. */
-  def fileElementId(executionId: String, path: String): String =
-    java.util.UUID.nameUUIDFromBytes(s"$executionId|$path".getBytes("UTF-8")).toString
+  /** Deterministic v3-style id of an element a task mints from a key (a
+    * source file's path, a streaming batch or record): unique per
+    * (execution, task, key), so a replay re-mints it and no two tasks
+    * share one.
+    */
+  def elementId(executionId: String, taskId: String, key: String): String =
+    java.util.UUID.nameUUIDFromBytes(
+      s"$executionId|$taskId|$key".getBytes("UTF-8")).toString
 }

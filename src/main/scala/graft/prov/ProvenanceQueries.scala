@@ -1,9 +1,12 @@
 package graft.prov
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** The reference's query surface (SURVEY §3.3 — the Kotlin/Spring web
@@ -13,34 +16,59 @@ import org.apache.spark.storage.StorageLevel
   * 1-hop graph expansions are joins; multi-hop lineage is a
   * co-partitioned BFS over the execution's adjacency, one Spark job
   * per hop.
+  *
+  * A query runs only the Spark jobs its own joins and aggregates need:
+  * every table is read with its declared schema (no footer-inference
+  * job), one execution's task, transformation-group and
+  * file-group-reference rows are read on the driver into local frames
+  * ([[MetaParquet.read]]), and element ids are unique within an
+  * execution at write time, so [[elements]] is a plain pruned scan.
   */
 final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
+  import MetaParquet.{Executions, FileGroupReferences, Tasks, TransformationGroups}
+  import ProvenanceQueries._
 
-  private def table(name: String): DataFrame =
-    spark.read.parquet(s"$storeDir/$name")
+  private def table(name: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$storeDir/$name")
 
-  def executions: DataFrame = table("executions")
+  def executions: DataFrame = table(Executions.name, Executions.schema)
 
+  /** The execution's task rows: a local frame read on the driver, so
+    * collecting, filtering or broadcasting it runs no Spark job.
+    */
   def tasks(executionId: String): DataFrame =
-    table("tasks").filter(col("execution_id") === executionId)
+    MetaParquet.read(spark, storeDir, Tasks, executionId)
 
-  /** Element rows. The store is append-only and streaming capture is
-    * at-least-once (a replayed micro-batch re-appends byte-identical
-    * rows with deterministic ids — StreamingProvenance), so duplicates
-    * collapse here at read time on element_id; batch-captured ids are
-    * unique, for which this is a no-op.
+  /** Element rows: a pruned scan of the execution's partition. Element
+    * ids are unique within an execution when written — random ids for
+    * typed records, (execution, task, key)-scoped ids for file and
+    * streaming elements, a replayed streaming micro-batch REPLACES its
+    * committed files (StreamingProvenance), and relational frames key
+    * their ids on the caller's unique key columns — so no read-side
+    * dedup runs here. A store written before element ids were kept
+    * unique may still hold streaming-replay duplicates, and this shows
+    * them.
     */
   def elements(executionId: String): DataFrame =
-    table("data_elements").filter(col("execution_id") === executionId)
-      .dropDuplicates("element_id")
+    table(ElementsTable, ElementSchema).filter(col("execution_id") === executionId)
+
+  /** (task, parent) pairs of the execution's task DAG, from its local
+    * task rows.
+    */
+  private def taskEdges(executionId: String): Seq[(String, String)] =
+    tasks(executionId).select(col("task_id"), col("dependencies")).collect()
+      .toSeq.flatMap(r =>
+        Option(r.getSeq[String](1)).getOrElse(Nil).map(r.getString(0) -> _))
 
   /** Task-level dependency edges — the reference's `DependenciesOfTask`
     * table as a view over tasks.dependencies
-    * (CassandraDatabaseScript.cql:49-54).
+    * (CassandraDatabaseScript.cql:49-54). A local frame, built on the
+    * driver.
     */
-  def taskDependencies(executionId: String): DataFrame =
-    tasks(executionId)
-      .select(col("task_id").as("target"), explode(col("dependencies")).as("source"))
+  def taskDependencies(executionId: String): DataFrame = {
+    import spark.implicits._
+    taskEdges(executionId).toDF("target", "source")
+  }
 
   /** Record-level lineage edges — the reference's
     * `DependenciesOfDataElement` (cql:56-62) as a view.
@@ -51,18 +79,17 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
               explode(col("deps")).as("source"))
 
   /** Prospective (task) dataflow graph: nodes + edges
-    * (reference: TaskAPICtrl.kt:22-36).
+    * (reference: TaskAPICtrl.kt:22-36). A local frame, built on the
+    * driver from the execution's task rows.
     */
   def taskGraph(executionId: String): DataFrame = {
     val nodes = tasks(executionId)
-      .select(col("task_id").as("id"), col("description"),
-              col("transformation_type"), lit("task").as("kind"),
-              lit(null: String).as("source"))
-    val edges = taskDependencies(executionId)
-      .select(col("target").as("id"), lit(null: String).as("description"),
-              lit(null: String).as("transformation_type"), lit("edge").as("kind"),
-              col("source"))
-    nodes.unionByName(edges)
+      .select(col("task_id"), col("description"), col("transformation_type"))
+      .collect().toSeq
+      .map(r => Row(r.getString(0), r.getString(1), r.getString(2), "task", null))
+    val edges = taskEdges(executionId)
+      .map { case (target, source) => Row(target, null, null, "edge", source) }
+    spark.createDataFrame((nodes ++ edges).asJava, TaskGraphSchema)
   }
 
   /** Full retrospective graph: every data element (colored per task) +
@@ -85,42 +112,39 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * dashboard or a cross-run diff wants (internal element/task ids
     * differ between runs of the same pipeline; descriptions and
     * counts do not). Output: (kind, dst, src, n) ordered — `src` is
-    * empty for element rows. Scale: counts aggregate map-side over
-    * the element/edge tables; the only joins are against the
-    * O(#tasks) description table (broadcast-sized by construction).
+    * empty for element rows. Scale: one scan of the element table per
+    * side (nodes; edges and their source elements); the descriptions
+    * are a broadcast local frame, and counts aggregate map-side.
     * Gate: `prov_full_graph` calls this facade and checks it against
     * a DuckDB derivation from the tracked pipeline's inputs.
     */
   def graphSummary(executionId: String): DataFrame = {
-    val g = fullGraph(executionId)
-    val desc = tasks(executionId)
-      .select(col("task_id"), col("description"))
-    val srcTask = elements(executionId)
-      .select(col("element_id").as("source"),
-        col("task_id").as("src_tid"))
-    val nodes = g.filter(col("kind") === "element")
-      .join(desc, "task_id")
-      .groupBy(col("kind"), col("description").as("dst"))
+    val els = elements(executionId)
+    val desc = broadcast(tasks(executionId)
+      .select(col("task_id"), col("description")))
+    val srcDesc = desc.select(col("task_id").as("src_tid"),
+      col("description").as("src"))
+    val nodes = els.select(col("task_id")).join(desc, "task_id")
+      .groupBy(col("description").as("dst"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("src", lit(""))
-    val edges = g.filter(col("kind") === "edge")
+      .select(lit("element").as("kind"), col("dst"), lit("").as("src"), col("n"))
+    val edges = els.select(col("task_id"), explode(col("deps")).as("source"))
+      .join(els.select(col("element_id").as("source"), col("task_id").as("src_tid")),
+        "source")
       .join(desc, "task_id")
-      .join(srcTask, "source")
-      .join(desc.select(col("task_id").as("src_tid"),
-        col("description").as("src")), "src_tid")
-      .groupBy(col("kind"), col("description").as("dst"), col("src"))
+      .join(srcDesc, "src_tid")
+      .groupBy(col("description").as("dst"), col("src"))
       .agg(count(lit(1)).as("n"))
-    nodes.select(col("kind"), col("dst"), col("src"), col("n"))
-      .unionByName(edges.select(col("kind"), col("dst"), col("src"),
-        col("n")))
-      .orderBy(col("kind"), col("dst"), col("src"))
+      .select(lit("edge").as("kind"), col("dst"), col("src"), col("n"))
+    nodes.unionByName(edges).orderBy(col("kind"), col("dst"), col("src"))
   }
 
   /** Elements produced by one task, optionally with their consumed
     * sources (reference: DataElementAPICtrl.kt:105-179). Pass-through
     * tasks (UNION etc.) own no elements; like the reference's
     * "UNION tasks expanded to parents", expandPassThrough walks up the
-    * task DAG until tasks with elements are found.
+    * task DAG (its local task rows: no Spark job) until tasks with
+    * elements are found.
     */
   def producedBy(executionId: String, taskId: String,
                  expandPassThrough: Boolean = false): DataFrame = {
@@ -149,8 +173,9 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     }
   }
 
-  /** Record value table: header from Task.schema_fields + the value grid
-    * (reference: DataElementAPICtrl.kt:181-233).
+  /** Record value table: header from Task.schema_fields (a broadcast
+    * local frame) + the value grid (reference:
+    * DataElementAPICtrl.kt:181-233).
     */
   def valueTable(executionId: String, taskId: String): DataFrame = {
     val header = tasks(executionId).filter(col("task_id") === taskId)
@@ -182,9 +207,9 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * narrow join with the adjacency followed by one shuffle
     * (`reduceByKey(min hop)`) and a narrow `subtractByKey` of the ids
     * already visited — one Spark job (the frontier's `count`) per hop.
-    * The frontier dedup also absorbs the duplicate element rows an
-    * at-least-once streaming replay leaves in the store, so the
-    * whole-row [[elements]] dedup is not needed here.
+    * The frontier dedup also absorbs duplicate element rows, which a
+    * store written before element ids were kept unique at write time
+    * may hold (streaming replays appended a second copy).
     *
     * The union of the hop frontiers is `localCheckpoint`ed
     * EXECUTOR-side before the caches drop: the returned frame never
@@ -203,12 +228,8 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     }
     val debug = sys.env.contains("GRAFT_PROV_DEBUG")
     try {
-      // the declared read schema skips the Spark job that infers the
-      // schema from parquet footers
       val adjacency = keep(
-        spark.read.schema("element_id STRING, deps ARRAY<STRING>, execution_id STRING")
-          .parquet(s"$storeDir/data_elements")
-          .filter(col("execution_id") === executionId)
+        elements(executionId)
           .select(col("element_id"), col("deps")).as[(String, Seq[String])]
           .rdd.flatMap { case (id, deps) =>
             Option(deps).getOrElse(Nil).map(d =>
@@ -243,7 +264,8 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
   }
 
   /** Task detail + 1-hop neighborhood: the task row plus its parents and
-    * children (reference: TaskAPICtrl.kt:38-61).
+    * children (reference: TaskAPICtrl.kt:38-61), joined over the local
+    * task frame.
     */
   def taskDetail(executionId: String, taskId: String): DataFrame = {
     val all = tasks(executionId)
@@ -262,22 +284,24 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
 
   /** Files belonging to one data element's FileGroup, resolved through
     * its FileGroupReference folder in the artifact repository
-    * (reference: DataElementAPICtrl.kt:235-277,316-320).
+    * (reference: DataElementAPICtrl.kt:235-277,316-320). The reference
+    * rows are read on the driver.
     */
   def fileTreeOf(executionId: String, elementId: String,
                  repoTree: Seq[String]): Seq[String] = {
-    val folder = table("file_group_references")
-      .filter(col("execution_id") === executionId &&
-        col("element_id") === elementId)
+    val folder = MetaParquet.read(spark, storeDir, FileGroupReferences, executionId)
+      .filter(col("element_id") === elementId)
       .select(col("folder_path")).collect().headOption
       .map(_.getString(0))
       .getOrElse(return Seq.empty)
     repoTree.filter(_.startsWith(folder + "/"))
   }
 
-  /** Transformation groups (reference: TransformationGroup queries). */
+  /** Transformation groups (reference: TransformationGroup queries): a
+    * local frame read on the driver.
+    */
   def transformationGroups(executionId: String): DataFrame =
-    table("transformation_groups").filter(col("execution_id") === executionId)
+    MetaParquet.read(spark, storeDir, TransformationGroups, executionId)
 
   /** Retention: remove one execution from the store — the append-only
     * partition layout otherwise accumulates forever. Deletes the
@@ -305,8 +329,8 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
       sweepGraceMillis: Long =
         graft.prov.filegroup.ContentAddressedStore.DefaultSweepGraceMillis,
       force: Boolean = false): Unit = {
-    val tables = Seq("executions", "tasks", "data_elements",
-      "transformation_groups", "file_group_references")
+    val tables = Seq(Executions.name, Tasks.name, ElementsTable,
+      TransformationGroups.name, FileGroupReferences.name)
     val conf = spark.sparkContext.hadoopConfiguration
     if (!force) {
       def partExists(t: String): Boolean = {
@@ -344,7 +368,7 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * [[exportJson]] and the live server's `/api/graph` endpoint. A
     * DRIVER-side materialization of the full element graph by design
     * (parity with the reference's exportFile), so both pulls are
-    * [[fenced]].
+    * [[fenced]] — one scan job each.
     */
   def jsonGraph(executionId: String): String = {
     val nodes = fenced(executionId, elements(executionId)
@@ -362,7 +386,10 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * (`spark.graft.maxExportGraphRows`, default 1M rows per pull,
     * `limit(max+1)` one-pass — never count-then-collect): capture over
     * a large corpus otherwise OOMs the driver here with no warning.
-    * The remedies are in the error text.
+    * The remedies are in the error text. The pull reads through ONE
+    * partition, so the limit stops a single scan job instead of
+    * growing the scan over several (the driver serializes the rows
+    * anyway).
     */
   private[prov] def fenced[T](executionId: String, ds: Dataset[T],
                               what: String): Array[T] = {
@@ -373,7 +400,7 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
         s"spark.graft.maxExportGraphRows must be >= 1, got $v")
       math.min(v, Int.MaxValue.toLong - 1).toInt
     }
-    val pulled = ds.limit(max + 1).collect()
+    val pulled = ds.coalesce(1).limit(max + 1).collect()
     if (pulled.length > max)
       throw new IllegalStateException(
         s"execution $executionId: $what exceeds " +
@@ -460,4 +487,22 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
       s"""{"nodes":[${elNodes.mkString(",")}],"links":[${elLinks.mkString(",")}]}""",
       shown = elRows.length, total = total)
   }
+}
+
+private[prov] object ProvenanceQueries {
+
+  val ElementsTable = "data_elements"
+
+  /** `data_elements`: [[ElementRow]]'s columns in file order, then the
+    * path-embedded `execution_id` — the schema every element writer
+    * produces and partition discovery infers.
+    */
+  val ElementSchema: StructType = MetaParquet.partitioned(
+    Encoders.product[ElementRow].schema.filterNot(_.name == "execution_id"))
+
+  private val TaskGraphSchema: StructType = StructType(Seq(
+    StructField("id", StringType), StructField("description", StringType),
+    StructField("transformation_type", StringType),
+    StructField("kind", StringType, nullable = false),
+    StructField("source", StringType)))
 }

@@ -10,15 +10,15 @@ import graft.streaming.EventStreams.Event
   * not have (its streaming layer is stock DStreams with no provenance,
   * SURVEY §1.3/§2.10). Design: per-RECORD deps across a stream are
   * unbounded state, so the scalable unit of streaming provenance is the
-  * MICRO-BATCH — each triggered batch appends its updated aggregate rows
+  * MICRO-BATCH — each triggered batch commits its updated aggregate rows
   * as elements depending on a synthetic batch element. The store then
   * answers "which batches fed this window aggregate", and state stays
   * O(1) per batch: exactly the boundedness the watermark guarantees for
   * the aggregation itself.
   *
-  * Elements append from inside foreachBatch with the same path-embedded
-  * partition layout as [[ProvSession.flush]], so all §3.3 provenance
-  * queries work unchanged over streaming elements.
+  * Elements are committed from inside foreachBatch into the same
+  * path-embedded partition layout as [[ProvSession.flush]], so all §3.3
+  * provenance queries work unchanged over streaming elements.
   */
 object StreamingProvenance {
 
@@ -49,7 +49,7 @@ object StreamingProvenance {
               queryName: String = "streaming_agg"): DataStreamWriter[Row] = {
     val task = session.newTask(TransformationType.MAP, Nil,
       s"streaming: $queryName")
-    // elements append per micro-batch below, not at flush
+    // elements are committed per micro-batch below, not at flush
     task.schemaFields = agg.schema.fieldNames.toSeq
     val execId = session.executionId
     val tid = task.id
@@ -57,42 +57,57 @@ object StreamingProvenance {
     val capture = session.captureEnabled
     agg.writeStream.outputMode(OutputMode.Update())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (capture && !batch.isEmpty) {
-          // foreachBatch is at-least-once: a replayed batch re-appends its
-          // rows. EVERY id here is deterministic in (executionId, batchId,
-          // row values), so a replay appends byte-identical rows and the
-          // read side (ProvenanceQueries.elements dropDuplicates on
-          // element_id) collapses them — append-only store, idempotent
-          // effect, no cross-batch coordination.
-          val batchEl = ProvSinkUtil.fileElementId(execId, s"batch_$batchId")
-          val cols = batch.schema.fieldNames.toSeq
-          // `occ` disambiguates value-identical rows WITHIN the batch:
-          // ids fold in a per-value occurrence index, so two distinct
-          // rows with equal values stay two elements after the read
-          // side's dropDuplicates(element_id) — multiplicity survives
-          // even for non-aggregated sinks. The index assignment order is
-          // arbitrary, but a replayed batch re-mints the same id SET
-          // (occurrences 0..k-1 of each value), so idempotence holds.
-          val occWindow = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("vs")).orderBy(monotonically_increasing_id())
-          val els = batch
-            .select(array(cols.map(c => col(c).cast("string")): _*).as("vs"))
-            .withColumn("occ", row_number().over(occWindow) - 1)
-            .as(Encoders.product[(Seq[String], Int)])
-            .map { case (vs, occ) =>
-              val id = ProvSinkUtil.fileElementId(execId,
-                s"batch_${batchId}_row_${occ}_${vs.mkString("\u0001")}")
-              ElementRow(execId, tid, id, Seq(vs), Seq(batchEl))
-            }(ProvSession.elementRowEnc)
-          val spark = batch.sparkSession
-          val batchRow = spark.createDataset(Seq(ElementRow(
-            execId, tid, batchEl, Seq(Seq(s"batch_$batchId")),
-            Seq.empty[String])))(ProvSession.elementRowEnc)
-          els.unionByName(batchRow).drop("execution_id")
-            .write.mode("append")
-            .parquet(s"$store/data_elements/execution_id=$execId")
-        }
+        if (capture && !batch.isEmpty)
+          commitBatch(store, execId, tid, batchId,
+            trackedRows(execId, tid, batch, batchId))
       }
+  }
+
+  /** One [[tracked]] micro-batch's element rows: a root element for the
+    * batch plus one element per updated row, depending on it. EVERY id
+    * is deterministic in (execution, task, batchId, row values), so a
+    * replayed batch re-mints the same rows and [[commitBatch]] replaces
+    * them.
+    */
+  private[prov] def trackedRows(execId: String, tid: String, batch: DataFrame,
+                                batchId: Long): Dataset[ElementRow] = {
+    val batchEl = ProvSinkUtil.elementId(execId, tid, s"batch_$batchId")
+    val cols = batch.schema.fieldNames.toSeq
+    // `occ` disambiguates value-identical rows WITHIN the batch: ids
+    // fold in a per-value occurrence index, so two distinct rows with
+    // equal values stay two elements — multiplicity survives even for
+    // non-aggregated sinks. The index assignment order is arbitrary, but
+    // a replayed batch re-mints the same id SET (occurrences 0..k-1 of
+    // each value), so idempotence holds.
+    val occWindow = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vs")).orderBy(monotonically_increasing_id())
+    val els = batch
+      .select(array(cols.map(c => col(c).cast("string")): _*).as("vs"))
+      .withColumn("occ", row_number().over(occWindow) - 1)
+      .as(Encoders.product[(Seq[String], Int)])
+      .map { case (vs, occ) =>
+        val id = ProvSinkUtil.elementId(execId, tid,
+          s"batch_${batchId}_row_${occ}_${vs.mkString("\u0001")}")
+        ElementRow(execId, tid, id, Seq(vs), Seq(batchEl))
+      }(ProvSession.elementRowEnc)
+    val batchRow = batch.sparkSession.createDataset(Seq(ElementRow(
+      execId, tid, batchEl, Seq(Seq(s"batch_$batchId")),
+      Seq.empty[String])))(ProvSession.elementRowEnc)
+    els.unionByName(batchRow)
+  }
+
+  /** Write one micro-batch's element rows idempotently. foreachBatch is
+    * at-least-once, so the rows are staged and then committed under the
+    * batch's deterministic file names ([[ElementSideWriter.commitBatch]]):
+    * a replay replaces the batch's files, and element ids stay unique in
+    * the store without any read-side dedup.
+    */
+  private[prov] def commitBatch(store: String, execId: String, tid: String,
+                                batchId: Long, rows: Dataset[ElementRow]): Unit = {
+    rows.drop("execution_id").write.mode("overwrite")
+      .parquet(ElementSideWriter.batchStagingDir(store, execId, tid, batchId))
+    ElementSideWriter.commitBatch(store, execId, tid, batchId,
+      rows.sparkSession.sparkContext.hadoopConfiguration)
   }
 
   /** Opt-in RECORD-level streaming lineage, bounded by the watermark
@@ -107,10 +122,11 @@ object StreamingProvenance {
     * entirely). Each trigger emits the running per-user aggregate with
     * deps = the IN-HORIZON contributing records; each new input record
     * becomes its own element. All ids are deterministic in
-    * (executionId, event_id / user_id+batchId), so at-least-once
-    * replays append byte-identical rows and the read side's
-    * dropDuplicates collapses them — same idempotence argument as
-    * [[tracked]]. State per key: one aggregate + O(records per horizon)
+    * (execution, task, event_id / user_id+batchId), so an at-least-once
+    * replay re-mints its batch's rows and [[commitBatch]] replaces them
+    * — the same idempotence argument as [[tracked]]. A record id is
+    * unique per event_id, the stream's key (as the key columns are for
+    * relational frames). State per key: one aggregate + O(records per horizon)
     * ids — exactly the boundedness the watermark already guarantees the
     * aggregation.
     */
@@ -160,20 +176,19 @@ object StreamingProvenance {
           val els = batch.flatMap { u =>
             val recEls = u.new_ids.map { rid =>
               ElementRow(execId, tid,
-                ProvSinkUtil.fileElementId(execId, s"rec_$rid"),
+                ProvSinkUtil.elementId(execId, tid, s"rec_$rid"),
                 Seq(Seq(rid.toString, u.user_id.toString)), Seq.empty[String])
             }
             val aggEl = ElementRow(execId, tid,
-              ProvSinkUtil.fileElementId(execId,
+              ProvSinkUtil.elementId(execId, tid,
                 s"agg_${u.user_id}_batch_$batchId"),
               Seq(Seq(u.user_id.toString, u.n_events.toString,
                 u.sum_value.toString)),
               u.dep_ids.map(rid =>
-                ProvSinkUtil.fileElementId(execId, s"rec_$rid")))
+                ProvSinkUtil.elementId(execId, tid, s"rec_$rid")))
             recEls :+ aggEl
           }(ProvSession.elementRowEnc)
-          els.drop("execution_id").write.mode("append")
-            .parquet(s"$store/data_elements/execution_id=$execId")
+          commitBatch(store, execId, tid, batchId, els)
         }
       }
   }

@@ -38,6 +38,7 @@ object FileGroupOps {
       s"fileGroup(${templates.map(_.name).mkString(", ")})")
     task.schemaFields = Seq("Name", "Path", "Size")
     val execId = session.executionId
+    val tid = task.id
 
     // Fully distributed load: one binaryFile scan over every template's
     // paths; contents never touch the driver (the reference likewise
@@ -120,7 +121,7 @@ object FileGroupOps {
           FileElement(dirPart, namePart, modified = false, content)
         }
         val deps = files.map { case (uri, _) =>
-          ProvSinkUtil.fileElementId(execId, normalizePath(uri))
+          ProvSinkUtil.elementId(execId, tid, normalizePath(uri))
         }
         ProvRecord(ProvIds.newId(), deps,
           FileGroup(templateNames(ti), templateExtras(ti), els))

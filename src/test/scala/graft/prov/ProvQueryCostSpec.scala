@@ -1,0 +1,180 @@
+package graft.prov
+
+import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+
+import graft.prov.filegroup.{FileGroupOps, FileGroupTemplate}
+
+/** What the §3.3 queries cost and what they may assume about the store:
+  * each table's declared schema equals the one Spark infers from the
+  * written files, element ids are unique within an execution for every
+  * writer, and each query runs only the Spark jobs its own joins and
+  * aggregates need.
+  */
+class ProvQueryCostSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("prov-query-cost-spec")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  import spark.implicits._
+
+  private def newStore(): String = Files.createTempDirectory("provcost").toString
+
+  /** Spark jobs `body` submits. A marker job fences the count: listener
+    * events arrive in order, so once the marker is seen every job the
+    * body submitted has been counted.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val marker = "prov-cost-spec-marker"
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+              .exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(drained.await(30, TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def exchanges(plan: SparkPlan): Seq[SparkPlan] = plan.flatMap {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case e: Exchange              => Seq(e)
+    case _                        => Nil
+  }
+
+  test("declared schemas equal the schemas Spark infers from a freshly closed store") {
+    val store = newStore()
+    val dir = Files.createTempDirectory("provcost-files")
+    Files.writeString(dir.resolve("a.txt"), "alpha\n")
+    Files.writeString(dir.resolve("b.txt"), "beta\n")
+    val s = ProvSession.create(spark, "schemas", store)
+    // typed tasks inside a transformation group
+    val g = s.newGroup("grp")
+    val typed = s.parallelize(Seq(1, 2, 3)).map(_ + 1).initTransformationGroup(g)
+      .finishTransformationGroup(g)
+    assert(typed.count() == 3)
+    // a relational task
+    val rel = RelationalProvenance.table(s, spark.range(5).toDF("k"), "rel", Seq("k"))
+    assert(rel.result.count() == 5)
+    // a FileGroup task and a reference to one of its elements
+    val fg = FileGroupOps.fileGroup(s,
+      FileGroupTemplate.ofFile(dir.resolve("a.txt").toString),
+      FileGroupTemplate.ofFile(dir.resolve("b.txt").toString))
+    assert(fg.count() == 2)
+    s.close()
+    val anElement = new ProvenanceQueries(spark, store).elements(s.executionId)
+      .filter(col("task_id") === fg.taskId).select("element_id").head().getString(0)
+    // the reference table is written at close; a second session owns it
+    val s2 = ProvSession.create(spark, "refs", store)
+    s2.addFileGroupRef(anElement, "fg/folder")
+    s2.close()
+
+    val declared = Seq(
+      MetaParquet.Executions.name -> MetaParquet.Executions.schema,
+      MetaParquet.Tasks.name -> MetaParquet.Tasks.schema,
+      MetaParquet.TransformationGroups.name -> MetaParquet.TransformationGroups.schema,
+      MetaParquet.FileGroupReferences.name -> MetaParquet.FileGroupReferences.schema,
+      ProvenanceQueries.ElementsTable -> ProvenanceQueries.ElementSchema)
+    declared.foreach { case (name, schema) =>
+      val inferred = spark.read.parquet(s"$store/$name").schema
+      assert(inferred == schema, s"$name: inferred $inferred, declared $schema")
+    }
+    // the driver-side read of a partition equals the Spark read of it
+    val q = new ProvenanceQueries(spark, store)
+    def sparkRows(name: String, exec: String) =
+      spark.read.parquet(s"$store/$name").filter(col("execution_id") === exec)
+        .collect().map(_.toString).sorted.toSeq
+    assert(q.tasks(s.executionId).collect().map(_.toString).sorted.toSeq ==
+      sparkRows("tasks", s.executionId))
+    assert(q.transformationGroups(s.executionId).collect().map(_.toString).toSeq ==
+      sparkRows("transformation_groups", s.executionId))
+    assert(q.fileTreeOf(s2.executionId, anElement, Seq("fg/folder/x", "other/y")) ==
+      Seq("fg/folder/x"))
+    // a missing partition reads as an empty local frame
+    assert(q.transformationGroups(s2.executionId).collect().isEmpty)
+  }
+
+  test("two textFile reads of one path give each task its own file element") {
+    val store = newStore()
+    val dir = Files.createTempDirectory("provcost-text")
+    Files.writeString(dir.resolve("f.txt"), "x\ny\n")
+    val s = ProvSession.create(spark, "twice", store)
+    val a = s.textFile(dir.toString, "first")
+    val b = s.textFile(dir.toString, "second")
+    assert(a.count() == 2 && b.count() == 2)
+    s.close()
+    val els = new ProvenanceQueries(spark, store).elements(s.executionId)
+      .select("task_id", "element_id", "deps").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getSeq[String](2)))
+    assert(els.map(_._2).distinct.length == els.length, "an element id appears twice")
+    Seq(a.taskId, b.taskId).foreach { tid =>
+      val own = els.filter(_._1 == tid)
+      val (files, records) = own.partition(_._3.isEmpty)
+      assert(files.length == 1 && records.length == 2)
+      // every record's dep is its own task's file element
+      assert(records.forall(_._3 == Seq(files.head._2)))
+    }
+  }
+
+  test("job budget: task tables read on the driver, no dedup shuffle, bounded query jobs") {
+    val store = newStore()
+    val s = ProvSession.create(spark, "budget", store)
+    val pairs = s.parallelize((1 to 200).map(i => s"k${i % 17};$i"), "pairs")
+    val reduced = pairs.map({ l => val p = l.split(";"); (p(0), p(1).toLong) }, "parse")
+      .filter(_._2 % 3 != 0, "filter")
+      .reduceByKey(_ + _)
+    val labels = s.parallelize((0 until 17 by 2).map(i => (s"k$i", i)), "labels")
+    assert(reduced.join(labels).count() == 9)
+    s.close()
+    val q = new ProvenanceQueries(spark, store)
+    val e = s.executionId
+
+    val (tasks, tasksJobs) = jobsOf(q.tasks(e).collect())
+    val (graph, graphJobs) = jobsOf(q.taskGraph(e).collect())
+    val (groups, groupsJobs) = jobsOf(q.transformationGroups(e).collect())
+    assert(tasks.length == 6 && groups.isEmpty)
+    assert(graph.count(_.getAs[String]("kind") == "task") == 6 &&
+      graph.count(_.getAs[String]("kind") == "edge") == 5)
+    assert((tasksJobs, graphJobs, groupsJobs) == ((0, 0, 0)))
+
+    assert(exchanges(q.elements(e).queryExecution.executedPlan).isEmpty)
+
+    val (vt, vtJobs) = jobsOf(q.valueTable(e, reduced.taskId).collect())
+    val (js, jsJobs) = jobsOf(q.jsonGraph(e))
+    val (gs, gsJobs) = jobsOf(q.graphSummary(e).collect())
+    info(s"jobs: valueTable $vtJobs, jsonGraph $jsJobs, graphSummary $gsJobs")
+    assert(vt.length == 17)
+    assert(js.split("\"group\":").length - 1 == q.elements(e).count())
+    assert(gs.nonEmpty)
+    assert(vtJobs <= 2, s"valueTable ran $vtJobs jobs")
+    assert(jsJobs <= 2, s"jsonGraph ran $jsJobs jobs")
+    assert(gsJobs <= 8, s"graphSummary ran $gsJobs jobs")
+  }
+}

@@ -113,4 +113,41 @@ class StreamingProvenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     assert(s.allTasks.exists(_.description == "streaming_records: per-record"))
   }
+
+  test("a micro-batch committed twice with the same batchId leaves one copy of its rows") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val store = Files.createTempDirectory("streamprovreplay").toString
+    val s = ProvSession.create(spark, "stream-replay", store)
+    val stream = MemoryStream[Event]
+    val q = StreamingProvenance
+      .tracked(s, EventStreams.hourlyCounts(stream.toDF()), "hourly")
+      .start()
+    val batch0 = Seq(ev(1, 9, "click"), ev(2, 9, "click"), ev(3, 10, "view"))
+    stream.addData(batch0)
+    q.processAllAvailable()
+    stream.addData(Seq(ev(4, 10, "view")))
+    q.processAllAvailable()
+    q.stop()
+    s.close()
+
+    val pq = new ProvenanceQueries(spark, store)
+    val exec = s.executionId
+    def snapshot() = (pq.elements(exec).count(),
+      pq.elements(exec).select("element_id").distinct().count(),
+      pq.graphSummary(exec).collect().toSeq)
+    val before = snapshot()
+    assert(before._1 == before._2, "an element id appears twice")
+    // replay batch 0 as foreachBatch would after a crash before its
+    // commit: the same rows under the same batchId
+    val tid = s.allTasks.find(_.description == "streaming: hourly").get.id
+    val replayed = EventStreams.hourlyCounts(batch0.toDF())
+    StreamingProvenance.commitBatch(store, exec, tid, 0L,
+      StreamingProvenance.trackedRows(exec, tid, replayed, 0L))
+    assert(snapshot() == before)
+    val committed = new java.io.File(s"$store/data_elements/execution_id=$exec")
+      .list().filter(_.startsWith(s"stream-$tid-b0-"))
+    assert(committed.nonEmpty && committed.forall(_.endsWith(".parquet")))
+  }
 }
