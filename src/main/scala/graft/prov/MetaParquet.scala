@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
@@ -217,16 +217,7 @@ private[prov] object MetaParquet {
   def read(spark: SparkSession, storeDir: String, table: Table,
            executionId: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val d = new Path(table.dir(storeDir, executionId))
-    val fs = d.getFileSystem(conf)
-    val files =
-      try fs.listStatus(d).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith(".") && !n.startsWith("_") &&
-          n.endsWith(".parquet")
-      }.sortBy(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    val rows = files.flatMap { st =>
+    val rows = visibleFiles(conf, table.dir(storeDir, executionId)).flatMap { st =>
       val reader = ParquetReader.builder(new GroupReadSupport(), st.getPath)
         .withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null)
@@ -238,6 +229,35 @@ private[prov] object MetaParquet {
     spark.createDataFrame(rows.asJava, table.schema)
   }
 
+  /** The reader-visible `.parquet` files of one partition directory, in
+    * name order (`.`/`_`-prefixed staging and marker files are hidden,
+    * as Spark's file index hides them); a missing directory has none.
+    */
+  def visibleFiles(conf: Configuration, dir: String): Seq[FileStatus] = {
+    val d = new Path(dir)
+    try d.getFileSystem(conf).listStatus(d).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith(".") && !n.startsWith("_") &&
+        n.endsWith(".parquet")
+    }.sortBy(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** A standard 3-level LIST field of `g` (outer group → repeated `list`
+    * → optional `element`), each present element decoded by `elem`; an
+    * absent element is null, an absent list is null, an empty list is
+    * empty.
+    */
+  def list[A <: AnyRef](g: Group, name: String, elem: (Group, Int) => A): Seq[A] =
+    if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) null
+    else {
+      val l = g.getGroup(name, 0)
+      (0 until l.getFieldRepetitionCount(0)).map { i =>
+        val e = l.getGroup(0, i)
+        if (e.getFieldRepetitionCount(0) == 0) null.asInstanceOf[A] else elem(e, 0)
+      }
+    }
+
   private def value(g: Group, name: String, ft: FT): Any =
     if (!g.getType.containsField(name) || g.getFieldRepetitionCount(name) == 0) null
     else ft match {
@@ -248,12 +268,6 @@ private[prov] object MetaParquet {
         val ts = new Timestamp(Math.floorDiv(us, 1000L))
         ts.setNanos((Math.floorMod(us, 1000000L) * 1000).toInt)
         ts
-      case FStringList =>
-        // 3-level LIST: outer group → repeated `list` → optional `element`
-        val l = g.getGroup(name, 0)
-        (0 until l.getFieldRepetitionCount(0)).map { i =>
-          val e = l.getGroup(0, i)
-          if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)
-        }
+      case FStringList => list(g, name, _.getString(_, 0))
     }
 }

@@ -1,6 +1,11 @@
 package graft.prov
 
+import java.io.CharArrayWriter
+
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonFactory
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
@@ -13,9 +18,11 @@ import org.apache.spark.storage.StorageLevel
   * app's endpoints over Cassandra, DataElementAPICtrl.kt /
   * TaskAPICtrl.kt / ExecutionAPICtrl.kt) re-expressed as plain Spark SQL
   * over the parquet provenance store. Each method returns a DataFrame —
-  * 1-hop graph expansions are joins; multi-hop lineage is a
-  * co-partitioned BFS over the execution's adjacency, one Spark job
-  * per hop.
+  * 1-hop graph expansions are joins. Multi-hop lineage and the JSON
+  * graph are read on the driver from the execution's element files
+  * ([[ElementReader]]) when those hold at most
+  * `spark.graft.maxExportGraphRows` rows (see [[exportMax]]); above it,
+  * lineage is a co-partitioned BFS, one Spark job per hop.
   *
   * A query runs only the Spark jobs its own joins and aggregates need:
   * every table is read with its declared schema (no footer-inference
@@ -113,27 +120,29 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * differ between runs of the same pipeline; descriptions and
     * counts do not). Output: (kind, dst, src, n) ordered — `src` is
     * empty for element rows. Scale: one scan of the element table per
-    * side (nodes; edges and their source elements); the descriptions
-    * are a broadcast local frame, and counts aggregate map-side.
+    * side (nodes; edges and their source elements); the task
+    * descriptions are a literal map looked up per row (a broadcast,
+    * even of a local frame, runs a job), and counts aggregate map-side.
+    * Rows whose task has no task row are dropped, as an inner join
+    * would.
     * Gate: `prov_full_graph` calls this facade and checks it against
     * a DuckDB derivation from the tracked pipeline's inputs.
     */
   def graphSummary(executionId: String): DataFrame = {
     val els = elements(executionId)
-    val desc = broadcast(tasks(executionId)
-      .select(col("task_id"), col("description")))
-    val srcDesc = desc.select(col("task_id").as("src_tid"),
-      col("description").as("src"))
-    val nodes = els.select(col("task_id")).join(desc, "task_id")
-      .groupBy(col("description").as("dst"))
+    val desc = typedLit(tasks(executionId)
+      .select(col("task_id"), col("description")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap)
+    def known(task: String) = map_contains_key(desc, col(task))
+    val nodes = els.select(col("task_id")).filter(known("task_id"))
+      .groupBy(desc(col("task_id")).as("dst"))
       .agg(count(lit(1)).as("n"))
       .select(lit("element").as("kind"), col("dst"), lit("").as("src"), col("n"))
     val edges = els.select(col("task_id"), explode(col("deps")).as("source"))
       .join(els.select(col("element_id").as("source"), col("task_id").as("src_tid")),
         "source")
-      .join(desc, "task_id")
-      .join(srcDesc, "src_tid")
-      .groupBy(col("description").as("dst"), col("src"))
+      .filter(known("task_id") && known("src_tid"))
+      .groupBy(desc(col("task_id")).as("dst"), desc(col("src_tid")).as("src"))
       .agg(count(lit(1)).as("n"))
       .select(lit("edge").as("kind"), col("dst"), col("src"), col("n"))
     nodes.unionByName(edges).orderBy(col("kind"), col("dst"), col("src"))
@@ -173,23 +182,25 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     }
   }
 
-  /** Record value table: header from Task.schema_fields (a broadcast
-    * local frame) + the value grid (reference:
-    * DataElementAPICtrl.kt:181-233).
+  /** Record value table: header from Task.schema_fields + the value
+    * grid (reference: DataElementAPICtrl.kt:181-233). The header rows
+    * are read on the driver and exploded from a literal — joining them,
+    * even as a broadcast local frame, would run a job — so a task
+    * without a task row yields no rows, as an inner join would.
     */
   def valueTable(executionId: String, taskId: String): DataFrame = {
     val header = tasks(executionId).filter(col("task_id") === taskId)
-      .select(col("task_id"), col("schema_fields"))
+      .select(col("schema_fields")).collect().map(_.getSeq[String](0)).toSeq
     producedBy(executionId, taskId)
-      .select(lit(taskId).as("task_id"), col("element_id"),
+      .select(col("element_id"), explode(typedLit(header)).as("schema_fields"),
+              col("values"))
+      .select(col("element_id"), col("schema_fields"),
               explode(col("values")).as("row_values"))
-      .join(broadcast(header), "task_id")
-      .select(col("element_id"), col("schema_fields"), col("row_values"))
   }
 
   /** Multi-hop lineage closure of one element (ancestors): `(id, hop)`
-    * with `hop` the minimum distance, up to `maxHops`. Computed by the
-    * co-partitioned BFS of [[closure]]; the result is distributed.
+    * with `hop` the minimum distance, up to `maxHops`. Computed by
+    * [[closure]]; the result is a checkpointed frame, never a local one.
     */
   def lineageOf(executionId: String, elementId: String, maxHops: Int = 20): DataFrame =
     closure(executionId, elementId, maxHops, backward = true)
@@ -200,7 +211,48 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
   def descendantsOf(executionId: String, elementId: String, maxHops: Int = 20): DataFrame =
     closure(executionId, elementId, maxHops, backward = false)
 
-  /** Co-partitioned BFS (the SparkTC / Pregel pattern). The execution's
+  /** Minimum-hop BFS from `elementId` over the execution's
+    * `(element_id, deps)` adjacency; the first hop always runs, and
+    * duplicate element rows (a store written before element ids were
+    * kept unique at write time may hold streaming replays) are absorbed.
+    *
+    * When the execution's element files hold at most
+    * `spark.graft.maxExportGraphRows` rows (footer counts), the
+    * adjacency is read ONCE on the driver ([[ElementReader]], no Spark
+    * job) and the BFS runs in memory; the result is parallelized into
+    * one partition and `localCheckpoint`ed — one job in all. Above the
+    * fence, [[distributedClosure]] runs.
+    */
+  private def closure(executionId: String, elementId: String, maxHops: Int,
+                      backward: Boolean): DataFrame = {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    ElementReader.underFence(conf, storeDir, executionId, exportMax) match {
+      case None => distributedClosure(executionId, elementId, maxHops, backward)
+      case Some(files) =>
+        val adjacency = mutable.HashMap.empty[String, mutable.ArrayBuffer[String]]
+        ElementReader.foreach(conf, files, executionId, Seq("element_id", "deps")) { e =>
+          Option(e.deps).getOrElse(Nil).foreach { d =>
+            val (from, to) = if (backward) (e.element_id, d) else (d, e.element_id)
+            adjacency.getOrElseUpdate(from, mutable.ArrayBuffer.empty) += to
+          }
+        }
+        val reached = mutable.LinkedHashMap.empty[String, Int]
+        var frontier = Seq(elementId)
+        var hop = 0
+        while (frontier.nonEmpty && hop < math.max(maxHops, 1)) {
+          hop += 1
+          frontier = frontier.flatMap(adjacency.getOrElse(_, Nil)).distinct
+            .filterNot(reached.contains)
+          frontier.foreach(reached(_) = hop)
+        }
+        spark.sparkContext.parallelize(reached.toSeq, 1).toDF("id", "hop")
+          .localCheckpoint()
+    }
+  }
+
+  /** Co-partitioned BFS (the SparkTC / Pregel pattern), for executions
+    * above the driver fence. The execution's
     * `(element_id, deps)` rows are read once and turned into
     * `(start, follow)` adjacency pairs, hash-partitioned and persisted.
     * The frontier carries the same partitioner, so each hop is a
@@ -217,8 +269,8 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * driver (a full-corpus impact analysis can be millions of rows).
     * Every intermediate cache is released even when a hop fails.
     */
-  private def closure(executionId: String, elementId: String, maxHops: Int,
-                      backward: Boolean): DataFrame = {
+  private def distributedClosure(executionId: String, elementId: String,
+                                 maxHops: Int, backward: Boolean): DataFrame = {
     import spark.implicits._
     val sc = spark.sparkContext
     val part = new HashPartitioner(sc.defaultParallelism)
@@ -367,47 +419,90 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
   /** JSON graph `{nodes, links}` as a string — the machine format behind
     * [[exportJson]] and the live server's `/api/graph` endpoint. A
     * DRIVER-side materialization of the full element graph by design
-    * (parity with the reference's exportFile), so both pulls are
-    * [[fenced]] — one scan job each.
+    * (parity with the reference's exportFile): the element files are
+    * read once on the driver ([[ElementReader]], no Spark job), nodes
+    * and links in file-name order. Both are fenced at [[exportMax]]: the
+    * element count from footer row counts before any data page is read,
+    * the element-dependency count while reading. Labels are
+    * `to_json(values)`, written by the Jackson generator Spark's
+    * `to_json` uses, so they are byte-identical to it.
     */
   def jsonGraph(executionId: String): String = {
-    val nodes = fenced(executionId, elements(executionId)
-      .select(col("element_id").as("id"), col("task_id").as("group"),
-              to_json(col("values")).as("label")), "element count")
-      .map(r => s"""{"id":${jstr(r.getString(0))},"group":${jstr(r.getString(1))},"label":${jstr(r.getString(2))}}""")
-    val links = fenced(executionId, elementDependencies(executionId)
-      .select(col("source"), col("target")), "element-dependency count")
-      .map(r => s"""{"source":${jstr(r.getString(0))},"target":${jstr(r.getString(1))}}""")
-    s"""{"nodes":[${nodes.mkString(",")}],"links":[${links.mkString(",")}]}"""
+    val max = exportMax
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = ElementReader.underFence(conf, storeDir, executionId, max)
+      .getOrElse(throw overFence(executionId, "element count", max))
+    val label = new CharArrayWriter
+    val gen = new JsonFactory().createGenerator(label).setRootValueSeparator(null)
+    def strings(xs: Seq[String]): Unit =
+      if (xs == null) gen.writeNull()
+      else {
+        gen.writeStartArray()
+        xs.foreach(x => if (x == null) gen.writeNull() else gen.writeString(x))
+        gen.writeEndArray()
+      }
+    val nodes = new StringBuilder
+    val links = new StringBuilder
+    var nLinks = 0L
+    ElementReader.foreach(conf, files, executionId,
+        Seq("task_id", "element_id", "values", "deps")) { e =>
+      val json =
+        if (e.values == null) null
+        else {
+          gen.writeStartArray(); e.values.foreach(strings); gen.writeEndArray()
+          gen.flush()
+          try label.toString finally label.reset()
+        }
+      if (nodes.nonEmpty) nodes += ','
+      nodes ++= s"""{"id":${jstr(e.element_id)},"group":${jstr(e.task_id)},"label":${jstr(json)}}"""
+      Option(e.deps).getOrElse(Nil).foreach { d =>
+        nLinks += 1
+        if (nLinks > max) throw overFence(executionId, "element-dependency count", max)
+        if (links.nonEmpty) links += ','
+        links ++= s"""{"source":${jstr(d)},"target":${jstr(e.element_id)}}"""
+      }
+    }
+    s"""{"nodes":[$nodes],"links":[$links]}"""
   }
 
-  /** Driver-side pull behind every JSON export ([[jsonGraph]], the live
-    * server's `/api/lineage`), FENCED at a named boundary
-    * (`spark.graft.maxExportGraphRows`, default 1M rows per pull,
-    * `limit(max+1)` one-pass — never count-then-collect): capture over
-    * a large corpus otherwise OOMs the driver here with no warning.
-    * The remedies are in the error text. The pull reads through ONE
-    * partition, so the limit stops a single scan job instead of
-    * growing the scan over several (the driver serializes the rows
-    * anyway).
+  /** `spark.graft.maxExportGraphRows` (default 1M): the bound on every
+    * driver-side read of an execution's element graph. It fences the
+    * pulls behind the JSON exports ([[jsonGraph]], the live server's
+    * `/api/lineage` via [[fenced]]), and it selects the driver-side
+    * [[closure]] for executions whose element files hold at most this
+    * many rows. Capture over a large corpus otherwise OOMs the driver
+    * with no warning.
+    */
+  private def exportMax: Int = {
+    val v = spark.conf.getOption("spark.graft.maxExportGraphRows")
+      .map(_.toLong).getOrElse(1000000L)
+    require(v >= 1,
+      s"spark.graft.maxExportGraphRows must be >= 1, got $v")
+    math.min(v, Int.MaxValue.toLong - 1).toInt
+  }
+
+  private def overFence(executionId: String, what: String,
+                        max: Int): IllegalStateException =
+    new IllegalStateException(
+      s"execution $executionId: $what exceeds " +
+        s"spark.graft.maxExportGraphRows=$max — the JSON export " +
+        "materializes it on the driver. Use exportHtml's capped lens, " +
+        "query the tables relationally (ProvenanceQueries / relational " +
+        "provenance), or raise the conf if the driver can hold more.")
+
+  /** Driver-side pull of a Spark-computed frame (the live server's
+    * `/api/lineage`), FENCED at `spark.graft.maxExportGraphRows`
+    * ([[exportMax]]; `limit(max+1)` one-pass — never
+    * count-then-collect). The remedies are in the error text. The pull
+    * reads through ONE partition, so the limit stops a single scan job
+    * instead of growing the scan over several (the driver serializes
+    * the rows anyway).
     */
   private[prov] def fenced[T](executionId: String, ds: Dataset[T],
                               what: String): Array[T] = {
-    val max = {
-      val v = spark.conf.getOption("spark.graft.maxExportGraphRows")
-        .map(_.toLong).getOrElse(1000000L)
-      require(v >= 1,
-        s"spark.graft.maxExportGraphRows must be >= 1, got $v")
-      math.min(v, Int.MaxValue.toLong - 1).toInt
-    }
+    val max = exportMax
     val pulled = ds.coalesce(1).limit(max + 1).collect()
-    if (pulled.length > max)
-      throw new IllegalStateException(
-        s"execution $executionId: $what exceeds " +
-          s"spark.graft.maxExportGraphRows=$max — the JSON export " +
-          "materializes it on the driver. Use exportHtml's capped lens, " +
-          "query the tables relationally (ProvenanceQueries / relational " +
-          "provenance), or raise the conf if the driver can hold more.")
+    if (pulled.length > max) throw overFence(executionId, what, max)
     pulled
   }
 
@@ -418,15 +513,18 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(file),
       jsonGraph(executionId))
 
-  private def jstr(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '<' => "\\u003c" // keeps embedded JSON </script>-safe
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private def jstr(s: String): String = {
+    val b = new StringBuilder("\"")
+    Option(s).getOrElse("").foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '<' => b ++= "\\u003c" // keeps embedded JSON </script>-safe
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
 
   /** Self-contained interactive graph page — the rendering half of the
     * reference's web UI (PagesCtrl.kt:13-73 serves dataflow/task/element

@@ -12,9 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** `lineageOf` / `descendantsOf` against a driver-side BFS over the
-  * collected `elementDependencies`, plus the closure's resource
-  * contract: no cache left behind but the result's own checkpoint, and
-  * a bounded number of Spark jobs per call.
+  * collected `elementDependencies`, on both closure paths (the driver
+  * BFS under `spark.graft.maxExportGraphRows`, the co-partitioned BFS
+  * above it), plus the closure's resource contract: no cache left
+  * behind but the result's own checkpoint, and a bounded number of
+  * Spark jobs per call.
   */
 class ClosureSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -98,54 +100,88 @@ class ClosureSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** One diamond store for the read-only tests. */
   private lazy val shared = diamond()
 
-  test("closure ≡ driver-side BFS: diamond minimum hop, union, join, maxHops 1/2/20") {
-    val (store, exec, els) = shared
-    val q = new ProvenanceQueries(spark, store)
-    // minimum hop on the diamond: j ← keyed a (1) ← a (2) ← src (3),
-    // and j ← keyed b (1) ← b (2) ← a (3, already seen at 2)
-    val lin = hops(q.lineageOf(exec, els("j").head))
-    assert(lin.size == 5 && lin.values.max == 3, lin)
-    assert(els("a").count(lin.contains) == 1 &&
-      els("a").filter(lin.contains).forall(lin(_) == 2), lin)
-    for (el <- Seq(els("j").head, els("u").head, els("u").last,
-                   els("src").head, els("a").head);
-         maxHops <- Seq(1, 2, 20))
-      assertMatchesBfs(q, exec, el, maxHops)
+  /** `body` with `spark.graft.maxExportGraphRows` at `fence` (None: the
+    * default, above every store here).
+    */
+  private def withFence[T](fence: Option[Int])(body: => T): T =
+    fence match {
+      case None => body
+      case Some(n) =>
+        spark.conf.set("spark.graft.maxExportGraphRows", n.toString)
+        try body finally spark.conf.unset("spark.graft.maxExportGraphRows")
+    }
+
+  // each case runs on the driver path (default fence) and, with a fence
+  // of one row, on the distributed path
+  for ((path, fence) <- Seq("" -> None, " [distributed path]" -> Some(1))) {
+
+    test("closure ≡ driver-side BFS: diamond minimum hop, union, join, maxHops 1/2/20" + path) {
+      withFence(fence) {
+        val (store, exec, els) = shared
+        val q = new ProvenanceQueries(spark, store)
+        // minimum hop on the diamond: j ← keyed a (1) ← a (2) ← src (3),
+        // and j ← keyed b (1) ← b (2) ← a (3, already seen at 2)
+        val lin = hops(q.lineageOf(exec, els("j").head))
+        assert(lin.size == 5 && lin.values.max == 3, lin)
+        assert(els("a").count(lin.contains) == 1 &&
+          els("a").filter(lin.contains).forall(lin(_) == 2), lin)
+        for (el <- Seq(els("j").head, els("u").head, els("u").last,
+                       els("src").head, els("a").head);
+             maxHops <- Seq(1, 2, 20))
+          assertMatchesBfs(q, exec, el, maxHops)
+      }
+    }
+
+    test("unknown element: empty closure with the same schema" + path) {
+      withFence(fence) {
+        val (store, exec, els) = shared
+        val q = new ProvenanceQueries(spark, store)
+        val schema = q.lineageOf(exec, els("j").head).schema
+        assert(schema.fieldNames.toSeq == Seq("id", "hop"))
+        assert(schema("id").dataType == StringType &&
+          schema("hop").dataType == IntegerType && !schema("hop").nullable)
+        val none = q.lineageOf(exec, "no-such-element")
+        val noneFwd = q.descendantsOf(exec, "no-such-element")
+        assert(none.count() == 0 && noneFwd.count() == 0)
+        assert(none.schema == schema && noneFwd.schema == schema)
+      }
+    }
+
+    test("replayed element rows (a committed file stored twice) leave the closure unchanged" + path) {
+      withFence(fence) {
+        val (store, exec, els) = diamond()
+        val q = new ProvenanceQueries(spark, store)
+        val probes = Seq(els("j").head, els("src").head, els("u").head)
+        val before = probes.map(el =>
+          (hops(q.lineageOf(exec, el)), hops(q.descendantsOf(exec, el))))
+        // an at-least-once streaming replay appends byte-identical rows
+        // under new file names
+        val part = Path.of(store, "data_elements", s"execution_id=$exec")
+        val files = Files.list(part).toArray.map(_.asInstanceOf[Path])
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+        assert(files.nonEmpty)
+        files.foreach(f =>
+          Files.copy(f, f.resolveSibling("replay-" + f.getFileName)))
+        val rows = spark.read.parquet(s"$store/data_elements")
+          .filter(s"execution_id = '$exec'")
+        assert(rows.count() == 2 * rows.dropDuplicates("element_id").count())
+        val after = probes.map(el =>
+          (hops(q.lineageOf(exec, el)), hops(q.descendantsOf(exec, el))))
+        assert(after == before)
+      }
+    }
   }
 
-  test("unknown element: empty closure with the same schema") {
+  test("the driver and distributed paths return equal (id, hop) maps on the diamond") {
     val (store, exec, els) = shared
     val q = new ProvenanceQueries(spark, store)
-    val schema = q.lineageOf(exec, els("j").head).schema
-    assert(schema.fieldNames.toSeq == Seq("id", "hop"))
-    assert(schema("id").dataType == StringType &&
-      schema("hop").dataType == IntegerType && !schema("hop").nullable)
-    val none = q.lineageOf(exec, "no-such-element")
-    val noneFwd = q.descendantsOf(exec, "no-such-element")
-    assert(none.count() == 0 && noneFwd.count() == 0)
-    assert(none.schema == schema && noneFwd.schema == schema)
-  }
-
-  test("replayed element rows (a committed file stored twice) leave the closure unchanged") {
-    val (store, exec, els) = diamond()
-    val q = new ProvenanceQueries(spark, store)
-    val probes = Seq(els("j").head, els("src").head, els("u").head)
-    val before = probes.map(el =>
-      (hops(q.lineageOf(exec, el)), hops(q.descendantsOf(exec, el))))
-    // an at-least-once streaming replay appends byte-identical rows
-    // under new file names
-    val part = Path.of(store, "data_elements", s"execution_id=$exec")
-    val files = Files.list(part).toArray.map(_.asInstanceOf[Path])
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    assert(files.nonEmpty)
-    files.foreach(f =>
-      Files.copy(f, f.resolveSibling("replay-" + f.getFileName)))
-    val rows = spark.read.parquet(s"$store/data_elements")
-      .filter(s"execution_id = '$exec'")
-    assert(rows.count() == 2 * rows.dropDuplicates("element_id").count())
-    val after = probes.map(el =>
-      (hops(q.lineageOf(exec, el)), hops(q.descendantsOf(exec, el))))
-    assert(after == before)
+    for (el <- els.values.map(_.head); maxHops <- Seq(1, 20)) {
+      val driver = (hops(q.lineageOf(exec, el, maxHops)),
+                    hops(q.descendantsOf(exec, el, maxHops)))
+      val distributed = withFence(Some(1))(
+        (hops(q.lineageOf(exec, el, maxHops)), hops(q.descendantsOf(exec, el, maxHops))))
+      assert(driver == distributed, s"$el @$maxHops")
+    }
   }
 
   test("closures release every intermediate cache: only each result's checkpoint remains") {

@@ -4,12 +4,16 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, to_json}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -143,7 +147,10 @@ class ProvQueryCostSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("job budget: task tables read on the driver, no dedup shuffle, bounded query jobs") {
+  /** pairs → parse → filter → reduceByKey ⋈ labels: (queries, execution,
+    * pairs task id, reduced dataset).
+    */
+  private lazy val budgetStore = {
     val store = newStore()
     val s = ProvSession.create(spark, "budget", store)
     val pairs = s.parallelize((1 to 200).map(i => s"k${i % 17};$i"), "pairs")
@@ -153,8 +160,11 @@ class ProvQueryCostSpec extends AnyFunSuite with BeforeAndAfterAll {
     val labels = s.parallelize((0 until 17 by 2).map(i => (s"k$i", i)), "labels")
     assert(reduced.join(labels).count() == 9)
     s.close()
-    val q = new ProvenanceQueries(spark, store)
-    val e = s.executionId
+    (new ProvenanceQueries(spark, store), s.executionId, pairs.taskId, reduced)
+  }
+
+  test("job budget: task tables read on the driver, no dedup shuffle, bounded query jobs") {
+    val (q, e, _, reduced) = budgetStore
 
     val (tasks, tasksJobs) = jobsOf(q.tasks(e).collect())
     val (graph, graphJobs) = jobsOf(q.taskGraph(e).collect())
@@ -176,5 +186,95 @@ class ProvQueryCostSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vtJobs <= 2, s"valueTable ran $vtJobs jobs")
     assert(jsJobs <= 2, s"jsonGraph ran $jsJobs jobs")
     assert(gsJobs <= 8, s"graphSummary ran $gsJobs jobs")
+  }
+
+  test("job budget under the element fence: a closure is its checkpoint, jsonGraph reads no job") {
+    val (q, e, pairsTask, reduced) = budgetStore
+    def firstElement(task: String) = q.producedBy(e, task)
+      .select("element_id").head().getString(0)
+    val reducedEl = firstElement(reduced.taskId)
+    val pairsEl = firstElement(pairsTask)
+    val (lin, linJobs) = jobsOf(q.lineageOf(e, reducedEl))
+    val (desc, descJobs) = jobsOf(q.descendantsOf(e, pairsEl))
+    val (vt, vtJobs) = jobsOf(q.valueTable(e, reduced.taskId).collect())
+    val (js, jsJobs) = jobsOf(q.jsonGraph(e))
+    val (gs, gsJobs) = jobsOf(q.graphSummary(e).collect())
+    info(s"jobs: lineageOf $linJobs, descendantsOf $descJobs, valueTable $vtJobs, " +
+      s"jsonGraph $jsJobs, graphSummary $gsJobs")
+    // reduce ← filter ← parse ← pairs
+    assert(lin.select("hop").collect().map(_.getInt(0)).max == 3)
+    assert(desc.count() > 0 && vt.length == 17 && js.contains("\"links\"") && gs.nonEmpty)
+    assert((linJobs, descJobs, vtJobs, jsJobs, gsJobs) == ((1, 1, 1, 0, 6)))
+    // a fence below the store's rows selects the distributed BFS, one
+    // job per hop
+    spark.conf.set("spark.graft.maxExportGraphRows", "1")
+    val (_, distJobs) =
+      try jobsOf(q.lineageOf(e, reducedEl))
+      finally spark.conf.unset("spark.graft.maxExportGraphRows")
+    assert(distJobs > 3, s"distributed lineage ran $distJobs jobs")
+  }
+
+  /** `jsonGraph` of one execution as (nodes, links) multisets, against
+    * the Spark-computed reference: `to_json(values)` labels over
+    * [[ProvenanceQueries.elements]] and the `elementDependencies` links.
+    */
+  private def assertJsonGraphParity(q: ProvenanceQueries, e: String): Unit = {
+    val json = new ObjectMapper().readTree(q.jsonGraph(e))
+    def rows(field: String, keys: String*) =
+      json.get(field).elements().asScala.toSeq
+        .map(n => keys.map(k => n.get(k).asText())).sortBy(_.mkString("\u0000"))
+    val nodes = rows("nodes", "id", "group", "label")
+    val refNodes = q.elements(e)
+      .select(col("element_id"), col("task_id"), to_json(col("values"))).collect()
+      .map(r => Seq(r.getString(0), r.getString(1), r.getString(2))).toSeq
+      .sortBy(_.mkString("\u0000"))
+    assert(nodes == refNodes)
+    // labels byte-equal, not just equal as JSON values
+    assert(nodes.map(_(2).getBytes("UTF-8").toSeq) ==
+      refNodes.map(_(2).getBytes("UTF-8").toSeq))
+    val refLinks = q.elementDependencies(e).select("source", "target").collect()
+      .map(r => Seq(r.getString(0), r.getString(1))).toSeq.sortBy(_.mkString("\u0000"))
+    assert(rows("links", "source", "target") == refLinks)
+    // the node fence trips one row below the element count
+    val count = q.elements(e).count()
+    spark.conf.set("spark.graft.maxExportGraphRows", (count - 1).toString)
+    try {
+      val err = intercept[IllegalStateException](q.jsonGraph(e))
+      assert(err.getMessage.contains(s"element count exceeds spark.graft.maxExportGraphRows=${count - 1}") &&
+        err.getMessage.contains("exportHtml"), err.getMessage)
+    } finally spark.conf.unset("spark.graft.maxExportGraphRows")
+  }
+
+  private val awkward = Seq("quote \" in", "back\\slash", "<script>", "line\nbreak",
+    "ctl \u0001 char", "não-ASCII 日本語 ✓")
+
+  test("jsonGraph labels are byte-equal to Spark's to_json: typed store") {
+    val store = newStore()
+    val s = ProvSession.create(spark, "labels-typed", store)
+    val identity = new DataElementSchema[Seq[Seq[String]]] {
+      def fieldNames: Seq[String] = Seq("a", "b")
+      def project(v: Seq[Seq[String]]): Seq[Seq[String]] = v
+    }
+    val src = s.parallelize(Seq(
+        awkward.take(2).map(Seq(_)), awkward.slice(2, 4).map(Seq(_, "")),
+        Seq(awkward.drop(4)), Seq.empty[Seq[String]], Seq(Seq.empty[String])), "awkward")
+      .setSchema(identity)
+    val out = src.map(_.reverse, "reversed").setSchema(identity)
+    assert(out.count() == 5)
+    s.close()
+    assertJsonGraphParity(new ProvenanceQueries(spark, store), s.executionId)
+  }
+
+  test("jsonGraph labels are byte-equal to Spark's to_json: relational store") {
+    val store = newStore()
+    val s = ProvSession.create(spark, "labels-rel", store)
+    val df = (awkward.map(Option(_)) :+ None).zipWithIndex
+      .map { case (v, i) => (i, v.orNull, v.map(_.reverse).orNull) }
+      .toDF("k", "v", "w")
+    val kept = RelationalProvenance.table(s, df, "awkward", Seq("k"))
+      .filter(col("k") =!= 0, "keep")
+    assert(kept.result.count() == awkward.length)
+    s.close()
+    assertJsonGraphParity(new ProvenanceQueries(spark, store), s.executionId)
   }
 }
