@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line on stdout for the driver
   * (BENCH_r{N}.json). Times the headline queries at
   * SPARK_GRAFT_SF_DIR with full materialization through the noop sink
@@ -129,32 +127,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSpark.envCpus(32)
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(5)
     val maxAttempts =
       sys.env.get("SPARK_GRAFT_BENCH_ATTEMPTS").map(_.toInt).getOrElse(3)
     val spreadBound =
       sys.env.get("SPARK_GRAFT_BENCH_SPREAD").map(_.toDouble).getOrElse(1.5)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // wide multi-agg plans (d04's 64 minhash columns) pay quadratic
-      // planning in constraint propagation; correctness is unaffected
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cpus, "graft-bench")
 
     // delay (bounded) rather than record polluted: the common cause of
     // a loaded start is the harness's own build finishing — worth
     // waiting out; SPARK_GRAFT_BENCH_WAIT_MS=0 disables the wait
     val maxWaitMs = sys.env.get("SPARK_GRAFT_BENCH_WAIT_MS")
       .map(_.toLong).getOrElse(240000L)
-    val startLoad = waitForCalm(() => loadAvg1m(), cpus.toInt,
+    val startLoad = waitForCalm(() => loadAvg1m(), cpus,
       maxWaitMs, 10000L)
-    if (contendedAt(startLoad, cpus.toInt))
+    if (contendedAt(startLoad, cpus))
       System.err.println(f"[bench] WARNING: 1m load $startLoad%.1f still " +
         f"above 0.15 x $cpus cpus after the bounded wait — this record " +
         "will carry contended:true; rerun on an idle machine")
@@ -217,8 +205,8 @@ object Bench {
     val endLoad = loadAvg1m()
     val anyContended =
       results.exists(_._2.contended) ||
-        contendedAt(startLoad, cpus.toInt) ||
-        contendedAt(endLoad, cpus.toInt)
+        contendedAt(startLoad, cpus) ||
+        contendedAt(endLoad, cpus)
     val qs = results.map { case (k, r) => "\"" + k + "\":" + jnum(r.min) }
       .mkString("{", ",", "}")
     // String.format Locale.ROOT everywhere: the f-interpolator honors the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection helper: prints the formatted physical plan of named
   * queries so pushdown/broadcast/codegen can be audited.
   * Usage: runMain graft.Explain <sfDir> <query1> [query2 ...]
@@ -10,13 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(4, "graft-explain")
     names.foreach { n =>
       println(s"\n===== $n =====")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

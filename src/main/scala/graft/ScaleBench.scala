@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.prov.{ProvSession, RelationalProvenance}
+import graft.prov.RelationalProvenance.Granularity
 
 /** Scale-linearity harness: replicates the sf0.1 `documents` /
   * `embeddings` tables 10× with replica-disjoint ids and token
@@ -29,8 +35,22 @@ import org.apache.spark.sql.functions._
   * Embedding replicas keep their vectors with offset ids: LSH/IVF
   * bucket populations grow 10× while the fixed probe side (vec_id < 5,
   * untouched by the offset) scores 10× candidates — the linear regime.
+  *
+  * The `prov_*` cells price provenance capture at scale: the typed
+  * parallelize → map → filter → reduceByKey pipeline (`prov_rdd`) and
+  * the relational select → filter → groupByAgg frame at Element
+  * (`prov_frame`) and Task (`prov_frame_task`) granularity, over
+  * 200k `k{i % 1000};i` rows at x1 and 200k × N at xN. They read no
+  * replica table; each reports capture-on seconds in the usual keys
+  * plus the uncaptured pipeline (`off_*`) and their quotient
+  * (`factor_*`).
   */
 object ScaleBench {
+
+  val provCells: Seq[String] =
+    Seq("prov_rdd", "prov_frame", "prov_frame_task")
+
+  private val provRows = 200000
 
   val scaleQueries: Seq[String] =
     Seq("d04_minhash_lsh", "d05_simhash", "e03_ann_lsh", "e05_ann_ivf",
@@ -225,7 +245,7 @@ object ScaleBench {
       // the search; the rewrite is one extra write-bound pass over
       // the postings, so the cell should sit between e48 and ~2x
       // its curve (the one-time migration cost on record)
-      "e52_bm25_rewrite_search")
+      "e52_bm25_rewrite_search") ++ provCells
 
   /** Offset between replica id ranges — far above any real id in the
     * test tables, so replica ids never collide.
@@ -307,6 +327,63 @@ object ScaleBench {
       "e25_ann_recall_filtered" -> Set("documents"))
       .withDefaultValue(Set.empty)
 
+  /** One `prov_*` cell over `n` rows: min-of-2 seconds with capture
+    * on, then off. Each run gets a fresh session and store, deleted
+    * once timed (a 20M-row element store is ~4 GB); the relational
+    * input is written under `workDir` and deleted afterwards.
+    */
+  private def provCell(spark: SparkSession, cell: String, n: Int,
+                       workDir: String): (Double, Double) = {
+    import spark.implicits._
+    lazy val data = (0 until n).map(i => s"k${i % 1000};$i")
+    val rel = s"$workDir/prov_rel_$n.parquet"
+    def timed(run: String => Int): Double = {
+      val store = Files.createTempDirectory(Paths.get(workDir), "prov").toString
+      try {
+        val t0 = System.nanoTime()
+        require(run(store) == 1000)
+        (System.nanoTime() - t0) / 1e9
+      } finally FileUtils.deleteDirectory(new java.io.File(store))
+    }
+    def rdd(capture: Boolean): Double = timed { store =>
+      val s = ProvSession.create(spark, "scale", store, captureEnabled = capture)
+      val out = s.parallelize(data)
+        .map { line => val p = line.split(";"); (p(0), p(1).toLong) }
+        .filter(_._2 % 3 != 0)
+        .reduceByKey(_ + _)
+        .collect()
+      s.close()
+      out.length
+    }
+    def frame(capture: Boolean, g: Granularity): Double = timed { store =>
+      val df = spark.read.parquet(rel)
+      if (capture) {
+        val s = ProvSession.create(spark, "scale-rel", store)
+        val out = RelationalProvenance.table(s, df, "src", Seq("k", "v"), g)
+          .select("widen")(col("k"), col("v"), (col("v") * 2).as("v2"))
+          .filter(col("v") % 3 =!= 0)
+          .groupByAgg(Seq(col("k")), Seq(sum(col("v2")).as("s")))
+          .result.collect()
+        s.close()
+        out.length
+      } else df.select(col("k"), col("v"), (col("v") * 2).as("v2"))
+        .filter(col("v") % 3 =!= 0)
+        .groupBy(col("k")).agg(sum(col("v2")).as("s"))
+        .collect().length
+    }
+    def min2(run: => Double): Double = math.min(run, run)
+    Files.createDirectories(Paths.get(workDir))
+    try cell match {
+      case "prov_rdd" => (min2(rdd(capture = true)), min2(rdd(capture = false)))
+      case _ =>
+        val g = if (cell == "prov_frame_task") Granularity.Task
+                else Granularity.Element
+        spark.range(n).select(concat(lit("k"), col("id") % 1000).as("k"),
+          col("id").as("v")).write.mode("overwrite").parquet(rel)
+        (min2(frame(capture = true, g)), min2(frame(capture = false, g)))
+    } finally FileUtils.deleteDirectory(new java.io.File(rel))
+  }
+
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = if (args.length > 2) args(2).toInt else 10
@@ -315,20 +392,13 @@ object ScaleBench {
     val queries = if (args.length > 3)
       args(3).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     else scaleQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(LocalSpark.envCpus(32), "graft-scalebench")
 
-    // only the tables this run's queries read need replicas
+    // only the tables this run's queries read need replicas; the prov_*
+    // cells read none
+    val tableQueries = queries.filterNot(provCells.contains)
     val needed: Set[String] =
-      queries.map(tableOf).toSet ++ queries.flatMap(n =>
+      tableQueries.map(tableOf).toSet ++ tableQueries.flatMap(n =>
         extraTablesOf(n.split("@cap").head)).toSet
 
     // SPARK_GRAFT_SCALE_REUSE=1 skips re-replication when the workDir
@@ -355,7 +425,10 @@ object ScaleBench {
       math.min(a, b)
     }
 
-    runOnce(queries.head.split("@cap").head, baseDir) // JVM/codegen warmup
+    // JVM/codegen warmup
+    if (provCells.contains(queries.head))
+      provCell(spark, queries.head, provRows, workDir)
+    else runOnce(queries.head.split("@cap").head, baseDir)
 
     val rowCounts: Map[String, (Long, Long)] =
       needed.toSeq.map { t =>
@@ -363,7 +436,13 @@ object ScaleBench {
           spark.read.parquet(s"$workDir/$t.parquet").count())
       }.toMap
 
-    val rows = queries.map { n0 =>
+    val rows = queries.map {
+      case c if provCells.contains(c) =>
+        val (on1, off1) = provCell(spark, c, provRows, workDir)
+        val (onN, offN) = provCell(spark, c, provRows * copies, workDir)
+        (c, on1, onN, provRows.toLong, provRows.toLong * copies,
+          f""","off_x1":$off1%.3f,"off_x$copies":$offN%.3f,"factor_x1":${on1 / off1}%.2f,"factor_x$copies":${onN / offN}%.2f""")
+      case n0 =>
       // "query@capN" variants run the same gated query under
       // spark.graft.phashBucketCap=N — the hot-bucket lever measured
       // beside its uncapped cell
@@ -396,12 +475,12 @@ object ScaleBench {
           finally spark.conf.unset("spark.graft.benchMaxDocId")
         } else runMin2(n, workDir)
       val (r1, rn) = rowCounts(tableOf(n))
-      (n0, x1, xn, xn / x1, r1 / x1 / 1000.0, rn / xn / 1000.0)
+      (n0, x1, xn, r1, rn, "")
       } finally cap.foreach(_ =>
         spark.conf.unset("spark.graft.phashBucketCap"))
     }
-    val qs = rows.map { case (n, x1, xn, r, k1, kn) =>
-      f""""$n":{"x1":$x1%.3f,"x$copies":$xn%.3f,"ratio":$r%.2f,"krows_s_x1":$k1%.1f,"krows_s_x$copies":$kn%.1f}"""
+    val qs = rows.map { case (n, x1, xn, r1, rn, extra) =>
+      f""""$n":{"x1":$x1%.3f,"x$copies":$xn%.3f,"ratio":${xn / x1}%.2f,"krows_s_x1":${r1 / x1 / 1000.0}%.1f,"krows_s_x$copies":${rn / xn / 1000.0}%.1f$extra}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scale$copies","base":"$baseDir","queries":$qs,"excluded_by_design":["d03_ngram_jaccard","e02_cosine_neardup"]}""")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.Graft
@@ -46,15 +46,7 @@ object ScreenBench {
     // re-measuring one mode skips the other modes' store builds
     val modeSet = if (args.length > 3) args(3).split(",").toSet
                   else Set("full", "pruned", "auto")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(LocalSpark.envCpus(32), "graft-screenbench")
 
     def present(t: String) =
       new java.io.File(s"$workDir/$t.parquet/_SUCCESS").exists()

@@ -1,9 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{LocalSpark, SparkEntry}
 
 /** End-to-end training-data pipeline demo over the documents/embeddings
   * tables: quality stats → dedup clustering → keep list → token budget →
@@ -15,13 +14,7 @@ import graft.SparkEntry
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(8, "pipeline-demo")
     def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
 
     val nDocs = q("t01_token_stats").count()

@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.api.Graft
 
 /** End-to-end DURABLE retrieval + dedup store demo — the round-11
@@ -18,13 +18,7 @@ import graft.api.Graft
 object RetrievalStoreDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("retrieval-store-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(8, "retrieval-store-demo")
 
     val root = java.nio.file.Files
       .createTempDirectory("graft_retrieval_store").toString

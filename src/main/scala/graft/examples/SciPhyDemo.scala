@@ -2,8 +2,7 @@ package graft.examples
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSpark
 import graft.prov._
 import graft.prov.filegroup._
 import graft.prov.filegroup.FileGroupOps._
@@ -19,13 +18,7 @@ import graft.prov.filegroup.FileGroupOps._
   */
 object SciPhyDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("sciphy-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(4, "sciphy-demo")
 
     val root = Files.createTempDirectory("sciphy-demo")
     val inputs = Files.createDirectory(root.resolve("inputs"))

@@ -2,10 +2,10 @@ package graft.examples
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.streaming.DocStreams
 import graft.streaming.DocStreams.Doc
 
@@ -24,14 +24,7 @@ import graft.streaming.DocStreams.Doc
 object StreamingPipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("streaming-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(8, "streaming-pipeline-demo")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

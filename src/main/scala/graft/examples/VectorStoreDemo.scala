@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.api.Graft
 
 /** End-to-end DURABLE vector-store lifecycle demo — the operational
@@ -22,13 +22,7 @@ import graft.api.Graft
 object VectorStoreDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("vector-store-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(8, "vector-store-demo")
 
     val root = java.nio.file.Files
       .createTempDirectory("graft_vector_store").toString

@@ -82,4 +82,14 @@ class BenchGuardSpec extends AnyFunSuite {
       log = _ => ())
     assert(got2 == -1.0 && slept2 == 0L)
   }
+
+  test("the shared session confs: AQE on, constraint propagation off, UTC, shuffle partitions = cpus") {
+    // reads the list only: getOrCreate in the shared test JVM would set
+    // these runtime confs on every later suite's session
+    val confs = LocalSpark.confs(7).toMap
+    assert(confs("spark.sql.adaptive.enabled") == "true")
+    assert(confs("spark.sql.constraintPropagation.enabled") == "false")
+    assert(confs("spark.sql.session.timeZone") == "UTC")
+    assert(confs("spark.sql.shuffle.partitions") == "7")
+  }
 }
