@@ -17,7 +17,9 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * top-k physical operator — [[graft.plans.TopK.perKey]] also
   * self-registers via `experimental.extraStrategies` for programmatic
   * use; double registration is harmless, the planner just sees the
-  * same candidate twice) and registers the engine's shared primitives
+  * same candidate twice) and the relational provenance tee's
+  * ([[graft.prov.ElementTeeStrategy]], self-registered the same way by
+  * `ProvFrame.result`), and registers the engine's shared primitives
   * as SQL functions — `cosine_similarity`, `minhash_array`,
   * `minhash_agg`, `count_min`, `hash60`, `phash_bands`,
   * `gif_frame_hashes` — making the
@@ -38,6 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    ext.injectPlannerStrategy(_ => graft.prov.ElementTeeStrategy)
 
     ext.injectFunction((
       FunctionIdentifier("cosine_similarity"),

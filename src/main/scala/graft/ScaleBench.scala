@@ -37,7 +37,8 @@ import graft.prov.RelationalProvenance.Granularity
   * untouched by the offset) scores 10× candidates — the linear regime.
   *
   * The `prov_*` cells price provenance capture at scale: the typed
-  * parallelize → map → filter → reduceByKey pipeline (`prov_rdd`) and
+  * range → map to `k;v` lines → parse → filter → reduceByKey pipeline
+  * (`prov_rdd`) and
   * the relational select → filter → groupByAgg frame at Element
   * (`prov_frame`) and Task (`prov_frame_task`) granularity, over
   * 200k `k{i % 1000};i` rows at x1 and 200k × N at xN. They read no
@@ -335,7 +336,6 @@ object ScaleBench {
   private def provCell(spark: SparkSession, cell: String, n: Int,
                        workDir: String): (Double, Double) = {
     import spark.implicits._
-    lazy val data = (0 until n).map(i => s"k${i % 1000};$i")
     val rel = s"$workDir/prov_rel_$n.parquet"
     def timed(run: String => Int): Double = {
       val store = Files.createTempDirectory(Paths.get(workDir), "prov").toString
@@ -347,7 +347,9 @@ object ScaleBench {
     }
     def rdd(capture: Boolean): Double = timed { store =>
       val s = ProvSession.create(spark, "scale", store, captureEnabled = capture)
-      val out = s.parallelize(data)
+      // the `k;v` lines are generated on the executors: a driver-side
+      // Seq of 20M strings ships ~70 MB per task at x100
+      val out = s.range(n).map(i => s"k${i % 1000};$i", "lines")
         .map { line => val p = line.split(";"); (p(0), p(1).toLong) }
         .filter(_._2 % 3 != 0)
         .reduceByKey(_ + _)

@@ -16,8 +16,9 @@ import org.apache.parquet.schema.{MessageType, Type}
   * counterpart of [[ElementSideWriter]], in the [[MetaParquet.read]]
   * pattern: parquet-hadoop on the driver, so a read runs no Spark job.
   * It reads every visible file of the `data_elements/execution_id=<e>`
-  * partition whatever wrote it (side-captured, Spark-appended relational
-  * and replayed tasks, streaming micro-batches, older stores): each file
+  * partition whatever wrote it (side-captured typed and relational
+  * tasks, Spark-appended stats and extras, streaming micro-batches,
+  * older stores): each file
   * is projected through its OWN footer schema, so writer-specific
   * schema details never reach the caller.
   *

@@ -38,28 +38,34 @@ final class CaptureConfig(@volatile var schema: DataElementSchema[_],
                           @volatile var ignored: Boolean = false)
     extends Serializable
 
-/** Single-pass element capture: a `mapPartitions` wrapper placed INSIDE
-  * each tracked dataset's persisted plan streams that stage's element
-  * rows straight to parquet while the triggering action computes the
-  * stage — so flush commits files instead of replaying stage caches
-  * through a second Spark job (the reference pays this differently:
-  * per-record async Cassandra inserts from every executor thread,
-  * DataSource.scala:28-45).
+/** Single-pass element capture for both layers: the typed layer's
+  * `mapPartitions` wrapper beneath each tracked dataset's `persist`
+  * ([[ProvDataset]]) and the relational layer's [[ElementTeeExec]]
+  * stream each partition's element rows straight to parquet while the
+  * triggering action computes them, so flush commits files instead of
+  * replaying plans through a second Spark job (the reference pays this
+  * differently: per-record async Cassandra inserts from every executor
+  * thread, DataSource.scala:28-45).
   *
-  * Protocol (correct under task retries and partial computation):
-  *  - each task attempt writes `p<pid>of<n>-t<attemptId>.parquet` under
+  * Protocol (correct under task retries, partial computation and
+  * re-planned partitionings):
+  *  - every capturing RDD mints a RUN id when it is built; each task
+  *    attempt writes `r<run>-p<pid>of<n>-t<attemptId>.parquet` under
   *    `_element_staging/<execId>/<taskId>/`, via a `.inprogress` name
   *    renamed only when the partition iterator is EXHAUSTED — a partial
-  *    file from a failed/interrupted attempt is never visible;
-  *  - the wrapper sits directly beneath `persist`, so a partition is
-  *    captured at most once per materialization; recomputes after
-  *    eviction stage a second attempt and commit keeps the newest;
-  *  - commit moves, per partition, the newest staged attempt to the
+  *    file from a failed, interrupted or `take`-truncated attempt is
+  *    never visible. A run over zero partitions leaves an
+  *    `r<run>-empty` marker instead;
+  *  - a run is complete when every pid of its `n` has a file. Under AQE
+  *    two actions may coalesce one plan differently, so runs of one task
+  *    need not share `n`; commit takes exactly ONE complete run — typed
+  *    ids come from the one cached run, relational ids are
+  *    deterministic, so any complete run is equivalent;
+  *  - commit moves, per partition, the run's newest attempt to the
   *    execution's `data_elements` partition directory under the
-  *    DETERMINISTIC name `side-<taskId>-p<pid>of<n>.parquet` — commit is
-  *    idempotent (an already-committed partition just drops its staged
-  *    leftovers), so a failed batch can re-flush without duplicating
-  *    rows.
+  *    DETERMINISTIC name `side-<taskId>-r<run>-p<pid>of<n>.parquet`. It is
+  *    idempotent: a re-flush after a failure finishes the run already
+  *    (partly) committed and never adds a second copy.
   *
   * File columns are (task_id, element_id, values, deps) with standard
   * 3-level LIST structure — byte-compatible with the Spark-written
@@ -101,18 +107,40 @@ object ElementSideWriter {
   private[prov] def destDir(storeDir: String, execId: String): String =
     s"$storeDir/data_elements/execution_id=$execId"
 
-  private val StagedName = """p(\d+)of(\d+)-t(\d+)\.parquet""".r
-  private def committedName(taskId: String, pid: Int, n: Int) =
-    s"side-$taskId-p${pid}of$n.parquet"
+  private val StagedName = """r(\w+)-p(\d+)of(\d+)-t(\d+)\.parquet""".r
+  private val EmptyRun = """r(\w+)-empty""".r
+  private def committedName(taskId: String, run: String, pid: Int, n: Int) =
+    s"side-$taskId-r$run-p${pid}of$n.parquet"
   private def CommittedNameRe(taskId: String) =
-    (java.util.regex.Pattern.quote(s"side-$taskId-p") + """(\d+)of(\d+)\.parquet""").r
+    (java.util.regex.Pattern.quote(s"side-$taskId-r") +
+      """(\w+)-p(\d+)of(\d+)\.parquet""").r
+
+  /** Where one task's element files are staged and committed, shipped
+    * with each capturing closure.
+    */
+  private[prov] final case class Sink(storeDir: String, execId: String,
+                                      taskId: String, conf: SerializableHadoopConf) {
+    def dir: Path = new Path(stagingDir(storeDir, execId, taskId))
+  }
+
+  /** Mint the run id of a capturing RDD over `n` partitions; a run with
+    * no partitions runs no task, so its completeness is marked here.
+    */
+  private[prov] def newRun(sink: Sink, n: Int): String = {
+    val run = f"${java.util.concurrent.ThreadLocalRandom.current().nextLong()}%016x"
+    if (n == 0) {
+      val fs = sink.dir.getFileSystem(sink.conf.value)
+      fs.create(new Path(sink.dir, s"r$run-empty"), true).close()
+    }
+    run
+  }
 
   /** One staged element record, streamed straight to the
     * `RecordConsumer` by [[ElementRowWriteSupport]] — no per-row Group
-    * tree, the hot path is a handful of `Binary` wrappers per record.
+    * tree. A null value is written as a null list element.
     */
   private[prov] final case class StagedRow(
-      elementId: String, values: Seq[Seq[String]], deps: Seq[String])
+      elementId: Binary, values: Seq[Seq[Binary]], deps: Seq[Binary])
 
   /** Streams (task_id, element_id, values, deps) in Spark's 3-level
     * LIST layout. `task_id` is constant per file (one dictionary-coded
@@ -129,17 +157,20 @@ object ElementSideWriter {
     override def getName: String = "graft-element-side"
     // LIST protocol: one startField per list, one startGroup per
     // repetition; an empty list is startGroup/endGroup with no "list"
-    // field, which readers surface as [] (never null)
-    private def writeStringList(field: String, idx: Int, xs: Seq[String]): Unit = {
+    // field, which readers surface as [] (never null), and a null
+    // element is a repetition group with no "element" field
+    private def writeStringList(field: String, idx: Int, xs: Seq[Binary]): Unit = {
       rc.startField(field, idx)
       rc.startGroup()
       if (xs.nonEmpty) {
         rc.startField("list", 0)
-        xs.foreach { s =>
+        xs.foreach { b =>
           rc.startGroup()
-          rc.startField("element", 0)
-          rc.addBinary(Binary.fromString(String.valueOf(s)))
-          rc.endField("element", 0)
+          if (b != null) {
+            rc.startField("element", 0)
+            rc.addBinary(b)
+            rc.endField("element", 0)
+          }
           rc.endGroup()
         }
         rc.endField("list", 0)
@@ -153,7 +184,7 @@ object ElementSideWriter {
       rc.addBinary(taskIdBin)
       rc.endField("task_id", 0)
       rc.startField("element_id", 1)
-      rc.addBinary(Binary.fromString(row.elementId))
+      rc.addBinary(row.elementId)
       rc.endField("element_id", 1)
       rc.startField("values", 2)
       rc.startGroup()
@@ -181,31 +212,30 @@ object ElementSideWriter {
       new ElementRowWriteSupport(taskId)
   }
 
-  /** Wrap a partition iterator with a streaming element writer. `pid`
-    * and `n` are the wrapped RDD's OWN partition index and count (passed
-    * from `mapPartitionsWithIndex` at wrap time) — NOT the running
-    * task's: when a stage like cartesian computes a parent partition
-    * inside a child task, `TaskContext.partitionId` is the child's, and
-    * naming files by it would scatter one logical partition across
-    * arbitrary child ids. Pass-through when there is no task context
-    * (driver-local evaluation) or the task was `ignoreIt`-ed by the time
-    * the job was submitted.
+  /** Wrap a partition iterator with a streaming element writer that
+    * stages `row(x)` for every `x` passing through. `pid` and `n` are
+    * the capturing RDD's OWN partition index and count (from
+    * `mapPartitionsWithIndex`) — NOT the running task's: when a stage
+    * like cartesian computes a parent partition inside a child task,
+    * `TaskContext.partitionId` is the child's, and naming files by it
+    * would scatter one logical partition across arbitrary child ids.
+    * Pass-through when there is no task context (driver-local
+    * evaluation).
     */
-  def capturing[T](storeDir: String, execId: String, taskId: String,
-                   cfg: CaptureConfig, conf: SerializableHadoopConf,
-                   pid: Int, n: Int,
-                   it: Iterator[ProvRecord[T]]): Iterator[ProvRecord[T]] = {
+  def capturing[A](sink: Sink, run: String, pid: Int, n: Int,
+                   it: Iterator[A])(row: A => StagedRow): Iterator[A] = {
     val ctx = TaskContext.get()
-    if (ctx == null || cfg.ignored) return it
-    val dir = new Path(stagingDir(storeDir, execId, taskId))
-    val fs = dir.getFileSystem(conf.value)
+    if (ctx == null) return it
+    val conf = sink.conf.value
+    val dir = sink.dir
+    val fs = dir.getFileSystem(conf)
     fs.mkdirs(dir)
-    val base = s"p${pid}of$n-t${ctx.taskAttemptId()}.parquet"
+    val base = s"r$run-p${pid}of$n-t${ctx.taskAttemptId()}.parquet"
     val tmp = new Path(dir, base + ".inprogress")
     val fin = new Path(dir, base)
     val writer = new StagedRowWriterBuilder(
-        HadoopOutputFile.fromPath(tmp, conf.value), taskId)
-      .withConf(conf.value)
+        HadoopOutputFile.fromPath(tmp, conf), sink.taskId)
+      .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       // bound per-writer buffering well below the 128 MiB default: element
       // rows are small and many writers run concurrently per executor
@@ -219,7 +249,6 @@ object ElementSideWriter {
       .withDictionaryEncoding("task_id", true)
       .withPageWriteChecksumEnabled(false)
       .build()
-    val sch = cfg.schema.asInstanceOf[DataElementSchema[T]]
     var open = true
     // a failed/interrupted attempt must leave no visible file: the
     // completion listener (fires on success and failure alike) discards
@@ -231,7 +260,7 @@ object ElementSideWriter {
         try fs.delete(tmp, false) catch { case _: Throwable => () }
       }
     }
-    new Iterator[ProvRecord[T]] {
+    new Iterator[A] {
       def hasNext: Boolean = {
         val h = it.hasNext
         if (!h && open) {
@@ -242,83 +271,70 @@ object ElementSideWriter {
         }
         h
       }
-      def next(): ProvRecord[T] = {
-        val r = it.next()
-        writer.write(StagedRow(r.id, sch.project(r.value), r.deps))
-        r
+      def next(): A = {
+        val x = it.next()
+        writer.write(row(x))
+        x
       }
     }
   }
 
-  /** (covered partition ids, declared partition count) from staged +
-    * committed files; (empty, None) when the stage never ran. Throws on
-    * inconsistent partition counts across files — that would mean the
-    * same plan materialized under two different partitionings, which the
-    * cached-plan contract rules out, so it must surface loudly.
+  /** One element file of a task: a staged attempt, a committed
+    * partition (`committed`, attempt = Long.MaxValue) or a run's empty
+    * marker (pid = -1).
     */
-  private[prov] def coverage(storeDir: String, execId: String, taskId: String,
-                             conf: Configuration): (Set[Int], Option[Int]) = {
-    val staged = new Path(stagingDir(storeDir, execId, taskId))
-    val dest = new Path(destDir(storeDir, execId))
-    val fs = staged.getFileSystem(conf)
-    val committedRe = CommittedNameRe(taskId)
-    val found = scala.collection.mutable.Map[Int, Int]() // pid -> n
-    def scan(dir: Path, pf: PartialFunction[String, (Int, Int)]): Unit =
-      if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-        pf.lift(st.getPath.getName).foreach { case (pid, n) =>
-          found.get(pid).foreach(prev => require(prev == n,
-            s"inconsistent partition counts for task $taskId: $prev vs $n"))
-          found(pid) = n
-        }
-      }
-    scan(staged, { case StagedName(p, n, _) => (p.toInt, n.toInt) })
-    scan(dest, { case committedRe(p, n) => (p.toInt, n.toInt) })
-    val ns = found.values.toSet
-    require(ns.size <= 1,
-      s"inconsistent partition counts for task $taskId: $ns")
-    (found.keySet.toSet, ns.headOption)
+  private final case class Part(run: String, n: Int, pid: Int, attempt: Long,
+                                path: Path, committed: Boolean)
+
+  private def parts(fs: FileSystem, sink: Sink): Seq[Part] = {
+    def list(dir: Path) = if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath) else Nil
+    val committedRe = CommittedNameRe(sink.taskId)
+    list(new Path(destDir(sink.storeDir, sink.execId))).flatMap(p => p.getName match {
+      case committedRe(r, i, n) => Some(Part(r, n.toInt, i.toInt, Long.MaxValue, p, committed = true))
+      case _ => None
+    }) ++ list(sink.dir).flatMap(p => p.getName match {
+      case StagedName(r, i, n, t) => Some(Part(r, n.toInt, i.toInt, t.toLong, p, committed = false))
+      case EmptyRun(r) => Some(Part(r, 0, -1, 0L, p, committed = false))
+      case _ => None // .inprogress leftovers — cleaned with the staging dir
+    })
   }
 
-  /** Move, per partition, the newest staged attempt into the execution's
-    * element directory under its deterministic name; drop older attempts
-    * and anything already committed. Idempotent; returns the set of
-    * partition ids now committed for this task.
+  /** The run commit takes: the one already (partly) committed, else any
+    * complete one; None while no such run is complete.
     */
-  private[prov] def commit(storeDir: String, execId: String, taskId: String,
-                           conf: Configuration): Set[Int] = {
-    val staged = new Path(stagingDir(storeDir, execId, taskId))
-    val dest = new Path(destDir(storeDir, execId))
-    val fs = staged.getFileSystem(conf)
-    val committed = scala.collection.mutable.Set[Int]()
-    val committedRe = CommittedNameRe(taskId)
-    if (fs.exists(dest)) fs.listStatus(dest).foreach { st =>
-      st.getPath.getName match {
-        case committedRe(p, _) => committed += p.toInt
-        case _ => ()
+  private def chosen(ps: Seq[Part]): Option[Seq[Part]] = {
+    val runs = ps.groupBy(_.run).values.toSeq
+    val committed = runs.filter(_.exists(_.committed))
+    require(committed.size <= 1, s"more than one committed run: ${committed.map(_.head.run)}")
+    (if (committed.nonEmpty) committed else runs)
+      .find(r => r.map(_.pid).filter(_ >= 0).distinct.size == r.head.n)
+  }
+
+  /** Whether one complete run of the task is staged or committed. */
+  private[prov] def complete(sink: Sink): Boolean =
+    chosen(parts(sink.dir.getFileSystem(sink.conf.value), sink)).nonEmpty
+
+  /** Move, per partition, the chosen run's newest staged attempt into
+    * the execution's element directory under its deterministic name,
+    * and drop the run's older attempts; other runs are left to
+    * [[cleanupStaging]]. Idempotent. Throws when no run is complete.
+    */
+  private[prov] def commit(sink: Sink): Unit = {
+    val fs = sink.dir.getFileSystem(sink.conf.value)
+    val run = chosen(parts(fs, sink)).getOrElse(throw new IllegalStateException(
+      s"side capture incomplete for task ${sink.taskId}"))
+    val dest = new Path(destDir(sink.storeDir, sink.execId))
+    run.filter(_.pid >= 0).groupBy(_.pid).values.foreach { attempts =>
+      val newest = attempts.maxBy(_.attempt)
+      if (!newest.committed) {
+        fs.mkdirs(dest)
+        if (!fs.rename(newest.path,
+              new Path(dest, committedName(sink.taskId, newest.run, newest.pid, newest.n))))
+          throw new java.io.IOException(
+            s"side-capture commit failed for task ${sink.taskId} partition ${newest.pid}")
       }
+      attempts.filterNot(a => a.committed || (a eq newest)).foreach(a => fs.delete(a.path, false))
     }
-    if (fs.exists(staged)) {
-      val attempts = fs.listStatus(staged).toSeq
-        .flatMap(st => st.getPath.getName match {
-          case StagedName(p, n, t) => Some((p.toInt, n.toInt, t.toLong, st.getPath))
-          case _ => None // .inprogress leftovers — cleaned with the staging dir
-        })
-      attempts.groupBy(_._1).foreach { case (pid, files) =>
-        val newestFirst = files.sortBy(-_._3)
-        val keep = newestFirst.head
-        if (!committed.contains(pid)) {
-          fs.mkdirs(dest)
-          if (!fs.rename(keep._4, new Path(dest, committedName(taskId, pid, keep._2))))
-            throw new java.io.IOException(
-              s"side-capture commit failed for task $taskId partition $pid")
-          committed += pid
-          newestFirst.tail.foreach(f => fs.delete(f._4, false))
-        } else {
-          newestFirst.foreach(f => fs.delete(f._4, false))
-        }
-      }
-    }
-    committed.toSet
   }
 
   /** Staging directory of one streaming micro-batch's element files. */

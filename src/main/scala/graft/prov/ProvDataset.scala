@@ -2,6 +2,7 @@ package graft.prov
 
 import scala.reflect.ClassTag
 
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.lit
@@ -588,21 +589,29 @@ object ProvDataset {
       if (capture) Some(new CaptureConfig(DefaultSchemas.forValue[T])) else None
     val ds = cfg match {
       case Some(c) =>
-        val store = session.storeDir
-        val execId = session.executionId
-        val tid = task.id
-        val hconf = session.serializableHadoopConf
+        val sink = session.sink(task.id)
         // RDD-level wrap: mapPartitionsWithIndex hands the wrapper ITS
         // OWN partition index (TaskContext.partitionId is the running
         // task's — wrong whenever a cartesian/union/zip child stage
         // computes this stage's partitions), and the true partition
-        // count is closed over from the driver
+        // count is closed over from the driver. One RDD, so one run:
+        // every job that computes this stage stages into it
         implicit val ct: ClassTag[ProvRecord[T]] = anyRefTag
         val rdd0 = ds0.rdd
         val n = rdd0.getNumPartitions
+        val run = ElementSideWriter.newRun(sink, n)
         val captured = rdd0.mapPartitionsWithIndex(
           (pid, it) =>
-            ElementSideWriter.capturing(store, execId, tid, c, hconf, pid, n, it),
+            // the wrapper honors an ignoreIt declared after this dataset
+            if (c.ignored) it
+            else {
+              val sch = c.schema.asInstanceOf[DataElementSchema[T]]
+              ElementSideWriter.capturing(sink, run, pid, n, it) { r =>
+                ElementSideWriter.StagedRow(Binary.fromString(r.id),
+                  sch.project(r.value).map(_.map(v => Binary.fromString(String.valueOf(v)))),
+                  r.deps.map(Binary.fromString))
+              }
+            },
           preservesPartitioning = true)
         session.spark.createDataset(captured)(ds0.encoder)
       case None => ds0
@@ -613,7 +622,7 @@ object ProvDataset {
     // session-persisted above — the flush sync phase materializes it
     // (via the wrapper) if no action did, and never releases it (random
     // ids need the cache until close)
-    if (capture) task.elements = Elements.SideCaptured(ds)
+    if (capture) task.elements = Elements.SideCaptured(_ => ds)
     pd
   }
 

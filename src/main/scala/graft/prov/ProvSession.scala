@@ -45,20 +45,14 @@ private[prov] object Elements {
     */
   case object NoElements extends Elements
 
-  /** Typed-layer task: its (random-id) element rows are written by the
-    * in-plan wrapper ([[ElementSideWriter]]) during the action itself;
-    * flush COMMITS the staged files. `plan` is the session-persisted
-    * stage the flush materializes if no action fully computed it.
+  /** Element rows written by the in-plan capture ([[ElementSideWriter]])
+    * during the action itself; flush COMMITS the staged files.
+    * `plan(ids)` is what flush runs if no action fully computed the
+    * task: the typed layer's session-persisted stage, or a relational
+    * frame's plan teed for the incomplete tasks `ids` — one pass over a
+    * frame's plan stages every selected frame beneath it.
     */
-  final case class SideCaptured(plan: Dataset[_]) extends Elements
-
-  /** Relational element-granularity frame: deterministic ids, so one
-    * flush append job recomputes `rows` (possibly off-thread). `plan`
-    * is the frame's plan, pre-materialized by the batch when a child's
-    * branch re-reads it, so the write costs O(stages), not O(stages²).
-    */
-  final case class Replayed(rows: () => Dataset[ElementRow], plan: Dataset[_])
-      extends Elements
+  final case class SideCaptured(plan: Set[String] => Dataset[_]) extends Elements
 
   /** Relational task granularity: `rows` is the task's single stats
     * element; children dep-link to its deterministic id.
@@ -116,10 +110,11 @@ object ProvSession {
     * disable capture.
     *
     * Read-after-action contract (asyncFlush = true, the default):
-    * typed record elements are readable in the store as soon as the
-    * triggering action returns (they are captured inside the action's
-    * own job and committed synchronously), but relational replay rows,
-    * file elements, and dropped-record markers land on a background
+    * record elements of both layers are readable in the store as soon
+    * as the flush after the triggering action returns (they are
+    * captured inside the action's own job and committed synchronously),
+    * but relational task-granularity stats elements, file elements, and
+    * dropped-record markers land on a background
     * thread — the store is guaranteed COMPLETE only after
     * [[ProvSession.awaitFlushes]] or [[ProvSession.close]]. Pass
     * `asyncFlush = false` for a store that is fully readable after
@@ -166,11 +161,12 @@ final class ProvSession private[prov] (
     val versionControl: Option[graft.prov.filegroup.GitVersionControl] = None,
     /** When true (the DEFAULT — the reference likewise writes provenance
       * asynchronously, DataSource.scala:28-45), the flush batch's APPEND
-      * job (relational replay rows + file-element/dropped-marker extras)
-      * runs on a background thread. Only deterministic-id rows ever run
-      * off-thread: typed-layer record elements are side-captured inside
-      * the action's own pass and committed synchronously at flush, and
-      * any stage the actions never computed is materialized on the
+      * job (relational stats elements + file-element/dropped-marker
+      * extras) runs on a background thread. Only deterministic-id rows
+      * ever run off-thread: record elements of both layers are
+      * side-captured inside the action's own pass and committed
+      * synchronously at flush, and any stage or frame the actions never
+      * computed is materialized on the
       * flush CALLER's thread — so no random-id stage is ever computed
       * concurrently by a background job and a user action (which could
       * mint divergent element ids across executors).
@@ -513,8 +509,13 @@ final class ProvSession private[prov] (
     */
   def maxObservedFlushDepth: Int = maxFlushDepth
 
-  /** Driver conf snapshot shipped into side-capture closures. */
-  private[prov] lazy val serializableHadoopConf =
+  /** Where a task's side-captured element files go, with the driver's
+    * Hadoop conf to ship into the capturing closures.
+    */
+  private[prov] def sink(taskId: String): ElementSideWriter.Sink =
+    ElementSideWriter.Sink(storeDir, executionId, taskId, serializableHadoopConf)
+
+  private lazy val serializableHadoopConf =
     new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
 
   /** `ids` plus every transitive ancestor task id (call under the lock). */
@@ -544,15 +545,15 @@ final class ProvSession private[prov] (
     // already-committed rows).
     //
     // Two phases:
-    //  1. SYNC (caller thread): SideCaptured tasks' record elements.
-    //     Fully-computed stages just get their staged files committed
-    //     (renames, no Spark job). A stage the actions never fully
-    //     computed is materialized HERE with a count — synchronously, so
-    //     a random-id stage is never computed concurrently by the flush
+    //  1. SYNC (caller thread): SideCaptured tasks' record elements, for
+    //     both layers. Tasks an action fully computed just get their
+    //     staged files committed (renames, no Spark job). The rest are
+    //     completed HERE, one pass per MAXIMAL incomplete task — it
+    //     stages every incomplete task beneath it — synchronously, so a
+    //     random-id stage is never computed concurrently by the flush
     //     and a user action (which could mint divergent ids across
     //     executors). After this phase the record elements are READABLE.
-    //  2. ASYNC-able: one append job for Replayed and Stats tasks (the
-    //     relational layer's deterministic-id frames) + extras (file
+    //  2. ASYNC-able: one append job for Stats tasks + extras (file
     //     elements, dropped-record markers) — all safe to recompute
     //     off-thread because their ids are deterministic.
     val planned = synchronized {
@@ -565,73 +566,47 @@ final class ProvSession private[prov] (
           case SideCaptured(plan) => Some(t -> plan)
           case _                  => None
         })
-        val replayRows = pending.map(_.elements).collect {
-          case Replayed(rows, _) => rows
-          case Stats(rows)       => rows
-        }
-        val unions = (replayRows ++ pending.flatMap(_.extraThunk)).map(_.apply())
-        // stages worth pre-materializing before the append job: only
-        // those some OTHER pending task's branch will re-read
-        // (transitively, through pass-through tasks) — a leaf stage is
-        // computed exactly once by its own branch, so a count job for it
-        // would be pure overhead. Side-captured stages are materialized
-        // by phase 1, so only Replayed stages remain.
-        val reread = ancestorIds(pending.flatMap(_.parents))
-        val rereadTasks = pending.flatMap(t => t.elements match {
-          case Replayed(_, plan) if reread(t.id) => Some(t -> plan)
-          case _                                 => None
-        })
-        // counting one MAXIMAL re-read stage fills every persisted cache
-        // beneath it: each combinator's plan embeds its parents' plans as
-        // subtrees, so Spark's cache manager substitutes the persisted
-        // fragments and populates them bottom-up within that single count
-        // job. Counting covered (non-maximal) stages again would be one
-        // redundant job each — a linear chain needs ONE count, not one
-        // per stage.
-        val rereadIds = rereadTasks.map(_._1.id).toSet
-        val covered: Set[String] = rereadTasks
-          .flatMap { case (t, _) => ancestorIds(t.parents).intersect(rereadIds) }.toSet
-        val countPlans: Seq[Dataset[_]] =
-          rereadTasks.collect { case (t, plan) if !covered(t.id) => plan }
-        // frames are not session-persisted (deterministic ids need no
-        // cache), so the batch persists re-read plans TRANSIENTLY —
-        // except one the user already cached (ProvFrame.materialize):
-        // releasing it after the batch would drop the user's cache
-        val persistPlans: Seq[Dataset[_]] = rereadTasks.map(_._2).distinct
-          .filter(_.storageLevel == StorageLevel.NONE)
+        val unions = (pending.map(_.elements).collect { case Stats(rows) => rows } ++
+          pending.flatMap(_.extraThunk)).map(_.apply())
         pending.foreach(_.flushed = true)
-        Some((pending, side, replayRows.size, unions, persistPlans, countPlans))
+        Some((pending, side, unions))
       }
     }
-    planned.foreach { case (pending, side, nReplay, unions, persistPlans, countPlans) =>
+    planned.foreach { case (pending, side, unions) =>
       val unmarkAll = () => synchronized { pending.foreach(_.flushed = false) }
-      // ---- phase 1: commit side-captured record elements (sync) ----
+      // ---- phase 1: complete and commit side-captured elements (sync) ----
       try {
-        val hconf = spark.sparkContext.hadoopConfiguration
-        side.foreach { case (t, plan) =>
-          val s0 = System.nanoTime()
-          val (covered, declared) =
-            ElementSideWriter.coverage(storeDir, executionId, t.id, hconf)
-          val complete = declared match {
-            case Some(n) => covered.size == n
-            case None    => plan.rdd.getNumPartitions == 0
+        val s0 = System.nanoTime()
+        def incomplete(ts: Seq[(TaskState, Set[String] => Dataset[_])]) =
+          ts.filterNot { case (t, _) => ElementSideWriter.complete(sink(t.id)) }
+        var todo = incomplete(side)
+        // first the maximal incomplete tasks; then, if a count missed a
+        // task beneath it (a frame whose subtree the analyzer rewrote),
+        // that task's own plan
+        Seq(true, false).foreach { maximalOnly =>
+          if (todo.nonEmpty) {
+            val ids = todo.map(_._1.id).toSet
+            val beneath =
+              if (maximalOnly) synchronized(ancestorIds(todo.flatMap(_._1.parents)))
+              else Set.empty[String]
+            todo.foreach { case (t, plan) =>
+              if (!beneath(t.id)) {
+                val c0 = System.nanoTime()
+                // one pass over the rows: a count would add an aggregate
+                // stage, and under AQE a second job
+                plan(ids).queryExecution.toRdd.foreach(_ => ())
+                debug(f"[prov]   complete ${t.ttype}: ${secondsSince(c0)}%.2fs")
+              }
+            }
+            todo = incomplete(todo)
           }
-          if (!complete) {
-            // cached partitions hit their cache (wrapper doesn't re-run,
-            // staged ids stay authoritative); only never-computed
-            // partitions run, staging exactly the missing files
-            plan.count()
-            val (c2, d2) =
-              ElementSideWriter.coverage(storeDir, executionId, t.id, hconf)
-            require(d2.exists(_ == c2.size),
-              s"side capture incomplete for task ${t.id} after materialize: " +
-                s"covered ${c2.size} of ${d2.getOrElse(-1)}")
-          }
-          ElementSideWriter.commit(storeDir, executionId, t.id, hconf)
-          debug(f"[prov]   commit ${t.ttype}: ${secondsSince(s0)}%.2fs")
         }
+        require(todo.isEmpty,
+          s"side capture incomplete after materialize: ${todo.map(_._1.id).mkString(", ")}")
+        side.foreach { case (t, _) => ElementSideWriter.commit(sink(t.id)) }
+        debug(f"[prov]   commit ${side.size} tasks: ${secondsSince(s0)}%.2fs")
       } catch { case e: Throwable => unmarkAll(); throw e }
-      // ---- phase 2: replay + extras append (async-able) ----
+      // ---- phase 2: stats + extras append (async-able) ----
       val job: Option[() => Unit] =
         if (unions.isEmpty) None
         else {
@@ -639,48 +614,30 @@ final class ProvSession private[prov] (
           val para = spark.sparkContext.defaultParallelism
           Some(() => {
             val t0 = System.nanoTime()
-            // transiently persisted re-read plans: without this, task
-            // k's branch replays stages 1..k — O(stages²) per flush
-            persistPlans.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+            // ANY failure before the append lands un-marks the whole
+            // batch, so a later flush retries it instead of silently
+            // dropping it (side tasks re-commit idempotently)
             try {
-              // ANY failure before the append lands un-marks the whole
-              // batch, so a later flush retries it instead of silently
-              // dropping it (side tasks re-commit idempotently)
-              try {
-                // materialize re-read stage caches before the write: the
-                // union write runs its branches concurrently, and over
-                // cold caches those branches race to recompute shared
-                // prefixes. One count per MAXIMAL re-read stage fills all
-                // the persisted caches beneath it in dependency order
-                // (cache substitution happens on plan subtrees)
-                countPlans.foreach { p =>
-                  val c0 = System.nanoTime()
-                  p.count()
-                  debug(f"[prov]   materialize: ${secondsSince(c0)}%.2fs")
-                }
-                // write straight into this execution's partition
-                // directory: the dynamic-partition writer (partitionBy)
-                // sorts every task's rows by a column that is constant
-                // here — path-embedding the single partition value skips
-                // that; readers see the same execution_id=... layout via
-                // partition discovery. coalesce bounds the commit to
-                // defaultParallelism files instead of (branches ×
-                // partitions).
-                val w0 = System.nanoTime()
-                // element ids / deps / values are near-unique strings:
-                // dictionary pages only get built and abandoned (same
-                // rationale as ElementSideWriter's per-column setting)
-                all.drop("execution_id").coalesce(para).write.mode("append")
-                  .option("parquet.enable.dictionary", "false")
-                  .parquet(s"$storeDir/data_elements/execution_id=$executionId")
-                debug(f"[prov]   write: ${secondsSince(w0)}%.2fs")
-              } catch {
-                case e: Throwable =>
-                  unmarkAll()
-                  throw e
-              }
-            } finally persistPlans.foreach(_.unpersist())
-            debug(f"[prov] append batch ($nReplay replay tasks + extras) in ${secondsSince(t0)}%.2fs")
+              // write straight into this execution's partition
+              // directory: the dynamic-partition writer (partitionBy)
+              // sorts every task's rows by a column that is constant
+              // here — path-embedding the single partition value skips
+              // that; readers see the same execution_id=... layout via
+              // partition discovery. coalesce bounds the commit to
+              // defaultParallelism files instead of (branches ×
+              // partitions). Element ids / deps / values are
+              // near-unique strings: dictionary pages only get built and
+              // abandoned (same rationale as ElementSideWriter's
+              // per-column setting)
+              all.drop("execution_id").coalesce(para).write.mode("append")
+                .option("parquet.enable.dictionary", "false")
+                .parquet(s"$storeDir/data_elements/execution_id=$executionId")
+            } catch {
+              case e: Throwable =>
+                unmarkAll()
+                throw e
+            }
+            debug(f"[prov] append batch (${unions.size} stats/extras) in ${secondsSince(t0)}%.2fs")
           })
         }
       job.foreach { j =>

@@ -7,12 +7,15 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.JsonFactory
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's query surface (SURVEY §3.3 — the Kotlin/Spring web
   * app's endpoints over Cassandra, DataElementAPICtrl.kt /
@@ -119,33 +122,74 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * dashboard or a cross-run diff wants (internal element/task ids
     * differ between runs of the same pipeline; descriptions and
     * counts do not). Output: (kind, dst, src, n) ordered — `src` is
-    * empty for element rows. Scale: one scan of the element table per
-    * side (nodes; edges and their source elements); the task
-    * descriptions are a literal map looked up per row (a broadcast,
-    * even of a local frame, runs a job), and counts aggregate map-side.
-    * Rows whose task has no task row are dropped, as an inner join
-    * would.
+    * empty for element rows. Rows whose task has no task row are
+    * dropped, as an inner join would, and so are edges to elements the
+    * execution does not hold.
+    *
+    * When the execution's element files hold at most
+    * `spark.graft.maxExportGraphRows` rows, `(task_id, element_id,
+    * deps)` is read ONCE on the driver ([[ElementReader]]) and counted
+    * in memory into a local frame: no Spark job. Above the fence, one
+    * scan of the element table per side (nodes; edges and their source
+    * elements); the task descriptions are a literal map looked up per
+    * row (a broadcast, even of a local frame, runs a job), and counts
+    * aggregate map-side.
     * Gate: `prov_full_graph` calls this facade and checks it against
     * a DuckDB derivation from the tracked pipeline's inputs.
     */
   def graphSummary(executionId: String): DataFrame = {
-    val els = elements(executionId)
-    val desc = typedLit(tasks(executionId)
+    val descs = tasks(executionId)
       .select(col("task_id"), col("description")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap)
-    def known(task: String) = map_contains_key(desc, col(task))
-    val nodes = els.select(col("task_id")).filter(known("task_id"))
-      .groupBy(desc(col("task_id")).as("dst"))
-      .agg(count(lit(1)).as("n"))
-      .select(lit("element").as("kind"), col("dst"), lit("").as("src"), col("n"))
-    val edges = els.select(col("task_id"), explode(col("deps")).as("source"))
-      .join(els.select(col("element_id").as("source"), col("task_id").as("src_tid")),
-        "source")
-      .filter(known("task_id") && known("src_tid"))
-      .groupBy(desc(col("task_id")).as("dst"), desc(col("src_tid")).as("src"))
-      .agg(count(lit(1)).as("n"))
-      .select(lit("edge").as("kind"), col("dst"), col("src"), col("n"))
-    nodes.unionByName(edges).orderBy(col("kind"), col("dst"), col("src"))
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val conf = spark.sparkContext.hadoopConfiguration
+    ElementReader.underFence(conf, storeDir, executionId, exportMax) match {
+      case Some(files) => localGraphSummary(conf, files, executionId, descs)
+      case None =>
+        val els = elements(executionId)
+        val desc = typedLit(descs)
+        def known(task: String) = map_contains_key(desc, col(task))
+        val nodes = els.select(col("task_id")).filter(known("task_id"))
+          .groupBy(desc(col("task_id")).as("dst"))
+          .agg(count(lit(1)).as("n"))
+          .select(lit("element").as("kind"), col("dst"), lit("").as("src"), col("n"))
+        val edges = els.select(col("task_id"), explode(col("deps")).as("source"))
+          .join(els.select(col("element_id").as("source"), col("task_id").as("src_tid")),
+            "source")
+          .filter(known("task_id") && known("src_tid"))
+          .groupBy(desc(col("task_id")).as("dst"), desc(col("src_tid")).as("src"))
+          .agg(count(lit(1)).as("n"))
+          .select(lit("edge").as("kind"), col("dst"), col("src"), col("n"))
+        nodes.unionByName(edges).orderBy(col("kind"), col("dst"), col("src"))
+    }
+  }
+
+  /** [[graphSummary]] of an execution under the fence, counted on the
+    * driver: the Spark path's inner join becomes a lookup of each dep in
+    * an element id → producing tasks map (all of them, so a store
+    * holding duplicate ids counts them as the join would), and rows sort
+    * in Spark's string order (UTF-8 bytes, nulls first).
+    */
+  private def localGraphSummary(conf: Configuration, files: Seq[FileStatus],
+                                executionId: String,
+                                descs: Map[String, String]): DataFrame = {
+    val els = mutable.ArrayBuffer.empty[(String, String, Seq[String])]
+    ElementReader.foreach(conf, files, executionId, Seq("task_id", "element_id", "deps")) {
+      e => els += ((e.task_id, e.element_id, Option(e.deps).getOrElse(Nil)))
+    }
+    val producers = els.groupMap(_._2)(_._1)
+    def counts[K](keys: Iterable[K]) = keys.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq
+    val nodes = counts(els.flatMap(e => descs.get(e._1)))
+    val edges = counts(for {
+      (task, _, deps) <- els; dst <- descs.get(task).toSeq; dep <- deps if dep != null
+      src <- producers.getOrElse(dep, Nil).flatMap(descs.get)
+    } yield (dst, src))
+    val utf8: Ordering[String] = Ordering.by((s: String) => Option(s).map(UTF8String.fromString))(
+      Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)))
+    // "edge" sorts before "element"
+    val rows = edges.sortBy(_._1)(Ordering.Tuple2(utf8, utf8))
+      .map { case ((d, s), n) => Row("edge", d, s, n) } ++
+      nodes.sortBy(_._1)(utf8).map { case (d, n) => Row("element", d, "", n) }
+    spark.createDataFrame(rows.asJava, GraphSummarySchema)
   }
 
   /** Elements produced by one task, optionally with their consumed
@@ -603,4 +647,8 @@ private[prov] object ProvenanceQueries {
     StructField("transformation_type", StringType),
     StructField("kind", StringType, nullable = false),
     StructField("source", StringType)))
+
+  private val GraphSummarySchema: StructType = StructType(Seq(
+    StructField("kind", StringType, nullable = false), StructField("dst", StringType),
+    StructField("src", StringType), StructField("n", LongType, nullable = false)))
 }

@@ -1,7 +1,13 @@
 package graft.prov
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.storage.StorageLevel
 
 /** Per-record provenance for the RELATIONAL surface — beyond reference
   * parity: the reference's SQL layer gains no provenance at all (its
@@ -17,7 +23,17 @@ import org.apache.spark.sql.functions._
   *    (reference semantics, DataElement.scala:78-86); at 100 TB that
   *    cache pressure is the difference between lineage being free and
   *    lineage pinning the working set. Call [[ProvFrame.materialize]]
-  *    only to avoid recomputing a long chain at flush time.
+  *    only to avoid recomputing a long chain several actions re-read.
+  *  - element rows are captured INSIDE the action, like the typed
+  *    layer's: [[ProvFrame.result]] puts an [[ElementTee]] over every
+  *    unflushed element-creating frame of the chain, which stages the
+  *    frame's rows into [[ElementSideWriter]] as they pass, and flush
+  *    commits the staged files. The tees record every column of their
+  *    frames, so the action reads the rows and columns the elements
+  *    hold, not only those the result needs — one scan of the source
+  *    serves both the result and the capture. A frame no action
+  *    fully computed (never acted on, `take`, `limit`) is completed at
+  *    flush by one pass over its teed plan.
   *  - provenance columns are ordinary projections, so Catalyst still
   *    pushes user predicates into the scan and prunes unread columns
   *    (asserted in RelationalProvenanceSpec) — the SURVEY §4.2 concern
@@ -44,8 +60,8 @@ object RelationalProvenance {
     *
     *  - [[Granularity.Element]] (default): one element per output row,
     *    full record-level lineage. Capture writes O(rows) element rows
-    *    at flush — ~0.85 µs/element measured, which at 20M+ rows
-    *    dwarfs a codegen'd uncaptured aggregate (PARITY: 73× at 20M).
+    *    inside the action, which at 20M+ rows still dwarfs a codegen'd
+    *    uncaptured aggregate (PARITY, ScaleBench `prov_frame`).
     *  - [[Granularity.Task]]: counts + boundaries only. The task
     *    graph (nodes, edges, schemas, descriptions) is captured
     *    exactly as before, and each element-creating task flushes ONE
@@ -56,7 +72,7 @@ object RelationalProvenance {
     *    elements exist, and the per-row id/dep arithmetic collapses
     *    to constants Catalyst folds away — capture cost becomes a
     *    handful of count aggregates at flush, independent of row
-    *    width and near-independent of row count.
+    *    width and near-independent of row count. No tee is placed.
     */
   sealed trait Granularity
   object Granularity {
@@ -83,7 +99,7 @@ object RelationalProvenance {
         if (taskLevel) lit("")
         else mintId(session.executionId, task.id, keyCols.map(col)))
       .withColumn(DEPS, array().cast("array<string>"))
-    attach(session, task, out, taskLevel = taskLevel)
+    attach(session, task, out, Nil, taskLevel = taskLevel)
   }
 
   /** Deterministic element id: md5 over execution, task, and the id
@@ -100,25 +116,25 @@ object RelationalProvenance {
 
   private[prov] def attach(session: ProvSession, task: TaskState,
                            df: DataFrame,
+                           parents: Seq[ProvFrame],
                            createsElements: Boolean = true,
                            spliced: Boolean = false,
                            taskLevel: Boolean = false): ProvFrame = {
     val userCols = df.columns.filterNot(Set(ID, DEPS)).toSeq
     task.schemaFields = userCols
     task.usingDefaultSchema = false
-    val frame = new ProvFrame(df, task, session, spliced, taskLevel)
+    val frame = new ProvFrame(df, task, session, parents, spliced, taskLevel)
     if (session.captureEnabled && createsElements && !task.ignored)
       task.elements =
-        // task mode: no plan to cache — a stats count is a codegen'd
+        // task mode: no per-row elements — a stats count is a codegen'd
         // columnar aggregate over the (constant-folded) chain, cheaper to
         // recompute per branch than to transiently cache multi-million-row
         // frames whose rows the flush never writes (measured at 20M rows:
         // caching 6.7 s vs chain-replay counts ~1.5 s)
         if (taskLevel) Elements.Stats(() => frame.statsRows())
-        // frames are NOT session-persisted (deterministic ids need no
-        // cache) — the flush batch caches the plan TRANSIENTLY when a
-        // downstream task's branch re-reads it
-        else Elements.Replayed(() => frame.elementRows(), df)
+        // element mode: the tee in `result` stages the rows inside the
+        // action; flush runs the teed plan only if no action completed it
+        else Elements.SideCaptured(ids => frame.teed(t => ids(t.id)))
     frame
   }
 
@@ -157,6 +173,8 @@ final class ProvFrame private[prov] (
     private[prov] val df: DataFrame,
     private[prov] val task: TaskState,
     val session: ProvSession,
+    /** The frames this one was derived from: the chain [[result]] tees. */
+    private[prov] val parents: Seq[ProvFrame],
     /** true for pass-through results: their ID/DEPS columns are already
       * normalized to child-consumable form (DEPS = real parent element
       * ids, ID = id-part token), row-wise — so a union mixing an ignored
@@ -189,24 +207,64 @@ final class ProvFrame private[prov] (
   private def depsOrBlank(deps: Column): Column =
     if (taskLevel) array().cast("array<string>") else deps
 
-  /** User-visible columns (provenance columns stripped). */
-  def result: DataFrame = df.drop(ID, DEPS)
+  /** User-visible columns (provenance columns stripped), over this
+    * frame's plan with an [[ElementTee]] on every frame of its chain
+    * whose elements are not yet flushed: the action that computes the
+    * result stages those elements in its own pass. The tees record
+    * every column of their frames, so the action reads the rows and
+    * columns the elements hold (not only those the result needs);
+    * with capture off, or once the chain is flushed, no tee is placed.
+    */
+  def result: DataFrame =
+    teed(t => !t.flushed && t.elements.isInstanceOf[Elements.SideCaptured])
+      .drop(ID, DEPS)
 
   private def userCols: Seq[String] = df.columns.filterNot(Set(ID, DEPS)).toSeq
 
-  /** Element rows for the flush layout — values grid = one row of the
-    * user columns as strings (same shape the reference stores,
-    * DataElement.scala:146-155).
+  private def plan: LogicalPlan = df.queryExecution.analyzed
+
+  /** `df` with an [[ElementTee]] over the plan of every frame of this
+    * chain (this one and its transitive parents) whose task `tee`
+    * selects. Children build on their parents' `df`, so each parent's
+    * analyzed plan is a subtree of this one's; the tee goes over each
+    * occurrence. A parent whose subtree the analyzer rewrote (the
+    * right side of a self-join) gets no tee here, and neither do the
+    * parents of a materialized frame, whose cache replaces its subtree
+    * only while that subtree is unchanged; flush completes them from
+    * their own plans.
     */
-  private[prov] def elementRows(): Dataset[ElementRow] = {
-    val cols = userCols
-    df.select(
-      lit(execId).as("execution_id"),
-      lit(task.id).as("task_id"),
-      col(ID).as("element_id"),
-      array(array(cols.map(c => col(c).cast("string")): _*)).as("values"),
-      col(DEPS).as("deps")
-    ).as[ElementRow](ProvSession.elementRowEnc)
+  private[prov] def teed(tee: TaskState => Boolean): DataFrame = {
+    val tees = mutable.HashMap[LogicalPlan, ProvFrame]()
+    val seen = mutable.Set[ProvFrame]()
+    def walk(f: ProvFrame): Unit = if (seen.add(f)) {
+      if (tee(f.task)) tees(f.plan) = f
+      if (f.df.storageLevel == StorageLevel.NONE) f.parents.foreach(walk)
+    }
+    walk(this)
+    if (tees.isEmpty) df
+    else {
+      if (!spark.experimental.extraStrategies.contains(ElementTeeStrategy))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ ElementTeeStrategy
+      def rewrite(p: LogicalPlan): LogicalPlan = {
+        val q = p.mapChildren(rewrite)
+        tees.get(p).fold(q)(_.teeOver(q))
+      }
+      GraftSqlBridge.ofRows(spark, rewrite(plan))
+    }
+  }
+
+  /** This frame's tee over `child` (its plan, possibly with tees
+    * inside): the element id, the deps and the user columns cast to
+    * strings — one row of the values grid, the shape the reference
+    * stores (DataElement.scala:146-155).
+    */
+  private def teeOver(child: LogicalPlan): LogicalPlan = {
+    val (prov, user) = child.output.partition(a => a.name == ID || a.name == DEPS)
+    def attr(n: String) = prov.find(_.name == n).get
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    ElementTee(attr(ID), attr(DEPS), user.map(Cast(_, StringType, tz)),
+      session.sink(task.id), child)
   }
 
   /** The single task-granularity element: `[["__n_rows__", count]]`,
@@ -266,8 +324,11 @@ final class ProvFrame private[prov] (
   }
 
   /** Persist the provenance-carrying plan. Never needed for lineage
-    * correctness (ids are deterministic) — only to avoid recomputing a
-    * long chain once per task at flush.
+    * correctness (ids are deterministic) and not for capture (the action
+    * on [[result]] stages the elements) — only to avoid recomputing a
+    * long chain that several actions or derived frames re-read. The
+    * cache is filled from the plan without tees, so this frame's
+    * parents are completed by one more pass at flush.
     */
   def materialize(): this.type = { session.track(df); this }
 
@@ -283,7 +344,7 @@ final class ProvFrame private[prov] (
       .withColumn(ID, mintOrBlank(t.id, Seq(col("_prov_pi"))))
       .withColumn(DEPS, depsOrBlank(col("_prov_pd")))
       .drop("_prov_pd", "_prov_pi")
-    attach(session, t, out, taskLevel = taskLevel)
+    attach(session, t, out, Seq(this), taskLevel = taskLevel)
   }
 
   /** Explode an array column into one row per element — flatMap-style
@@ -314,7 +375,7 @@ final class ProvFrame private[prov] (
         Seq(col("_prov_pi"), col("_prov_pos").cast("string"))))
       .withColumn(DEPS, depsOrBlank(col("_prov_pd")))
       .drop("_prov_pd", "_prov_pi", "_prov_pos")
-    attach(session, t, out, taskLevel = taskLevel)
+    attach(session, t, out, Seq(this), taskLevel = taskLevel)
   }
 
   /** Filter. With `ProvSession.captureDropped`, rejected rows feed
@@ -333,7 +394,7 @@ final class ProvFrame private[prov] (
       .withColumn(ID, mintOrBlank(t.id, Seq(col("_prov_pi"))))
       .withColumn(DEPS, depsOrBlank(col("_prov_pd")))
       .drop("_prov_pd", "_prov_pi")
-    val frame = attach(session, t, out, taskLevel = taskLevel)
+    val frame = attach(session, t, out, Seq(this), taskLevel = taskLevel)
     if (session.captureEnabled && session.captureDropped && !taskLevel) {
       val eid = execId
       val tid = t.id
@@ -373,7 +434,7 @@ final class ProvFrame private[prov] (
       .agg(depAgg.as(DEPS))
       .withColumn(DEPS, depsOrBlank(col(DEPS)))
       .withColumn(ID, mintOrBlank(t.id, cols.map(col)))
-    attach(session, t, out, taskLevel = taskLevel)
+    attach(session, t, out, Seq(this), taskLevel = taskLevel)
   }
 
   /** Equi-join on shared column names; each output row depends on both
@@ -421,7 +482,7 @@ final class ProvFrame private[prov] (
         org.apache.spark.sql.functions.filter(
           array(col("_prov_ld"), col("_prov_rd")), _.isNotNull))))
       .drop("_prov_ld", "_prov_li", "_prov_rd", "_prov_ri")
-    attach(session, t, out, taskLevel = taskLevel)
+    attach(session, t, out, Seq(this, other), taskLevel = taskLevel)
   }
 
   /** Grouped aggregation: one element per group whose deps are ALL
@@ -448,7 +509,7 @@ final class ProvFrame private[prov] (
     val out = grouped
       .withColumn(DEPS, depsOrBlank(col(DEPS)))
       .withColumn(ID, mintOrBlank(t.id, keyNames.map(col)))
-    attach(session, t, out, taskLevel = taskLevel)
+    attach(session, t, out, Seq(this), taskLevel = taskLevel)
   }
 
   /** Windowed running aggregates with EXACT frame lineage — a surface
@@ -490,7 +551,7 @@ final class ProvFrame private[prov] (
       .withColumn(ID, mintOrBlank(t.id, Seq(col("_prov_pi"))))
       .withColumn(DEPS, depsOrBlank(frameDeps))
       .drop("_prov_pi")
-    attach(session, t, out, taskLevel = taskLevel)
+    attach(session, t, out, Seq(this), taskLevel = taskLevel)
   }
 
   // ---- pass-through ops (no elements; reference: UnionRDD.scala:108) --
@@ -501,18 +562,18 @@ final class ProvFrame private[prov] (
     val t = session.newTask(TransformationType.UNION,
       Seq(task.id, other.task.id), description)
     attach(session, t, passThroughDf.unionByName(other.passThroughDf),
-      createsElements = false, spliced = true, taskLevel = taskLevel)
+      Seq(this, other), createsElements = false, spliced = true, taskLevel = taskLevel)
   }
 
   def orderBy(cols: Column*): ProvFrame = {
     val t = session.newTask(TransformationType.SORT_BY_KEY, Seq(task.id), "orderBy")
-    attach(session, t, passThroughDf.orderBy(cols: _*),
+    attach(session, t, passThroughDf.orderBy(cols: _*), Seq(this),
       createsElements = false, spliced = true, taskLevel = taskLevel)
   }
 
   def limit(n: Int): ProvFrame = {
     val t = session.newTask(TransformationType.COALESCED, Seq(task.id), s"limit($n)")
-    attach(session, t, passThroughDf.limit(n),
+    attach(session, t, passThroughDf.limit(n), Seq(this),
       createsElements = false, spliced = true, taskLevel = taskLevel)
   }
 }
