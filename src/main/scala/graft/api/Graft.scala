@@ -2456,7 +2456,8 @@ object Graft {
     */
   def imageNearDupCount(hashed: DataFrame, maxHamming: Int = 4,
                         bucketCap: Option[Long] = None): DataFrame =
-    MultimodalQueries.phashNearDupCount(hashed, maxHamming, bucketCap)
+    MultimodalQueries.nearDupPairCount(
+      MultimodalQueries.phashNearDups(hashed, maxHamming, bucketCap))
 
   /** 64-bit audio energy fingerprint of opaque WAV payloads, decoded
     * with the real JDK codec: 64 relative |amplitude| windows,
@@ -2479,7 +2480,7 @@ object Graft {
     */
   def audioNearDups(fps: DataFrame, maxHamming: Int = 4,
                     bucketCap: Option[Long] = None): DataFrame =
-    MultimodalQueries.audioFpNearDups(fps, maxHamming, bucketCap)
+    MultimodalQueries.phashNearDups(fps, maxHamming, bucketCap)
 
   /** [[audioNearDups]] collapsed to a one-row pair count (`n_pairs`) —
     * the countOnly mode for output-bound regimes: on a hyper-duplicated
@@ -2490,7 +2491,8 @@ object Graft {
     */
   def audioNearDupCount(fps: DataFrame, maxHamming: Int = 4,
                         bucketCap: Option[Long] = None): DataFrame =
-    MultimodalQueries.audioFpNearDupCount(fps, maxHamming, bucketCap)
+    MultimodalQueries.nearDupPairCount(
+      MultimodalQueries.phashNearDups(fps, maxHamming, bucketCap))
 
   /** Screen incoming image hashes against a small broadcast index of
     * existing-corpus hashes — the at-ingest dedup shape
@@ -2640,7 +2642,8 @@ object Graft {
     */
   def videoNearDupCount(frameHashes: DataFrame, maxHamming: Int = 4,
                         bucketCap: Option[Long] = None): DataFrame =
-    MultimodalQueries.videoNearDupCount(frameHashes, maxHamming, bucketCap)
+    MultimodalQueries.nearDupPairCount(
+      MultimodalQueries.videoNearDups(frameHashes, maxHamming, bucketCap))
 
   /** Screen incoming videos' frame hashes ([[videoFrameHashes]] output)
     * against a (small, broadcast) index of existing-corpus frame

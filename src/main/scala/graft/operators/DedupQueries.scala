@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import PairCandidates._
 
 /** Deduplication operators over the `documents` table — the
   * training-data-pipeline surface: exact, normalized, exact n-gram
@@ -159,11 +160,10 @@ object DedupQueries {
     require(maxDocFreq >= 1, s"maxDocFreq must be >= 1 (got $maxDocFreq)")
     val sh0 = shingleArraysOf(docs)
       .select(col("doc_id"), explode(col("sh")).as("s"))
-    val rare = sh0.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDocFreq).select(col("s"))
     // lazy localCheckpoint (d08's pattern): blocks die with the handle
     // via the ContextCleaner instead of living in CacheManager forever
-    val sh = sh0.join(rare, Seq("s")).localCheckpoint(eager = false)
+    val sh = capHot(sh0, Seq("s"), Some(maxDocFreq.toLong),
+      broadcastCool = false).localCheckpoint(eager = false)
     clusterLabelsFromShingles(sh)
   }
 
@@ -173,15 +173,7 @@ object DedupQueries {
     * component's min doc_id.
     */
   private def clusterLabelsFromShingles(sh: DataFrame): DataFrame = {
-    val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val a = sh.select(col("doc_id").as("da"), col("s"))
-    val b = sh.select(col("doc_id").as("db"), col("s"))
-    val pairs = a.join(b, Seq("s")).filter(col("da") < col("db"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-      .join(cnt.select(col("doc_id").as("da"), col("n").as("na")), Seq("da"))
-      .join(cnt.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
-      .filter(round(col("c") / (col("na") + col("nb") - col("c")), 4) >= 0.5)
-      .select(col("da"), col("db")).cache()
+    val pairs = jaccardCounted(sh, 0.5).select(col("da"), col("db")).cache()
     try
       ConnectedComponents.run(pairs).labels
         .select(col("doc_id"), col("label").as("canonical_id"))
@@ -256,18 +248,7 @@ object DedupQueries {
       // (ContextCleaner) instead of living in CacheManager forever,
       // and eager = false defers the materializing job to the caller's
       // first action (same pattern as Graft.decontaminate's bench side)
-      val sh = shingles(s, d).localCheckpoint(eager = false)
-      val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val a = sh.select(col("doc_id").as("da"), col("s"))
-      val b = sh.select(col("doc_id").as("db"), col("s"))
-      val common = a.join(b, Seq("s")).filter(col("da") < col("db"))
-        .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-      common
-        .join(cnt.select(col("doc_id").as("da"), col("n").as("na")), Seq("da"))
-        .join(cnt.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
-        .withColumn("jaccard", round(col("c") / (col("na") + col("nb") - col("c")), 4))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("da"), col("db"), col("jaccard"))
+      jaccardCounted(shingles(s, d).localCheckpoint(eager = false), 0.5)
         .orderBy(col("da"), col("db"))
     },
     Some(s"""WITH $shinglesSql,
@@ -343,22 +324,9 @@ object DedupQueries {
     }
     val buckets = docs.select(col("doc_id"),
       explode(array(bandCols: _*)).as("bucket"))
-    val cand = buckets.alias("x")
-      .join(buckets.alias("y"), col("x.bucket") === col("y.bucket") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
-      .distinct()
-
+    val cand = selfPairs(buckets, "bucket", "doc_id", ("da", "db")).distinct()
     // exact-Jaccard verification: fetch both shingle arrays, intersect
-    cand
-      .join(docs.select(col("doc_id").as("da"), col("sh").as("sha"),
-        col("n").as("na")), Seq("da"))
-      .join(docs.select(col("doc_id").as("db"), col("sh").as("shb"),
-        col("n").as("nb")), Seq("db"))
-      .withColumn("c", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("jaccard", round(col("c") / (col("na") + col("nb") - col("c")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("da"), col("db"), col("jaccard"))
+    jaccardArrays(cand, docs, docs, ("da", "db"), threshold)
   }
 
   val d04MinHashLsh = QueryDef(
@@ -415,11 +383,9 @@ object DedupQueries {
         struct(lit(bnd).as("band"),
           expr(s"(simhash >> ${bnd * 15}) & 32767").as("chunk"))): _*))
         .as("bucket"))
-    banded.alias("x")
-      .join(banded.alias("y"), col("x.bucket") === col("y.bucket") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"),
-        expr("CAST(bit_count(x.simhash ^ y.simhash) AS BIGINT)").as("hamming"))
+    selfPairs(banded, "bucket", "doc_id", ("da", "db"), "simhash")
+      .select(col("da"), col("db"),
+        expr("CAST(bit_count(asimhash ^ bsimhash) AS BIGINT)").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -605,23 +571,10 @@ object DedupQueries {
   val d08JaccardCapped = QueryDef(
     "d08_jaccard_capped",
     (s, d) => {
-      val dfCap = 100
-      val sh = shingles(s, d)
-      val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= dfCap).select(col("s"))
-      val shc = sh.join(rare, Seq("s")).localCheckpoint(eager = false)
-      val cnt = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val a = shc.select(col("doc_id").as("da"), col("s"))
-      val b = shc.select(col("doc_id").as("db"), col("s"))
-      val common = a.join(b, Seq("s")).filter(col("da") < col("db"))
-        .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-      common
-        .join(cnt.select(col("doc_id").as("da"), col("n").as("na")), Seq("da"))
-        .join(cnt.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
-        .withColumn("jaccard", round(col("c") / (col("na") + col("nb") - col("c")), 4))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("da"), col("db"), col("jaccard"))
-        .orderBy(col("da"), col("db"))
+      val dfCap = 100L
+      val shc = capHot(shingles(s, d), Seq("s"), Some(dfCap),
+        broadcastCool = false).localCheckpoint(eager = false)
+      jaccardCounted(shc, 0.5).orderBy(col("da"), col("db"))
     },
     Some(s"""WITH $shinglesSql,
             |rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 100),
@@ -663,7 +616,7 @@ object DedupQueries {
       val bands = 16
       val rowsPerBand = numHashes / bands
       val prime = 2038074743L
-      val cap = 50
+      val cap = 50L
 
       val docs = shingleArrays(s, d)
         .select(col("doc_id"), col("sh"), size(col("sh")).as("n"),
@@ -679,27 +632,11 @@ object DedupQueries {
       }
       val buckets = docs.select(col("doc_id"),
         explode(array(bandKeys: _*)).as("bkey"))
-      // population cap: one map-side-combined count per bucket, hot
-      // buckets never reach the self-join
-      val cool = buckets.groupBy(col("bkey"))
-        .agg(count(lit(1)).as("bn")).filter(col("bn") <= cap)
-        .select(col("bkey"))
-      val inCool = buckets.join(cool, Seq("bkey"))
-      val cand = inCool.alias("x")
-        .join(inCool.alias("y"), col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
-        .distinct()
-
-      cand
-        .join(docs.select(col("doc_id").as("da"), col("sh").as("sha"),
-          col("n").as("na")), Seq("da"))
-        .join(docs.select(col("doc_id").as("db"), col("sh").as("shb"),
-          col("n").as("nb")), Seq("db"))
-        .withColumn("c", size(array_intersect(col("sha"), col("shb"))))
-        .withColumn("jaccard", round(col("c") / (col("na") + col("nb") - col("c")), 4))
-        .filter(col("jaccard") >= 0.8)
-        .select(col("da"), col("db"), col("jaccard"))
+      // population cap: hot buckets never reach the self-join
+      val inCool = capHot(buckets, Seq("bkey"), Some(cap),
+        broadcastCool = false)
+      val cand = selfPairs(inCool, "bkey", "doc_id", ("da", "db")).distinct()
+      jaccardArrays(cand, docs, docs, ("da", "db"), 0.8)
         .orderBy(col("da"), col("db"))
     },
     Some {
@@ -1357,16 +1294,8 @@ object DedupQueries {
     val cand = buckets(train, "train_id")
       .join(broadcast(buckets(bench, "bench_id")), Seq("bucket"))
       .select(col("train_id"), col("bench_id")).distinct()
-    cand
-      .join(train.select(col("doc_id").as("train_id"), col("sh").as("sha"),
-        col("n").as("na")), Seq("train_id"))
-      .join(broadcast(bench.select(col("doc_id").as("bench_id"),
-        col("sh").as("shb"), col("n").as("nb"))), Seq("bench_id"))
-      .withColumn("c", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("jaccard",
-        round(col("c") / (col("na") + col("nb") - col("c")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("train_id"), col("bench_id"), col("jaccard"))
+    jaccardArrays(cand, train, broadcast(bench), ("train_id", "bench_id"),
+      threshold)
   }
 
   val d15CrossDecontamination = QueryDef(
@@ -1599,19 +1528,10 @@ object DedupQueries {
     * (the round-12 opt-in left default-config users with no loud
     * fence between them and an opaque broadcast failure or a driver
     * OOM). Both are generous for real micro-batches and overridable
-    * per session; both clamp below Int.MaxValue so a huge override
-    * degrades to the largest enforceable bound instead of an integer
-    * overflow turning the guard into a confusing limit() failure.
+    * per session; both are read through [[graft.FenceConf]].
     */
   private[graft] val MaxScreenBatchRowsDefault = 1000000L
   private[graft] val MaxScreenCandidatesDefault = 1000000L
-
-  private def boundedConf(spark: SparkSession, key: String,
-                          default: Long): Int = {
-    val v = spark.conf.getOption(key).map(_.toLong).getOrElse(default)
-    require(v >= 1, s"$key must be >= 1, got $v")
-    math.min(v, Int.MaxValue.toLong - 1).toInt
-  }
 
   /** ENFORCE the screens' documented batch-size contract
     * (`spark.graft.maxScreenBatchRows`, default
@@ -1626,7 +1546,7 @@ object DedupQueries {
     */
   private[graft] def enforceScreenBatchContract(batch: DataFrame,
                                                 what: String): Unit = {
-    val max = boundedConf(batch.sparkSession,
+    val max = graft.FenceConf.read(batch.sparkSession,
       "spark.graft.maxScreenBatchRows", MaxScreenBatchRowsDefault)
     if (batch.limit(max + 1).count() > max)
       throw new IllegalStateException(
@@ -1663,28 +1583,17 @@ object DedupQueries {
     // stored. False positives only add probes; verdicts are
     // UNCHANGED by construction (LshIndexSpec pins it).
     val inBands = bkeyBloom.fold(inBandsAll) { case (words, mBits) =>
-      val keep = BloomSketch.probe(
-          inBandsAll.select(col("new_id").as("doc_id"),
-            col("bkey").as("h")).distinct(), words, mBits)
-        .filter(col("bloom_hit"))
-        .select(col("doc_id").as("new_id"), col("h").as("bkey"))
-      inBandsAll.join(broadcast(keep), Seq("new_id", "bkey"))
+      bloomKeep(inBandsAll, "new_id", "bkey", words, mBits)
     }
-    def candOf(bands: DataFrame): DataFrame = {
-      val sBands = bucketCap.fold(bands) { cap =>
-        // one map-side-combined count; hot buckets never reach the
-        // join. On the pruned path the count runs over the pruned
-        // table — exact for every probed bkey, whose full population
-        // shares its bucket value and so survives the prune
-        val cool = bands.groupBy(col("bkey"))
-          .agg(count(lit(1)).as("bn")).filter(col("bn") <= cap)
-          .select(col("bkey"))
-        bands.join(cool, Seq("bkey"))
-      }
-      sBands.join(broadcast(inBands), Seq("bkey"))
+    // hot buckets never reach the join. On the pruned path the cap
+    // counts over the pruned table — exact for every probed bkey, whose
+    // full population shares its bucket value and so survives the prune
+    def candOf(bands: DataFrame): DataFrame =
+      capHot(bands, Seq("bkey"), bucketCap.map(_.toLong),
+          broadcastCool = false)
+        .join(broadcast(inBands), Seq("bkey"))
         .select(col("new_id"), col("vec_id").as("stored_id"))
         .distinct()
-    }
     // PROBE PRUNING (bucketed stores): the batch's band keys derive
     // their bucket values with the store's own expression — pmod(hash
     // (bkey), n) — and the literal set (≤ n ints, pulled driver-side
@@ -1703,12 +1612,8 @@ object DedupQueries {
     val (cand, prunedSigs) =
       if (probeBuckets > 0 && storedBands.columns.contains("bb") &&
           storedSigs.columns.contains("sb")) {
-        val bbs = inBands
-          .select(pmod(hash(col("bkey")), lit(probeBuckets)).as("bb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val prunedBands =
-          if (bbs.isEmpty) storedBands.filter(lit(false))
-          else storedBands.filter(col("bb").isInCollection(bbs))
+        val prunedBands = pruneToBuckets(storedBands, "bb",
+          batchBuckets(inBands, pmod(hash(col("bkey")), lit(probeBuckets))))
         // GUARDED pull: the candidate set is O(batch band keys ×
         // stored-bucket population) — bounded on every healthy store,
         // but a hot bucket (millions of near-identical stored docs)
@@ -1717,7 +1622,7 @@ object DedupQueries {
         // count-then-collect), and overflow fails at a NAMED boundary
         // that says which lever to pull.
         val spark = storedSigs.sparkSession
-        val maxCand = boundedConf(spark,
+        val maxCand = graft.FenceConf.read(spark,
           "spark.graft.maxScreenCandidates", MaxScreenCandidatesDefault)
         val pulled = candOf(prunedBands)
           .withColumn("sb", pmod(hash(col("stored_id")),
@@ -1736,11 +1641,8 @@ object DedupQueries {
         import spark.implicits._
         val localCand = pulled.map(r => (r.getLong(0), r.getLong(1)))
           .toSeq.toDF("new_id", "stored_id")
-        val sbs = pulled.map(_.getInt(2)).distinct.toSeq
-        val sigsPr =
-          if (sbs.isEmpty) storedSigs.filter(lit(false))
-          else storedSigs.filter(col("sb").isInCollection(sbs))
-        (localCand, sigsPr)
+        (localCand, pruneToBuckets(storedSigs, "sb",
+          pulled.map(_.getInt(2)).distinct.toSeq))
       } else (candOf(storedBands), storedSigs)
     val minMatches = math.ceil(numHashes * threshold).toInt
     // verify: candidates (small — bucket collisions only) broadcast

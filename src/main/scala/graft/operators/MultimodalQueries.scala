@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import PairCandidates._
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with
   * typed metadata, decoded/featurized in batched per-partition passes.
@@ -694,12 +695,7 @@ object MultimodalQueries {
     val ix = phashBanded(index)
       .select(col("media_id").as("mb"), col("lo").as("blo"),
         col("hi").as("bhi"), col("bucket"))
-    in.join(broadcast(ix), Seq("bucket"))
-      .select(col("ma"), col("mb"),
-        expr("CAST(bit_count(alo ^ blo) + bit_count(ahi ^ bhi) AS BIGINT)")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 4)
+    hammingWithin(in.join(broadcast(ix), Seq("bucket")), 4)
   }
 
   /** [[phashScreen]] with the broadcast FLIPPED for a PERSISTED index:
@@ -719,26 +715,16 @@ object MultimodalQueries {
       : DataFrame = {
     graft.operators.DedupQueries
       .enforceScreenBatchContract(incoming, "phash screen")
-    val ix0 = phashBanded(stored)
-    val ix = bucketCap match {
-      case Some(cap) =>
-        val cool = ix0.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("bn")).filter(col("bn") <= cap)
-          .select(col("bucket"))
-        ix0.join(broadcast(cool), Seq("bucket"))
-      case None => ix0
-    }
+    val ix = capHot(phashBanded(stored), Seq("bucket"), bucketCap,
+      broadcastCool = true)
     val in = phashBanded(incoming)
       .select(col("media_id").as("ma"), col("lo").as("alo"),
         col("hi").as("ahi"), col("bucket"))
-    ix.select(col("media_id").as("mb"), col("lo").as("blo"),
-        col("hi").as("bhi"), col("bucket"))
-      .join(broadcast(in), Seq("bucket"))
-      .select(col("ma"), col("mb"),
-        expr("CAST(bit_count(alo ^ blo) + bit_count(ahi ^ bhi) AS BIGINT)")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    hammingWithin(
+      ix.select(col("media_id").as("mb"), col("lo").as("blo"),
+          col("hi").as("bhi"), col("bucket"))
+        .join(broadcast(in), Seq("bucket")),
+      maxHamming)
   }
 
   /** [[phashScreenStored]] over a PERSISTED banded projection — the
@@ -780,39 +766,18 @@ object MultimodalQueries {
     // derives an EMPTY pb set and the stored scan folds away
     // entirely. FPs only add probes; verdicts unchanged.
     val in = pbBloom.fold(inAll) { case (words, mBits) =>
-      val keyed = inAll.withColumn("h",
-        concat_ws(":", col("band"), col("chunk")))
-      val keep = graft.operators.DedupQueries.BloomSketch.probe(
-          keyed.select(col("ma").as("doc_id"), col("h")).distinct(),
-          words, mBits)
-        .filter(col("bloom_hit"))
-        .select(col("doc_id").as("ma"), col("h"))
-      keyed.join(broadcast(keep), Seq("ma", "h")).drop("h")
+      bloomKeep(inAll.withColumn("h", concat_ws(":", col("band"), col("chunk"))),
+        "ma", "h", words, mBits).drop("h")
     }
-    val pbs = in
-      .select((col("band") * nBuckets + pmod(col("chunk"),
-        lit(nBuckets.toLong))).cast("int").as("pb"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned =
-      if (pbs.isEmpty) storedBands.filter(lit(false))
-      else storedBands.filter(col("pb").isInCollection(pbs))
+    val pruned = pruneToBuckets(storedBands, "pb", batchBuckets(in,
+      (col("band") * nBuckets + pmod(col("chunk"), lit(nBuckets.toLong)))
+        .cast("int")))
     val ix0 = pruned.select(col("media_id").as("mb"),
       col("lo").as("blo"), col("hi").as("bhi"), col("band"),
       col("chunk"))
-    val ix = bucketCap match {
-      case Some(cap) =>
-        val cool = ix0.groupBy(col("band"), col("chunk"))
-          .agg(count(lit(1)).as("bn")).filter(col("bn") <= cap)
-          .select(col("band"), col("chunk"))
-        ix0.join(broadcast(cool), Seq("band", "chunk"))
-      case None => ix0
-    }
-    ix.join(broadcast(in), Seq("band", "chunk"))
-      .select(col("ma"), col("mb"),
-        expr("CAST(bit_count(alo ^ blo) + bit_count(ahi ^ bhi) AS BIGINT)")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    val ix = capHot(ix0, Seq("band", "chunk"), bucketCap,
+      broadcastCool = true)
+    hammingWithin(ix.join(broadcast(in), Seq("band", "chunk")), maxHamming)
   }
 
   /** mm07's banded self-join over a (media_id, lo, hi) frame — the
@@ -826,23 +791,11 @@ object MultimodalQueries {
   private[graft] def phashNearDups(hashed: DataFrame, maxHamming: Int = 4,
                                    bucketCap: Option[Long] = None)
       : DataFrame = {
-    val bandedAll = phashBanded(hashed)
-    val banded = bucketCap match {
-      case Some(cap) =>
-        val cool = bandedAll.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("bn")).filter(col("bn") <= cap)
-          .select(col("bucket"))
-        bandedAll.join(broadcast(cool), Seq("bucket"))
-      case None => bandedAll
-    }
-    banded.alias("x")
-      .join(banded.alias("y"), col("x.bucket") === col("y.bucket") &&
-        col("x.media_id") < col("y.media_id"))
-      .select(col("x.media_id").as("ma"), col("y.media_id").as("mb"),
-        expr("CAST(bit_count(x.lo ^ y.lo) + bit_count(x.hi ^ y.hi) AS BIGINT)")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    val banded = capHot(phashBanded(hashed), Seq("bucket"), bucketCap,
+      broadcastCool = true)
+    hammingWithin(
+      selfPairs(banded, "bucket", "media_id", ("ma", "mb"), "lo", "hi"),
+      maxHamming)
   }
 
   /** Aggregate pair COUNT of a near-dup pair frame — the output-bound
@@ -856,12 +809,12 @@ object MultimodalQueries {
   private[graft] def nearDupPairCount(pairs: DataFrame): DataFrame =
     pairs.agg(count(lit(1)).as("n_pairs"))
 
-  /** [[phashNearDups]] collapsed to its pair count. */
-  private[graft] def phashNearDupCount(hashed: DataFrame,
-                                       maxHamming: Int = 4,
-                                       bucketCap: Option[Long] = None)
-      : DataFrame =
-    nearDupPairCount(phashNearDups(hashed, maxHamming, bucketCap))
+  /** `spark.graft.phashBucketCap`: the hot-bucket cap of the media
+    * near-dup gates (mm07, mm08, mm09 and their counts); unset for the
+    * gate run, whose oracles replay uncapped.
+    */
+  private def phashBucketCap(s: SparkSession): Option[Long] =
+    s.conf.getOption("spark.graft.phashBucketCap").map(_.toLong)
 
   /** 64-bit audio energy fingerprint of a WAV payload, decoded with the
     * REAL JDK codec (mm04's path): the clip's |amplitude| stream
@@ -925,36 +878,6 @@ object MultimodalQueries {
     }).toDF("media_id", "lo", "hi")
   }
 
-  /** Banded near-dup pairs over (media_id, lo, hi) fingerprints — the
-    * [[graft.api.Graft.audioNearDups]] facade path. The 64-bit code
-    * shares mm07's two-word layout, so this IS [[phashNearDups]]: the
-    * same 5-band 13/12-bit chunks (complete for Hamming ≤ 4, 8192-value
-    * buckets per band) and the same `bucketCap` hot-bucket lever.
-    * Unsorted.
-    */
-  private[graft] def audioFpNearDups(fps: DataFrame,
-                                     maxHamming: Int = 4,
-                                     bucketCap: Option[Long] = None)
-      : DataFrame =
-    phashNearDups(fps, maxHamming, bucketCap)
-
-  /** [[audioFpNearDups]] collapsed to its pair count. */
-  private[graft] def audioFpNearDupCount(fps: DataFrame,
-                                         maxHamming: Int = 4,
-                                         bucketCap: Option[Long] = None)
-      : DataFrame =
-    nearDupPairCount(audioFpNearDups(fps, maxHamming, bucketCap))
-
-  /** Screen `incoming` audio fingerprints against a (small, broadcast)
-    * `index` of existing-corpus fingerprints — the at-ingest audio
-    * dedup shape ([[graft.streaming.MediaStreams.audioDedupScreen]]
-    * composes it per micro-batch). Both args are (media_id, lo, hi)
-    * frames; the 64-bit layout makes this [[phashScreen]] verbatim.
-    */
-  private[graft] def audioFpScreen(incoming: DataFrame,
-                                   index: DataFrame): DataFrame =
-    phashScreen(incoming, index)
-
   /** Audio fingerprint near-dup detection — the audio member of the
     * multimodal dedup family (images: mm07; video shots: mm06): decode
     * with the real codec, fingerprint ([[audioFp]] — 64 windows packed
@@ -984,8 +907,7 @@ object MultimodalQueries {
       // count, and capping band buckets bounds emitted pairs at cap²/2
       // per bucket (unset for the gate run — the oracle replays uncapped)
       graft.api.Graft.audioNearDups(fps,
-          bucketCap = s.conf.getOption("spark.graft.phashBucketCap")
-            .map(_.toLong))
+          bucketCap = phashBucketCap(s))
         .orderBy(col("ma"), col("mb"))
     },
     Some("""WITH base AS (
@@ -1189,30 +1111,13 @@ object MultimodalQueries {
                                    maxHamming: Int = 4,
                                    bucketCap: Option[Long] = None)
       : DataFrame = {
-    val bandedAll = videoBanded(frameHashes)
-    val banded = bucketCap match {
-      case Some(cap) =>
-        val cool = bandedAll.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("bn")).filter(col("bn") <= cap)
-          .select(col("bucket"))
-        bandedAll.join(broadcast(cool), Seq("bucket"))
-      case None => bandedAll
-    }
-    val cand = banded.alias("x")
-      .join(banded.alias("y"), col("x.bucket") === col("y.bucket") &&
-        col("x.media_id") < col("y.media_id"))
-      .select(col("x.media_id").as("ma"), col("y.media_id").as("mb"))
+    val banded = capHot(videoBanded(frameHashes), Seq("bucket"), bucketCap,
+      broadcastCool = true)
+    val cand = selfPairs(banded, "bucket", "media_id", ("ma", "mb"))
       .distinct()
     videoAlignedVerify(cand, frameHashes, frameHashes, maxHamming,
       broadcastIndex = false)
   }
-
-  /** [[videoNearDups]] collapsed to its pair count. */
-  private[graft] def videoNearDupCount(frameHashes: DataFrame,
-                                       maxHamming: Int = 4,
-                                       bucketCap: Option[Long] = None)
-      : DataFrame =
-    nearDupPairCount(videoNearDups(frameHashes, maxHamming, bucketCap))
 
   /** Video perceptual near-dup detection — the video member of the
     * multimodal dedup family (stills: mm07; audio: mm08; shot
@@ -1237,8 +1142,7 @@ object MultimodalQueries {
           .mapPartitions(_.map(id => (id, syntheticGif(id)))))
         .localCheckpoint()
       graft.api.Graft.videoNearDups(frames,
-          bucketCap = s.conf.getOption("spark.graft.phashBucketCap")
-            .map(_.toLong))
+          bucketCap = phashBucketCap(s))
         .orderBy(col("ma"), col("mb"))
     },
     Some("""WITH base AS (
@@ -1310,8 +1214,7 @@ object MultimodalQueries {
       // instead die with the handle (ContextCleaner)
       val hashed = phashed(s, d).localCheckpoint()
       graft.api.Graft.imageNearDups(hashed,
-          bucketCap = s.conf.getOption("spark.graft.phashBucketCap")
-            .map(_.toLong))
+          bucketCap = phashBucketCap(s))
         .orderBy(col("ma"), col("mb"))
     },
     Some("""WITH base AS (
@@ -1375,8 +1278,7 @@ object MultimodalQueries {
           .mapPartitions(_.map(id => (id, syntheticWav(id)))))
         .localCheckpoint()
       graft.api.Graft.audioNearDupCount(fps,
-        bucketCap = s.conf.getOption("spark.graft.phashBucketCap")
-          .map(_.toLong))
+        bucketCap = phashBucketCap(s))
     },
     mm08AudioFpDedup.oracle.map(o =>
       s"SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM ($o) AS p"))
@@ -1392,8 +1294,7 @@ object MultimodalQueries {
           .mapPartitions(_.map(id => (id, syntheticGif(id)))))
         .localCheckpoint()
       graft.api.Graft.videoNearDupCount(frames,
-        bucketCap = s.conf.getOption("spark.graft.phashBucketCap")
-          .map(_.toLong))
+        bucketCap = phashBucketCap(s))
     },
     mm09VideoNearDup.oracle.map(o =>
       s"SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM ($o) AS p"))

@@ -671,15 +671,12 @@ object SimilarityQueries {
     */
   private[operators] def semanticDedupVerdicts(
       assigned: DataFrame, tau: Double, cap: Int): DataFrame = {
-    val cool = assigned.groupBy(col("cell"))
-      .agg(count(lit(1)).as("cn")).filter(col("cn") <= cap)
-      .select(col("cell"))
-    val inCool = assigned.join(broadcast(cool), Seq("cell"))
-    val dropped = inCool.alias("a").join(inCool.alias("b"),
-        col("a.cell") === col("b.cell") &&
-        col("a.vec_id") < col("b.vec_id") &&
-        cosine_similarity(col("a.embedding"), col("b.embedding")) >= tau)
-      .select(col("b.vec_id").as("vec_id")).distinct()
+    val inCool = PairCandidates.capHot(assigned, Seq("cell"),
+      Some(cap.toLong), broadcastCool = true)
+    val dropped = PairCandidates.selfPairs(inCool, "cell", "vec_id",
+        ("va", "vb"), "embedding")
+      .filter(cosine_similarity(col("aembedding"), col("bembedding")) >= tau)
+      .select(col("vb").as("vec_id")).distinct()
       .withColumn("is_dropped", lit(true))
     assigned.join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
@@ -3450,9 +3447,8 @@ object SimilarityQueries {
     // inside a stock 1–4 GB driver heap, where 4M rows (multiple GB)
     // could OOM the driver BEFORE the fence fired. Raise the conf only
     // with driver memory to match.
-    val maxRows = math.min(Int.MaxValue - 1L,
-      spark.conf.getOption("spark.graft.maxMmrDriverRows")
-        .map(_.toLong).getOrElse(500000L)).toInt
+    val maxRows =
+      graft.FenceConf.read(spark, "spark.graft.maxMmrDriverRows", 500000L)
     val candRows = cands.limit(maxRows + 1).collect()
     require(candRows.length <= maxRows,
       s"mmrRerank: shortlist exceeds spark.graft.maxMmrDriverRows=" +

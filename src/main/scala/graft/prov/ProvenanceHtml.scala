@@ -301,6 +301,24 @@ groups.forEach((g, i) => {
 """
   }
 
-  private def esc(s: String): String =
+  /** HTML text and attribute escape (`"` too, for `href` values). */
+  def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+      .replace("\"", "&quot;")
+
+  /** A JSON string literal; `<` is escaped too, so JSON embedded in a
+    * `<script>` block stays `</script>`-safe.
+    */
+  def jstr(s: String): String = {
+    val b = new StringBuilder("\"")
+    Option(s).getOrElse("").foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '<' => b ++= "\\u003c"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
 }

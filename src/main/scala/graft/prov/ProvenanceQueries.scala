@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
+import ProvenanceHtml.jstr
+
 /** The reference's query surface (SURVEY §3.3 — the Kotlin/Spring web
   * app's endpoints over Cassandra, DataElementAPICtrl.kt /
   * TaskAPICtrl.kt / ExecutionAPICtrl.kt) re-expressed as plain Spark SQL
@@ -517,13 +519,8 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
     * many rows. Capture over a large corpus otherwise OOMs the driver
     * with no warning.
     */
-  private def exportMax: Int = {
-    val v = spark.conf.getOption("spark.graft.maxExportGraphRows")
-      .map(_.toLong).getOrElse(1000000L)
-    require(v >= 1,
-      s"spark.graft.maxExportGraphRows must be >= 1, got $v")
-    math.min(v, Int.MaxValue.toLong - 1).toInt
-  }
+  private def exportMax: Int =
+    graft.FenceConf.read(spark, "spark.graft.maxExportGraphRows", 1000000L)
 
   private def overFence(executionId: String, what: String,
                         max: Int): IllegalStateException =
@@ -556,19 +553,6 @@ final class ProvenanceQueries(spark: SparkSession, storeDir: String) {
   def exportJson(executionId: String, file: String): Unit =
     java.nio.file.Files.writeString(java.nio.file.Paths.get(file),
       jsonGraph(executionId))
-
-  private def jstr(s: String): String = {
-    val b = new StringBuilder("\"")
-    Option(s).getOrElse("").foreach {
-      case '"' => b ++= "\\\""
-      case '\\' => b ++= "\\\\"
-      case '\n' => b ++= "\\n"
-      case '<' => b ++= "\\u003c" // keeps embedded JSON </script>-safe
-      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
-      case c => b += c
-    }
-    (b += '"').toString
-  }
 
   /** Self-contained interactive graph page — the rendering half of the
     * reference's web UI (PagesCtrl.kt:13-73 serves dataflow/task/element

@@ -7,6 +7,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import ProvenanceHtml.{esc, jstr}
+
 /** Live provenance web server — the serving half of the reference's web
   * UI (SAMbA/WebApplication: a Spring app over Cassandra,
   * PagesCtrl.kt:13-73 + the API controllers). Here the same pages and
@@ -132,14 +134,6 @@ final class ProvenanceServer(spark: SparkSession, storeDir: String,
     try os.write(bytes) finally os.close()
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c    => c.toString
-    } + "\""
-
   /** Execution file tree: every (element, path) across the execution's
     * persisted FileGroup manifests — the shape the reference web app
     * renders as a tree (DataElementAPICtrl.kt:235-277). Downloads go to
@@ -149,14 +143,10 @@ final class ProvenanceServer(spark: SparkSession, storeDir: String,
                         executionId: String): String = {
     val entries = cas.fileTree(executionId).map { e =>
       val (el, p) = e.span(_ != '/')
-      s"""{"element_id":${jsonStr(el)},"path":${jsonStr(p.drop(1))}}"""
+      s"""{"element_id":${jstr(el)},"path":${jstr(p.drop(1))}}"""
     }
     s"[${entries.mkString(",")}]"
   }
-
-  private def esc(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      .replace("\"", "&quot;")
 
   private def indexPage(): String = {
     val rows = q.executions

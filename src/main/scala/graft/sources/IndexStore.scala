@@ -700,13 +700,8 @@ object IndexStore {
       : Option[DataFrame] =
     tombstones(spark, dir).map { t =>
       import spark.implicits._
-      val max = {
-        val v = spark.conf.getOption("spark.graft.maxTombstoneSnapshot")
-          .map(_.toLong).getOrElse(10000000L)
-        require(v >= 1,
-          s"spark.graft.maxTombstoneSnapshot must be >= 1, got $v")
-        math.min(v, Int.MaxValue.toLong - 1).toInt
-      }
+      val max = graft.FenceConf.read(spark,
+        "spark.graft.maxTombstoneSnapshot", 10000000L)
       val pulled = t.select(col("vec_id").cast("long")).as[Long]
         .limit(max + 1).collect()
       if (pulled.length > max)

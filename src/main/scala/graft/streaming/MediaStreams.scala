@@ -77,7 +77,7 @@ object MediaStreams {
             (m.media_id, lo, hi)
           })
           .toDF("media_id", "lo", "hi")
-        onBatch(graft.operators.MultimodalQueries.audioFpScreen(fps, index))
+        onBatch(graft.operators.MultimodalQueries.phashScreen(fps, index))
       }
       .start()
   }

@@ -140,7 +140,11 @@ class ProbePruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     // space — pruning is then guaranteed observable, not probabilistic
     spark.conf.set("spark.graft.probeBuckets", "32")
     try {
+      // plus a re-keyed copy of doc 50, so every bucket doc 50 shares
+      // with doc 0 holds two stored docs (the bucketCap input below)
       val stored = docs.filter(col("doc_id") % 3 =!= 0)
+        .union(docs.filter(col("doc_id") === 50)
+          .withColumn("doc_id", col("doc_id") + 100000))
       // ONE doc: its 16 band keys hit at most 16 of the 32 buckets,
       // so band-table pruning is guaranteed observable (doc 0's
       // near-dups 50/82 are in the stored side — the d19 fixture)
@@ -163,6 +167,13 @@ class ProbePruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertScansPruned(plans.flatMap(scansIn(_, "bands")),
         d, "bands", "bb")
       assertPruned(out, d, "sigs", "sb")
+      // bucketCap on the pruned path: the cap counts over the pruned
+      // band table, exact for every probed bkey (its whole population
+      // shares its bucket value and survives the prune). k = 1 drops
+      // the buckets doc 50 and its copy share, and with them verdicts
+      val capped = loaded.screen(batch, bucketCap = Some(1))
+      assert(sorted(capped) == sorted(live.screen(batch, bucketCap = Some(1))))
+      assert(capped.count() < out.count(), "the cap dropped no verdict")
     } finally spark.conf.unset("spark.graft.probeBuckets")
   }
 
