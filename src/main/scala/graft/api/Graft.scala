@@ -3,8 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DedupQueries, MultimodalQueries, SimilarityQueries,
-  TextAnalysisQueries}
+import graft.operators.{DedupQueries, MultimodalQueries, Ranking,
+  SimilarityQueries, TextAnalysisQueries}
 import graft.sources.IndexStore
 import graft.streaming.EmbStreams
 
@@ -292,22 +292,14 @@ object Graft {
                                incoming: Dataset[graft.streaming.DocStreams.Doc])
                               (onBatch: (Int, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // foreachBatch bodies run sequentially on the stream's microbatch
-    // thread, so plain closure state is safe
-    var cached: Option[(Int, BloomIndex)] = None
+    val current = new IndexStore.GenerationCache(root, loadBloomIndex)
     incoming.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch {
         (batch: Dataset[graft.streaming.DocStreams.Doc], _: Long) =>
-          val spark = batch.sparkSession
-          val (gen, dir) = currentIndexGeneration(spark, root)
-            .getOrElse(throw new IllegalStateException(
-              s"$root holds no published index generation"))
-          if (!cached.exists(_._1 == gen))
-            cached = Some((gen, loadBloomIndex(spark, dir)))
+          val (gen, sketch) = current.resolve(batch.sparkSession)
           onBatch(gen, bloomScreen(
-            batch.toDF().select(col("doc_id"), col("text")),
-            cached.get._2))
+            batch.toDF().select(col("doc_id"), col("text")), sketch))
       }
       .start()
   }
@@ -559,7 +551,18 @@ object Graft {
       * caveat).
       */
     def searchText(queries: DataFrame, k: Int = 5, k1: Double = 1.2,
-                   b: Double = 0.75): DataFrame = {
+                   b: Double = 0.75): DataFrame =
+      rankText(queries, k, k1, b, excludeSelf = false)
+        .select(col("query_id"), col("r_bm25").cast("long").as("rank"),
+          col("did").as("doc_id"), col("s_bm25"))
+        .orderBy(col("query_id"), col("rank"))
+
+    /** [[searchText]]'s ranking, unsorted: (query_id, did, s_bm25,
+      * r_bm25). `excludeSelf` drops a doc whose id equals its query's
+      * id — the e22 rule [[hybridSearch]] applies to both halves.
+      */
+    private[graft] def rankText(queries: DataFrame, k: Int, k1: Double,
+                                b: Double, excludeSelf: Boolean): DataFrame = {
       val terms = queries
         .select(col("query_id"),
           explode(split(col("text"), " ")).as("tok"))
@@ -578,12 +581,9 @@ object Graft {
             else df)
         } else (postings, df)
       SimilarityQueries.bm25Rank(p, doclen, d, terms, k, k1, b,
-          excludeSelf = false,
-          dlOnPostings = postings.columns.contains("dl"),
-          corpusStats = Some(corpusStats))
-        .select(col("query_id"), col("r_bm25").cast("long").as("rank"),
-          col("did").as("doc_id"), col("s_bm25"))
-        .orderBy(col("query_id"), col("rank"))
+        excludeSelf = excludeSelf,
+        dlOnPostings = postings.columns.contains("dl"),
+        corpusStats = Some(corpusStats))
     }
 
     /** Add NEW documents to the LIVE handle: postings/doclen union;
@@ -782,36 +782,28 @@ object Graft {
     * broadcast token join over the postings), the dense ranking from
     * an [[IvfIndex]] (probe-pruned cells), each cut to top-`fetch`
     * per query, fused by Σ 1/(60 + rank) with absent lists
-    * contributing 0, top-`k` emitted. `queries`: (query_id Long,
-    * text String, embedding Array[Float]). Output: (query_id, rank,
-    * doc_id, rrf) sorted. The fusion arithmetic is rational in
-    * integer ranks — exact at any scale; the fused lists are
-    * ≤ fetch × #queries rows, trivially small. Spec-pinned against
-    * hand-fused component searches (Bm25IndexSpec).
+    * contributing 0, top-`k` emitted. Both halves drop a doc whose
+    * id equals its query's id (e22's rule: a query document never
+    * retrieves itself). `queries`: (query_id Long, text String,
+    * embedding Array[Float]). Output: (query_id, rank, doc_id, rrf)
+    * sorted. The fusion arithmetic is rational in integer ranks —
+    * exact at any scale; the fused lists are ≤ fetch × #queries rows,
+    * trivially small. Spec-pinned against hand-fused component
+    * searches (Bm25IndexSpec).
     */
   def hybridSearch(lexical: Bm25Index, dense: IvfIndex,
                    queries: DataFrame, k: Int = 5, fetch: Int = 20,
                    probes: Int = 2): DataFrame = {
     val bmTop = lexical
-      .searchText(queries.select(col("query_id"), col("text")), fetch)
-      .select(col("query_id"), col("doc_id").as("did"),
-        col("rank").as("r_bm25"))
+      .rankText(queries.select(col("query_id"), col("text")), fetch,
+        k1 = 1.2, b = 0.75, excludeSelf = true)
+      .select(col("query_id"), col("did"), col("r_bm25"))
     val cosTop = dense
       .search(queries.select(col("query_id").as("vec_id"),
         col("embedding")), probes, fetch)
       .select(col("query_id"), col("neighbor_id").as("did"),
         col("rank").as("r_cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("rrf").desc, col("did"))
-    bmTop.join(cosTop, Seq("query_id", "did"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (col("r_bm25") + 60), lit(0.0)) +
-          coalesce(lit(1.0) / (col("r_cos") + 60), lit(0.0)), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("did").as("doc_id"),
-        col("rrf"))
-      .orderBy(col("query_id"), col("rank"))
+    Ranking.rrfFuse(bmTop, cosTop, "query_id", k)
   }
 
   /** A hybrid query: id + event time + the text for the lexical half
@@ -863,25 +855,14 @@ object Graft {
                          fetch: Int = 20, probes: Int = 2)
                         (onBatch: ((Int, Int), DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // foreachBatch bodies run sequentially on the stream's microbatch
-    // thread, so plain closure state is safe
-    var cached: Option[((Int, Int), Bm25Index, IvfIndex)] = None
+    val lexical = new IndexStore.GenerationCache(lexRoot, loadBm25Index)
+    val dense = new IndexStore.GenerationCache(denseRoot, loadAnnIndex)
     queries.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: Dataset[HybridQuery], _: Long) =>
-        val spark = batch.sparkSession
-        def genOf(root: String): (Int, String) =
-          currentIndexGeneration(spark, root).getOrElse(
-            throw new IllegalStateException(
-              s"$root holds no published index generation"))
-        val (lexGen, lexDir) = genOf(lexRoot)
-        val (denGen, denDir) = genOf(denseRoot)
-        val key = (lexGen, denGen)
-        if (!cached.exists(_._1 == key))
-          cached = Some((key, loadBm25Index(spark, lexDir),
-            loadAnnIndex(spark, denDir)))
-        val (_, lex, den) = cached.get
-        onBatch(key, hybridSearch(lex, den,
+        val (lexGen, lex) = lexical.resolve(batch.sparkSession)
+        val (denGen, den) = dense.resolve(batch.sparkSession)
+        onBatch((lexGen, denGen), hybridSearch(lex, den,
           batch.toDF().select(col("query_id"), col("text"),
             col("embedding").cast("array<float>").as("embedding")),
           k, fetch, probes))
@@ -911,20 +892,13 @@ object Graft {
                              bucketCap: Option[Int] = None)
                             (onBatch: (Int, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // foreachBatch bodies run sequentially on the stream's microbatch
-    // thread, so plain closure state is safe
-    var cached: Option[(Int, LshIndex)] = None
+    val current = new IndexStore.GenerationCache(root, loadLshIndex)
     incoming.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch {
         (batch: Dataset[graft.streaming.DocStreams.Doc], _: Long) =>
-          val spark = batch.sparkSession
-          val (gen, dir) = currentIndexGeneration(spark, root)
-            .getOrElse(throw new IllegalStateException(
-              s"$root holds no published index generation"))
-          if (!cached.exists(_._1 == gen))
-            cached = Some((gen, loadLshIndex(spark, dir)))
-          onBatch(gen, cached.get._2.screen(
+          val (gen, idx) = current.resolve(batch.sparkSession)
+          onBatch(gen, idx.screen(
             batch.toDF().select(col("doc_id"), col("text")), bucketCap))
       }
       .start()
@@ -947,26 +921,20 @@ object Graft {
                                bucketCap: Option[Long] = None)
                               (onBatch: (Int, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // foreachBatch bodies run sequentially on the stream's microbatch
-    // thread, so plain closure state is safe
-    var cached: Option[(Int, PhashIndex)] = None
+    val current = new IndexStore.GenerationCache(root, loadPhashIndex)
     media.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch {
         (batch: Dataset[graft.streaming.MediaStreams.Media], _: Long) =>
           val spark = batch.sparkSession
           import spark.implicits._
-          val (gen, dir) = currentIndexGeneration(spark, root)
-            .getOrElse(throw new IllegalStateException(
-              s"$root holds no published index generation"))
-          if (!cached.exists(_._1 == gen))
-            cached = Some((gen, loadPhashIndex(spark, dir)))
+          val (gen, idx) = current.resolve(spark)
           val hashed = batch.mapPartitions(_.map { m =>
             val (lo, hi) =
               graft.operators.MultimodalQueries.aHash(m.payload)
             (m.media_id, lo, hi)
           }).toDF("media_id", "lo", "hi")
-          onBatch(gen, cached.get._2.screen(hashed, maxHamming, bucketCap))
+          onBatch(gen, idx.screen(hashed, maxHamming, bucketCap))
       }
       .start()
   }
@@ -1775,11 +1743,7 @@ object Graft {
     */
   def loadCurrent[T](spark: SparkSession, root: String)
                     (loader: String => T): T =
-    currentIndexGeneration(spark, root) match {
-      case Some((_, dir)) => loader(dir)
-      case None => throw new IllegalStateException(
-        s"$root holds no published index generation")
-    }
+    loader(IndexStore.requireCurrentGeneration(spark, root)._2)
 
   /** [[loadAnnIndex]] of the CURRENT generation under a
     * [[publishIndex]] root — fails loudly if nothing is published.

@@ -28,11 +28,6 @@ object SimilarityQueries {
       s" / (sqrt(list_aggregate([CAST($a[i] AS DOUBLE)*CAST($a[i] AS DOUBLE) for i in generate_series(1,$dim)],'sum'))" +
       s" * sqrt(list_aggregate([CAST($b[i] AS DOUBLE)*CAST($b[i] AS DOUBLE) for i in generate_series(1,$dim)],'sum'))))"
 
-  /** Shared oracle tail for the IVF variants: final assignment against
-    * `centArr`, 2-probe per query (tie-break direction differs between
-    * e05 and e06), exact in-cell ranking — the SQL mirror of
-    * [[probeAndRank]], shared for the same no-drift reason.
-    */
   /** The assign CTE alone — every corpus vector to its nearest
     * centroid cell, the SQL mirror of [[assignCellsPulled]]; shared by
     * [[ivfSearchSql]] and the e28 drift report so the assignment text
@@ -47,6 +42,11 @@ object SimilarityQueries {
        |    FROM embeddings e CROSS JOIN $centArr c)
        |  WHERE rn = 1)""".stripMargin
 
+  /** Shared oracle tail for the IVF variants: final assignment against
+    * `centArr`, 2-probe per query (tie-break direction differs between
+    * e05 and e06), exact in-cell ranking — the SQL mirror of
+    * [[probeAndRank]], shared for the same no-drift reason.
+    */
   private def ivfSearchSql(centArr: String, probeCellTieBreak: String,
                            scoredExtra: String = "",
                            probes: Int = 2): String =
@@ -62,12 +62,7 @@ object SimilarityQueries {
        |  SELECT a.query_id, b.vec_id AS neighbor_id,
        |    ${cosSql("a.q_emb", "b.embedding")} AS cos
        |  FROM probes a JOIN assign b ON a.cell = b.cell AND a.query_id <> b.vec_id$scoredExtra),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+       |${cosTopKSql(3)}""".stripMargin
 
   /** A probe side made OPAQUE to dynamic partition pruning by a LAZY
     * checkpoint (tiny: queries × nprobe rows, materialized inside the
@@ -89,48 +84,39 @@ object SimilarityQueries {
     * so rank/tie-break/rounding semantics cannot drift between them).
     */
   private[graft] def probeAndRank(assigned: DataFrame, probes: DataFrame,
-                                  k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    assigned.alias("b").join(broadcast(dppOpaque(probes).alias("a")),
-        col("a.cell") === col("b.cell") && col("a.query_id") =!= col("b.vec_id"))
-      .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
-        cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+                                  k: Int): DataFrame =
+    knnOf(assigned, dppOpaque(probes), k, within = Some("cell"))
+
+  /** The oracle tail of every exact-cosine top-k over a `scored` CTE of
+    * (query_id, neighbor_id, cos): e01, e03 and the IVF searches.
+    */
+  private def cosTopKSql(k: Int): String =
+    Ranking.topKSql("cos", "neighbor_id", "rank", k, wrap = false)
+
+  /** e01's body over arbitrary corpus/query frames — the
+    * [[graft.api.Graft.knn]] facade path: exact cosine top-k of
+    * `corpus` (vec_id, embedding) against the broadcast `queries`
+    * (query_id, q_emb), self excluded; with `within`, a query meets
+    * only the rows sharing its value of that column (the LSH bucket of
+    * e03, the probed IVF cell of [[probeAndRank]]). Output (query_id,
+    * rank, neighbor_id, cos) sorted unless `ordered = false`.
+    */
+  private[graft] def knnOf(corpus: DataFrame, queries: DataFrame,
+                           k: Int, ordered: Boolean = true,
+                           within: Option[String] = None): DataFrame = {
+    val notSelf = col("a.query_id") =!= col("b.vec_id")
+    Ranking.topKRounded(
+      corpus.alias("b").join(broadcast(queries.alias("a")),
+          within.fold(notSelf)(c => col(s"a.$c") === col(s"b.$c") && notSelf))
+        .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
+          cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos")),
+      "cos", "neighbor_id", k, ordered = ordered)
   }
 
   /** Brute-force cosine top-k (k=10) for 5 query vectors — the exact
     * baseline. The query side is tiny and broadcast; at scale this is one
     * pass over the corpus per query batch (no shuffle of the corpus).
     */
-  /** e01's body over arbitrary corpus/query frames — the
-    * [[graft.api.Graft.knn]] facade path. `queries` is (query_id,
-    * q_emb); output sorted (query_id, rank).
-    */
-  private[graft] def knnOf(corpus: DataFrame, queries: DataFrame,
-                           k: Int, ordered: Boolean = true): DataFrame = {
-    val scored = corpus.alias("b").join(broadcast(queries.alias("a")),
-        col("a.query_id") =!= col("b.vec_id"))
-      .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
-        cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    val top = scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-    // `ordered = false` for INTERNAL consumers (shortlist feeds, recall
-    // joins) that destroy order anyway: a global orderBy is a range
-    // exchange plus its sampling job — pure waste below a join/collect
-    if (ordered) top.orderBy(col("query_id"), col("rank")) else top
-  }
-
   val e01KnnBruteForce = QueryDef(
     "e01_knn_bruteforce",
     (s, d) => {
@@ -144,12 +130,11 @@ object SimilarityQueries {
             |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
             |    ${cosSql("a.embedding", "b.embedding")} AS cos
             |  FROM embeddings a JOIN embeddings b ON a.vec_id < 5 AND a.vec_id <> b.vec_id),
-            |ranked AS (
-            |  SELECT query_id, neighbor_id, cos,
-            |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-            |  FROM scored)
-            |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-            |FROM ranked WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin))
+            |${cosTopKSql(10)}""".stripMargin))
+
+  /** The exact side of the recall gates: e01's top 3. */
+  private def exactTop3(s: SparkSession, d: String): DataFrame =
+    e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
 
   /** Cosine near-duplicate pairs (threshold 0.4) — embedding-space
     * near-dup detection. All-pairs at sf scale; the LSH variant (e03) is
@@ -176,12 +161,6 @@ object SimilarityQueries {
             |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.4
             |ORDER BY va, vb""".stripMargin))
 
-  /** LSH-bucketed ANN: 12 random-hyperplane sign bits (fixed seed) →
-    * bucket; candidates meet only inside their bucket, then exact cosine
-    * ranks the top-3 per query. Approximate by construction → rows-only
-    * check. At 100 TB the corpus is hashed once and bucketed; queries
-    * probe one bucket each.
-    */
   /** Rademacher (±1) hyperplane entries derived from md5 of a seed
     * string — the SAME constants are inlined as literals into the Spark
     * plan and the generated oracle SQL, so the bucketing (and therefore
@@ -199,6 +178,12 @@ object SimilarityQueries {
     }
   }
 
+  /** LSH-bucketed ANN: 6 random-hyperplane sign bits (fixed seed) →
+    * bucket; candidates meet only inside their bucket, then exact cosine
+    * ranks the top-3 per query. Approximate by construction → rows-only
+    * check. At 100 TB the corpus is hashed once and bucketed; queries
+    * probe one bucket each.
+    */
   val e03AnnLsh = QueryDef(
     "e03_ann_lsh",
     (s, d) => {
@@ -214,19 +199,7 @@ object SimilarityQueries {
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
           col("bucket"))
-      val scored = e.alias("b").join(broadcast(q.alias("a")),
-          col("a.bucket") === col("b.bucket") &&
-          col("a.query_id") =!= col("b.vec_id"))
-        .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
-          cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+      knnOf(e, q, 3, within = Some("bucket"))
     },
     // the oracle replays the identical ±1 projections (same literals,
     // same add order, DOUBLE arithmetic) so buckets match bit-for-bit,
@@ -244,12 +217,7 @@ object SimilarityQueries {
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, ${cosSql("a.embedding", "b.embedding")} AS cos
          |  FROM bk a JOIN bk b
          |    ON a.vec_id < 5 AND a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         |${cosTopKSql(3)}""".stripMargin
     })
 
   /** Centroid stats per label — the IVF building block (coarse quantizer
@@ -272,13 +240,6 @@ object SimilarityQueries {
         s"pow(round(sum(embedding[${i + 1}]) / count(*), 6), 2)").mkString(" + ") +
       "), 6) AS centroid_norm FROM embeddings GROUP BY label ORDER BY label"))
 
-  /** IVF-style ANN: coarse centroids (label means — a deterministic
-    * stand-in for k-means training), every vector assigned to its
-    * nearest centroid cell, queries probe their 2 nearest cells, exact
-    * cosine ranks top-3 inside the probed cells. At 100 TB: centroids
-    * broadcast, the corpus partitions by cell once, and each query
-    * touches ~nprobe/ncells of the data. Approximate → rows-only check.
-    */
   /** Label-mean centroids (float-cast components — the cross-engine
     * rounding protocol) as `(cell, centroid)` — the deterministic coarse
     * quantizer shared by e05 and e07.
@@ -411,6 +372,13 @@ object SimilarityQueries {
 
   private val centArrSql: String = centArrSqlOver("")
 
+  /** IVF-style ANN: coarse centroids (label means — a deterministic
+    * stand-in for k-means training), every vector assigned to its
+    * nearest centroid cell, queries probe their 2 nearest cells, exact
+    * cosine ranks top-3 inside the probed cells. At 100 TB: centroids
+    * broadcast, the corpus partitions by cell once, and each query
+    * touches ~nprobe/ncells of the data. Approximate → rows-only check.
+    */
   val e05AnnIvf = QueryDef(
     "e05_ann_ivf",
     // train (label centroids) + assign + 2-probe search, routed through
@@ -531,26 +499,6 @@ object SimilarityQueries {
          |${ivfSearchSql("c3_arr", "DESC")}""".stripMargin
     })
 
-  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    * arXiv:2303.09540): cluster the corpus with a coarse quantizer, then
-    * deduplicate ONLY within each cluster — pairwise cosine stays
-    * O(Σ cell²) ≈ O(n²/k) instead of O(n²), and every cell's pair join
-    * is an independent partition-local task. A vector is dropped when a
-    * lower-id vector in the SAME cell sits within the similarity
-    * threshold (the min-id representative survives — the deterministic
-    * analogue of the paper's keep-one-per-group rule). At 100 TB: the
-    * corpus partitions by cell once (one shuffle), each cell joins
-    * against itself locally; k scales with corpus size to bound cell
-    * width, and a degenerate cell (all-near-identical embeddings) is
-    * bounded the same way d09 caps band buckets: cells whose population
-    * exceeds `cap` are EXCLUDED from the pairwise join (their members
-    * are kept — a boilerplate mega-cluster is d01/d02 exact-hash
-    * territory, not pairwise-cosine territory), so per-cell work is
-    * bounded at (cap choose 2). Fully gated INCLUDING the cap (the
-    * oracle replays it, so a cap regression flips the hash), with the
-    * float-cast centroid protocol (e05) making cells engine-exact; the
-    * verdict per vector is a deterministic anti-join.
-    */
   /** Memoized cell-assigned corpus per (session, dir) — the d06-style
     * bounded LRU: the e07 verdict core references the assignment
     * subtree four times (cell count, both self-join sides, final left
@@ -631,6 +579,26 @@ object SimilarityQueries {
     }
   }
 
+  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
+    * arXiv:2303.09540): cluster the corpus with a coarse quantizer, then
+    * deduplicate ONLY within each cluster — pairwise cosine stays
+    * O(Σ cell²) ≈ O(n²/k) instead of O(n²), and every cell's pair join
+    * is an independent partition-local task. A vector is dropped when a
+    * lower-id vector in the SAME cell sits within the similarity
+    * threshold (the min-id representative survives — the deterministic
+    * analogue of the paper's keep-one-per-group rule). At 100 TB: the
+    * corpus partitions by cell once (one shuffle), each cell joins
+    * against itself locally; k scales with corpus size to bound cell
+    * width, and a degenerate cell (all-near-identical embeddings) is
+    * bounded the same way d09 caps band buckets: cells whose population
+    * exceeds `cap` are EXCLUDED from the pairwise join (their members
+    * are kept — a boilerplate mega-cluster is d01/d02 exact-hash
+    * territory, not pairwise-cosine territory), so per-cell work is
+    * bounded at (cap choose 2). Fully gated INCLUDING the cap (the
+    * oracle replays it, so a cap regression flips the hash), with the
+    * float-cast centroid protocol (e05) making cells engine-exact; the
+    * verdict per vector is a deterministic anti-join.
+    */
   val e07SemanticDedup = QueryDef(
     "e07_semantic_dedup",
     (s, d) => {
@@ -736,21 +704,6 @@ object SimilarityQueries {
            |  round(sqrt(CAST(avg(err2) AS FLOAT)), 6) AS rmse
            |FROM recon GROUP BY vec_id ORDER BY vec_id""".stripMargin))
 
-  /** Product-quantization ANN (Jégou et al. 2011): 64 dims → 4
-    * subspaces × 16 dims, each with its own 4-centroid codebook trained
-    * by 2 Lloyd iterations (L2, deterministic every-125th init — the
-    * e06 recipe per subspace); every vector compresses to 4 one-byte
-    * codes, and queries rank by the ADC approximation — the inner
-    * product against each vector's RECONSTRUCTION, computed as 4
-    * table lookups (query·centroid per subspace) instead of a 64-dim
-    * dot per pair. At 100 TB: codebooks are 4×4×16 floats broadcast
-    * everywhere, the corpus is stored as 4 bytes/vector (16× smaller
-    * than float32), training touches the corpus 2× with only
-    * 4×4×16-double centroid pulls to the driver, and search reads
-    * codes, never raw vectors. Fully gated: per-subspace k-means
-    * replayed in chained CTEs with the e06 float-cast protocol, codes
-    * and ADC scores bit-exact across engines.
-    */
   /** The full PQ pipeline (train → encode → ADC rank), parameterized by
     * shortlist depth `m` — e09 is `m = 3`; e16 re-ranks the `m = 10`
     * shortlist. One definition so the re-rank stage provably searches
@@ -861,14 +814,6 @@ object SimilarityQueries {
         .as(s"code_$mi")
     }: _*)
 
-  /** ADC rank: (query_id, q_emb) queries against the encoded codes.
-    * Per-query LOOKUP TABLES (query·centroid per subspace) are computed
-    * ONCE on the tiny query side and broadcast — the joined corpus pass
-    * does 4 `element_at`s per (query, vector) pair, never a 64-dim dot:
-    * the asymmetric-distance shape that makes PQ serving read codes,
-    * not vectors. Self-matches are included (the e09 protocol — e12's
-    * recall is measured against the same convention).
-    */
   /** Per-query ADC lookup tables (query·centroid per subspace) over a
     * (query_id, q_emb) frame — ONE definition shared by the batch rank
     * and the streaming server ([[graft.streaming.EmbStreams.pqServe]]),
@@ -889,27 +834,22 @@ object SimilarityQueries {
     expr((0 until m)
       .map(mi => s"element_at(ip_$mi, code_$mi + 1)").mkString(" + "))
 
+  /** ADC rank: (query_id, q_emb) queries against the encoded codes.
+    * Per-query LOOKUP TABLES (query·centroid per subspace) are computed
+    * ONCE on the tiny query side and broadcast — the joined corpus pass
+    * does 4 `element_at`s per (query, vector) pair, never a 64-dim dot:
+    * the asymmetric-distance shape that makes PQ serving read codes,
+    * not vectors. Self-matches are included (the e09 protocol — e12's
+    * recall is measured against the same convention).
+    */
   private[graft] def pqAdcRank(encoded: DataFrame,
                                codebooks: Array[Array[Array[Double]]],
                                queries: DataFrame, topM: Int,
-                               ordered: Boolean = true): DataFrame = {
-    val m = codebooks.length
-    val luts = pqLuts(queries, codebooks)
-    val withTables = encoded.join(broadcast(luts))
-      .withColumn("approx_ip", pqAdcScore(m))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("approx_ip").desc, col("vec_id"))
-    val top = withTables
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .filter(col("rnk") <= topM)
-      .select(col("query_id"), col("rnk"), col("vec_id"),
-        round(col("approx_ip"), 6).as("approx_ip"))
-    // `ordered = false` for shortlist feeds consumed by a join (e16's
-    // rerank): the global sort is a range exchange + sampling job no
-    // downstream operator keeps
-    if (ordered) top.orderBy(col("query_id"), col("rnk")) else top
-  }
+                               ordered: Boolean = true): DataFrame =
+    Ranking.topKRounded(
+      encoded.join(broadcast(pqLuts(queries, codebooks)))
+        .withColumn("approx_ip", pqAdcScore(codebooks.length)),
+      "approx_ip", "vec_id", topM, rank = "rnk", ordered = ordered)
 
   /** Exact-cosine re-rank of an ADC shortlist (the e16 two-stage shape):
     * fetch raw vectors for shortlist members and query points via
@@ -917,30 +857,31 @@ object SimilarityQueries {
     * the exact math costs O(queries × fetch), not O(queries × corpus).
     */
   private[graft] def pqRerankStage(corpus: DataFrame, shortlist: DataFrame,
-                                   queries: DataFrame, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    corpus.alias("b")
-      .join(broadcast(shortlist.alias("sl")),
-        col("sl.vec_id") === col("b.vec_id"))
-      .join(broadcast(queries.alias("a")),
-        col("a.query_id") === col("sl.query_id"))
-      .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
-        cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+                                   queries: DataFrame, k: Int): DataFrame =
+    Ranking.topKRounded(
+      corpus.alias("b")
+        .join(broadcast(shortlist.alias("sl")),
+          col("sl.vec_id") === col("b.vec_id"))
+        .join(broadcast(queries.alias("a")),
+          col("a.query_id") === col("sl.query_id"))
+        .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
+          cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos")),
+      "cos", "neighbor_id", k)
 
-  /** Oracle mirror of [[pqSearch]] — the full unrolled per-subspace
-    * Lloyd replay, parameterized by the same shortlist depth.
-    * `trainPred` restricts the TRAINING corpus (init picks + Lloyd
-    * assignments/means — e27 trains on the pre-append snapshot);
-    * encoding and scoring always cover all rows.
+  /** Oracle mirror of [[pqRerankStage]]: exact cosine of the
+    * `shortlistSql` entries (named `name`), top 3 — e16 over the PQ
+    * shortlist, e43 over the IVF-PQ one, e38 at each fetch depth.
     */
+  private def rerankSql(name: String, shortlistSql: String): String =
+    s"""WITH $name AS ($shortlistSql),
+       |scored AS (
+       |  SELECT sl.query_id, b.vec_id AS neighbor_id,
+       |    ${cosSql("q.embedding", "b.embedding")} AS cos
+       |  FROM $name sl
+       |  JOIN embeddings b ON b.vec_id = sl.vec_id
+       |  JOIN embeddings q ON q.vec_id = sl.query_id),
+       |${Ranking.topKSql("cos", "neighbor_id", "rank", 3, wrap = true)}""".stripMargin
+
   /** The training + encoding prefix of [[pqSql]] — every CTE through
     * `enc` (vec_id, code0..code3) — extracted so drift-shaped oracles
     * (e31) can aggregate the codes without duplicating the Lloyd
@@ -994,6 +935,13 @@ object SimilarityQueries {
          |    JOIN codes_m2 USING (vec_id) JOIN codes_m3 USING (vec_id))""".stripMargin
   }
 
+  /** Oracle mirror of the PQ search ([[pqTrain]], [[pqEncode]],
+    * [[pqAdcRank]]) — the full unrolled per-subspace Lloyd replay,
+    * parameterized by the same shortlist depth.
+    * `trainPred` restricts the TRAINING corpus (init picks + Lloyd
+    * assignments/means — e27 trains on the pre-append snapshot);
+    * encoding and scoring always cover all rows.
+    */
   private def pqSql(topM: Int, trainPred: Option[String] = None,
                     scoredExtra: String = ""): String = {
       val subDim = 16
@@ -1012,15 +960,24 @@ object SimilarityQueries {
          |    JOIN pq2_m1 c1 ON c1.k = enc.code1
          |    JOIN pq2_m2 c2 ON c2.k = enc.code2
          |    JOIN pq2_m3 c3 ON c3.k = enc.code3$scoredExtra),
-         |ranked AS (
-         |  SELECT query_id, vec_id, approx_ip,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY approx_ip DESC, vec_id) AS rnk
-         |  FROM scored)
-         |SELECT query_id, rnk, vec_id, round(approx_ip, 6) AS approx_ip
-         |FROM ranked WHERE rnk <= $topM ORDER BY query_id, rnk""".stripMargin
+         |${Ranking.topKSql("approx_ip", "vec_id", "rnk", topM, wrap = true)}""".stripMargin
   }
 
+  /** Product-quantization ANN (Jégou et al. 2011): 64 dims → 4
+    * subspaces × 16 dims, each with its own 4-centroid codebook trained
+    * by 2 Lloyd iterations (L2, deterministic every-125th init — the
+    * e06 recipe per subspace); every vector compresses to 4 one-byte
+    * codes, and queries rank by the ADC approximation — the inner
+    * product against each vector's RECONSTRUCTION, computed as 4
+    * table lookups (query·centroid per subspace) instead of a 64-dim
+    * dot per pair. At 100 TB: codebooks are 4×4×16 floats broadcast
+    * everywhere, the corpus is stored as 4 bytes/vector (16× smaller
+    * than float32), training touches the corpus 2× with only
+    * 4×4×16-double centroid pulls to the driver, and search reads
+    * codes, never raw vectors. Fully gated: per-subspace k-means
+    * replayed in chained CTEs with the e06 float-cast protocol, codes
+    * and ADC scores bit-exact across engines.
+    */
   val e09AnnPq = QueryDef(
     "e09_ann_pq",
     // routed through the user-facing facade (train + encode + ADC all
@@ -1048,29 +1005,46 @@ object SimilarityQueries {
     */
   val e10AnnRecall = QueryDef(
     "e10_ann_recall",
-    (s, d) => {
-      val ivf3 = e05AnnIvf.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      ivf3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH ivf_full AS (${e05AnnIvf.oracle.get}),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |i AS (SELECT query_id, neighbor_id FROM ivf_full WHERE rank <= 3),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e05AnnIvf.fn(s, d), "rank", "neighbor_id",
+      exactTop3(s, d)),
+    Some(recallOfSql("ivf", e05AnnIvf.oracle.get)))
+
+  /** The recall gates' approximate side: the top 3 of a search result
+    * ranked by `rank` with ids in `id`, as (query_id, neighbor_id),
+    * scored by [[Ranking.recall3]] against `exact`.
+    */
+  private def recallOfTop3(search: DataFrame, rank: String, id: String,
+                           exact: DataFrame): DataFrame =
+    Ranking.recall3(top3Ids(search, rank, id), exact)
+
+  private def top3Ids(search: DataFrame, rank: String, id: String)
+      : DataFrame =
+    search.filter(col(rank) <= 3)
+      .select(col("query_id"), col(id).as("neighbor_id"))
+
+  /** Oracle of a composed recall gate: the approximate search's full
+    * oracle as CTE `<name>_full`, its top 3 (ranked by `rank`, ids
+    * projected by `ids`) against e01's exact top 3.
+    */
+  private def recallOfSql(name: String, fullSql: String,
+                          rank: String = "rank",
+                          ids: String = "neighbor_id"): String =
+    s"""WITH ${name}_full AS ($fullSql),
+       |exact_full AS (${e01KnnBruteForce.oracle.get}),
+       |i AS (SELECT query_id, $ids FROM ${name}_full WHERE $rank <= 3),
+       |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
+       |${Ranking.recallSql("i", "e")}""".stripMargin
+
+  /** Oracle of a recall gate whose approximate side is ranked inline:
+    * `prefix` holds the CTEs through a `scored` (query_id, neighbor_id,
+    * score) CTE, ranked by `order` against e01's exact top 3.
+    */
+  private def recallOfScoredSql(prefix: String, order: String): String =
+    s"""WITH $prefix,
+       |${Ranking.top3CteSql("i", "scored", order)},
+       |exact_full AS (${e01KnnBruteForce.oracle.get}),
+       |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
+       |${Ranking.recallSql("i", "e")}""".stripMargin
 
   /** recall@3 of the LSH index (e03) against the exact top-3 (e01) —
     * e10's composition pattern applied to the second ANN family: both
@@ -1079,29 +1053,9 @@ object SimilarityQueries {
     */
   val e11AnnRecallLsh = QueryDef(
     "e11_ann_recall_lsh",
-    (s, d) => {
-      val lsh3 = e03AnnLsh.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      lsh3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH lsh_full AS (${e03AnnLsh.oracle.get}),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |i AS (SELECT query_id, neighbor_id FROM lsh_full WHERE rank <= 3),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e03AnnLsh.fn(s, d), "rank", "neighbor_id",
+      exactTop3(s, d)),
+    Some(recallOfSql("lsh", e03AnnLsh.oracle.get)))
 
   /** recall@3 of the PQ-ADC index (e09) against the exact top-3 (e01).
     * e09 ranks by the asymmetric-distance APPROXIMATION (codebook inner
@@ -1111,29 +1065,10 @@ object SimilarityQueries {
     */
   val e12AnnRecallPq = QueryDef(
     "e12_ann_recall_pq",
-    (s, d) => {
-      val pq3 = e09AnnPq.fn(s, d).filter(col("rnk") <= 3)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      pq3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH pq_full AS (${e09AnnPq.oracle.get}),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |i AS (SELECT query_id, vec_id AS neighbor_id FROM pq_full WHERE rnk <= 3),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e09AnnPq.fn(s, d), "rnk", "vec_id",
+      exactTop3(s, d)),
+    Some(recallOfSql("pq", e09AnnPq.oracle.get, "rnk",
+      "vec_id AS neighbor_id")))
 
   /** recall@3 of the TRAINED IVF index (e06, k-means cells) against the
     * exact top-3 — completes the recall harness over all four ANN
@@ -1143,29 +1078,9 @@ object SimilarityQueries {
     */
   val e13AnnRecallKmeans = QueryDef(
     "e13_ann_recall_kmeans",
-    (s, d) => {
-      val km3 = e06AnnIvfKmeans.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      km3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH km_full AS (${e06AnnIvfKmeans.oracle.get}),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |i AS (SELECT query_id, neighbor_id FROM km_full WHERE rank <= 3),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e06AnnIvfKmeans.fn(s, d), "rank", "neighbor_id",
+      exactTop3(s, d)),
+    Some(recallOfSql("km", e06AnnIvfKmeans.oracle.get)))
 
   /** recall@3 of brute-force search in INT8-QUANTIZED space (e08's
     * per-dimension min/max codes, with BOTH query and corpus vectors
@@ -1201,28 +1116,14 @@ object SimilarityQueries {
           x => x.getField("recon")).as("rvec"))
       val q = recon.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("rvec").as("q_rvec"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      val int8Top3 = recon.alias("b").join(broadcast(q.alias("a")),
+      Ranking.recall3(top3Unranked(recon.alias("b").join(broadcast(q.alias("a")),
           col("a.query_id") =!= col("b.vec_id"))
         .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
-          cosine_similarity(col("a.q_rvec"), col("b.rvec")).as("cos"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      int8Top3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
+          cosine_similarity(col("a.q_rvec"), col("b.rvec")).as("cos")),
+        "cos"), exactTop3(s, d))
     },
-    Some(
-      s"""WITH dims AS (
+    Some(recallOfScoredSql(
+      s"""dims AS (
          |  SELECT vec_id, i AS dim, CAST(embedding[i] AS DOUBLE) AS v
          |  FROM embeddings, LATERAL unnest(generate_series(1, 64)) AS t(i)),
          |ranges AS (
@@ -1236,20 +1137,18 @@ object SimilarityQueries {
          |scored AS (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
          |    ${cosSql("a.rvec", "b.rvec")} AS cos
-         |  FROM recon a JOIN recon b ON a.vec_id < 5 AND a.vec_id <> b.vec_id),
-         |i AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM scored) WHERE rank <= 3),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+         |  FROM recon a JOIN recon b ON a.vec_id < 5 AND a.vec_id <> b.vec_id)""".stripMargin,
+      "cos DESC")))
+
+  /** The approximate side of the recall gates that rank inline:
+    * (query_id, neighbor_id) of the top 3 of `scored` by `score`
+    * (DESC, or ASC for a distance), ties to the lower neighbor_id.
+    */
+  private def top3Unranked(scored: DataFrame, score: String,
+                           ascending: Boolean = false): DataFrame =
+    Ranking.topK(scored, "query_id", score, "neighbor_id", 3,
+        asLong = false, ascending = ascending)
+      .select(col("query_id"), col("neighbor_id"))
 
   /** recall@3 of brute-force search over the first 48 of 64 dimensions
     * (Matryoshka-style prefix truncation) against the exact full-dim
@@ -1273,44 +1172,18 @@ object SimilarityQueries {
         .select(col("vec_id"), slice(col("embedding"), 1, 48).as("tvec"))
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("tvec").as("q_tvec"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      val trunc3 = e.alias("b").join(broadcast(q.alias("a")),
+      Ranking.recall3(top3Unranked(e.alias("b").join(broadcast(q.alias("a")),
           col("a.query_id") =!= col("b.vec_id"))
         .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
-          cosine_similarity(col("a.q_tvec"), col("b.tvec")).as("cos"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      trunc3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
+          cosine_similarity(col("a.q_tvec"), col("b.tvec")).as("cos")),
+        "cos"), exactTop3(s, d))
     },
-    Some(
-      s"""WITH scored AS (
+    Some(recallOfScoredSql(
+      s"""scored AS (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
          |    ${cosSql("a.embedding", "b.embedding", dim = 48)} AS cos
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id < 5 AND a.vec_id <> b.vec_id),
-         |i AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM scored) WHERE rank <= 3),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+         |  FROM embeddings a JOIN embeddings b ON a.vec_id < 5 AND a.vec_id <> b.vec_id)""".stripMargin,
+      "cos DESC")))
 
   /** Two-stage ANN: PQ-ADC shortlist (top-10 by the compressed-domain
     * approximation) → EXACT cosine re-rank of just those 10 → top-3.
@@ -1339,21 +1212,7 @@ object SimilarityQueries {
       graft.api.Graft.pqIndex(e)
         .rerank(raw.filter(col("vec_id") < 5), fetch = 10, k = 3)
     },
-    Some(
-      s"""WITH pq_full AS (${pqSql(topM = 10)}),
-         |scored AS (
-         |  SELECT sl.query_id, b.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "b.embedding")} AS cos
-         |  FROM pq_full sl
-         |  JOIN embeddings b ON b.vec_id = sl.vec_id
-         |  JOIN embeddings q ON q.vec_id = sl.query_id),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin))
+    Some(rerankSql("pq_full", pqSql(topM = 10))))
 
   /** recall@3 of the re-ranked PQ index (e16) against the exact top-3
     * (e01) — the payoff measurement for the two-stage pattern: e12
@@ -1364,42 +1223,10 @@ object SimilarityQueries {
     */
   val e17AnnRecallRerank = QueryDef(
     "e17_ann_recall_rerank",
-    (s, d) => {
-      val rr3 = e16AnnPqRerank.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      rr3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH rr_full AS (${e16AnnPqRerank.oracle.get}),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |i AS (SELECT query_id, neighbor_id FROM rr_full WHERE rank <= 3),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e16AnnPqRerank.fn(s, d), "rank", "neighbor_id",
+      exactTop3(s, d)),
+    Some(recallOfSql("rr", e16AnnPqRerank.oracle.get)))
 
-  /** Oracle for e18: the full IVF-PQ replay — coarse assignment
-    * (shared centArrSql + the e07 assign shape), float-exact residuals,
-    * per-subspace Lloyd on residuals (the e09 iteration pattern over an
-    * `ares` CTE), codes, and ADC with the q·c correction term. All
-    * sums in-order double; all stored vectors float-cast.
-    */
-  /** Oracle mirror of the IVF-PQ train+encode+search pipeline.
-    * `trainPred` restricts the TRAINING corpus — coarse centroids,
-    * residual init picks, and both Lloyd iterations (e29 trains on the
-    * pre-append snapshot); residual derivation, encoding, and scoring
-    * always cover all rows.
-    */
   /** The coarse-assign + residual-train + encode prefix of
     * [[ivfPqSql]] — every CTE through `enc` (vec_id, cell,
     * code0..code3) — extracted so drift-shaped oracles (e34) can
@@ -1468,6 +1295,16 @@ object SimilarityQueries {
        |    JOIN rcodes_m3 USING (vec_id))""".stripMargin
   }
 
+  /** Oracle for e18: the full IVF-PQ replay — coarse assignment
+    * (shared centArrSql + the e07 assign shape), float-exact residuals,
+    * per-subspace Lloyd on residuals (the e09 iteration pattern over an
+    * `ares` CTE), codes, and ADC with the q·c correction term. All
+    * sums in-order double; all stored vectors float-cast.
+    * `trainPred` restricts the TRAINING corpus — coarse centroids,
+    * residual init picks, and both Lloyd iterations (e29 trains on the
+    * pre-append snapshot); residual derivation, encoding, and scoring
+    * always cover all rows.
+    */
   private def ivfPqSql(trainPred: Option[String] = None,
                        scoredExtra: String = "",
                        topM: Int = 3): String = {
@@ -1513,44 +1350,9 @@ object SimilarityQueries {
        |    JOIN rq2_m2 c2 ON c2.k = e.code2
        |    JOIN rq2_m3 c3 ON c3.k = e.code3$scoredExtra
        |  WHERE s.query_id <> e.vec_id),
-       |ranked AS (
-       |  SELECT query_id, vec_id, approx_cos,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY approx_cos DESC, vec_id) AS rnk
-       |  FROM scored)
-       |SELECT query_id, rnk, vec_id, round(approx_cos, 6) AS approx_cos
-       |FROM ranked WHERE rnk <= $topM ORDER BY query_id, rnk""".stripMargin
+       |${Ranking.topKSql("approx_cos", "vec_id", "rnk", topM, wrap = true)}""".stripMargin
   }
 
-  /** IVF-PQ composite index (Jégou et al. 2011 §IV — the full
-    * production vector-index stack in one gated operator): the corpus
-    * routes to coarse cells (e05's float-cast label centroids), each
-    * vector's RESIDUAL from its cell centroid is product-quantized
-    * (4 subspaces × 16 dims, 16-centroid codebooks, 2 Lloyd iterations
-    * on residuals — quantizing residuals instead of raw vectors is
-    * what makes the composite beat flat PQ: residual energy is a
-    * fraction of vector energy, so the same code budget spends on a
-    * smaller signal), and queries score candidates in their 2 probed
-    * cells by approximate COSINE:
-    * (q·c + Σ_m q_m·r̂_m) / (‖q‖·‖c + r̂‖) — the numerator is one
-    * exact query-centroid dot (the correction term) plus 4 lookups
-    * into per-(query, cell) tables built from the RESIDUAL query
-    * q − c, and ‖c + r̂‖ is the per-vector reconstruction norm
-    * STORED beside the codes at encode time, what cosine-serving PQ
-    * deployments keep (a raw inner-product rank is norm-dominated and
-    * meaningless against a cosine ground truth — the first cut of
-    * this operator measured exactly that: recall identically 0 with
-    * inflated-norm winners). Self is excluded (the e01/e05 protocol)
-    * so e19 measures real retrieval. At 100 TB: the corpus stores
-    * cell id + 4 bytes + one float per vector, cell routing bounds
-    * each query to ~nprobe/#cells of the codes, codebooks and
-    * centroids broadcast everywhere, and training touches the corpus
-    * twice with only k×16-double pulls per subspace. Fully gated:
-    * coarse assign, residuals, per-subspace Lloyd on residuals, codes,
-    * stored norms, correction term and ADC cosines all replayed in
-    * chained CTEs under the established float-cast / in-order-double
-    * protocol.
-    */
   /** Residual of `vec` from the joined `centroid` column — float-exact
     * cross-engine (float − float in double, cast back to float).
     */
@@ -1693,7 +1495,7 @@ object SimilarityQueries {
           col("q_emb")).as("qn2"),
         ivfPqResOf(col("q_emb")).as("qres"))
 
-    val withTables = encoded.join(broadcast(dppOpaque(probed)), Seq("cell"))
+    val scored = encoded.join(broadcast(dppOpaque(probed)), Seq("cell"))
       .where(col("query_id") =!= col("vec_id"))
       .select(Seq(col("query_id"), col("vec_id"), col("qc"), col("qn2")) ++
         (0 until m).map { mi =>
@@ -1706,19 +1508,39 @@ object SimilarityQueries {
           .map(mi => s"element_at(ip_$mi, code_$mi + 1)").mkString(" + ") +
           ") / (sqrt(qn2) * sqrt(" + (0 until m)
           .map(mi => s"recon2_$mi").mkString(" + ") + "))"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("vec_id"))
-    val top = withTables
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("vec_id"),
-        round(col("approx_cos"), 6).as("approx_cos"))
-    // `ordered = false` for shortlist feeds consumed by a join (e43's
-    // rerank) — the global sort dies under the join anyway
-    if (ordered) top.orderBy(col("query_id"), col("rnk")) else top
+    Ranking.topKRounded(scored, "approx_cos", "vec_id", k, rank = "rnk",
+      ordered = ordered)
   }
 
+  /** IVF-PQ composite index (Jégou et al. 2011 §IV — the full
+    * production vector-index stack in one gated operator): the corpus
+    * routes to coarse cells (e05's float-cast label centroids), each
+    * vector's RESIDUAL from its cell centroid is product-quantized
+    * (4 subspaces × 16 dims, 16-centroid codebooks, 2 Lloyd iterations
+    * on residuals — quantizing residuals instead of raw vectors is
+    * what makes the composite beat flat PQ: residual energy is a
+    * fraction of vector energy, so the same code budget spends on a
+    * smaller signal), and queries score candidates in their 2 probed
+    * cells by approximate COSINE:
+    * (q·c + Σ_m q_m·r̂_m) / (‖q‖·‖c + r̂‖) — the numerator is one
+    * exact query-centroid dot (the correction term) plus 4 lookups
+    * into per-(query, cell) tables built from the RESIDUAL query
+    * q − c, and ‖c + r̂‖ is the per-vector reconstruction norm
+    * STORED beside the codes at encode time, what cosine-serving PQ
+    * deployments keep (a raw inner-product rank is norm-dominated and
+    * meaningless against a cosine ground truth — the first cut of
+    * this operator measured exactly that: recall identically 0 with
+    * inflated-norm winners). Self is excluded (the e01/e05 protocol)
+    * so e19 measures real retrieval. At 100 TB: the corpus stores
+    * cell id + 4 bytes + one float per vector, cell routing bounds
+    * each query to ~nprobe/#cells of the codes, codebooks and
+    * centroids broadcast everywhere, and training touches the corpus
+    * twice with only k×16-double pulls per subspace. Fully gated:
+    * coarse assign, residuals, per-subspace Lloyd on residuals, codes,
+    * stored norms, correction term and ADC cosines all replayed in
+    * chained CTEs under the established float-cast / in-order-double
+    * protocol.
+    */
   val e18AnnIvfPq = QueryDef(
     "e18_ann_ivfpq",
     // routed through Graft.ivfPqIndex — the facade's composite-index
@@ -1746,24 +1568,12 @@ object SimilarityQueries {
   val e19AnnRecallIvfPq = QueryDef(
     "e19_ann_recall_ivfpq",
     (s, d) => {
-      val pq3 = e18AnnIvfPq.fn(s, d).filter(col("rnk") <= 3)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      val ivf3 = e05AnnIvf.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("vq"), col("neighbor_id").as("vn"))
-      val vsExact = pq3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-      val vsIvf = pq3.join(ivf3,
-          col("query_id") === col("vq") && col("neighbor_id") === col("vn"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("vn")).as("n_kept_ivf"))
-      vsExact.join(vsIvf, Seq("query_id"))
+      val pq3 = top3Ids(e18AnnIvfPq.fn(s, d), "rnk", "vec_id")
+      val keptIvf = Ranking.recall3(pq3,
+          e05AnnIvf.fn(s, d).filter(col("rank") <= 3), ordered = false)
+        .select(col("query_id"), col("n_matched").as("n_kept_ivf"))
+      Ranking.recall3(pq3, exactTop3(s, d), ordered = false)
+        .join(keptIvf, Seq("query_id"))
         .select(col("query_id"), col("n_matched"), col("recall3"),
           col("n_kept_ivf"))
         .orderBy(col("query_id"))
@@ -1775,18 +1585,9 @@ object SimilarityQueries {
          |i AS (SELECT query_id, vec_id AS neighbor_id FROM ivfpq_full WHERE rnk <= 3),
          |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3),
          |v AS (SELECT query_id, neighbor_id FROM ivf_full WHERE rank <= 3),
-         |a1 AS (
-         |  SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |    round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |  FROM i LEFT JOIN e
-         |    ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |  GROUP BY i.query_id),
-         |a2 AS (
-         |  SELECT i.query_id, count(v.neighbor_id) AS n_kept_ivf
-         |  FROM i LEFT JOIN v
-         |    ON i.query_id = v.query_id AND i.neighbor_id = v.neighbor_id
-         |  GROUP BY i.query_id)
-         |SELECT a1.query_id, a1.n_matched, a1.recall3, a2.n_kept_ivf
+         |a1 AS (${Ranking.recallSql("i", "e", ordered = false)}),
+         |a2 AS (${Ranking.recallSql("i", "v", ordered = false)})
+         |SELECT a1.query_id, a1.n_matched, a1.recall3, a2.n_matched AS n_kept_ivf
          |FROM a1 JOIN a2 USING (query_id) ORDER BY a1.query_id""".stripMargin))
 
   /** The shared binarization (e20 corpus dump / e21 recall measurement):
@@ -1873,66 +1674,21 @@ object SimilarityQueries {
       val q = packed.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("lo").as("qlo"), col("hi").as("qhi"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("hamming"), col("neighbor_id"))
-      val bin3 = packed.alias("b").join(broadcast(q.alias("a")),
+      Ranking.recall3(top3Unranked(packed.alias("b").join(broadcast(q.alias("a")),
           col("a.query_id") =!= col("b.vec_id"))
         .select(col("a.query_id"), col("b.vec_id").as("neighbor_id"),
           expr("CAST(bit_count(qlo ^ lo) + bit_count(qhi ^ hi) AS BIGINT)")
-            .as("hamming"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      bin3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
+            .as("hamming")),
+        "hamming", ascending = true), exactTop3(s, d))
     },
-    Some(
-      s"""WITH $binPackSql,
+    Some(recallOfScoredSql(
+      s"""$binPackSql,
          |scored AS (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
          |    CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS BIGINT) AS hamming
-         |  FROM packed a JOIN packed b ON a.vec_id < 5 AND a.vec_id <> b.vec_id),
-         |i AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY hamming, neighbor_id) AS rank
-         |    FROM scored) WHERE rank <= 3),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+         |  FROM packed a JOIN packed b ON a.vec_id < 5 AND a.vec_id <> b.vec_id)""".stripMargin,
+      "hamming")))
 
-  /** Hybrid retrieval with reciprocal-rank fusion — the RAG-stack
-    * search shape: a lexical BM25 ranking (Lucene idf form, k1=1.2,
-    * b=0.75, over the documents table) and a dense cosine ranking
-    * (over the embeddings joined on doc_id = vec_id) are each cut to
-    * top-20 per query, then fused by RRF (Cormack et al. 2009):
-    * score = Σ 1/(60 + rank), a list absent from one side contributes
-    * 0. Queries are the five documents with doc_id < 5, querying with
-    * their own text and their own embedding; self-matches excluded
-    * (the e01 convention). Determinism protocol: the BM25 term-sum is
-    * float-cast before 4dp rounding (summation order differs between
-    * engines — t17's protocol), ranks break ties on doc_id, RRF is
-    * rational in integer ranks so its 6dp rounding is exact-input.
-    * Scale: term postings and query terms meet in ONE token-keyed
-    * equi-join (the query side is 5 docs — broadcast); the dense side
-    * is e01's broadcast-query scan; fusion joins two ≤(20 × #queries)
-    * rank lists — trivially small at any corpus size. The real
-    * deployment swaps the scans for an inverted index and an ANN index
-    * (e05/e18), which share exactly this fusion step.
-    */
   /** The BM25 index artifacts over a documents frame — `postings` =
     * (vec_id, tok, tf), `doclen` = (vec_id, dl), `df` = (tok, df) —
     * the id column named `vec_id` so the durable store's shared
@@ -2028,14 +1784,31 @@ object SimilarityQueries {
           + (col("dl") / col("avgdl") * b + (1.0 - b)) * k1))
       .groupBy(col("qid"), col("did"))
       .agg(round(sum(col("term_score")).cast("float"), 4).as("s_bm25"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("s_bm25").desc, col("did"))
-    scored.withColumn("r_bm25", row_number().over(w))
-      .filter(col("r_bm25") <= k)
+    Ranking.topK(scored, "qid", "s_bm25", "did", k, rank = "r_bm25",
+        asLong = false)
       .select(col("qid").as("query_id"), col("did"), col("s_bm25"),
         col("r_bm25"))
   }
 
+  /** Hybrid retrieval with reciprocal-rank fusion — the RAG-stack
+    * search shape: a lexical BM25 ranking (Lucene idf form, k1=1.2,
+    * b=0.75, over the documents table) and a dense cosine ranking
+    * (over the embeddings joined on doc_id = vec_id) are each cut to
+    * top-20 per query, then fused by RRF (Cormack et al. 2009):
+    * score = Σ 1/(60 + rank), a list absent from one side contributes
+    * 0. Queries are the five documents with doc_id < 5, querying with
+    * their own text and their own embedding; self-matches excluded
+    * (the e01 convention). Determinism protocol: the BM25 term-sum is
+    * float-cast before 4dp rounding (summation order differs between
+    * engines — t17's protocol), ranks break ties on doc_id, RRF is
+    * rational in integer ranks so its 6dp rounding is exact-input.
+    * Scale: term postings and query terms meet in ONE token-keyed
+    * equi-join (the query side is 5 docs — broadcast); the dense side
+    * is e01's broadcast-query scan; fusion joins two ≤(20 × #queries)
+    * rank lists — trivially small at any corpus size. The real
+    * deployment swaps the scans for an inverted index and an ANN index
+    * (e05/e18), which share exactly this fusion step.
+    */
   val e22HybridRrf = QueryDef(
     "e22_hybrid_rrf",
     (s, d) => {
@@ -2062,26 +1835,14 @@ object SimilarityQueries {
         .select(col("vec_id"), col("embedding"))
       val qv = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
-      val wCos = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("cos").desc, col("did"))
-      val cosTop = emb.alias("b").join(broadcast(qv.alias("a")),
-          col("a.qid") =!= col("b.vec_id"))
-        .select(col("a.qid"), col("b.vec_id").as("did"),
-          cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos"))
-        .withColumn("r_cos", row_number().over(wCos))
-        .filter(col("r_cos") <= 20)
+      val cosTop = Ranking.topK(
+          emb.alias("b").join(broadcast(qv.alias("a")),
+              col("a.qid") =!= col("b.vec_id"))
+            .select(col("a.qid"), col("b.vec_id").as("did"),
+              cosine_similarity(col("a.q_emb"), col("b.embedding")).as("cos")),
+          "qid", "cos", "did", 20, rank = "r_cos", asLong = false)
         .select(col("qid"), col("did"), col("r_cos"))
-      val wRrf = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("rrf").desc, col("did"))
-      bmTop.join(cosTop, Seq("qid", "did"), "full_outer")
-        .withColumn("rrf", round(
-          coalesce(lit(1.0) / (col("r_bm25") + 60), lit(0.0)) +
-            coalesce(lit(1.0) / (col("r_cos") + 60), lit(0.0)), 6))
-        .withColumn("rank", row_number().over(wRrf).cast("long"))
-        .filter(col("rank") <= 5)
-        .select(col("qid").as("query_id"), col("rank"),
-          col("did").as("doc_id"), col("rrf"))
-        .orderBy(col("query_id"), col("rank"))
+      Ranking.rrfFuse(bmTop, cosTop, "qid", 5)
     },
     Some(s"""WITH toks AS (
             |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -2131,6 +1892,44 @@ object SimilarityQueries {
             |  FROM fused)
             |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
 
+  /** The filtered gates' allowed-id set: documents of sources src0–4. */
+  private def keepIds(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .filter(col("source")
+        .isin("src0", "src1", "src2", "src3", "src4"))
+      .select(col("doc_id").as("vec_id"))
+
+  /** The filtered recall gates' exact side: e01's top 3 over the
+    * corpus restricted to [[keepIds]].
+    */
+  private def filteredExact3(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+    knnOf(e.join(keepIds(s, d), Seq("vec_id"), "left_semi"),
+      e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
+      3)
+  }
+
+  /** Oracle of a filtered recall gate: the filtered search's full
+    * oracle as CTE `<name>_full`, its top 3 (ranked by `rank`, ids
+    * projected by `ids`) against the exact top 3 over the keep-set.
+    */
+  private def filteredRecallSql(name: String, fullSql: String, rank: String,
+                                ids: String): String =
+    s"""WITH ${name}_full AS ($fullSql),
+       |keep AS (
+       |  SELECT doc_id AS vec_id FROM documents
+       |  WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
+       |fscored AS (
+       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+       |    ${cosSql("a.embedding", "b.embedding")} AS cos
+       |  FROM embeddings a JOIN embeddings b
+       |    ON a.vec_id < 5 AND a.vec_id <> b.vec_id
+       |  JOIN keep k ON b.vec_id = k.vec_id),
+       |${Ranking.top3CteSql("e", "fscored", "cos DESC")},
+       |i AS (SELECT query_id, $ids FROM ${name}_full WHERE $rank <= 3)
+       |${Ranking.recallSql("i", "e")}""".stripMargin
+
   /** e24: FILTERED vector search — ANN with a metadata predicate, the
     * shape every production vector store ships ("nearest neighbors
     * WHERE source IN (...)"): the IVF index is built ONCE over the full
@@ -2149,12 +1948,8 @@ object SimilarityQueries {
     "e24_filtered_ivf",
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val keep = Tables.documents(s, d)
-        .filter(col("source")
-          .isin("src0", "src1", "src2", "src3", "src4"))
-        .select(col("doc_id").as("vec_id"))
       graft.api.Graft.annIndex(e)
-        .searchWhere(e.filter(col("vec_id") < 5), keep)
+        .searchWhere(e.filter(col("vec_id") < 5), keepIds(s, d))
     },
     Some(
       s"""WITH $centArrSql,
@@ -2171,49 +1966,10 @@ object SimilarityQueries {
     */
   val e25AnnRecallFiltered = QueryDef(
     "e25_ann_recall_filtered",
-    (s, d) => {
-      val e = Tables.embeddings(s, d)
-      val keep = Tables.documents(s, d)
-        .filter(col("source")
-          .isin("src0", "src1", "src2", "src3", "src4"))
-        .select(col("doc_id").as("vec_id"))
-      val exact3 = knnOf(e.join(keep, Seq("vec_id"), "left_semi"),
-          e.filter(col("vec_id") < 5)
-            .select(col("vec_id").as("query_id"),
-              col("embedding").as("q_emb")), 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      val fivf3 = e24FilteredIvf.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      fivf3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH fivf_full AS (${e24FilteredIvf.oracle.get}),
-         |keep AS (
-         |  SELECT doc_id AS vec_id FROM documents
-         |  WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-         |fscored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |    ${cosSql("a.embedding", "b.embedding")} AS cos
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.vec_id < 5 AND a.vec_id <> b.vec_id
-         |  JOIN keep k ON b.vec_id = k.vec_id),
-         |exact AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM fscored) WHERE rank <= 3),
-         |i AS (SELECT query_id, neighbor_id FROM fivf_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN exact e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e24FilteredIvf.fn(s, d), "rank", "neighbor_id",
+      filteredExact3(s, d)),
+    Some(filteredRecallSql("fivf", e24FilteredIvf.oracle.get, "rank",
+      "neighbor_id")))
 
   /** ANN index maintenance — append WITHOUT retraining: the IVF index
     * is trained on a snapshot (here vec_id % 5 ≠ 0), then the arrivals
@@ -3019,12 +2775,8 @@ object SimilarityQueries {
     "e39_filtered_pq",
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val keep = Tables.documents(s, d)
-        .filter(col("source")
-          .isin("src0", "src1", "src2", "src3", "src4"))
-        .select(col("doc_id").as("vec_id"))
       graft.api.Graft.pqIndex(e)
-        .searchWhere(e.filter(col("vec_id") < 5), keep, k = 3)
+        .searchWhere(e.filter(col("vec_id") < 5), keepIds(s, d), k = 3)
     },
     Some(pqSql(topM = 3, scoredExtra =
       "\n    JOIN documents d ON d.doc_id = enc.vec_id AND d.source IN " +
@@ -3042,12 +2794,8 @@ object SimilarityQueries {
     "e40_filtered_ivfpq",
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val keep = Tables.documents(s, d)
-        .filter(col("source")
-          .isin("src0", "src1", "src2", "src3", "src4"))
-        .select(col("doc_id").as("vec_id"))
       graft.api.Graft.ivfPqIndex(e)
-        .searchWhere(e.filter(col("vec_id") < 5), keep)
+        .searchWhere(e.filter(col("vec_id") < 5), keepIds(s, d))
     },
     Some(ivfPqSql(scoredExtra =
       "\n    JOIN documents d ON d.doc_id = e.vec_id AND d.source IN " +
@@ -3064,51 +2812,10 @@ object SimilarityQueries {
     */
   val e41FilteredPqRecall = QueryDef(
     "e41_filtered_pq_recall",
-    (s, d) => {
-      val e = Tables.embeddings(s, d)
-      val keep = Tables.documents(s, d)
-        .filter(col("source")
-          .isin("src0", "src1", "src2", "src3", "src4"))
-        .select(col("doc_id").as("vec_id"))
-      val exact3 = knnOf(e.join(keep, Seq("vec_id"), "left_semi"),
-          e.filter(col("vec_id") < 5)
-            .select(col("vec_id").as("query_id"),
-              col("embedding").as("q_emb")), 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      val fpq3 = e39FilteredPq.fn(s, d).filter(col("rnk") <= 3)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      fpq3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH fpq_full AS (${e39FilteredPq.oracle.get}),
-         |keep AS (
-         |  SELECT doc_id AS vec_id FROM documents
-         |  WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-         |fscored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |    ${cosSql("a.embedding", "b.embedding")} AS cos
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.vec_id < 5 AND a.vec_id <> b.vec_id
-         |  JOIN keep k ON b.vec_id = k.vec_id),
-         |exact AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM fscored) WHERE rank <= 3),
-         |i AS (SELECT query_id, vec_id AS neighbor_id FROM fpq_full
-         |      WHERE rnk <= 3)
-         |SELECT i.query_id, count(exact.neighbor_id) AS n_matched,
-         |  round(count(exact.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN exact
-         |  ON i.query_id = exact.query_id
-         |  AND i.neighbor_id = exact.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e39FilteredPq.fn(s, d), "rnk", "vec_id",
+      filteredExact3(s, d)),
+    Some(filteredRecallSql("fpq", e39FilteredPq.oracle.get, "rnk",
+      "vec_id AS neighbor_id")))
 
   /** recall@3 of FILTERED IVF-PQ search (e40) against the post-filter
     * exact ground truth — the e25/e41 yardstick on the COMPOSITE
@@ -3122,51 +2829,10 @@ object SimilarityQueries {
     */
   val e42FilteredIvfPqRecall = QueryDef(
     "e42_filtered_ivfpq_recall",
-    (s, d) => {
-      val e = Tables.embeddings(s, d)
-      val keep = Tables.documents(s, d)
-        .filter(col("source")
-          .isin("src0", "src1", "src2", "src3", "src4"))
-        .select(col("doc_id").as("vec_id"))
-      val exact3 = knnOf(e.join(keep, Seq("vec_id"), "left_semi"),
-          e.filter(col("vec_id") < 5)
-            .select(col("vec_id").as("query_id"),
-              col("embedding").as("q_emb")), 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      val f3 = e40FilteredIvfPq.fn(s, d).filter(col("rnk") <= 3)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      f3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH fivfpq_full AS (${e40FilteredIvfPq.oracle.get}),
-         |keep AS (
-         |  SELECT doc_id AS vec_id FROM documents
-         |  WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-         |fscored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |    ${cosSql("a.embedding", "b.embedding")} AS cos
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.vec_id < 5 AND a.vec_id <> b.vec_id
-         |  JOIN keep k ON b.vec_id = k.vec_id),
-         |exact AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-         |    FROM fscored) WHERE rank <= 3),
-         |i AS (SELECT query_id, vec_id AS neighbor_id FROM fivfpq_full
-         |      WHERE rnk <= 3)
-         |SELECT i.query_id, count(exact.neighbor_id) AS n_matched,
-         |  round(count(exact.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN exact
-         |  ON i.query_id = exact.query_id
-         |  AND i.neighbor_id = exact.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e40FilteredIvfPq.fn(s, d), "rnk", "vec_id",
+      filteredExact3(s, d)),
+    Some(filteredRecallSql("fivfpq", e40FilteredIvfPq.oracle.get, "rnk",
+      "vec_id AS neighbor_id")))
 
   /** Two-stage composite ANN — e16's re-ranking pattern on the IVF-PQ
     * index (Jégou et al. 2011 §V.D applied to the full stack): probe +
@@ -3192,21 +2858,7 @@ object SimilarityQueries {
       graft.api.Graft.ivfPqIndex(e)
         .rerank(e.filter(col("vec_id") < 5), e, fetch = 10, k = 3)
     },
-    Some(
-      s"""WITH sl_full AS (${ivfPqSql(topM = 10)}),
-         |scored AS (
-         |  SELECT sl.query_id, b.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "b.embedding")} AS cos
-         |  FROM sl_full sl
-         |  JOIN embeddings b ON b.vec_id = sl.vec_id
-         |  JOIN embeddings q ON q.vec_id = sl.query_id),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, cos,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, rank, neighbor_id, round(cos, 6) AS cos
-         |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin))
+    Some(rerankSql("sl_full", ivfPqSql(topM = 10))))
 
   /** recall@3 of the re-ranked composite (e43) against the exact top-3
     * (e01) — the payoff measurement for two-stage IVF-PQ: e19 scores
@@ -3220,29 +2872,9 @@ object SimilarityQueries {
     */
   val e44RecallIvfPqRerank = QueryDef(
     "e44_ivfpq_rerank_recall",
-    (s, d) => {
-      val rr3 = e43IvfPqRerank.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      rr3.join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("query_id"))
-    },
-    Some(
-      s"""WITH rr_full AS (${e43IvfPqRerank.oracle.get}),
-         |exact_full AS (${e01KnnBruteForce.oracle.get}),
-         |i AS (SELECT query_id, neighbor_id FROM rr_full WHERE rank <= 3),
-         |e AS (SELECT query_id, neighbor_id FROM exact_full WHERE rank <= 3)
-         |SELECT i.query_id, count(e.neighbor_id) AS n_matched,
-         |  round(count(e.neighbor_id) / 3.0, 4) AS recall3
-         |FROM i LEFT JOIN e
-         |  ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-         |GROUP BY i.query_id ORDER BY i.query_id""".stripMargin))
+    (s, d) => recallOfTop3(e43IvfPqRerank.fn(s, d), "rank", "neighbor_id",
+      exactTop3(s, d)),
+    Some(recallOfSql("rr", e43IvfPqRerank.oracle.get)))
 
   /** Recall-vs-nprobe SWEEP — the tuning artifact an ANN deployment
     * actually reads before picking its probe count: recall@3 of the
@@ -3265,19 +2897,11 @@ object SimilarityQueries {
       val e = Tables.embeddings(s, d)
       val idx = graft.api.Graft.annIndex(e)
       val q = e.filter(col("vec_id") < 5)
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      (1 to 3).map { p =>
-        idx.search(q, probes = p, k = 3)
-          .select(lit(p).as("probes"), col("query_id"), col("neighbor_id"))
-      }.reduce(_ unionByName _)
-        .join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("probes"), col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("probes"), col("query_id"))
+      Ranking.recall3((1 to 3).map { p =>
+          idx.search(q, probes = p, k = 3)
+            .select(lit(p).as("probes"), col("query_id"), col("neighbor_id"))
+        }.reduce(_ unionByName _),
+        exactTop3(s, d), Seq("probes", "query_id"))
     },
     Some {
       def ivfAt(p: Int) =
@@ -3292,12 +2916,7 @@ object SimilarityQueries {
          |  SELECT 1 AS probes, query_id, neighbor_id FROM x1
          |  UNION ALL SELECT 2, query_id, neighbor_id FROM x2
          |  UNION ALL SELECT 3, query_id, neighbor_id FROM x3)
-         |SELECT u.probes, u.query_id, count(ex.neighbor_id) AS n_matched,
-         |  round(count(ex.neighbor_id) / 3.0, 4) AS recall3
-         |FROM u LEFT JOIN ex
-         |  ON u.query_id = ex.query_id AND u.neighbor_id = ex.neighbor_id
-         |GROUP BY u.probes, u.query_id
-         |ORDER BY u.probes, u.query_id""".stripMargin
+         |${Ranking.recallSql("u", "ex", Some("probes"))}""".stripMargin
     })
 
   /** Rerank fetch-size SWEEP — [[e37RecallSweep]]'s contract for the
@@ -3319,35 +2938,14 @@ object SimilarityQueries {
       val e = Tables.embeddings(s, d)
       val idx = graft.api.Graft.pqIndex(e)
       val q = e.filter(col("vec_id") < 5)
-      val exact3 = e01KnnBruteForce.fn(s, d).filter(col("rank") <= 3)
-        .select(col("query_id").as("eq"), col("neighbor_id").as("en"))
-      Seq(5, 10, 20).map { f =>
-        idx.rerank(q, fetch = f, k = 3)
-          .select(lit(f).as("fetch"), col("query_id"), col("neighbor_id"))
-      }.reduce(_ unionByName _)
-        .join(exact3,
-          col("query_id") === col("eq") && col("neighbor_id") === col("en"),
-          "left")
-        .groupBy(col("fetch"), col("query_id"))
-        .agg(count(col("en")).as("n_matched"),
-          round(count(col("en")) / 3.0, 4).as("recall3"))
-        .orderBy(col("fetch"), col("query_id"))
+      Ranking.recall3(Seq(5, 10, 20).map { f =>
+          idx.rerank(q, fetch = f, k = 3)
+            .select(lit(f).as("fetch"), col("query_id"), col("neighbor_id"))
+        }.reduce(_ unionByName _),
+        exactTop3(s, d), Seq("fetch", "query_id"))
     },
     Some {
-      def rerankAt(f: Int) =
-        s"""WITH pq_full AS (${pqSql(topM = f)}),
-           |scored AS (
-           |  SELECT sl.query_id, b.vec_id AS neighbor_id,
-           |    ${cosSql("q.embedding", "b.embedding")} AS cos
-           |  FROM pq_full sl
-           |  JOIN embeddings b ON b.vec_id = sl.vec_id
-           |  JOIN embeddings q ON q.vec_id = sl.query_id),
-           |ranked AS (
-           |  SELECT query_id, neighbor_id, cos,
-           |    row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, neighbor_id) AS rank
-           |  FROM scored)
-           |SELECT query_id, neighbor_id FROM ranked WHERE rank <= 3""".stripMargin
+      def rerankAt(f: Int) = rerankSql("pq_full", pqSql(topM = f))
       s"""WITH r5 AS (${rerankAt(5)}),
          |r10 AS (${rerankAt(10)}),
          |r20 AS (${rerankAt(20)}),
@@ -3357,12 +2955,7 @@ object SimilarityQueries {
          |  SELECT 5 AS fetch, query_id, neighbor_id FROM r5
          |  UNION ALL SELECT 10, query_id, neighbor_id FROM r10
          |  UNION ALL SELECT 20, query_id, neighbor_id FROM r20)
-         |SELECT u.fetch, u.query_id, count(ex.neighbor_id) AS n_matched,
-         |  round(count(ex.neighbor_id) / 3.0, 4) AS recall3
-         |FROM u LEFT JOIN ex
-         |  ON u.query_id = ex.query_id AND u.neighbor_id = ex.neighbor_id
-         |GROUP BY u.fetch, u.query_id
-         |ORDER BY u.fetch, u.query_id""".stripMargin
+         |${Ranking.recallSql("u", "ex", Some("fetch"))}""".stripMargin
     })
 
   /** IVF-PQ coarse-cell drift gate — e28's monitoring contract for the
@@ -3473,8 +3066,7 @@ object SimilarityQueries {
     // Driver-side replicas of the two gated kernels, bit-for-bit:
     // the sequential double-precision loop of
     // [[graft.functions.CosineSimilarity]] (same op order, same
-    // float→double casts) and Spark's round(x, 6) (HALF_UP over
-    // BigDecimal.valueOf — Round's DoubleType path).
+    // float→double casts) and Spark's round(x, 6) (Ranking.round6).
     def cosD(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) {
@@ -3484,8 +3076,6 @@ object SimilarityQueries {
       if (na == 0.0 || nb == 0.0) 0.0
       else dot / (math.sqrt(na) * math.sqrt(nb))
     }
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
     // The greedy selection itself is SEQUENTIAL over a driver-bounded
     // frame — running it as k−1 cluster jobs over ≤ fetch×Q-row frames
@@ -3499,7 +3089,7 @@ object SimilarityQueries {
       val cs = cs0.map { case (_, c, rel) => (c, rel) }
       val sims = scala.collection.mutable.HashMap[(Long, Long), Double]()
       for ((a, _) <- cs; (b, _) <- cs if a != b)
-        sims((a, b)) = r6(cosD(emb((q, a)), emb((q, b))))
+        sims((a, b)) = Ranking.round6(cosD(emb((q, a)), emb((q, b))))
       if (cs.nonEmpty) {
         val first = cs.minBy { case (c, rel) => (-rel, c) }
         var picked = List(first._1)
@@ -3511,7 +3101,7 @@ object SimilarityQueries {
               val maxsim = picked.map(b => sims((c, b))).max
               (c, rel * relWeight - maxsim * divWeight)
             }.minBy { case (c, s) => (-s, c) }
-            out += ((q, i.toLong, best._1, r6(best._2)))
+            out += ((q, i.toLong, best._1, Ranking.round6(best._2)))
             picked = picked :+ best._1
           }
         }

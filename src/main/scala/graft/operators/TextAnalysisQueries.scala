@@ -77,14 +77,8 @@ object TextAnalysisQueries {
            |         * 1.0 / len(string_split(text, ' '))) * 0.8, 4) AS quality
            |FROM documents ORDER BY doc_id""".stripMargin))
 
-  /** Language ID via stopword-profile hit ratios: per language, the
-    * fraction of the doc's tokens found in that language's profile;
-    * prediction = argmax (ties → lexicographically first). Pure
-    * relational logic — one explode + broadcast join + argmax at scale.
-    */
-  /** t03's body over any documents frame — [[graft.api.Graft.languageId]].
-    * The default profiles are the gate's test-corpus stopword sets; a
-    * production caller passes real per-language stopword profiles.
+  /** The default language profiles: the gate's test-corpus stopword
+    * sets; a production caller passes real per-language profiles.
     */
   private[graft] val defaultLangProfiles: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "of", "and", "order", "group"),
@@ -93,6 +87,7 @@ object TextAnalysisQueries {
     "fr" -> Seq("le", "la", "de", "et", "scan", "data"),
     "zh" -> Seq("de", "shi", "le", "join", "small", "column"))
 
+  /** t03's body over any documents frame — [[graft.api.Graft.languageId]]. */
   private[graft] def langIdOf(docs: org.apache.spark.sql.DataFrame,
                               langProfiles: Seq[(String, Seq[String])])
       : org.apache.spark.sql.DataFrame = {
@@ -108,14 +103,16 @@ object TextAnalysisQueries {
       .groupBy(col("doc_id"), col("n_tokens"), col("cand_lang"))
       .agg(count(lit(1)).as("hits"))
       .withColumn("score", round(col("hits") / col("n_tokens"), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("cand_lang"))
-    hits.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    Ranking.topK(hits, "doc_id", "score", "cand_lang", 1, rank = "rn",
+        asLong = false)
       .select(col("doc_id"), col("cand_lang").as("predicted_lang"), col("score"))
   }
 
+  /** Language ID via stopword-profile hit ratios: per language, the
+    * fraction of the doc's tokens found in that language's profile;
+    * prediction = argmax (ties → lexicographically first). Pure
+    * relational logic — one explode + broadcast join + argmax at scale.
+    */
   val t03LangId = QueryDef(
     "t03_langid",
     (s, d) => graft.api.Graft.languageId(Tables.documents(s, d))
@@ -573,11 +570,7 @@ object TextAnalysisQueries {
         .withColumn("tfidf",
           round((col("tf") * log((col("n_docs") + 1.0) / (col("df") + 1.0)))
             .cast("float"), 6))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id"))
-        .orderBy(col("tfidf").desc, col("term"))
-      scored.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
+      Ranking.topK(scored, "doc_id", "tfidf", "term", 3, rank = "rnk")
         .select(col("doc_id"), col("rnk"), col("term"), col("tfidf"))
         .orderBy(col("doc_id"), col("rnk"))
     },

@@ -2157,6 +2157,32 @@ object IndexStore {
       .sortBy(_._1).lastOption.map { case (n, p, _) => (n, p.toString) }
   }
 
+  /** [[currentGeneration]], failing loudly if nothing is published. */
+  private[graft] def requireCurrentGeneration(spark: SparkSession,
+                                              root: String): (Int, String) =
+    currentGeneration(spark, root).getOrElse(throw new IllegalStateException(
+      s"$root holds no published index generation"))
+
+  /** The generation cache of a live stream bound to a
+    * [[publishGeneration]] root: [[resolve]] re-resolves the current
+    * generation (one listing) and reopens it with `open` only when the
+    * generation number changed — a blue/green swap flips the stream on
+    * its next batch, steady-state batches reuse the open handle. Call
+    * it once per micro-batch, so no batch mixes generations.
+    * foreachBatch bodies run sequentially on the stream's micro-batch
+    * thread, so the plain mutable state is safe.
+    */
+  private[graft] final class GenerationCache[T](root: String,
+      open: (SparkSession, String) => T) {
+    private var cached: Option[(Int, T)] = None
+
+    def resolve(spark: SparkSession): (Int, T) = {
+      val (gen, dir) = requireCurrentGeneration(spark, root)
+      if (!cached.exists(_._1 == gen)) cached = Some((gen, open(spark, dir)))
+      cached.get
+    }
+  }
+
   /** Introspect a [[publishGeneration]] root — one row per
     * generation: (generation, kind, published, current, bytes,
     * n_files, holder, heartbeat_age_ms, stale_suspect). The

@@ -20,6 +20,20 @@ object EmbStreams {
   final case class AnnHit(query_id: Long, rank: Long, neighbor_id: Long,
                           cos: Double)
 
+  /** Idempotent-ingest guard for at-least-once upstreams: a retried /
+    * re-delivered query (same `query_id` re-arriving within the
+    * watermark horizon) is served ONCE. Built on Spark's
+    * `dropDuplicatesWithinWatermark`, so the dedup state is evicted as
+    * the `ts` watermark advances — state is O(queries in horizon), not
+    * O(queries ever). Compose with [[ivfServePruned]] (whose serving
+    * runs batch-side in foreachBatch) so the streaming plan carries
+    * exactly one stateful operator.
+    */
+  def dedupWithinWatermark(queries: Dataset[EmbQuery],
+                           horizon: String = "10 minutes"): Dataset[EmbQuery] =
+    queries.withWatermark("ts", horizon)
+      .dropDuplicatesWithinWatermark("query_id")
+
   /** Serve an unbounded query stream against a STATIC IVF index (the
     * cell-assigned corpus + driver-pulled centroids from
     * [[graft.operators.SimilarityQueries.ivfIndex]] — the same
@@ -43,20 +57,6 @@ object EmbStreams {
     * spec-proven (EmbStreamsSpec), including the shared
     * half-up 6-decimal cosine rounding.
     */
-  /** Idempotent-ingest guard for at-least-once upstreams: a retried /
-    * re-delivered query (same `query_id` re-arriving within the
-    * watermark horizon) is served ONCE. Built on Spark's
-    * `dropDuplicatesWithinWatermark`, so the dedup state is evicted as
-    * the `ts` watermark advances — state is O(queries in horizon), not
-    * O(queries ever). Compose with [[ivfServePruned]] (whose serving
-    * runs batch-side in foreachBatch) so the streaming plan carries
-    * exactly one stateful operator.
-    */
-  def dedupWithinWatermark(queries: Dataset[EmbQuery],
-                           horizon: String = "10 minutes"): Dataset[EmbQuery] =
-    queries.withWatermark("ts", horizon)
-      .dropDuplicatesWithinWatermark("query_id")
-
   def ivfServe(queries: Dataset[EmbQuery], assigned: DataFrame,
                centroids: Seq[(Int, Array[Float])],
                nprobe: Int = 2, k: Int = 3): Dataset[AnnHit] = {
@@ -75,19 +75,28 @@ object EmbStreams {
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("q_emb"), col("embedding")).as("cos"))
       .as[(Long, Long, Double)]
+    rankGroups(scored, k)(AnnHit)
+  }
+
+  /** The stream servers' per-query top-k: (query_id, id, score) rows
+    * grouped by query, each group ranked by
+    * [[graft.operators.Ranking.topKOfGroup]] — the batch ranking rule
+    * (score DESC, id ASC, 6-dp half-up), since a stream cannot run the
+    * window. State: none retained (NoTimeout, state never set) — each
+    * query's candidates arrive in its own micro-batch, so the stateful
+    * operator is just a per-group top-k pass.
+    */
+  private def rankGroups[H: org.apache.spark.sql.Encoder](
+      scored: Dataset[(Long, Long, Double)], k: Int)
+      (hit: (Long, Long, Long, Double) => H): Dataset[H] = {
+    val spark = scored.sparkSession
+    import spark.implicits._
     scored.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, AnnHit](
+      .flatMapGroupsWithState[Boolean, H](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (qid: Long, rows: Iterator[(Long, Long, Double)], _) =>
-          // same ordering and rounding protocol as the batch
-          // probeAndRank: cos desc, neighbor_id asc; scala-BigDecimal
-          // half-up matches Spark's round() on doubles
-          rows.toSeq.sortBy(r => (-r._3, r._2)).take(k)
-            .iterator.zipWithIndex.map { case ((_, nid, cos), i) =>
-              AnnHit(qid, i + 1L, nid,
-                BigDecimal(cos).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-                  .toDouble)
-            }
+          graft.operators.Ranking.topKOfGroup(rows.map(r => (r._2, r._3)), k)
+            .map { case (rank, id, score) => hit(qid, rank, id, score) }
       }
   }
 
@@ -132,19 +141,7 @@ object EmbStreams {
         graft.operators.SimilarityQueries.pqAdcScore(codebooks.length))
       .select(col("query_id"), col("vec_id"), col("approx_ip"))
       .as[(Long, Long, Double)]
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, PqHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (qid: Long, rows: Iterator[(Long, Long, Double)], _) =>
-          // same ordering and rounding protocol as the batch pqAdcRank:
-          // approx_ip desc, vec_id asc, half-up 6-decimal rounding
-          rows.toSeq.sortBy(r => (-r._3, r._2)).take(k)
-            .iterator.zipWithIndex.map { case ((_, vid, ip), i) =>
-              PqHit(qid, i + 1L, vid,
-                BigDecimal(ip).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-                  .toDouble)
-            }
-      }
+    rankGroups(scored, k)(PqHit)
   }
 
   /** Serving with PER-BATCH PARTITION PRUNING — the 100 TB I/O shape.
@@ -230,31 +227,19 @@ object EmbStreams {
                       nprobe: Int = 2, k: Int = 3)
                      (onBatch: (Int, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // generation cache — foreachBatch bodies run sequentially on the
-    // stream's microbatch thread, so plain state is safe
-    var cached: Option[(Int, String, Seq[(Int, Array[Float])],
-      Option[DataFrame])] = None
+    // open each generation through the store loader (kind check +
+    // tombstone-masking contract), pull the tiny centroid table and the
+    // tombstone snapshot (fenced against spark.graft.maxTombstoneSnapshot
+    // — see [[graft.sources.IndexStore.tombstoneSnapshot]]) once
+    val current = new graft.sources.IndexStore.GenerationCache(root,
+      (spark, dir) => (dir,
+        graft.operators.SimilarityQueries.pullCentroids(
+          graft.sources.IndexStore.loadIvf(spark, dir)._2),
+        graft.sources.IndexStore.tombstoneSnapshot(spark, dir)))
     queries.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[EmbQuery], _: Long) =>
-        val spark = batch.sparkSession
-        val (gen, dir) =
-          graft.sources.IndexStore.currentGeneration(spark, root)
-            .getOrElse(throw new IllegalStateException(
-              s"$root holds no published index generation"))
-        if (!cached.exists(_._1 == gen)) {
-          // open the generation through the store loader (kind check +
-          // tombstone-masking contract), pull the tiny centroid table
-          // and the tombstone snapshot once per generation
-          val cents = graft.operators.SimilarityQueries.pullCentroids(
-            graft.sources.IndexStore.loadIvf(spark, dir)._2)
-          // fenced against spark.graft.maxTombstoneSnapshot — see
-          // [[graft.sources.IndexStore.tombstoneSnapshot]]
-          val snap = graft.sources.IndexStore
-            .tombstoneSnapshot(spark, dir)
-          cached = Some((gen, dir, cents, snap))
-        }
-        val (g, d, cents, snap) = cached.get
+        val (g, (d, cents, snap)) = current.resolve(batch.sparkSession)
         servePrunedBatch(batch, s"$d/assigned", cents, nprobe, k, snap)(
           onBatch(g, _))
       }
@@ -354,22 +339,6 @@ object EmbStreams {
           centroids, codebooks))
     }
 
-  /** Shared durable-ingest foreachBatch shell: append under the
-    * store's single-writer lock, with per-batch-id marker idempotency
-    * when a checkpoint makes batch ids stable across restarts (see
-    * [[ivfAppendDurable]]'s scaladoc for the crash-window caveat).
-    *
-    * UPGRADE NOTE (marker location change): markers moved from the
-    * index dir (`<dir>/_stream_commits/`) to the checkpoint
-    * (`<cp>/_graft_commits/`) so their lifetime is scoped to the
-    * checkpoint's batch-id sequence. A stream restarted from a
-    * checkpoint created BEFORE that change ignores its old markers
-    * and may re-append its last committed batch(es) ONCE — a one-time
-    * duplicate-batch risk on upgrade, remedied like any crashed
-    * append (tombstone the duplicate ids + compact). New checkpoints
-    * are unaffected; no deployed pre-change streams exist in this
-    * repo's test surface.
-    */
   /** RETENTION for the commit markers — without it, `_graft_commits/`
     * accrues one empty file per micro-batch forever (a year of 10 s
     * triggers ≈ 3M files). Only RECENT markers matter for replay
@@ -397,6 +366,22 @@ object EmbStreams {
     }
   }
 
+  /** Shared durable-ingest foreachBatch shell: append under the
+    * store's single-writer lock, with per-batch-id marker idempotency
+    * when a checkpoint makes batch ids stable across restarts (see
+    * [[ivfAppendDurable]]'s scaladoc for the crash-window caveat).
+    *
+    * UPGRADE NOTE (marker location change): markers moved from the
+    * index dir (`<dir>/_stream_commits/`) to the checkpoint
+    * (`<cp>/_graft_commits/`) so their lifetime is scoped to the
+    * checkpoint's batch-id sequence. A stream restarted from a
+    * checkpoint created BEFORE that change ignores its old markers
+    * and may re-append its last committed batch(es) ONCE — a one-time
+    * duplicate-batch risk on upgrade, remedied like any crashed
+    * append (tombstone the duplicate ids + compact). New checkpoints
+    * are unaffected; no deployed pre-change streams exist in this
+    * repo's test surface.
+    */
   private[graft] def durableIngest[T](arrivals: Dataset[T],
                                       checkpointDir: Option[String])
                                      (append: Dataset[T] => Unit)
@@ -445,8 +430,8 @@ object EmbStreams {
     * Σ drift_ppm / 2 (or one hot cell) crosses budget. EmbStreamsSpec
     * proves the final report equals the batch e28 drift of the same
     * arrival set.
-    */
-  /** `checkpointDir`: pass a durable location to make the monitor
+    *
+    * `checkpointDir`: pass a durable location to make the monitor
     * RESTARTABLE — the running per-cell counts live in Spark's state
     * store under the checkpoint, so a stopped (or crashed) monitor
     * restarted on the same dir RESUMES its counts without
@@ -634,8 +619,8 @@ object EmbStreams {
     * arrivals so far — fire the re-train when a subspace's
     * Σ drift_ppm / 2 crosses budget. EmbStreamsSpec proves the final
     * report equals the batch e31 drift of the same arrival set.
-    */
-  /** `checkpointDir`: as on [[driftMonitor]] — a durable checkpoint
+    *
+    * `checkpointDir`: as on [[driftMonitor]] — a durable checkpoint
     * makes the running per-(m, code) state-store counts survive a
     * query restart without reprocessing committed arrivals.
     */

@@ -281,10 +281,17 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       r.getLong(2), r.getDouble(3))).toSeq
     assert(got.nonEmpty)
 
-    // hand-fuse the component searches with e22's formula
-    val bm = lex.searchText(q.select(col("query_id"), col("text")), 20)
-      .collect().map(r => (r.getLong(0), r.getAs[Long]("doc_id"))
-        -> r.getAs[Long]("rank")).toMap
+    // hand-fuse the component searches with e22's formula; e22 drops
+    // each query's own document from the lexical list (the dense
+    // search already does), so take one extra hit, drop self and
+    // re-rank before cutting to the fetch depth
+    val bm = lex.searchText(q.select(col("query_id"), col("text")), 21)
+      .collect().map(r => (r.getLong(0), r.getAs[Long]("doc_id"),
+        r.getAs[Long]("rank")))
+      .filter { case (qid, did, _) => qid != did }
+      .groupBy(_._1).values.flatMap(_.sortBy(_._3).take(20).zipWithIndex
+        .map { case ((qid, did, _), i) => (qid, did) -> (i + 1L) })
+      .toMap
     val cos = dense.search(q.select(col("query_id").as("vec_id"),
         col("embedding")), 2, 20)
       .collect().map(r => (r.getLong(0), r.getAs[Long]("neighbor_id"))
@@ -326,6 +333,41 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     sq.stop()
     assert(hits.toSet == got.toSet,
       "streamed hybrid serving diverged from the batch fusion")
+  }
+
+  test("hybridSearch and hybridServe never return a query's own document") {
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val lex = Graft.bm25Index(docs)
+    val dense = Graft.annIndex(emb)
+    val q = queries
+      .join(emb.select(col("vec_id").as("query_id"), col("embedding")),
+        Seq("query_id"))
+    val got = Graft.hybridSearch(lex, dense, q).collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSeq
+    assert(got.nonEmpty)
+    assert(got.forall { case (qid, did) => qid != did },
+      s"a query retrieved itself: $got")
+
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 09:00:00")
+    val stream = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Graft.HybridQuery]
+    val served = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    val sq = Graft.hybridServe(lex, dense, stream.toDS()) { b =>
+      served.synchronized {
+        served ++= b.collect().map(r => (r.getLong(0), r.getLong(2)))
+      }
+    }
+    stream.addData(q.collect().toSeq.map(r => Graft.HybridQuery(
+      r.getAs[Long]("query_id"), ts, r.getAs[String]("text"),
+      r.getAs[scala.collection.Seq[Float]]("embedding").toSeq)))
+    sq.processAllAvailable()
+    sq.stop()
+    assert(served.nonEmpty)
+    assert(served.forall { case (qid, did) => qid != did },
+      s"a served query retrieved itself: $served")
   }
 
   test("bloomScreenStreamCurrent: a mid-stream publish flips the probed sketch generation, no restart, no mixed batch") {
